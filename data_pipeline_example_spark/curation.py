@@ -27,6 +27,8 @@ oracle SQL.
 
 from __future__ import annotations
 
+import dataclasses
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -803,8 +805,8 @@ def retrieval_quality(
       zero-exchange serving scan);
     - ``ivfpq`` — :func:`operators.similarity.ivfpq_knn` (PQ ADC +
       exact re-rank; pinned row-identical to the materialized
-      ``ivfpq_knn_indexed``/``ivfpq_knn_index_batch`` serving paths by
-      their equivalence tests, so this grades the index serving stack
+      ``ivfpq_knn_index_batch`` serving path by its equivalence
+      tests, so this grades the index serving stack
       without needing a written index inside a registered query);
     - ``rrf``  — :func:`rrf_hybrid_search` (BM25 + ANN fusion; graded
       against the PURE-cosine truth deliberately — its recall shows
@@ -846,26 +848,14 @@ def retrieval_quality(
     # with NULL list columns and vice versa.
     bm25_query = ("spark", "window", "hash")
     _null_long = F.lit(None).cast("long")
-    # ONE fused head fetch shared by the ivf and ivfpq batch legs
-    # (r15 shared the raw head collect; r16 the fused fetch also
-    # computes the ivfpq leg's probe/LUT cosines in the same bounded
-    # job, so the leg's LocalRelation scoring job is gone too). The
-    # bound is DERIVED from the legs' parameters (both legs run at
-    # their defaults n_centroids=16, ks=16, m=4 — named here, not
-    # hardcoded into a magic 16) and each leg VALIDATES the bundle
-    # covers its own needs instead of trusting this caller (r15
-    # ADVICE: the silent-shrink hazard).
-    _nc, _ks, _m, _dims = 16, 16, 4, 64
-    head_fetch = similarity._head_scored_fetch(
-        similarity._as_double(embeddings),
-        F.col("vec_id") < max(_nc, _ks, int(n_queries)),
-        F.col("vec_id") < int(n_queries),
-        _nc,
-        ks=_ks,
-        m=_m,
-        sub_len=_dims // _m,
-        q_max=int(n_queries),
-        head_max=max(_nc, _ks, int(n_queries)),
+    # ONE head fetch shared by the ivf and ivfpq batch legs: one bounded
+    # job for the head rows, with probe/LUT scoring job-free on the
+    # driver. Both legs take their parameters from the SAME AnnParams
+    # object, and each leg checks the fetch was built with its own
+    # parameters and queries (a ValueError on any drift).
+    ann = similarity.AnnParams()
+    head_fetch = similarity._fetch(
+        similarity._as_double(embeddings), ann, range(int(n_queries))
     )
     fused_lists = (
         similarity.knn_batch(embeddings, n_queries=n_queries, k=k)
@@ -879,7 +869,12 @@ def retrieval_quality(
         )
         .unionByName(
             similarity.ivf_knn_batch(
-                embeddings, n_queries=n_queries, k=n_each, head_fetch=head_fetch
+                embeddings,
+                n_queries=n_queries,
+                k=n_each,
+                n_centroids=ann.n_centroids,
+                n_probe=ann.n_probe,
+                head_fetch=head_fetch,
             ).select(
                 F.lit(1).alias("_src"),
                 "query_id",
@@ -917,7 +912,11 @@ def retrieval_quality(
         F.col("rank").alias("sys_rank"),
     )
     pq_sys = similarity.ivfpq_knn_batch(
-        embeddings, n_queries=n_queries, k=k, head_fetch=head_fetch
+        embeddings,
+        n_queries=n_queries,
+        k=k,
+        **dataclasses.asdict(ann),
+        head_fetch=head_fetch,
     ).select(
         F.lit("ivfpq").alias("system"),
         "query_id",

@@ -32,6 +32,8 @@ ranking on the rounded value keeps result sets cross-engine deterministic.
 
 from __future__ import annotations
 
+from dataclasses import dataclass, replace
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -889,33 +891,23 @@ def _pynorm(vec) -> float:
 
 
 def _dmat_sql(vecs) -> Column:
-    """One parsed SQL literal for a list of double vectors (array of
-    array<double>) — ``CAST('<repr>' AS DOUBLE)`` round-trips the exact
-    double, and a single ``expr()`` parse replaces O(rows × dims) py4j
-    literal Columns (the ivf_knn plan-build discipline)."""
-    return F.expr(
-        "array("
-        + ",".join(
-            "array(" + ",".join(f"CAST('{x!r}' AS DOUBLE)" for x in v) + ")"
-            for v in vecs
-        )
-        + ")"
-    )
+    """One parsed SQL literal for a (nested) list of doubles — a vector,
+    a matrix, or deeper; ``CAST('<repr>' AS DOUBLE)`` round-trips the
+    exact double (None is a NULL double), and a single ``expr()`` parse
+    replaces O(rows × dims) py4j literal Columns (the ivf_knn plan-build
+    discipline)."""
+
+    def lit(x):
+        if isinstance(x, (list, tuple)):
+            return "array(" + ",".join(map(lit, x)) + ")"
+        return "CAST(NULL AS DOUBLE)" if x is None else f"CAST('{x!r}' AS DOUBLE)"
+
+    return F.expr(lit(vecs))
 
 
 def _ids_sql(ids) -> Column:
     """Long-array SQL literal (companion of :func:`_dmat_sql`)."""
     return F.expr("array(" + ",".join(f"{int(i)}L" for i in ids) + ")")
-
-
-def _norms_sql(norms) -> Column:
-    """Double-array SQL literal of ENGINE-computed norms (collected
-    from a bounded local job running ``V.norm`` itself, so the doubles
-    are bit-identical to an in-plan ``norm()``; ``CAST('<repr>' AS
-    DOUBLE)`` round-trips them exactly)."""
-    return F.expr(
-        "array(" + ",".join(f"CAST('{x!r}' AS DOUBLE)" for x in norms) + ")"
-    )
 
 
 def _let(binds: dict, body) -> Column:
@@ -939,7 +931,7 @@ def _inline_best(vcol: Column, cent_rows, cent_norms, nv: Column) -> Column:
     ``assign_centroids`` argmax verbatim (min over (-cos, cid) structs,
     6-dp rounding) as a per-row expression: ZERO exchanges instead of a
     corpus-sized aggregate. ``cent_rows`` must be (cid, vec) pairs
-    sorted by cid ascending; ``cent_norms`` their engine-computed norms
+    sorted by cid ascending; ``cent_norms`` their :func:`_pynorm` norms
     (same order); ``nv`` a let-bound column holding ``V.norm(vcol)``.
     The score is ``dot/(nv·nc)`` — value-identical to
     ``cosine = dot/(norm(a)·norm(b))`` (same fold, same grouping, norms
@@ -948,7 +940,7 @@ def _inline_best(vcol: Column, cent_rows, cent_norms, nv: Column) -> Column:
     Returns the winning struct; read ``.getField("cid")``."""
     cmat = _dmat_sql([cv for _, cv in cent_rows])
     cids = _ids_sql([cid for cid, _ in cent_rows])
-    nlits = _norms_sql(cent_norms)
+    nlits = _dmat_sql(cent_norms)
     idx = F.sequence(F.lit(0), F.lit(len(cent_rows) - 1))
     return F.array_min(
         F.transform(
@@ -967,155 +959,382 @@ def _inline_best(vcol: Column, cent_rows, cent_norms, nv: Column) -> Column:
     )
 
 
-def _probe_sorted(rows, qid=None):
-    """Driver-side probe ranking over collected kind-0 rows: (c DESC
-    NULLS LAST, cid ASC) — the engine's ``desc`` ordering exactly, so a
-    zero-norm centroid/query cosine (NULL ``c``) is simply never probed
-    (the r14 degrade) instead of raising TypeError on ``-None`` (r16,
-    per ADVICE)."""
-    return sorted(
-        (
-            (r["c"], r["cid"])
-            for r in rows
-            if r["kind"] == 0 and (qid is None or r["qid"] == qid)
-        ),
-        key=lambda t: (t[0] is None, -(t[0] or 0.0), t[1]),
-    )
+@dataclass(frozen=True)
+class AnnParams:
+    """The IVF / IVF-PQ parameters as ONE frozen value. A fetch records
+    the object it was built with and every scorer reads it from there,
+    so a fetch shared between callers is accepted only when its object
+    EQUALS the callee's — every field, so a dims=64 fetch can never
+    score a dims=32 call over the wrong slices. ``dims % m`` is checked
+    here, once, with a ValueError (an ``assert`` vanishes under
+    ``python -O``)."""
+
+    n_centroids: int = 16
+    n_probe: int = 4
+    m: int = 4
+    ks: int = 16
+    dims: int = 64
+    rerank: int = 64
+
+    def __post_init__(self):
+        if self.m <= 0 or self.dims % self.m:
+            raise ValueError(f"m={self.m} must divide dims={self.dims}")
+
+    @property
+    def sub_len(self) -> int:
+        return self.dims // self.m
 
 
-def _head_scored_fetch(
-    e: DataFrame,
-    head_pred: Column,
-    q_pred: Column,
-    n_centroids: int,
-    ks: int | None = None,
-    m: int = 0,
-    sub_len: int = 0,
-    q_max: int | None = None,
-    head_max: int = 0,
-) -> dict:
-    """ONE bounded construct job replacing the separate head collect and
-    the probe/LUT LocalRelation job (r16): the raw head rows (kind 2)
-    and the engine-rounded probe/LUT cosines (kind 0 = centroid ×
-    query, kind 1 = codebook-slice × query-slice) are sibling union
-    legs of a single plan over the pushdown-filtered embeddings scan,
-    collected once. Engine round/cosine semantics are identical to the
-    r15 LocalRelation job — same ``F.round(V.cosine(...), 6)`` fold
-    over the same doubles, which now come straight from the scan
-    instead of a collect→createDataFrame round-trip (Python floats ARE
-    the parquet doubles, so the values cannot differ). Row count is
-    n_centroids·|q| + m·ks·|q| + |head| — bounded by the parameters,
-    never the corpus.
+def _probe_order(scored):
+    """(c, cid) pairs in the engine's ``desc(c), asc(cid)`` order: NaN
+    first (Spark sorts NaN greatest), then real values descending with
+    -0.0 == 0.0, then NULL last — so a zero-norm centroid/query cosine
+    is probed only after every real one, and an inf-component vector's
+    NaN cosine cannot break the sort's total order. The ONE driver-side
+    probe ranking; pinned against ``orderBy`` by test."""
 
-    Returns a bundle dict carrying the collected ``rows``, the raw
-    ``by_id`` head map, and the parameters the fetch was built with —
-    consumers VALIDATE those instead of trusting the caller (the
-    silent-shrink hazard the r15 ADVICE flagged)."""
-    _nl = F.lit(None).cast("long")
-    _nd = F.lit(None).cast("double")
-    _nv = F.lit(None).cast("array<double>")
-    cents = e.filter(F.col("vec_id") < n_centroids).select(
-        F.col("vec_id").alias("cid"), F.col("v").alias("cv")
-    )
-    qs = e.filter(q_pred).select(
-        F.col("vec_id").alias("qid"), F.col("v").alias("qv")
-    )
-    k0 = cents.join(F.broadcast(qs)).select(
-        F.lit(0).alias("kind"),
-        F.col("qid"),
-        F.lit(-1).alias("g"),
-        F.col("cid"),
-        F.round(V.cosine(F.col("cv"), F.col("qv")), 6).alias("c"),
-        V.norm(F.col("cv")).alias("na"),
-        V.norm(F.col("qv")).alias("nq"),
-        _nl.alias("vid"),
-        _nv.alias("v"),
-    )
-    legs = [k0]
-    if ks is not None:
-        cb = e.filter(F.col("vec_id") < ks).select(
-            F.col("vec_id").alias("cid"), F.col("v").alias("cv")
-        )
-        gc = F.col("g")
+    def key(t):
+        c, cid = t
+        if c is None:
+            return (2, 0.0, cid)
+        return (0, 0.0, cid) if c != c else (1, -c, cid)
 
-        def _sl(col):
-            return F.slice(col, gc * sub_len + 1, F.lit(sub_len))
+    return sorted(scored, key=key)
 
-        k1 = (
-            cb.join(F.broadcast(qs))
-            .select(
-                "cid",
-                "cv",
-                "qid",
-                "qv",
-                F.explode(F.lit(list(range(m)))).alias("g"),
+
+@dataclass(frozen=True)
+class _Fetch:
+    """What :func:`_fetch` collected, all bounded by the parameters: the
+    (id, vector) centroid and codebook rows (ascending id; no codebook
+    for an IVF-only fetch), the queries found, and per query the
+    engine-rounded probe cosines (``cents`` order) and ADC lookup
+    entries (per group, ``cb`` order)."""
+
+    params: AnnParams
+    query_ids: tuple
+    pq: bool
+    n_head: int
+    queries: list
+    cents: list
+    cb: list
+    probe: list
+    lut: list
+    counts: object = None
+
+    @property
+    def probed(self):
+        """Per query: the ``n_probe`` centroid ids it probes."""
+        cids = [c for c, _ in self.cents]
+        return [
+            [cid for _, cid in _probe_order(zip(s, cids))[: self.params.n_probe]]
+            for s in self.probe
+        ]
+
+    @property
+    def probed_union(self):
+        """Every centroid id some query probes, ascending."""
+        return sorted({c for ps in self.probed for c in ps})
+
+    def check(self, p: AnnParams, query_ids, pq: bool) -> None:
+        """Reject a shared fetch built for other parameters or queries."""
+        mismatch = self.params != p or self.query_ids != tuple(query_ids)
+        if mismatch or (pq and not self.pq):
+            raise ValueError(
+                f"shared fetch built with {self.params}, queries "
+                f"{self.query_ids}, pq={self.pq} does not match callee {p}, "
+                f"queries {tuple(query_ids)}, pq={pq}"
             )
-            .select(
-                F.lit(1).alias("kind"),
-                F.col("qid"),
-                gc,
-                F.col("cid"),
-                F.round(V.cosine(_sl(F.col("cv")), _sl(F.col("qv"))), 6).alias(
-                    "c"
+
+
+def _fetch(src, p, query_ids=(), query_vecs=(), pq=True, counts=()) -> _Fetch:
+    """ONE bounded construct job for every IVF / IVF-PQ path: collect the
+    head rows of ``src`` — a (vec_id, v) frame that is either the corpus
+    (queries are its rows, named by ``query_ids``) or a written index's
+    centroids file (queries are the literal ``query_vecs``) — then score
+    probe cosines and the ADC lookup table with the ENGINE's own
+    ``round(cosine(...), 6)`` over exact ``CAST('<repr>' AS DOUBLE)``
+    literals, in a projection over a one-row VALUES relation. Spark
+    folds that projection into a LocalRelation on the driver, so the
+    scoring fires NO job and needs no broadcast join, and the values
+    are the ones an in-plan computation produces.
+
+    ``counts``: extra aggregate columns (filtered_ivf_knn's selectivity
+    counts) — the head rows then ride the same aggregate as a bounded
+    collect_list, so construct still scans the corpus exactly once."""
+    ids = tuple(int(i) for i in query_ids)
+    pred = F.col("vec_id") < (max(p.n_centroids, p.ks) if pq else p.n_centroids)
+    if ids:
+        pred = pred | F.col("vec_id").isin(list(ids))
+    if counts:
+        row = src.agg(
+            F.collect_list(F.when(pred, F.struct("vec_id", "v"))).alias("_h"),
+            *counts,
+        ).collect()[0]
+        rows = row["_h"]
+    else:
+        row, rows = None, src.filter(pred).collect()
+    head = {int(r["vec_id"]): [float(x) for x in r["v"]] for r in rows}
+    queries = [(q, head[q]) for q in ids if q in head] + [
+        (int(q), [float(x) for x in v]) for q, v in query_vecs
+    ]
+    cents = [(c, head[c]) for c in sorted(head) if c < p.n_centroids]
+    cb = [(c, head[c]) for c in sorted(head) if c < p.ks] if pq else []
+    probe, lut = [], []
+    if queries and cents:
+        qmat = _dmat_sql([v for _, v in queries])
+        cmat = _dmat_sql([v for _, v in cents])
+        cbmat = _dmat_sql([v for _, v in cb])
+        n = p.sub_len
+
+        def sl(a, g):
+            return F.slice(a, g * n + 1, F.lit(n))
+
+        cols = [
+            F.transform(
+                qmat, lambda q: F.transform(cmat, lambda c: F.round(V.cosine(c, q), 6))
+            ).alias("probe")
+        ]
+        if cb:
+            cols.append(
+                F.transform(
+                    qmat,
+                    lambda q: F.transform(
+                        F.sequence(F.lit(0), F.lit(p.m - 1)),
+                        lambda g: F.transform(
+                            cbmat, lambda c: F.round(V.cosine(sl(c, g), sl(q, g)), 6)
+                        ),
+                    ),
+                ).alias("lut")
+            )
+        one_row = src.sparkSession.sql("SELECT * FROM VALUES (0) AS t(_)")
+        scored = one_row.select(*cols).collect()[0]
+        probe = [list(s) for s in scored["probe"]]
+        lut = [[list(c) for c in g] for g in scored["lut"]] if cb else []
+    return _Fetch(p, ids, pq, len(head), queries, cents, cb, probe, lut, row)
+
+
+def _encoded(e: DataFrame, f: _Fetch, codes: bool = True, only=None) -> DataFrame:
+    """``e`` plus THE scan-local IVF(-PQ) encoding of its column ``v``:
+    nv (row norm), cid (nearest centroid — the ``assign_centroids``
+    argmax verbatim, via :func:`_inline_best`) and code_0..code_{m-1}
+    (per group the nearest codebook slice: min over (-cos, codebook
+    vec_id) structs — the ``pq_codes`` tie-break; codes are codebook
+    vec_ids, the stored index layout). All over literal centroid/
+    codebook matrices, so encoding is a per-row expression with ZERO
+    exchanges. Row norm, cid, slices and slice norms are let-bound (once
+    per row, not once per centroid/codebook entry — see :func:`_let`);
+    centroid/codebook norms are :func:`_pynorm` literals, so dot/(n·n)
+    is value-identical to ``cosine()``.
+
+    ``only``: centroid ids whose rows need codes — a serving scan codes
+    just the rows some query probes (NULL codes elsewhere; the CASE
+    branch is not evaluated), the rest pay only the assignment. Used by
+    the corpus serving scans, ``write_ann_index`` and ``update_ann_index``."""
+    n, cents, cb = f.params.sub_len, f.cents, f.cb
+    groups = range(f.params.m) if codes else range(0)
+    if not cents or (codes and not cb):
+        # no head rows to encode against: no row can be encoded (an
+        # empty frame with the same columns — e.g. an EMPTY index)
+        names = ["cid"] + [f"code_{g}" for g in groups]
+        return e.select(
+            *e.columns,
+            F.lit(None).cast("double").alias("nv"),
+            *[F.lit(None).cast("long").alias(c) for c in names],
+        ).limit(0)
+    cent_norms = [_pynorm(v) for _, v in cents]
+    cb_ids = _ids_sql([c for c, _ in cb])
+    cidx = F.sequence(F.lit(0), F.lit(len(cb) - 1))
+
+    def code(s, g):
+        cbmat = _dmat_sql([v[g * n : (g + 1) * n] for _, v in cb])
+        cbn = _dmat_sql([_pynorm(v[g * n : (g + 1) * n]) for _, v in cb])
+        return F.array_min(
+            F.transform(
+                cidx,
+                lambda i: F.struct(
+                    (
+                        -F.round(
+                            V.dot(s[f"sl_{g}"], F.element_at(cbmat, i + 1))
+                            / (s[f"nsl_{g}"] * F.element_at(cbn, i + 1)),
+                            6,
+                        )
+                    ).alias("nc"),
+                    F.element_at(cb_ids, i + 1).alias("cid"),
                 ),
-                V.norm(_sl(F.col("cv"))).alias("na"),
-                _nd.alias("nq"),
-                _nl.alias("vid"),
-                _nv.alias("v"),
             )
+        ).getField("cid")
+
+    def pq(v):
+        sl = {f"sl_{g}": F.slice(v, g * n + 1, n) for g in groups}
+        return _let(
+            sl,
+            lambda s1: _let(
+                {k: s1[k] for k in sl}
+                | {f"nsl_{g}": V.norm(s1[f"sl_{g}"]) for g in groups},
+                lambda s2: F.struct(*[code(s2, g).alias(f"code_{g}") for g in groups]),
+            ),
         )
-        legs.append(k1)
-    k2 = e.filter(head_pred).select(
-        F.lit(2).alias("kind"),
-        _nl.alias("qid"),
-        F.lit(-1).alias("g"),
-        _nl.alias("cid"),
-        _nd.alias("c"),
-        _nd.alias("na"),
-        _nd.alias("nq"),
-        F.col("vec_id").alias("vid"),
-        F.col("v").alias("v"),
+
+    def body(s):
+        fields = [s["nv"].alias("nv"), s["cid"].alias("cid")]
+        if groups:
+            c = pq(s["v"])
+            if only is not None:
+                c = F.when(F.array_contains(_ids_sql(only or [-1]), s["cid"]), c)
+            fields.append(c.alias("codes"))
+        return F.struct(*fields)
+
+    enc = _let(
+        {"v": F.col("v"), "nv": V.norm(F.col("v"))},
+        lambda s: _let(
+            {
+                "v": s["v"],
+                "nv": s["nv"],
+                "cid": _inline_best(s["v"], cents, cent_norms, s["nv"]).getField("cid"),
+            },
+            body,
+        ),
     )
-    legs.append(k2)
-    out = legs[0]
-    for leg in legs[1:]:
-        out = out.unionByName(leg)
-    rows = out.collect()
-    by_id = {
-        int(r["vid"]): [float(x) for x in r["v"]]
-        for r in rows
-        if r["kind"] == 2
-    }
-    return {
-        "rows": rows,
-        "by_id": by_id,
-        "n_centroids": int(n_centroids),
-        "ks": None if ks is None else int(ks),
-        "m": int(m),
-        "q_max": q_max,
-        "head_max": int(head_max),
-    }
+    # the struct is read field by field; referenced more than once, it is
+    # not collapsed into its readers, so each row is encoded once
+    return e.withColumn("_enc", enc).select(
+        *e.columns,
+        F.col("_enc.nv").alias("nv"),
+        F.col("_enc.cid").alias("cid"),
+        *[F.col(f"_enc.codes.code_{g}").alias(f"code_{g}") for g in groups],
+    )
 
 
-def _check_fetch(fetch: dict, *, n_centroids, ks, m, q_max, need) -> None:
-    """Reject a shared fetch bundle whose build parameters don't cover
-    this callee's — the r15 pass-through trusted the caller and a
-    default drift would have silently shrunk cent/cb/query rows (r15
-    ADVICE). Raises instead of asserting so the guard survives -O."""
-    bad = fetch["n_centroids"] != int(n_centroids)
-    bad = bad or (ks is not None and fetch["ks"] != int(ks))
-    bad = bad or (m and fetch["m"] != int(m))
-    bad = bad or (
-        q_max is not None
-        and (fetch["q_max"] is None or fetch["q_max"] < int(q_max))
+def _fan_out(cand: DataFrame, f: _Fetch, *cols: str) -> DataFrame:
+    """``cols`` of every candidate row once per query whose probe set
+    holds its bucket ``cid``, with the query's position ``qp`` and its
+    ``query_id``: rows probed by nobody drop out, so ONE scan serves the
+    whole batch and a solo query is a batch of one. (Rejected in r13:
+    exploding the FULL query range before pruning — 16.4 s at sf1.)"""
+    lists = F.expr(
+        "array("
+        + ",".join(
+            "array(" + ",".join(f"{c}L" for c in ps) + ")"
+            if ps
+            else "array(CAST(-1 AS BIGINT))"
+            for ps in f.probed
+        )
+        + ")"
     )
-    bad = bad or fetch["head_max"] < int(need)
-    if bad:
+    qps = F.filter(
+        F.sequence(F.lit(0), F.lit(len(f.queries) - 1)),
+        lambda qp: F.array_contains(F.element_at(lists, qp + 1), F.col("cid")),
+    )
+    return cand.select(*cols, F.explode(qps).alias("qp")).withColumn(
+        "query_id", F.element_at(_ids_sql([q for q, _ in f.queries]), F.col("qp") + 1)
+    )
+
+
+def _top_k(df: DataFrame, score: str, n: int, name: str, one: bool) -> DataFrame:
+    """Per-query top ``n`` by (score DESC, vec_id ASC) as ``name``: the
+    ``row_number() <= n`` window compiles to WindowGroupLimit, so map
+    tasks pre-trim before the one exchange (O(n × queries × tasks)
+    rows, corpus-independent — the ``knn_batch`` discipline). For
+    ``one`` query the cut is a TakeOrdered instead — a bounded heap per
+    task and no separate shuffle job; the rows and ranks are the same."""
+    order = (F.desc(score), F.asc("vec_id"))
+    if one:
+        return df.orderBy(*order).limit(n).withColumn(
+            name, F.row_number().over(Window.orderBy(*order))
+        )
+    w = Window.partitionBy("query_id").orderBy(*order)
+    return df.withColumn(name, F.row_number().over(w)).filter(F.col(name) <= n)
+
+
+def _ivf_core(e: DataFrame, f: _Fetch, k: int, pred: Column | None = None):
+    """THE IVF probe-and-score scan for a query batch: one pass over
+    ``e`` (vec_id, v, extra columns kept in the output), restricted by
+    the optional scan ``pred`` BEFORE any cosine is computed, encoded
+    inline, fanned out to the probing queries and scored as dot/(nv·nq)
+    (value-identical to ``cosine()``; query norms are literals).
+    Output: query_id, vec_id, <extra>, cos_sim (6 dp), rank (≤ k)."""
+    extra = [c for c in e.columns if c not in ("vec_id", "v")]
+    if not f.queries or not f.cents:
+        return e.select(
+            F.col("vec_id").cast("long").alias("query_id"),
+            "vec_id",
+            *extra,
+            F.lit(0.0).alias("cos_sim"),
+            F.lit(1).alias("rank"),
+        ).limit(0)
+    qp = F.col("qp") + 1
+    qmat = _dmat_sql([v for _, v in f.queries])
+    qnorms = _dmat_sql([_pynorm(v) for _, v in f.queries])
+    cand = _encoded(e if pred is None else e.filter(pred), f, codes=False)
+    scored = _fan_out(cand, f, "vec_id", "v", *extra, "nv").select(
+        "query_id",
+        "vec_id",
+        *extra,
+        F.round(
+            V.dot(F.col("v"), F.element_at(qmat, qp))
+            / (F.col("nv") * F.element_at(qnorms, qp)),
+            6,
+        ).alias("cos_sim"),
+    )
+    return _top_k(scored, "cos_sim", k, "rank", len(f.queries) == 1)
+
+
+_PQ_SCHEMA = "query_id long, vec_id long, approx_sim double, cos_sim double, rank int"
+
+
+def _ivfpq_core(cand: DataFrame, f: _Fetch, k: int) -> DataFrame:
+    """THE IVF-PQ scorer for a query batch over ``cand`` — (vec_id, v,
+    cid, code_0..code_{m-1}) rows from either the corpus scan with
+    inline encoding or a written index's probed partitions: fan out to
+    the probing queries, ADC = the m per-group LUT cosines summed in
+    group order and re-rounded to 6 dp (a per-row literal lookup), a
+    per-query ``rerank`` shortlist, then exact cosine against the query
+    for the final per-query top-k. Output: query_id, vec_id,
+    approx_sim, cos_sim, rank (≤ k per query, by exact cosine)."""
+    p, one = f.params, len(f.queries) == 1
+    if not f.queries or not f.cents or not f.cb:
+        return cand.sparkSession.createDataFrame([], _PQ_SCHEMA)
+    # a zero-norm codebook/query SUB-slice gives a NULL cosine that the
+    # oracle's SUM() would skip; the literal lookup cannot, so it fails
+    # loudly. Corpus ROWS with a zero-norm sub-slice remain a documented-
+    # unsupported input class (the inline argmin folds their NULL
+    # sub-scores first), never produced by the engine's writers.
+    if any(c is None or c != c for q in f.lut for g in q for c in g):
         raise ValueError(
-            f"shared head fetch built with {({k: fetch[k] for k in ('n_centroids', 'ks', 'm', 'q_max', 'head_max')})} "
-            f"does not cover callee params n_centroids={n_centroids}, "
-            f"ks={ks}, m={m}, q_max={q_max}, need={need}"
+            "NULL/NaN ADC lookup entry (zero-norm codebook/query "
+            "sub-vector) — unsupported by the inline-LUT serving path"
         )
+    # per query, per group: a ks-long literal indexed by code + 1 (codes
+    # ARE codebook vec_ids; ids absent from the codebook stay NULL)
+    cb_ids = [c for c, _ in f.cb]
+    luts = [
+        [[dict(zip(cb_ids, r)).get(i) for i in range(p.ks)] for r in q] for q in f.lut
+    ]
+    qlut = F.element_at(_dmat_sql(luts), F.col("qp") + 1)
+    terms = [
+        F.element_at(F.element_at(qlut, g + 1), (F.col(f"code_{g}") + 1).cast("int"))
+        for g in range(p.m)
+    ]
+    adc = terms[0]
+    for t in terms[1:]:
+        adc = adc + t
+    codes = [f"code_{g}" for g in range(p.m)]
+    scored = _fan_out(cand, f, "vec_id", "v", *codes).select(
+        "query_id", "vec_id", "v", "qp", F.round(adc, 6).alias("approx_sim")
+    )
+    qv = F.element_at(_dmat_sql([v for _, v in f.queries]), F.col("qp") + 1)
+    return _top_k(
+        _top_k(scored, "approx_sim", p.rerank, "rn", one).select(
+            "query_id",
+            "vec_id",
+            "approx_sim",
+            F.round(V.cosine(F.col("v"), qv), 6).alias("cos_sim"),
+        ),
+        "cos_sim",
+        k,
+        "rank",
+        one,
+    )
 
 
 def ivf_knn(
@@ -1128,92 +1347,18 @@ def ivf_knn(
     """IVF-style approximate top-k: probe only the n_probe buckets whose
     centroids are closest to the query. Output: vec_id, cos_sim (6 dp).
 
-    Serving plan: ONE corpus scan, zero exchanges — assignment is an
-    inline min(struct(-cos, cid)) expression over the broadcast-literal
-    centroids (the ``assign_centroids`` tie-break verbatim), the probe
-    filter is scan-local, and top-k is a TakeOrdered. The only driver
-    materialization is the (n_centroids + 1)-row centroid/query fetch —
-    bounded by the parameter, not the corpus. At scale the same layout
-    is served from ``write_ann_index``'s centroid-partitioned files
-    with partition pruning (``ivfpq_knn_indexed``).
-
-    Contract note: unlike the lazy operators, this one runs eager
-    Spark jobs at DataFrame-CONSTRUCTION time (the centroid/query
-    fetch and the n_centroids-row probe ranking) — callers that need
-    a fully lazy plan should serve from ``ivfpq_knn_indexed``. The
-    centroid matrix is emitted as ONE parsed SQL literal (the simhash
-    SQL-string discipline) so plan construction stays linear and
-    JVM-side instead of building O(n_centroids × dims) py4j Column
-    objects.
+    A batch of one over :func:`_ivf_core` (row-identical to its
+    :func:`ivf_knn_batch` slice, pinned by test): ONE corpus scan with
+    inline assignment over literal centroids and a scan-local probe
+    membership test. Construct runs one bounded job, the
+    (n_centroids + 1)-row head fetch (:func:`_fetch`); callers that
+    need a fully lazy plan serve from a written index
+    (``ivfpq_knn_index_batch``).
     """
     e = _as_double(embeddings)
-    # head rows AND the probe scoring in ONE bounded job (r16): the
-    # probe selection previously ran as a second LocalRelation job so
-    # round/cosine semantics were engine-exact; the fused fetch keeps
-    # the engine semantics (same expressions, in-plan over the pushed-
-    # down scan legs) while collecting head vectors, probe cosines and
-    # norms together. (r15 NOTE stands: a lazy broadcast-semi-join
-    # probe was tried and REVERTED — the scan-local isin literal
-    # filter is free at exec, and the per-action broadcast build cost
-    # more than the tiny probe job saved; r16 removes that job without
-    # changing the exec shape.)
-    fetch = _head_scored_fetch(
-        e,
-        (F.col("vec_id") < n_centroids) | (F.col("vec_id") == query_id),
-        F.col("vec_id") == query_id,
-        n_centroids,
-        head_max=n_centroids,
-    )
-    by_id = fetch["by_id"]
-    if query_id not in by_id:
-        return e.select(
-            "vec_id", F.lit(0.0).alias("cos_sim")
-        ).limit(0)
-    qv = by_id[query_id]
-    qlit = F.array(*[F.lit(x) for x in qv])
-    cent_rows = [
-        (int(cid), by_id[cid]) for cid in sorted(by_id) if cid < n_centroids
-    ]
-    if not cent_rows:
-        # no vec_id below n_centroids: nothing to probe — empty result,
-        # same contract as the missing-query path
-        return e.select("vec_id", F.lit(0.0).alias("cos_sim")).limit(0)
-    probe_scores = _probe_sorted(fetch["rows"])
-    probed = [cid for _, cid in probe_scores[: int(n_probe)]]
-    nmap = {r["cid"]: r["na"] for r in fetch["rows"] if r["kind"] == 0}
-    cent_norms = [nmap[cid] for cid, _ in cent_rows]
-    nq = next(r["nq"] for r in fetch["rows"] if r["kind"] == 0)
-    nq_lit = F.expr(f"CAST('{nq!r}' AS DOUBLE)")
-    # inline assignment: argmax over the centroid literals via
-    # min(struct(-cos, cid)) — the assign_centroids tie-break verbatim,
-    # but as a scan-local expression, so the corpus is read ONCE with
-    # ZERO exchanges and top-k is a TakeOrdered (the previous plan
-    # shuffled full vectors through a corpus-sized vec_id join: the one
-    # super-linear scaler of the r5 sf1 pass, x12 on x10 data).
-    # The centroid matrix + id list go through ONE parsed SQL string
-    # each: CAST('<repr>' AS DOUBLE) round-trips the exact double, and
-    # a single expr() parse replaces n_centroids × dims py4j literal
-    # Columns (driver plan-build was quadratic-ish at the 65536 clamp).
-    # The row norm is let-bound (computed once per row, not once per
-    # centroid — see _let) and centroid/query norms ride as engine-
-    # computed literals from the probe job: the score dot/(nv·nc) is
-    # value-identical to cosine() while cutting per-row work ~3×.
-    cid_col = _let(
-        {"nv": V.norm(F.col("v"))},
-        lambda s: _inline_best(F.col("v"), cent_rows, cent_norms, s["nv"]),
-    ).getField("cid")
-    return (
-        e.withColumn("cid", cid_col)
-        .filter(F.col("cid").isin(probed))
-        .select(
-            "vec_id",
-            F.round(
-                V.dot(F.col("v"), qlit) / (V.norm(F.col("v")) * nq_lit), 6
-            ).alias("cos_sim"),
-        )
-        .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-        .limit(k)
-    )
+    f = _fetch(e, AnnParams(n_centroids, n_probe), [query_id], pq=False)
+    # a batch of one in its solo shape: rank order, no query_id
+    return _ivf_core(e, f, k).orderBy("rank").limit(k).select("vec_id", "cos_sim")
 
 
 def embedding_centroids(embeddings: DataFrame, k: int = 8) -> DataFrame:
@@ -1739,8 +1884,7 @@ def pq_codes(
 
     Output: vec_id, code_0..code_{m-1} (long).
     """
-    assert dims % m == 0, "m must divide dims"
-    sub_len = dims // m
+    sub_len = AnnParams(m=m, ks=ks, dims=dims).sub_len
     e = _as_double(embeddings)
     slices = F.array(*[F.slice("v", g * sub_len + 1, sub_len) for g in range(m)])
     parts = e.select("vec_id", F.posexplode(slices).alias("g", "sv"))
@@ -1797,187 +1941,26 @@ def ivfpq_knn(
     (asymmetric distance: per-subspace query-vs-codebook cosine lookup
     tables, summed over the m codes), and only the top ``rerank``
     candidates are re-scored against their REAL vectors for the final
-    top-k.  Completes the suite knn (exact brute) -> ivf_knn (pruned
+    top-k. Completes the suite knn (exact brute) -> ivf_knn (pruned
     exact) -> ivfpq_knn (pruned + compressed scoring).
 
-    100 TB shape: the corpus-sized inputs are the IVF assignment and the
-    code table — both written once, partitioned by centroid_id; a query
-    touches n_probe partitions of 4-byte codes, never the vectors, until
-    the ``rerank``-row shortlist.  Everything query-sized here is
-    broadcast (query vector, probed bucket list, m*ks-row LUT,
-    shortlist); the only corpus-wide work is one broadcast-join over the
-    probed codes and a partially-aggregated sum of m lookups per
-    candidate.  Rounding contract: LUT entries and all emitted
-    similarities round to 6 dp; approx_sim is a sum of m 6-dp values
-    (re-rounded), so cross-engine accumulation order cannot flip it.
-    Ties break on vec_id everywhere.  The query vector itself ranks
-    first (cos 1.0) by construction, matching knn/ivf_knn.
+    Rounding contract: LUT entries and all emitted similarities round
+    to 6 dp; approx_sim is a sum of m 6-dp values (re-rounded), so
+    cross-engine accumulation order cannot flip it. Ties break on
+    vec_id everywhere. The query ranks first (cos 1.0) by construction.
 
-    Output: vec_id, approx_sim, cos_sim — top-k by exact cosine over the
-    PQ shortlist.
-
-    r15 plan shape — ONE corpus scan, zero corpus-sized exchanges: the
-    coarse assignment and the m PQ codes are scan-local argmin
-    expressions over literal centroid/codebook matrices (the
-    :func:`ivf_knn` inline-assignment discipline extended to PQ), the
-    probe filter and the ADC lookup-table sum are per-row expressions,
-    and the rerank shortlist rides a TakeOrdered-style local-sort+limit
-    (only per-partition top-``rerank`` rows, WITH their vectors, reach
-    the single merge partition — rerank × tasks rows, corpus-
-    independent). The r14 form paid two corpus-wide SortAggregate
-    exchanges (assignment + codes), a corpus-sized SortMergeJoin to
-    re-join them, a corpus-sized ADC groupBy exchange, and a third
-    corpus scan for the rerank join. Construct runs two bounded driver
-    jobs: the max(n_centroids, ks)-row head fetch and an
-    (n_centroids + m·ks)-row LOCAL frame computing probe ranking + LUT
-    with engine-exact round/cosine semantics (the ivf_knn probe
-    precedent). All arithmetic is expression-identical to the r14 form
-    (same cosine fold, same 6-dp rounds, same (-cos, cid) tie-breaks,
-    same l_0+..+l_{m-1} ADC order), so results are row-identical —
-    pinned by the ivfpq equivalence tests and the oracle.
+    A batch of one over :func:`_ivfpq_core` with the corpus scan as
+    candidate source: ONE corpus scan, zero corpus-sized exchanges
+    (encoding, probe membership and the ADC sum are per-row
+    expressions; the shortlist and top-k are TakeOrdered cuts).
+    Output: vec_id, approx_sim, cos_sim — top-k by exact cosine over
+    the PQ shortlist.
     """
-    assert dims % m == 0, "m must divide dims"
-    sub_len = dims // m
+    p = AnnParams(n_centroids, n_probe, m, ks, dims, rerank)
     e = _as_double(embeddings)
-    empty = e.select(
-        "vec_id",
-        F.lit(0.0).alias("approx_sim"),
-        F.lit(0.0).alias("cos_sim"),
-    ).limit(0)
-    need = max(int(n_centroids), int(ks))
-    # head rows + probe ranking + ADC lookup table in ONE bounded job
-    # (r16; was a head collect followed by a LocalRelation job) —
-    # round/cosine computed by the engine itself (exact oracle parity;
-    # the ivf_knn probe-collect precedent). kind 0 rows: full centroid
-    # vs query (probe scores); kind 1 rows: codebook sub-vector vs the
-    # query's matching slice (LUT entries); kind 2: raw head vectors.
-    fetch = _head_scored_fetch(
-        e,
-        (F.col("vec_id") < need) | (F.col("vec_id") == query_id),
-        F.col("vec_id") == query_id,
-        n_centroids,
-        ks=ks,
-        m=m,
-        sub_len=sub_len,
-        head_max=need,
-    )
-    by_id = fetch["by_id"]
-    if query_id not in by_id:
-        return empty
-    qv = by_id[query_id]
-    qlit = F.array(*[F.lit(x) for x in qv])
-    cent_rows = [
-        (cid, by_id[cid]) for cid in sorted(by_id) if cid < n_centroids
-    ]
-    cb_rows = [(cid, by_id[cid]) for cid in sorted(by_id) if cid < ks]
-    if not cent_rows or not cb_rows:
-        return empty
-    scored_local = fetch["rows"]
-    probe_scores = _probe_sorted(scored_local)
-    probed = [cid for _, cid in probe_scores[: int(n_probe)]]
-    lut = {(r["g"], r["cid"]): r["c"] for r in scored_local if r["kind"] == 1}
-    # the LUT sum must skip NULL entries exactly like the r14 SUM()
-    # aggregate did; engine-valid embeddings can still have a zero
-    # SUB-slice, whose cosine is NULL (documented: synthetic corpora
-    # don't produce them — the guard keeps the contract anyway; a
-    # ValueError, not an assert, so it survives -O). Corpus ROWS with a
-    # zero-norm sub-slice remain a documented-unsupported input class:
-    # the scan-side argmin folds their NULL sub-scores NULL-first and
-    # picks codebook position 0 (adding a real LUT term) where the r14
-    # SUM-over-joined-codes skipped the term — divergence documented,
-    # inputs never produced by the engine's embedding writers.
-    if not all(v is not None and v == v for v in lut.values()):
-        raise ValueError(
-            "NULL/NaN ADC lookup entry (zero-norm codebook/query "
-            "sub-vector) — unsupported by the inline-LUT serving path"
-        )
-    cnorm = {r["cid"]: r["na"] for r in scored_local if r["kind"] == 0}
-    subnorm = {
-        (r["g"], r["cid"]): r["na"] for r in scored_local if r["kind"] == 1
-    }
-    cent_norms = [cnorm[cid] for cid, _ in cent_rows]
-    # per-group code POSITION (argmin over the cid-ascending codebook —
-    # position order == cid order, so min over (-cos, pos) selects the
-    # identical entry as pq_codes' min over (-cos, cid)). Row norm and
-    # per-group slice/slice-norm are let-bound (once per row, not once
-    # per codebook entry — see _let); codebook norms ride as engine-
-    # computed literals, so dot/(nsl·ncb) is value-identical to the
-    # cosine() form.
-    cb_ids = [cid for cid, _ in cb_rows]
-    pos_lit = F.expr(
-        "array(" + ",".join(str(p) for p in range(len(cb_rows))) + ")"
-    )
-    cidx = F.sequence(F.lit(0), F.lit(len(cb_rows) - 1))
-
-    def adc_expr(s2):
-        def code_pos_for(g):
-            cbmat = _dmat_sql(
-                [cv[g * sub_len : (g + 1) * sub_len] for _, cv in cb_rows]
-            )
-            cbn = _norms_sql([subnorm[(g, cid)] for cid in cb_ids])
-            return F.array_min(
-                F.transform(
-                    cidx,
-                    lambda i: F.struct(
-                        (
-                            -F.round(
-                                V.dot(s2[f"sl_{g}"], F.element_at(cbmat, i + 1))
-                                / (s2[f"nsl_{g}"] * F.element_at(cbn, i + 1)),
-                                6,
-                            )
-                        ).alias("nc"),
-                        F.element_at(pos_lit, i + 1).alias("p"),
-                    ),
-                )
-            ).getField("p")
-
-        terms = []
-        for g in range(m):
-            code_pos = code_pos_for(g)
-            lut_g = F.expr(
-                "array("
-                + ",".join(
-                    f"CAST('{lut[(g, cid)]!r}' AS DOUBLE)" for cid in cb_ids
-                )
-                + ")"
-            )
-            terms.append(F.element_at(lut_g, code_pos + 1))
-        adc = terms[0]
-        for t in terms[1:]:
-            adc = adc + t
-        return F.round(adc, 6)
-
-    approx_col = _let(
-        {
-            f"sl_{g}": F.slice(F.col("v"), g * sub_len + 1, sub_len)
-            for g in range(m)
-        },
-        lambda s1: _let(
-            {f"nsl_{g}": V.norm(s1[f"sl_{g}"]) for g in range(m)}
-            | {f"sl_{g}": s1[f"sl_{g}"] for g in range(m)},
-            adc_expr,
-        ),
-    )
-    cid_col = _let(
-        {"nv": V.norm(F.col("v"))},
-        lambda s: _inline_best(F.col("v"), cent_rows, cent_norms, s["nv"]),
-    ).getField("cid")
-    shortlist = (
-        e.withColumn("cid", cid_col)
-        .filter(F.col("cid").isin(probed))
-        .select("vec_id", "v", approx_col.alias("approx_sim"))
-        .orderBy(F.desc("approx_sim"), F.asc("vec_id"))
-        .limit(rerank)
-    )
-    return (
-        shortlist.select(
-            "vec_id",
-            "approx_sim",
-            F.round(V.cosine(F.col("v"), qlit), 6).alias("cos_sim"),
-        )
-        .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-        .limit(k)
-    )
+    f = _fetch(e, p, [query_id])
+    out = _ivfpq_core(_encoded(e, f, only=f.probed_union), f, k)
+    return out.orderBy("rank").limit(k).select("vec_id", "approx_sim", "cos_sim")
 
 
 def write_ann_index(
@@ -1988,131 +1971,28 @@ def write_ann_index(
     ks: int = 16,
     dims: int = 64,
 ) -> None:
-    """Materialize the IVF-PQ index the docstrings promise: one pass
-    computes the coarse assignment + PQ codes and writes
+    """Materialize the IVF-PQ index: one pass computes the coarse
+    assignment + PQ codes (:func:`_encoded`) and writes
 
     * ``{path}/index`` — vec_id, v, code_0..code_{m-1}, PARTITIONED BY
       centroid_id (repartitioned on it first: one file per bucket, not
       one per task x bucket), and
-    * ``{path}/centroids`` — the n_centroids (centroid_id, cv) rows +
-      the m x ks sub-codebook, tiny.
+    * ``{path}/centroids`` — the vec_id < max(n_centroids, ks) rows
+      (centroids and sub-codebook), tiny.
 
-    After this runs once, every query is `ivfpq_knn_indexed`: read the
-    tiny centroids file, pick n_probe buckets, and scan ONLY those
-    partitions of the index (partition pruning — asserted by test).
-    At 100 TB this is the difference between an ANN query costing a
-    corpus scan and costing n_probe/n_centroids of one.
-
-    r15 build shape — ONE corpus scan + ONE exchange (the centroid_id
-    repartition feeding the partitioned write): assignment and the m
-    PQ codes are scan-local argmin expressions over literal centroid/
-    codebook matrices (the ivfpq_knn inline rewrite; norms let-bound
-    per row, centroid/codebook norms driver-computed via the
-    bit-exact _pynorm). The r14 build paid three corpus scans, two
-    corpus-wide SortAggregate exchanges and two corpus-sized
-    SortMergeJoins to re-join assignment and codes on vec_id. Values
-    are expression-identical (same folds, rounds, (-cos, cid)
-    tie-breaks), so the written layout is row-identical — pinned by
-    the index-vs-ivfpq_knn equivalence tests.
+    After this runs once, queries are served by
+    ``ivfpq_knn_index_batch``: read the tiny centroids file, pick the
+    probed buckets, and scan ONLY those partitions of the index
+    (partition pruning — asserted by test). Build shape: ONE corpus
+    scan + ONE exchange (the centroid_id repartition feeding the
+    partitioned write).
     """
-    assert dims % m == 0, "m must divide dims"
-    sub_len = dims // m
     e = _as_double(embeddings)
-    need = max(int(n_centroids), int(ks))
-    head = e.filter(F.col("vec_id") < need).collect()
-    by_id = {int(r["vec_id"]): [float(x) for x in r["v"]] for r in head}
-    cent_rows = [
-        (cid, by_id[cid]) for cid in sorted(by_id) if cid < n_centroids
-    ]
-    cb_rows = [(cid, by_id[cid]) for cid in sorted(by_id) if cid < ks]
-    code_names = [f"code_{g}" for g in range(m)]
-    if cent_rows and cb_rows:
-        cent_norms = [_pynorm(cv) for _, cv in cent_rows]
-        cb_lits = _ids_sql([cid for cid, _ in cb_rows])
-        cidx = F.sequence(F.lit(0), F.lit(len(cb_rows) - 1))
-
-        def pq_struct(s2):
-            fields = [
-                _inline_best(s2["v"], cent_rows, cent_norms, s2["nv"])
-                .getField("cid")
-                .alias("centroid_id")
-            ]
-
-            def code_for(g):
-                cbmat = _dmat_sql(
-                    [cv[g * sub_len : (g + 1) * sub_len] for _, cv in cb_rows]
-                )
-                cbn = _norms_sql(
-                    [_pynorm(cv[g * sub_len : (g + 1) * sub_len]) for _, cv in cb_rows]
-                )
-                return (
-                    F.array_min(
-                        F.transform(
-                            cidx,
-                            lambda i: F.struct(
-                                (
-                                    -F.round(
-                                        V.dot(
-                                            s2[f"sl_{g}"],
-                                            F.element_at(cbmat, i + 1),
-                                        )
-                                        / (
-                                            s2[f"nsl_{g}"]
-                                            * F.element_at(cbn, i + 1)
-                                        ),
-                                        6,
-                                    )
-                                ).alias("nc"),
-                                F.element_at(cb_lits, i + 1).alias("cid"),
-                            ),
-                        )
-                    )
-                    .getField("cid")
-                    .alias(f"code_{g}")
-                )
-
-            for g in range(m):
-                fields.append(code_for(g))
-            return F.struct(*fields)
-
-        pq_col = _let(
-            {
-                "v": F.col("v"),
-                "nv": V.norm(F.col("v")),
-            }
-            | {
-                f"sl_{g}": F.slice(F.col("v"), g * sub_len + 1, sub_len)
-                for g in range(m)
-            },
-            lambda s1: _let(
-                {
-                    "v": s1["v"],
-                    "nv": s1["nv"],
-                }
-                | {f"sl_{g}": s1[f"sl_{g}"] for g in range(m)}
-                | {f"nsl_{g}": V.norm(s1[f"sl_{g}"]) for g in range(m)},
-                pq_struct,
-            ),
-        )
-        indexed = e.withColumn("_pq", pq_col).select(
-            "vec_id",
-            "v",
-            F.col("_pq").getField("centroid_id").alias("centroid_id"),
-            *[
-                F.col("_pq").getField(name).alias(name)
-                for name in code_names
-            ],
-        )
-    else:
-        # no head rows below max(n_centroids, ks): nothing can be
-        # assigned or coded — the r14 inner joins produced an EMPTY
-        # index with the same schema
-        indexed = e.select(
-            "vec_id",
-            "v",
-            F.lit(None).cast("long").alias("centroid_id"),
-            *[F.lit(None).cast("long").alias(name) for name in code_names],
-        ).limit(0)
+    f = _fetch(e, AnnParams(n_centroids, m=m, ks=ks, dims=dims))
+    codes = [f"code_{g}" for g in range(m)]
+    indexed = _encoded(e, f).select(
+        "vec_id", "v", F.col("cid").alias("centroid_id"), *codes
+    )
     (
         indexed.repartition("centroid_id")
         .write.mode("overwrite")
@@ -2122,95 +2002,6 @@ def write_ann_index(
     e.filter(F.col("vec_id") < max(n_centroids, ks)).select(
         "vec_id", F.col("v").alias("cv")
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
-
-
-def ivfpq_knn_indexed(
-    spark,
-    path: str,
-    query_vec: list[float],
-    k: int = 10,
-    n_centroids: int = 16,
-    n_probe: int = 4,
-    m: int = 4,
-    ks: int = 16,
-    dims: int = 64,
-    rerank: int = 64,
-) -> DataFrame:
-    """Serve an ANN query from a materialized `write_ann_index` layout.
-
-    The centroid file is planning-sized: probing collects the n_probe
-    winning centroid ids (a bounded, documented collect — the literal
-    values are what MAKES the index read partition-prunable; the same
-    pattern every ANN serving layer uses) and the m x ks LUT is built
-    from the codebook rows against Python-side query slices. The
-    corpus-sized read then carries an explicit ``centroid_id IN (...)``
-    filter on the PARTITION column — only the probed directories are
-    listed or scanned (asserted by test). Scoring matches `ivfpq_knn`:
-    summed per-subspace LUT cosines over the stored codes, exact
-    re-rank of the ``rerank`` shortlist against the stored vectors.
-
-    Output: vec_id, approx_sim, cos_sim (same contract as ivfpq_knn,
-    and bit-identical to it for the same corpus/query — the equivalence
-    the test pins).
-    """
-    from functools import reduce
-
-    assert dims % m == 0
-    sub_len = dims // m
-    cents = spark.read.parquet(f"{path}/centroids")
-    qcol = F.array(*[F.lit(float(x)) for x in query_vec])
-    probed_rows = (
-        cents.filter(F.col("vec_id") < n_centroids)
-        .select(
-            F.col("vec_id").alias("centroid_id"),
-            F.round(V.cosine(F.col("cv"), qcol), 6).alias("c_sim"),
-        )
-        .orderBy(F.desc("c_sim"), F.asc("centroid_id"))
-        .limit(n_probe)
-        .collect()
-    )
-    probed_ids = [r["centroid_id"] for r in probed_rows]
-
-    luts = []
-    for g in range(m):
-        qsub = F.array(
-            *[F.lit(float(x)) for x in query_vec[g * sub_len : (g + 1) * sub_len]]
-        )
-        luts.append(
-            cents.filter(F.col("vec_id") < ks).select(
-                F.lit(g).alias("g"),
-                F.col("vec_id").alias("cid"),
-                F.round(
-                    V.cosine(F.slice("cv", g * sub_len + 1, sub_len), qsub), 6
-                ).alias("l"),
-            )
-        )
-    lut = reduce(DataFrame.union, luts)
-
-    idx = spark.read.parquet(f"{path}/index").filter(
-        F.col("centroid_id").isin(probed_ids)
-    )
-    melted = idx.select(
-        "vec_id",
-        F.posexplode(F.array(*[f"code_{g}" for g in range(m)])).alias("g", "cid"),
-    )
-    approx = (
-        melted.join(F.broadcast(lut), ["g", "cid"])
-        .groupBy("vec_id")
-        .agg(F.round(F.sum("l"), 6).alias("approx_sim"))
-    )
-    shortlist = approx.orderBy(F.desc("approx_sim"), F.asc("vec_id")).limit(rerank)
-    return (
-        idx.select("vec_id", "v")
-        .join(F.broadcast(shortlist), "vec_id")
-        .select(
-            "vec_id",
-            "approx_sim",
-            F.round(V.cosine(F.col("v"), qcol), 6).alias("cos_sim"),
-        )
-        .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-        .limit(k)
-    )
 
 
 def ivfpq_recall(
@@ -2278,8 +2069,7 @@ def pq_distortion(
 
     Output: g, n_vecs, mean_best_cos (4 dp), n_low.
     """
-    assert dims % m == 0
-    sub_len = dims // m
+    sub_len = AnnParams(m=m, ks=ks, dims=dims).sub_len
     e = _as_double(embeddings)
     slices = F.array(*[F.slice("v", g * sub_len + 1, sub_len) for g in range(m)])
     parts = e.select("vec_id", F.posexplode(slices).alias("g", "sv"))
@@ -2381,124 +2171,28 @@ def ivf_knn_batch(
     k: int = 10,
     n_centroids: int = 16,
     n_probe: int = 4,
-    head_fetch: dict | None = None,
+    head_fetch: _Fetch | None = None,
 ) -> DataFrame:
     """Batched IVF serving WITHOUT a materialized index — ``ivf_knn``
-    for a query batch in ONE corpus scan (``knn_batch``'s serving
-    shape applied to the probe-pruned path): the ``n_queries`` lowest
-    vec_ids play the query batch, per-query probe sets are selected on
-    a local (n_centroids × n_queries)-row frame with engine-exact
-    rounding, and the corpus scan assigns each vector inline (the
-    ``ivf_knn`` min(struct) argmin over ONE parsed centroid-matrix SQL
-    literal), fans out only to the queries whose probe set contains
-    its bucket, and pre-trims to k rows per query per task via the
-    rank window's WindowGroupLimit before the single tiny exchange.
+    for a query batch in ONE corpus scan (:func:`_ivf_core`): the
+    ``n_queries`` lowest vec_ids play the query batch, each row is
+    assigned inline and fans out only to the queries whose probe set
+    holds its bucket, and the per-query rank window pre-trims to k rows
+    per query per task before the single tiny exchange.
 
     Row-for-row identical to per-query ``ivf_knn`` calls (pinned by
-    test) at 1/n_queries of the scans. Bounded driver work: the
-    (max(n_centroids, n_queries))-row head fetch + the probe ranking.
+    test) at 1/n_queries of the scans. ``head_fetch``: a :func:`_fetch`
+    result a caller already ran (``retrieval_quality`` shares one
+    across its ivf and ivfpq legs); it must have been built with this
+    call's parameters and queries, else ValueError.
     Output: query_id, vec_id, cos_sim (6 dp), rank (≤ k per query).
     """
     e = _as_double(embeddings)
-    spark = embeddings.sparkSession
-    out_schema = "query_id long, vec_id long, cos_sim double, rank int"
-    # head_fetch: a caller that already ran the fused head fetch
-    # (retrieval_quality shares ONE _head_scored_fetch across the ivf
-    # and ivfpq batch legs — the per_doc_df/shingle_df pass-through
-    # pattern) supplies the bundle; the build bound is VALIDATED (not
-    # trusted) so a parameter drift raises instead of silently
-    # shrinking the centroid/query rows (r15 ADVICE). None keeps the
-    # self-contained fetch. Only the raw head rows are consumed here —
-    # this op's probe ranking stays a lazy in-plan subtree (r15).
-    need = max(n_centroids, n_queries)
+    p, ids = AnnParams(n_centroids, n_probe), range(n_queries)
     if head_fetch is None:
-        head = e.filter(F.col("vec_id") < need).collect()
-        by_id = {r["vec_id"]: [float(x) for x in r["v"]] for r in head}
-    else:
-        if head_fetch["head_max"] < need:
-            raise ValueError(
-                f"shared head fetch covers vec_id < {head_fetch['head_max']}"
-                f" but ivf_knn_batch needs vec_id < {need}"
-            )
-        by_id = {
-            cid: v for cid, v in head_fetch["by_id"].items() if cid < need
-        }
-    cent_rows = [(int(i), by_id[i]) for i in sorted(by_id) if i < n_centroids]
-    query_rows = [(int(i), by_id[i]) for i in sorted(by_id) if i < n_queries]
-    if not cent_rows or not query_rows:
-        return spark.createDataFrame([], out_schema)
-    cents_local = spark.createDataFrame(
-        cent_rows, "centroid_id long, cv array<double>"
-    )
-    qs_local = spark.createDataFrame(
-        query_rows, "query_id long, qv array<double>"
-    )
-    pw = Window.partitionBy("query_id").orderBy(
-        F.desc("c_sim"), F.asc("centroid_id")
-    )
-    # broadcast per the repo-wide crossJoin rule — without the hint the
-    # two local relations plan a 32×32-task CartesianProduct that costs
-    # ~14 s of pure scheduling for 64 rows (measured, r13). The probe
-    # ranking stays LAZY (r15): it used to be collected at construct
-    # and re-created as a local relation, costing a driver-blocking
-    # job per call; as a (n_queries·n_probe)-row subtree of the
-    # broadcast build it computes inside the query's own action with
-    # identical rows (same expressions, same window, same tie-break).
-    probe_frame = (
-        cents_local.crossJoin(F.broadcast(qs_local))
-        .select(
-            "query_id",
-            "centroid_id",
-            "qv",
-            F.round(V.cosine(F.col("cv"), F.col("qv")), 6).alias("c_sim"),
-        )
-        .withColumn("rn", F.row_number().over(pw))
-        .filter(F.col("rn") <= n_probe)
-        .select(
-            "query_id",
-            F.col("centroid_id").alias("cid"),
-            "qv",
-            V.norm(F.col("qv")).alias("nq"),
-        )
-    )
-    # inline assignment over the literal centroid matrix, norms
-    # factored (r15): the row norm is a projection column (computed
-    # once per row, reused by the scored cosine) and centroid norms
-    # are driver-computed literals (_pynorm — bit-identical to
-    # V.norm, no rounding involved), so the argmin does one dot per
-    # centroid instead of dot + two norms
-    cent_norms = [_pynorm(cv) for _, cv in cent_rows]
-    best = _inline_best(F.col("v"), cent_rows, cent_norms, F.col("nv"))
-    # fan out each row ONLY to the queries whose probe set contains its
-    # bucket, via a broadcast hash join on the bucket id: the tiny
-    # (Σ|probe sets|)-row frame carries (query_id, cid, qv), so the
-    # query vector arrives as a COLUMN and the per-row expression stays
-    # the same argmin the solo path compiles. (Two rejected shapes from
-    # the first r13 decade sweep: exploding the full query range
-    # inflated every vector-carrying row n_queries× before pruning —
-    # 16.4 s at sf1, slower than n_queries solo scans — and indexing
-    # per-query literal matrices per row pushed the generated code past
-    # the codegen limits into interpreted fallback, 18 s.)
-    probe_sdf = F.broadcast(probe_frame)
-    scored = (
-        e.select("vec_id", "v", V.norm(F.col("v")).alias("nv"))
-        .withColumn("cid", best["cid"])
-        .join(probe_sdf, "cid")
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(
-                V.dot(F.col("v"), F.col("qv")) / (F.col("nv") * F.col("nq")),
-                6,
-            ).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("vec_id")
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+        head_fetch = _fetch(e, p, ids, pq=False)
+    head_fetch.check(p, ids, pq=False)
+    return _ivf_core(e, head_fetch, k)
 
 
 def ivfpq_knn_batch(
@@ -2511,268 +2205,27 @@ def ivfpq_knn_batch(
     ks: int = 16,
     dims: int = 64,
     rerank: int = 64,
-    head_fetch: dict | None = None,
+    head_fetch: _Fetch | None = None,
 ) -> DataFrame:
     """Batched IVF-PQ serving without a materialized index — the
-    ``ivfpq_knn`` chain for a query batch with every corpus-sized
-    stage computed ONCE: one coarse assignment, one code table, then
-    per-query broadcast-sized frames (probe sets, m·ks·n_queries LUT,
-    rerank-row shortlists) and WindowGroupLimit-trimmed per-query
-    rank windows, exactly the ``ivfpq_knn_index_batch`` serving
-    discipline applied in-plan. Row-for-row identical to per-query
-    ``ivfpq_knn`` calls (pinned by test). Output: query_id, vec_id,
-    approx_sim, cos_sim, rank (≤ k per query, ranked by exact cosine).
-
-    r15 plan shape — ONE corpus scan for the whole batch (the
-    :func:`ivfpq_knn` inline rewrite, vectorized over queries):
-    assignment + per-group code positions are scan-local argmin
-    expressions over literal matrices; each row explodes only the
-    (≤ n_queries) queries that probed its bucket; per-(query, row) ADC
-    is a literal-LUT lookup sum; the only exchanges left are the two
-    WindowGroupLimit-trimmed per-query windows (shortlist + final
-    rank), which carry O(rerank × queries × tasks) rows regardless of
-    corpus size. The r14 form paid two corpus-wide SortAggregate
-    exchanges, a corpus-sized SortMergeJoin, a corpus-sized ADC
-    groupBy exchange, and a third corpus scan for the rerank join.
-    Construct runs two bounded driver jobs (head fetch + the
-    (n_queries·n_centroids + n_queries·m·ks)-row local probe/LUT
-    frame, engine-exact rounding). Arithmetic is expression-identical
-    to r14 (same folds, rounds, tie-breaks, ADC order) — pinned by
-    the batch-vs-solo equivalence test and the oracle.
+    ``ivfpq_knn`` chain for a query batch with every corpus-sized stage
+    computed ONCE (:func:`_ivfpq_core` over the inline-encoded corpus
+    scan): each row explodes only the queries that probed its bucket,
+    per-(query, row) ADC is a literal-LUT lookup sum, and the one
+    exchange carries WindowGroupLimit-trimmed per-query shortlists.
+    Row-for-row identical to per-query ``ivfpq_knn`` calls (pinned by
+    test). ``head_fetch`` as in :func:`ivf_knn_batch`. Output:
+    query_id, vec_id, approx_sim, cos_sim, rank (≤ k per query, ranked
+    by exact cosine).
     """
-    assert dims % m == 0, "m must divide dims"
-    sub_len = dims // m
     e = _as_double(embeddings)
-    empty = e.select(
-        F.col("vec_id").alias("query_id"),
-        "vec_id",
-        F.lit(0.0).alias("approx_sim"),
-        F.lit(0.0).alias("cos_sim"),
-        F.lit(1).alias("rank"),
-    ).limit(0)
-    need = max(int(n_centroids), int(ks), int(n_queries))
-    # head_fetch: shared fused-fetch pass-through (retrieval_quality
-    # runs ONE _head_scored_fetch for the ivf and ivfpq batch legs);
-    # None = self-contained. Either way, head rows + probe rankings +
-    # per-query ADC LUTs come from ONE bounded job (r16; was a head
-    # collect followed by a LocalRelation job).
+    p = AnnParams(n_centroids, n_probe, m, ks, dims, rerank)
+    ids = range(n_queries)
     if head_fetch is None:
-        head_fetch = _head_scored_fetch(
-            e,
-            F.col("vec_id") < need,
-            F.col("vec_id") < n_queries,
-            n_centroids,
-            ks=ks,
-            m=m,
-            sub_len=sub_len,
-            q_max=n_queries,
-            head_max=need,
-        )
-    else:
-        _check_fetch(
-            head_fetch,
-            n_centroids=n_centroids,
-            ks=ks,
-            m=m,
-            q_max=n_queries,
-            need=need,
-        )
-    by_id = {
-        cid: v for cid, v in head_fetch["by_id"].items() if cid < need
-    }
-    q_ids = [qid for qid in sorted(by_id) if qid < n_queries]
-    cent_rows = [
-        (cid, by_id[cid]) for cid in sorted(by_id) if cid < n_centroids
-    ]
-    cb_rows = [(cid, by_id[cid]) for cid in sorted(by_id) if cid < ks]
-    if not q_ids or not cent_rows or not cb_rows:
-        return empty
-    scored_local = [
-        r
-        for r in head_fetch["rows"]
-        if r["kind"] != 2 and r["qid"] is not None and r["qid"] < n_queries
-    ]
-    probed_by_q = {}
-    for qid in q_ids:
-        scores = _probe_sorted(scored_local, qid=qid)
-        probed_by_q[qid] = [cid for _, cid in scores[: int(n_probe)]]
-    lut = {
-        (r["qid"], r["g"], r["cid"]): r["c"]
-        for r in scored_local
-        if r["kind"] == 1
-    }
-    if not all(v is not None and v == v for v in lut.values()):
-        raise ValueError(
-            "NULL/NaN ADC lookup entry (zero-norm codebook/query "
-            "sub-vector) — unsupported by the inline-LUT serving path"
-        )
-    cnorm = {r["cid"]: r["na"] for r in scored_local if r["kind"] == 0}
-    subnorm = {
-        (r["g"], r["cid"]): r["na"] for r in scored_local if r["kind"] == 1
-    }
-    cent_norms = [cnorm[cid] for cid, _ in cent_rows]
-    cb_ids = [cid for cid, _ in cb_rows]
-    pos_lit = F.expr(
-        "array(" + ",".join(str(p) for p in range(len(cb_rows))) + ")"
-    )
-    cidx = F.sequence(F.lit(0), F.lit(len(cb_rows) - 1))
-
-    # assignment + the m code positions in ONE let-bound struct: the
-    # row norm, slices and slice norms are computed once per row (not
-    # once per centroid/codebook entry — see _let); codebook norms are
-    # engine-computed literals, dot/(n·n) value-identical to cosine()
-    def pq_struct(s2):
-        fields = [
-            _inline_best(s2["v"], cent_rows, cent_norms, s2["nv"])
-            .getField("cid")
-            .alias("cid")
-        ]
-        def cp_for(g):
-            cbmat = _dmat_sql(
-                [cv[g * sub_len : (g + 1) * sub_len] for _, cv in cb_rows]
-            )
-            cbn = _norms_sql([subnorm[(g, cid)] for cid in cb_ids])
-            return (
-                F.array_min(
-                    F.transform(
-                        cidx,
-                        lambda i: F.struct(
-                            (
-                                -F.round(
-                                    V.dot(
-                                        s2[f"sl_{g}"],
-                                        F.element_at(cbmat, i + 1),
-                                    )
-                                    / (
-                                        s2[f"nsl_{g}"]
-                                        * F.element_at(cbn, i + 1)
-                                    ),
-                                    6,
-                                )
-                            ).alias("nc"),
-                            F.element_at(pos_lit, i + 1).alias("p"),
-                        ),
-                    )
-                )
-                .getField("p")
-                .alias(f"cp_{g}")
-            )
-
-        for g in range(m):
-            fields.append(cp_for(g))
-        return F.struct(*fields)
-
-    pq_col = _let(
-        {
-            "v": F.col("v"),
-            "nv": V.norm(F.col("v")),
-        }
-        | {
-            f"sl_{g}": F.slice(F.col("v"), g * sub_len + 1, sub_len)
-            for g in range(m)
-        },
-        lambda s1: _let(
-            {
-                "v": s1["v"],
-                "nv": s1["nv"],
-            }
-            | {f"sl_{g}": s1[f"sl_{g}"] for g in range(m)}
-            | {f"nsl_{g}": V.norm(s1[f"sl_{g}"]) for g in range(m)},
-            pq_struct,
-        ),
-    )
-    # which query positions probe this row's bucket (inner-join
-    # semantics: rows probed by nobody drop out of the explode)
-    probed_lists = F.expr(
-        "array("
-        + ",".join(
-            "array(" + ",".join(f"{c}L" for c in probed_by_q[qid]) + ")"
-            if probed_by_q[qid]
-            else "array(CAST(-1 AS BIGINT))"
-            for qid in q_ids
-        )
-        + ")"
-    )
-    qid_lit = _ids_sql(q_ids)
-    qmat = _dmat_sql([by_id[qid] for qid in q_ids])
-    # per-query flattened LUT (g-major, codebook position ascending)
-    lut_all = F.expr(
-        "array("
-        + ",".join(
-            "array("
-            + ",".join(
-                f"CAST('{lut[(qid, g, cid)]!r}' AS DOUBLE)"
-                for g in range(m)
-                for cid in cb_ids
-            )
-            + ")"
-            for qid in q_ids
-        )
-        + ")"
-    )
-    ncb = len(cb_rows)
-    qpos_arr = F.filter(
-        F.sequence(F.lit(0), F.lit(len(q_ids) - 1)),
-        lambda qp: F.array_contains(
-            F.element_at(probed_lists, qp + 1), F.col("cid")
-        ),
-    )
-    cand = (
-        e.withColumn("_pq", pq_col)
-        .select(
-            "vec_id",
-            "v",
-            F.col("_pq").getField("cid").alias("cid"),
-            *[
-                F.col("_pq").getField(f"cp_{g}").alias(f"cp_{g}")
-                for g in range(m)
-            ],
-        )
-        .select(
-            "vec_id",
-            "v",
-            *[f"cp_{g}" for g in range(m)],
-            F.explode(qpos_arr).alias("qp"),
-        )
-    )
-    qlut = F.element_at(lut_all, F.col("qp") + 1)
-    terms = [
-        F.element_at(qlut, F.col(f"cp_{g}") + F.lit(g * ncb + 1))
-        for g in range(m)
-    ]
-    adc = terms[0]
-    for t in terms[1:]:
-        adc = adc + t
-    scored = cand.select(
-        F.element_at(qid_lit, F.col("qp") + 1).alias("query_id"),
-        "vec_id",
-        "v",
-        "qp",
-        F.round(adc, 6).alias("approx_sim"),
-    )
-    sw = Window.partitionBy("query_id").orderBy(
-        F.desc("approx_sim"), F.asc("vec_id")
-    )
-    shortlist = (
-        scored.withColumn("rn", F.row_number().over(sw))
-        .filter(F.col("rn") <= rerank)
-        .select("query_id", "vec_id", "v", "qp", "approx_sim")
-    )
-    rw = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("vec_id")
-    )
-    return (
-        shortlist.select(
-            "query_id",
-            "vec_id",
-            "approx_sim",
-            F.round(
-                V.cosine(F.col("v"), F.element_at(qmat, F.col("qp") + 1)), 6
-            ).alias("cos_sim"),
-        )
-        .withColumn("rank", F.row_number().over(rw))
-        .filter(F.col("rank") <= k)
-    )
+        head_fetch = _fetch(e, p, ids)
+    head_fetch.check(p, ids, pq=True)
+    cand = _encoded(e, head_fetch, only=head_fetch.probed_union)
+    return _ivfpq_core(cand, head_fetch, k)
 
 
 def ivfpq_knn_index_batch(
@@ -2787,219 +2240,51 @@ def ivfpq_knn_index_batch(
     dims: int = 64,
     rerank: int = 64,
 ) -> DataFrame:
-    """Serve a QUERY BATCH from a materialized `write_ann_index` layout
-    — the production retrieval shape (`ivfpq_knn_indexed` serves one
-    query per pruned read; a retrieval batch would re-pay the index
-    open/prune overhead N times). The union of every query's probed
-    partitions is read ONCE with an explicit ``centroid_id IN (...)``
-    partition filter (pruning asserted by test); a per-query membership
-    join against the broadcast (query_id, centroid_id) probe table then
-    restricts each query's scoring to exactly the buckets IT probed —
-    so each query scores the same candidate set as its solo run.
-
-    Per-query work matches `ivfpq_knn_indexed` expression-for-
-    expression (6-dp LUT cosines summed and re-rounded, exact re-rank
-    of the rerank-shortlist against stored vectors), so the batch rows
-    are bit-identical to per-query serving — pinned by test against
-    `ivfpq_knn` itself. The per-query shortlist/top-k caps use
-    ``row_number() <= n`` windows that compile to WindowGroupLimit:
-    map tasks pre-trim BEFORE the exchange, so the shuffle carries
-    O(rerank × queries × tasks) rows regardless of corpus size (the
-    `knn_batch` discipline). Bounded documented collects: the
-    n_centroids-row probe scoring only.
+    """Serve a QUERY BATCH (one query is a batch of one) from a
+    materialized `write_ann_index` layout — the production retrieval
+    shape. The fetch reads the planning-sized centroids file; the union
+    of every query's probed partitions is then read ONCE with an
+    explicit ``centroid_id IN (...)`` partition filter (pruning asserted
+    by test), and :func:`_ivfpq_core` scores each query over exactly the
+    buckets IT probed — the stored codes and vectors are what the
+    corpus path would compute, so the rows are bit-identical to
+    per-query ``ivfpq_knn`` (pinned by test).
 
     Output: query_id, vec_id, approx_sim, cos_sim, rank (≤ k rows per
     query, ranked by exact cosine desc).
     """
-    assert dims % m == 0
-    sub_len = dims // m
-    out_schema = (
-        "query_id long, vec_id long, approx_sim double, cos_sim double, "
-        "rank int"
-    )
-    if not query_vecs:
-        return spark.createDataFrame([], out_schema)
-    qlist = [(int(qid), [float(x) for x in qv]) for qid, qv in query_vecs]
-    # the PQ LUT is built from the stored centroids file filtered by
-    # vec_id < ks — if the writer stored fewer rows than the CORPUS has
-    # low-id vectors, the codebook would silently truncate and
-    # approx_sim diverge from the ivfpq_knn twin. A TINY corpus
-    # legitimately stores fewer than max(ks, n_centroids) rows (the
-    # writer keeps every vec_id < max(ks, n_centroids) that exists, and
-    # ivfpq_knn's `vec_id < n` filters degrade the same way), so the
-    # guard compares against the index itself instead of asserting a
-    # fixed count; an EMPTY index serves an empty result. The centroids
-    # file is planning-sized (coalesce(1)): raw rows, per-query probe
-    # scores and ADC LUT entries are sibling union legs of ONE job over
-    # it (r16; r15 collected the file, then ran a LocalRelation scoring
-    # job — two driver jobs where one suffices). Query vectors enter
-    # the plan as exact repr-round-trip literals; engine round/cosine
-    # semantics unchanged.
-    base = spark.read.parquet(f"{path}/centroids").select(
-        F.col("vec_id").alias("cid"), F.col("cv")
-    )
-    qn = len(qlist)
-    qmat = _dmat_sql([qv for _, qv in qlist])
-    qp_all = F.explode(F.lit(list(range(qn)))).alias("qp")
-    _nd = F.lit(None).cast("double")
-    _nl = F.lit(None).cast("long")
-    _nv = F.lit(None).cast("array<double>")
-    qv_col = F.element_at(qmat, F.col("qp") + 1)
-    k0 = (
-        base.filter(F.col("cid") < n_centroids)
-        .select("cid", "cv", qp_all)
-        .select(
-            F.lit(0).alias("kind"),
-            F.col("qp"),
-            F.lit(-1).alias("g"),
-            F.col("cid"),
-            F.round(V.cosine(F.col("cv"), qv_col), 6).alias("c"),
-            _nl.alias("vid"),
-            _nv.alias("v"),
-        )
-    )
-    gc = F.col("g")
-
-    def _sl(col):
-        return F.slice(col, gc * sub_len + 1, F.lit(sub_len))
-
-    k1 = (
-        base.filter(F.col("cid") < ks)
-        .select("cid", "cv", qp_all)
-        .select(
-            "cid", "cv", "qp", F.explode(F.lit(list(range(m)))).alias("g")
-        )
-        .select(
-            F.lit(1).alias("kind"),
-            F.col("qp"),
-            gc,
-            F.col("cid"),
-            F.round(V.cosine(_sl(F.col("cv")), _sl(qv_col)), 6).alias("c"),
-            _nl.alias("vid"),
-            _nv.alias("v"),
-        )
-    )
-    k2 = base.select(
-        F.lit(2).alias("kind"),
-        F.lit(-1).alias("qp"),
-        F.lit(-1).alias("g"),
-        _nl.alias("cid"),
-        _nd.alias("c"),
-        F.col("cid").alias("vid"),
-        F.col("cv").alias("v"),
-    )
-    scored_local = k0.unionByName(k1).unionByName(k2).collect()
-    raw = [r for r in scored_local if r["kind"] == 2]
-    stored = len(raw)
-    need = max(ks, n_centroids)
-    if stored == 0:
-        return spark.createDataFrame([], out_schema)
-    if stored < need:
-        low = (
-            spark.read.parquet(f"{path}/index")
-            .filter(F.col("vec_id") < need)
-            .count()
-        )
-        assert low == stored, (
-            f"index at {path} stores {stored} centroid rows but its corpus "
-            f"has {low} vectors below max(ks, n_centroids)={need} — the "
-            "layout was written with smaller parameters; rebuild with "
-            "write_ann_index"
-        )
-    by_id = {int(r["vid"]): [float(x) for x in r["v"]] for r in raw}
-    cent_ids = [cid for cid in sorted(by_id) if cid < n_centroids]
-    cb_ids = [cid for cid in sorted(by_id) if cid < ks]
-    if not cent_ids or not cb_ids:
-        return spark.createDataFrame([], out_schema)
-    probed_by_qp = {}
-    for qp in range(len(qlist)):
-        scores = sorted(
-            (
-                (r["c"], r["cid"])
-                for r in scored_local
-                if r["kind"] == 0 and r["qp"] == qp
-            ),
-            key=lambda t: (t[0] is None, -(t[0] or 0.0), t[1]),
-        )
-        probed_by_qp[qp] = [cid for _, cid in scores[: int(n_probe)]]
-    lut = {
-        (r["qp"], r["g"], r["cid"]): r["c"]
-        for r in scored_local
-        if r["kind"] == 1
-    }
-    if not all(v is not None and v == v for v in lut.values()):
-        raise ValueError(
-            "NULL/NaN ADC lookup entry (zero-norm codebook/query "
-            "sub-vector) — unsupported by the inline-LUT serving path"
-        )
-    probes_df = F.broadcast(
-        spark.createDataFrame(
-            [
-                (qp, qlist[qp][0], int(cid))
-                for qp in range(len(qlist))
-                for cid in probed_by_qp[qp]
-            ],
-            "qp int, query_id long, centroid_id int",
-        )
-    )
-    union_ids = sorted(
-        {int(c) for qp in probed_by_qp for c in probed_by_qp[qp]}
-    )
-    if not union_ids:
-        return spark.createDataFrame([], out_schema)
+    p = AnnParams(n_centroids, n_probe, m, ks, dims, rerank)
+    cents = spark.read.parquet(f"{path}/centroids").withColumnRenamed("cv", "v")
+    f = _fetch(cents, p, query_vecs=query_vecs)
+    # the codebook is the stored rows with vec_id < ks — if the writer
+    # stored fewer rows than the CORPUS has low-id vectors, it would
+    # silently truncate and approx_sim diverge from the ivfpq_knn twin.
+    # A TINY corpus legitimately stores fewer than max(ks, n_centroids)
+    # rows (ivfpq_knn's `vec_id < n` filters degrade the same way), so
+    # the guard compares against the index itself, not a fixed count.
+    need, stored = max(ks, n_centroids), f.n_head
+    if 0 < stored < need:
+        low = spark.read.parquet(f"{path}/index").filter(F.col("vec_id") < need)
+        low = low.count()
+        if low != stored:
+            raise ValueError(
+                f"index at {path} stores {stored} centroid rows but its corpus "
+                f"has {low} vectors below max(ks, n_centroids)={need} — the "
+                "layout was written with smaller parameters; rebuild with "
+                "write_ann_index"
+            )
+    if not f.cents or not f.cb:
+        return spark.createDataFrame([], _PQ_SCHEMA)
     idx = spark.read.parquet(f"{path}/index").filter(
-        F.col("centroid_id").isin(union_ids)
+        F.col("centroid_id").isin(f.probed_union)
     )
-    # per-group, per-query cid→LUT-value literal maps (stored codes ARE
-    # codebook vec_ids, so the lookup key is the code column itself)
-    terms = []
-    for g in range(m):
-        maps_g = F.expr(
-            "array("
-            + ",".join(
-                "map("
-                + ",".join(
-                    f"{cid}L, CAST('{lut[(qp, g, cid)]!r}' AS DOUBLE)"
-                    for cid in cb_ids
-                )
-                + ")"
-                for qp in range(len(qlist))
-            )
-            + ")"
-        )
-        terms.append(
-            F.element_at(
-                F.element_at(maps_g, F.col("qp") + 1), F.col(f"code_{g}")
-            )
-        )
-    adc = terms[0]
-    for t in terms[1:]:
-        adc = adc + t
-    qmat = _dmat_sql([qv for _, qv in qlist])
-    cand = idx.join(probes_df, "centroid_id").select(
-        "query_id", "vec_id", "v", "qp", F.round(adc, 6).alias("approx_sim")
+    cand = idx.select(
+        "vec_id",
+        "v",
+        F.col("centroid_id").cast("long").alias("cid"),
+        *[f"code_{g}" for g in range(m)],
     )
-    sw = Window.partitionBy("query_id").orderBy(
-        F.desc("approx_sim"), F.asc("vec_id")
-    )
-    shortlist = (
-        cand.withColumn("srn", F.row_number().over(sw))
-        .filter(F.col("srn") <= rerank)
-        .select("query_id", "vec_id", "v", "qp", "approx_sim")
-    )
-    kw = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-    return (
-        shortlist.select(
-            "query_id",
-            "vec_id",
-            "approx_sim",
-            F.round(
-                V.cosine(F.col("v"), F.element_at(qmat, F.col("qp") + 1)), 6
-            ).alias("cos_sim"),
-        )
-        .withColumn("rank", F.row_number().over(kw).cast("int"))
-        .filter(F.col("rank") <= k)
-    )
+    return _ivfpq_core(cand, f, k)
 
 
 def knn_density_outliers(
@@ -3470,89 +2755,40 @@ def filtered_ivf_knn(
     the filter's inverse selectivity).
 
     Here: n_probe_eff = min(n_centroids, ⌈n_probe · n_total /
-    n_filtered⌉) from ONE planning-sized count aggregate (exact integer
-    ceiling division, engine-portable), then the :func:`ivf_knn` zero-
-    exchange serving scan with the label predicate applied AT THE SCAN
-    (pushdown-eligible — the filter prunes rows before any cosine is
-    computed, so cost is n_filtered·√k assignment work, not corpus).
-    An empty filter yields an empty result (oracle-mirrored). Output:
-    vec_id, label, cos_sim (6 dp), top-k by (cos DESC, vec_id).
+    n_filtered⌉) from the counts that ride the head fetch's aggregate
+    (ONE construct scan; exact integer ceiling division, engine-
+    portable), then :func:`_ivf_core` with the widened probe count and
+    the label predicate applied AT THE SCAN (pushdown-eligible — the
+    filter prunes rows before any cosine is computed). An empty filter
+    yields an empty result (oracle-mirrored). Output: vec_id, label,
+    cos_sim (6 dp), top-k by (cos DESC, vec_id).
     """
     e = valid_embeddings(embeddings).select(
         "vec_id",
         F.col("embedding").cast("array<double>").alias("v"),
         F.coalesce(F.col("label"), F.lit(-1)).cast("long").alias("label"),
     )
-    # ONE corpus scan for the selectivity counts AND the centroid/query
-    # head fetch (r15): both needed a full pass over ``e`` (a 1-row
-    # aggregate and a 16-row filter-collect) and ran as two sequential
-    # construct-time jobs — at 100 TB that is twice the construct I/O.
-    # Fused: the head rows ride the same aggregate as a bounded
-    # collect_list (when() without otherwise yields NULL for non-head
-    # rows, which collect_list drops), so construct scans the corpus
-    # exactly once.
-    agg_row = e.agg(
-        F.count(F.lit(1)).cast("long").alias("n_total"),
-        F.count(F.when(F.col("label") == label, 1)).cast("long").alias("n_filtered"),
-        F.collect_list(
-            F.when(
-                (F.col("vec_id") < n_centroids) | (F.col("vec_id") == query_id),
-                F.struct("vec_id", "v"),
-            )
-        ).alias("head"),
-    ).collect()[0]
-    n_total, n_filtered = agg_row["n_total"], agg_row["n_filtered"]
-    if n_filtered == 0:
-        return e.select("vec_id", "label", F.lit(0.0).alias("cos_sim")).limit(0)
-    n_probe_eff = min(
-        int(n_centroids), (int(n_probe) * n_total + n_filtered - 1) // n_filtered
+    p = AnnParams(n_centroids, n_probe)
+    f = _fetch(
+        e,
+        p,
+        [query_id],
+        pq=False,
+        counts=[
+            F.count(F.lit(1)).cast("long").alias("n_total"),
+            F.count(F.when(F.col("label") == label, 1))
+            .cast("long")
+            .alias("n_filtered"),
+        ],
     )
-    by_id = {r["vec_id"]: [float(x) for x in r["v"]] for r in agg_row["head"]}
-    if query_id not in by_id:
-        return e.select("vec_id", "label", F.lit(0.0).alias("cos_sim")).limit(0)
-    qv = by_id[query_id]
-    qlit = F.array(*[F.lit(x) for x in qv])
-    cent_rows = [
-        (int(cid), by_id[cid]) for cid in sorted(by_id) if cid < n_centroids
-    ]
-    if not cent_rows:
-        return e.select("vec_id", "label", F.lit(0.0).alias("cos_sim")).limit(0)
-    spark = embeddings.sparkSession
-    cents_local = spark.createDataFrame(
-        cent_rows, "centroid_id long, cv array<double>"
-    )
-    probe_rows = (
-        cents_local.select(
-            "centroid_id",
-            F.round(V.cosine(F.col("cv"), qlit), 6).alias("c_sim"),
-            V.norm(F.col("cv")).alias("na"),
-            V.norm(qlit).alias("nq"),
-        )
-        .orderBy(F.desc("c_sim"), F.asc("centroid_id"))
-        .collect()
-    )
-    probed = [r["centroid_id"] for r in probe_rows[: int(n_probe_eff)]]
-    nmap = {r["centroid_id"]: r["na"] for r in probe_rows}
-    cent_norms = [nmap[cid] for cid, _ in cent_rows]
-    nq_lit = F.expr(f"CAST('{probe_rows[0]['nq']!r}' AS DOUBLE)")
-    cid_col = _let(
-        {"nv": V.norm(F.col("v"))},
-        lambda s: _inline_best(F.col("v"), cent_rows, cent_norms, s["nv"]),
-    ).getField("cid")
-    return (
-        e.filter(F.col("label") == label)  # scan-side predicate first
-        .withColumn("cid", cid_col)
-        .filter(F.col("cid").isin(probed))
-        .select(
-            "vec_id",
-            "label",
-            F.round(
-                V.dot(F.col("v"), qlit) / (V.norm(F.col("v")) * nq_lit), 6
-            ).alias("cos_sim"),
-        )
-        .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-        .limit(k)
-    )
+    n_total, n_filtered = f.counts["n_total"], f.counts["n_filtered"]
+    if n_filtered:
+        eff = (int(n_probe) * n_total + n_filtered - 1) // n_filtered
+        f = replace(f, params=replace(p, n_probe=min(int(n_centroids), eff)))
+    else:
+        f = replace(f, queries=[])
+    out = _ivf_core(e, f, k, pred=F.col("label") == label)
+    return out.orderBy("rank").limit(k).select("vec_id", "label", "cos_sim")
 
 
 def coreset_selection(embeddings: DataFrame, k: int = 8) -> DataFrame:
@@ -3643,9 +2879,9 @@ def update_ann_index(
     """Incremental maintenance for a :func:`write_ann_index` layout —
     the IVM-for-ANN a 100 TB corpus needs: a daily crawl delta is a
     fraction of the corpus, and rebuilding the whole index to admit it
-    re-pays the full corpus scan + write. This assigns ONLY the new
-    vectors against the index's STORED centroids and quantizes them
-    against its STORED codebook (both read from the tiny
+    re-pays the full corpus scan + write. This encodes ONLY the new
+    vectors with the build's own encoder (:func:`_encoded`) against the
+    index's STORED centroids and codebook (both read from the tiny
     ``{path}/centroids`` file — never recomputed, so code/bucket
     meanings are stable across updates), then rewrites ONLY the
     affected centroid partitions.
@@ -3657,43 +2893,23 @@ def update_ann_index(
     identical content (idempotent), a crash before commit leaves only
     ``_temporary`` debris, and untouched partitions are never listed,
     read, or rewritten. Equivalence contract (pinned by test): after
-    updating with a delta, the index — and every
-    :func:`ivfpq_knn_indexed` answer — is bit-identical to a full
-    rebuild over the union, provided the first max(n_centroids, ks)
-    vec_ids were in the original corpus (centroid/codebook stability,
-    the same data-derived-centroid rule every op here uses).
+    updating with a delta, the index — and every served answer — is
+    bit-identical to a full rebuild over the union, provided the first
+    max(n_centroids, ks) vec_ids were in the original corpus
+    (centroid/codebook stability, the same data-derived-centroid rule
+    every op here uses).
 
     Returns the affected centroid ids (bounded by ``n_centroids`` —
     callers log them as the maintenance audit trail).
     """
     spark = new_embeddings.sparkSession
-    e = _as_double(new_embeddings)
-    cents = spark.read.parquet(f"{path}/centroids")
-    cents_idx = cents.filter(F.col("vec_id") < n_centroids).select(
-        F.col("vec_id").alias("centroid_id"), F.col("cv")
-    )
-    scored = e.crossJoin(F.broadcast(cents_idx)).select(
-        "vec_id",
-        "centroid_id",
-        F.round(V.cosine(F.col("v"), F.col("cv")), 6).alias("cos_sim"),
-    )
-    assigned = (
-        scored.groupBy("vec_id")
-        .agg(
-            F.min(
-                F.struct(
-                    (-F.col("cos_sim")).alias("nc"),
-                    F.col("centroid_id").alias("cid"),
-                )
-            ).alias("w")
-        )
-        .select("vec_id", F.col("w.cid").alias("centroid_id"))
-    )
-    codebook = cents.select("vec_id", F.col("cv").alias("embedding"))
-    codes = pq_codes(new_embeddings, m, ks, dims, codebook=codebook)
+    cents = spark.read.parquet(f"{path}/centroids").withColumnRenamed("cv", "v")
+    f = _fetch(cents, AnnParams(n_centroids, m=m, ks=ks, dims=dims))
     cols = ["vec_id", "v"] + [f"code_{g}" for g in range(m)] + ["centroid_id"]
     new_rows = (
-        e.join(assigned, "vec_id").join(codes, "vec_id").select(*cols)
+        _encoded(_as_double(new_embeddings), f)
+        .withColumnRenamed("cid", "centroid_id")
+        .select(*cols)
     ).transform(materialize)
     affected = sorted(
         r["centroid_id"]

@@ -913,25 +913,37 @@ def q_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.minhash_incremental(new, old, threshold=0.1)
 
 
-_PACKED_CACHE: dict[str, str] = {}
+_PACKED_CACHE: dict[tuple[str, str], str] = {}
 
 
 def _input_fingerprint(sf_dir: str, table: str) -> str:
     """Cheap driver-side fingerprint of a table's parquet input:
-    (relative path, size, mtime_ns) of every data file, hashed. Used
-    to key the on-disk ANN-index / packed-blocks caches so a
-    REGENERATED corpus (the degenerate/non-ASCII sweeps rewrite
-    ``.localdata/sfdeg`` in place) rebuilds its layout instead of
-    serving a stale one — r16: the sf_dir-only key served an index
-    built from an earlier generation of the same directory. stat()
-    only — never reads data; the same listing every scan pays."""
+    (relative path, size, mtime_ns) of every data file, walked in
+    sorted order (directories too, so nested/partitioned inputs hash
+    the same on every run), hashed. Keys the in-session AND on-disk
+    ANN-index / packed-blocks caches, so a corpus REGENERATED in place
+    (the degenerate/non-ASCII sweeps rewrite ``.localdata/sfdeg``)
+    rebuilds its layout instead of serving a stale one. stat() only —
+    never reads data. Raises ValueError for a table that is not on
+    the local filesystem (a URI scheme other than ``file:``, or no
+    such path): hashing an empty listing would key every generation
+    of that input the same."""
     import hashlib
     import os
+    from urllib.parse import urlparse
 
-    src = os.path.join(sf_dir, f"{table}.parquet")
+    url = urlparse(sf_dir)
+    local = url.path if url.scheme == "file" else sf_dir
+    src = os.path.join(local, f"{table}.parquet")
+    if (url.scheme and url.scheme != "file") or not os.path.exists(src):
+        raise ValueError(
+            f"cannot fingerprint {sf_dir}/{table}.parquet: not on the local "
+            "filesystem"
+        )
     parts = []
     if os.path.isdir(src):
-        for root, _dirs, files in os.walk(src):
+        for root, dirs, files in os.walk(src):
+            dirs.sort()
             for f in sorted(files):
                 if f.startswith(("_", ".")):
                     continue
@@ -940,7 +952,7 @@ def _input_fingerprint(sf_dir: str, table: str) -> str:
                     f"{os.path.relpath(os.path.join(root, f), src)}"
                     f":{st.st_size}:{st.st_mtime_ns}"
                 )
-    elif os.path.exists(src):
+    else:
         st = os.stat(src)
         parts.append(f".:{st.st_size}:{st.st_mtime_ns}")
     return hashlib.md5("|".join(parts).encode()).hexdigest()[:12]
@@ -962,11 +974,12 @@ def q_packed_block_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_pipeline_example_spark import sinks
 
     docs = load_table(spark, sf_dir, "documents")
-    path = _PACKED_CACHE.get(sf_dir)
+    # key = sf_dir + INPUT FINGERPRINT (+ format version on disk): a
+    # corpus regenerated under the same path, even mid-session,
+    # rebuilds its layout
+    fp = _input_fingerprint(sf_dir, "documents")
+    path = _PACKED_CACHE.get((sf_dir, fp))
     if path is None:
-        # key = sf_dir + INPUT FINGERPRINT + format version (r16): a
-        # regenerated corpus under the same path rebuilds its layout
-        fp = _input_fingerprint(sf_dir, "documents")
         tag = hashlib.md5(f"{sf_dir}:{fp}:pack512:v1".encode()).hexdigest()[:12]
         path = os.path.join(
             os.path.dirname(os.path.dirname(os.path.dirname(__file__))),
@@ -979,7 +992,7 @@ def q_packed_block_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             and os.path.isfile(os.path.join(path, "manifest", "_SUCCESS"))
         ):
             sinks.write_packed_blocks(docs, path, capacity=512)
-        _PACKED_CACHE[sf_dir] = path
+        _PACKED_CACHE[(sf_dir, fp)] = path
     # explicit schema — inference fails on the zero-file dataset an
     # empty corpus writes (r15 degenerate-empty sweep)
     blocks = spark.read.schema(sinks.PACKED_BLOCKS_SCHEMA).parquet(
@@ -1330,16 +1343,16 @@ def q_ivfpq_knn_index_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     emb = load_table(spark, sf_dir, "embeddings")
-    path = _ANN_INDEX_CACHE.get(sf_dir)
+    # keyed by (sf_dir, input fingerprint), in session and on disk (plus
+    # the index-format version) — never the applicationId: an appId-
+    # derived tag minted a fresh full index copy per session and no
+    # layout was ever reused or evicted. v2: valid_embeddings guard
+    # added to the index build (r15). The fingerprint is taken on every
+    # call, so a corpus REGENERATED in place, even mid-session, rebuilds
+    # the layout instead of serving a stale index.
+    fp = _input_fingerprint(sf_dir, "embeddings")
+    path = _ANN_INDEX_CACHE.get((sf_dir, fp))
     if path is None:
-        # keyed by (sf_dir, input fingerprint, index-format version) —
-        # never the applicationId: an appId-derived tag minted a fresh
-        # full index copy per session and no layout was ever reused or
-        # evicted. v2: valid_embeddings guard added to the index build
-        # (r15). The input fingerprint (r16) rebuilds the layout when
-        # the corpus under sf_dir is REGENERATED in place (the
-        # degenerate sweep) instead of serving a stale index.
-        fp = _input_fingerprint(sf_dir, "embeddings")
         tag = hashlib.md5(f"{sf_dir}:{fp}:v2".encode()).hexdigest()[:12]
         path = os.path.join(
             os.path.dirname(os.path.dirname(os.path.dirname(__file__))),
@@ -1352,7 +1365,7 @@ def q_ivfpq_knn_index_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
             and os.path.isfile(os.path.join(path, "centroids", "_SUCCESS"))
         ):
             similarity.write_ann_index(emb, path)
-        _ANN_INDEX_CACHE[sf_dir] = path
+        _ANN_INDEX_CACHE[(sf_dir, fp)] = path
     qvs = [
         (int(r["vec_id"]), [float(x) for x in r["embedding"]])
         for r in emb.filter(F.col("vec_id") < 4).collect()
@@ -2181,6 +2194,11 @@ QUERIES: dict[str, QueryFn] = {
 # capped / knn_batch / embedding_drift are in-window via the r9/r10
 # cohorts, double-covering it. Every name asserted present so a typo
 # fails at import, not silently shrinks the window.
+# ANN retrieval-core rewrite (same derivation): the eight queries whose
+# IVF / IVF-PQ serving code moved onto the one batched core join the
+# changed group (ivfpq_knn_index_batch already sat there), and the
+# eight most-recently-certified names of the tail (the end of the r10
+# cohort head: value_histogram … rolling_revenue_7d) make room.
 _R15_FRONT = [
     # new r15
     "unicode_clean",
@@ -2191,6 +2209,10 @@ _R15_FRONT = [
     "event_volume_changepoint", "corpus_funnel",
     "embedding_dimension_health", "packed_block_audit",
     "order_gap_percentiles", "ivfpq_knn_index_batch",
+    # changed by the ANN retrieval-core rewrite
+    "ivf_knn", "ivf_knn_batch", "filtered_ivf_knn", "ivfpq_knn",
+    "ivfpq_knn_batch", "ivfpq_recall", "retrieval_quality",
+    "rrf_hybrid_search",
     # r9-certified cohort remainder
     "cluster_representatives", "cluster_representatives_lsh",
     "segment_value_percentiles", "daily_revenue_ma7", "event_cooccurrence",
@@ -2202,9 +2224,7 @@ _R15_FRONT = [
     "ngram_novelty", "vocab_drift", "length_pareto",
     "source_gram_containment", "embedding_drift",
     "incremental_daily_revenue", "revenue_seasonality", "token_gini",
-    "basket_affinity", "daily_revenue", "value_histogram",
-    "salted_event_totals", "user_cardinality_exact", "asof_last_view",
-    "pricing_summary", "kpis", "events_json_conform", "rolling_revenue_7d",
+    "basket_affinity", "daily_revenue",
 ]
 assert len(_R15_FRONT) == 50 and all(n in QUERIES for n in _R15_FRONT), (
     "window rotation list must name 50 registered queries"

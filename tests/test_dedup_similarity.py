@@ -808,6 +808,82 @@ def test_ivfpq_knn_batch_matches_per_query(spark, sf_dir):
         assert got == want, q
 
 
+def test_ann_params_reject_m_not_dividing_dims(spark):
+    """dims % m is checked once, when the parameter object is built, and
+    every IVF-PQ entry point fails with ValueError before any Spark job
+    (an assert would vanish under python -O)."""
+    from data_pipeline_example_spark.operators import similarity as sim
+
+    with pytest.raises(ValueError, match="must divide"):
+        sim.AnnParams(m=3, dims=64)
+    emb = spark.createDataFrame(
+        [(i, [float(i + d) for d in range(64)]) for i in range(4)],
+        "vec_id long, embedding array<double>",
+    )
+    for call in (
+        lambda: sim.ivfpq_knn(emb, m=3),
+        lambda: sim.ivfpq_knn_batch(emb, m=3),
+        lambda: sim.write_ann_index(emb, "/nonexistent/ann", m=3),
+        lambda: sim.pq_codes(emb, m=3),
+        lambda: sim.pq_distortion(emb, m=3),
+    ):
+        with pytest.raises(ValueError, match="must divide"):
+            call()
+
+
+def test_shared_fetch_rejects_other_params(spark, sf_dir):
+    """A fetch shared between callers carries the parameter object it was
+    built with; a callee with different parameters or queries gets a
+    ValueError instead of LUT cosines over the wrong slices (a dims=64
+    fetch handed to a dims=32 call)."""
+    from data_pipeline_example_spark.operators import similarity as sim
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    fetch = sim._fetch(sim._as_double(emb), sim.AnnParams(), range(4))
+    with pytest.raises(ValueError, match="does not match"):
+        sim.ivfpq_knn_batch(emb, n_queries=4, dims=32, head_fetch=fetch)
+    with pytest.raises(ValueError, match="does not match"):
+        sim.ivfpq_knn_batch(emb, n_queries=3, head_fetch=fetch)
+    with pytest.raises(ValueError, match="does not match"):
+        sim.ivf_knn_batch(emb, n_queries=4, n_probe=2, head_fetch=fetch)
+    # an IVF-only fetch cannot serve the PQ scorer
+    ivf_only = sim._fetch(sim._as_double(emb), sim.AnnParams(), range(4), pq=False)
+    with pytest.raises(ValueError, match="does not match"):
+        sim.ivfpq_knn_batch(emb, n_queries=4, head_fetch=ivf_only)
+    # matching parameters: the shared fetch serves both legs unchanged
+    got = sorted(tuple(r) for r in sim.ivfpq_knn_batch(
+        emb, n_queries=4, head_fetch=fetch).collect())
+    assert got == sorted(tuple(r) for r in sim.ivfpq_knn_batch(
+        emb, n_queries=4).collect())
+    got = sorted(tuple(r) for r in sim.ivf_knn_batch(
+        emb, n_queries=4, head_fetch=fetch).collect())
+    assert got == sorted(tuple(r) for r in sim.ivf_knn_batch(
+        emb, n_queries=4).collect())
+
+
+def test_probe_order_matches_engine_desc(spark):
+    """The one driver-side probe ranking orders scores exactly like
+    Spark's orderBy(desc(c), asc(cid)): NaN first, then real values
+    descending with -0.0 == 0.0, NULL last, ties by cid ascending."""
+    from pyspark.sql import functions as F
+
+    from data_pipeline_example_spark.operators.similarity import _probe_order
+
+    nan, inf = float("nan"), float("inf")
+    rows = [
+        (0.5, 7), (None, 3), (nan, 9), (0.0, 4), (-0.0, 2), (0.5, 1),
+        (nan, 5), (-inf, 8), (None, 0), (-0.25, 6), (inf, 11), (-0.0, 10),
+        (0.999999, 12),
+    ]
+    want = [
+        r["cid"]
+        for r in spark.createDataFrame(rows, "c double, cid long")
+        .orderBy(F.desc("c"), F.asc("cid"))
+        .collect()
+    ]
+    assert [cid for _, cid in _probe_order(rows)] == want
+
+
 def test_retrieval_quality_metrics_are_consistent(spark, sf_dir):
     """The eval op's metrics must be internally consistent with its own
     members: ivf recall is recomputed here from ivf_knn_batch vs

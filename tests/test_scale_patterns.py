@@ -148,13 +148,13 @@ def test_datagen_replay_streaming_full_loop(spark, tmp_path):
 
 
 def test_ann_index_partition_pruning_and_equivalence(spark, sf_dir, tmp_path):
-    """write_ann_index → ivfpq_knn_indexed: the probed read carries the
-    centroid_id filter as a PARTITION filter (only n_probe directories
-    scanned), and the served top-k is bit-identical to the direct
-    ivfpq_knn over the same corpus."""
+    """write_ann_index → ivfpq_knn_index_batch with one query: the
+    probed read carries the centroid_id filter as a PARTITION filter
+    (only n_probe directories scanned), and the served top-k is
+    bit-identical to the direct ivfpq_knn over the same corpus."""
     from data_pipeline_example_spark.operators.similarity import (
         ivfpq_knn,
-        ivfpq_knn_indexed,
+        ivfpq_knn_index_batch,
         write_ann_index,
     )
     from data_pipeline_example_spark.sources import load_table
@@ -164,7 +164,11 @@ def test_ann_index_partition_pruning_and_equivalence(spark, sf_dir, tmp_path):
     write_ann_index(emb, path)
 
     qv = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
-    served = ivfpq_knn_indexed(spark, path, qv)
+    served = (
+        ivfpq_knn_index_batch(spark, path, [(0, qv)])
+        .orderBy("rank")
+        .select("vec_id", "approx_sim", "cos_sim")
+    )
 
     jvm = spark._jvm
     plan = jvm.PythonSQLUtils.explainString(served._jdf.queryExecution(), "formatted")
@@ -293,7 +297,7 @@ def test_ivfpq_index_batch_rejects_truncated_codebook(spark, sf_dir, tmp_path):
     path = str(tmp_path / "ann_trunc")
     similarity.write_ann_index(emb, path, n_centroids=8, m=4, ks=8)
     q = [r["embedding"] for r in emb.limit(1).collect()]
-    with pytest.raises(AssertionError, match="stores 8 centroid rows"):
+    with pytest.raises(ValueError, match="stores 8 centroid rows"):
         similarity.ivfpq_knn_index_batch(
             spark, path, [(0, q[0])], n_centroids=8, ks=16
         )
@@ -1182,7 +1186,7 @@ def test_update_ann_index_incremental_equals_rebuild(spark, sf_dir, tmp_path):
     import os
 
     from data_pipeline_example_spark.operators.similarity import (
-        ivfpq_knn_indexed,
+        ivfpq_knn_index_batch,
         update_ann_index,
         write_ann_index,
     )
@@ -1227,11 +1231,72 @@ def test_update_ann_index_incremental_equals_rebuild(spark, sf_dir, tmp_path):
     assert index_rows(inc_path) == index_rows(full_path)
 
     qv = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
-    assert [tuple(r) for r in ivfpq_knn_indexed(spark, inc_path, qv).collect()] == [
-        tuple(r) for r in ivfpq_knn_indexed(spark, full_path, qv).collect()
-    ]
+
+    def served(base):
+        out = ivfpq_knn_index_batch(spark, base, [(0, qv)]).orderBy("rank")
+        return [tuple(r) for r in out.collect()]
+
+    assert served(inc_path) == served(full_path)
 
     # idempotency: re-running the same delta leaves the index identical
     again = update_ann_index(delta, inc_path)
     assert again == affected
     assert index_rows(inc_path) == index_rows(full_path)
+
+
+def test_ann_index_cache_follows_corpus_rewritten_mid_session(spark, sf_dir, tmp_path):
+    """The in-session index cache is keyed by (sf_dir, input fingerprint):
+    rewriting a corpus's embeddings in place between two calls of the
+    registered ivfpq_knn_index_batch query serves an index rebuilt from
+    the NEW vectors (row-identical to the in-plan batch over them), not
+    the layout cached for the old ones."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from data_pipeline_example_spark.operators import similarity
+    from data_pipeline_example_spark.plans import queries
+
+    sf = str(tmp_path / "sf")
+    (tmp_path / "sf").mkdir()
+    src = pq.read_table(f"{sf_dir}/embeddings.parquet")
+    pq.write_table(src, f"{sf}/embeddings.parquet")
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    try:
+        before = rows(queries.q_ivfpq_knn_index_batch(spark, sf))
+        # same ids and labels, every id given its successor's vector
+        vecs = src.column("embedding").to_pylist()
+        flipped = src.set_column(
+            src.schema.get_field_index("embedding"),
+            "embedding",
+            pa.array(vecs[1:] + vecs[:1], type=src.schema.field("embedding").type),
+        )
+        pq.write_table(flipped, f"{sf}/embeddings.parquet")
+        after = rows(queries.q_ivfpq_knn_index_batch(spark, sf))
+        want = rows(
+            similarity.ivfpq_knn_batch(load_table(spark, sf, "embeddings"))
+        )
+        assert after == want
+        assert after != before
+    finally:
+        for (d, _), path in list(queries._ANN_INDEX_CACHE.items()):
+            if d == sf:
+                shutil.rmtree(path, ignore_errors=True)
+
+
+def test_input_fingerprint_rejects_non_local_tables(sf_dir, tmp_path):
+    """A table that is not on the local filesystem cannot be fingerprinted
+    by stat(): ValueError instead of hashing an empty listing (which
+    would key every generation of that input the same)."""
+    from data_pipeline_example_spark.plans.queries import _input_fingerprint
+
+    assert _input_fingerprint(sf_dir, "embeddings") == _input_fingerprint(
+        f"file://{sf_dir}", "embeddings"
+    )
+    for bad in ("s3a://bucket/sf0.01", "hdfs://nn:8020/sf0.01", str(tmp_path)):
+        with pytest.raises(ValueError, match="not on the local filesystem"):
+            _input_fingerprint(bad, "embeddings")

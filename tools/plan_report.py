@@ -45,7 +45,7 @@ def main() -> None:
     print("supplier per role — cheap at any scale) and PRUNED reads")
     print("(ivfpq_knn's extra scans carry vec_id/probe pushed filters;")
     print("its 100 TB serving path is the partition-pruned index of")
-    print("ivfpq_knn_indexed). The r6 single-scan sweep eliminated the")
+    print("ivfpq_knn_index_batch). The r6 single-scan sweep eliminated the")
     print("cases where a CORPUS-sized column was re-read per branch")
     print("(corpus_funnel, dsir_weights, bigram_lm_scores,")
     print("ccnet_buckets, join_size_estimate, cosine_dup_pairs_blocked,")
