@@ -169,7 +169,9 @@ def run_curation(
         ).cast("int"),
     )
     sharded.write.mode("overwrite").partitionBy("shard").parquet(out_dir)
-    back = spark.read.parquet(out_dir)
+    # read back with the schema just written (the partition column
+    # ``shard int`` is already last): no schema-inference job
+    back = spark.read.schema(sharded.schema).parquet(out_dir)
     return back.groupBy("shard").agg(
         F.count_distinct("doc_id").alias("n_docs"),
         F.count(F.lit(1)).alias("n_chunks"),

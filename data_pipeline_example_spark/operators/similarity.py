@@ -41,6 +41,7 @@ from pyspark.sql.window import Window
 from data_pipeline_example_spark.functions.materialize import materialize
 
 from data_pipeline_example_spark.functions import vectors as V
+from data_pipeline_example_spark.sources.tables import read_parquet_pinned
 
 
 def valid_embeddings(df: DataFrame, col: str = "embedding") -> DataFrame:
@@ -2004,6 +2005,30 @@ def write_ann_index(
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
 
 
+def _ann_centroids(spark, path: str) -> DataFrame:
+    """The ``centroids`` file of a :func:`write_ann_index` layout, read
+    with its written schema pinned (no inference job), as vec_id, v."""
+    return read_parquet_pinned(
+        spark, f"{path}/centroids", "vec_id bigint, cv array<double>", "ann centroids"
+    ).withColumnRenamed("cv", "v")
+
+
+def _ann_index(spark, path: str, m: int) -> DataFrame:
+    """The ``index`` of a :func:`write_ann_index` layout written with
+    ``m`` codes, read with its written schema pinned (no inference job):
+    vec_id, v, code_0..code_{m-1}, centroid_id (the partition column,
+    ``int`` as partition discovery types it). A layout written with
+    another ``m`` fails the footer check (ValueError)."""
+    codes = "".join(f", code_{g} bigint" for g in range(m))
+    return read_parquet_pinned(
+        spark,
+        f"{path}/index",
+        f"vec_id bigint, v array<double>{codes}, centroid_id int",
+        "ann index",
+        partition_cols=("centroid_id",),
+    )
+
+
 def ivfpq_recall(
     embeddings: DataFrame, query_id: int = 0, k: int = 10, **ivfpq_kwargs
 ) -> DataFrame:
@@ -2254,8 +2279,7 @@ def ivfpq_knn_index_batch(
     query, ranked by exact cosine desc).
     """
     p = AnnParams(n_centroids, n_probe, m, ks, dims, rerank)
-    cents = spark.read.parquet(f"{path}/centroids").withColumnRenamed("cv", "v")
-    f = _fetch(cents, p, query_vecs=query_vecs)
+    f = _fetch(_ann_centroids(spark, path), p, query_vecs=query_vecs)
     # the codebook is the stored rows with vec_id < ks — if the writer
     # stored fewer rows than the CORPUS has low-id vectors, it would
     # silently truncate and approx_sim diverge from the ivfpq_knn twin.
@@ -2264,8 +2288,7 @@ def ivfpq_knn_index_batch(
     # the guard compares against the index itself, not a fixed count.
     need, stored = max(ks, n_centroids), f.n_head
     if 0 < stored < need:
-        low = spark.read.parquet(f"{path}/index").filter(F.col("vec_id") < need)
-        low = low.count()
+        low = _ann_index(spark, path, m).filter(F.col("vec_id") < need).count()
         if low != stored:
             raise ValueError(
                 f"index at {path} stores {stored} centroid rows but its corpus "
@@ -2275,7 +2298,7 @@ def ivfpq_knn_index_batch(
             )
     if not f.cents or not f.cb:
         return spark.createDataFrame([], _PQ_SCHEMA)
-    idx = spark.read.parquet(f"{path}/index").filter(
+    idx = _ann_index(spark, path, m).filter(
         F.col("centroid_id").isin(f.probed_union)
     )
     cand = idx.select(
@@ -2903,8 +2926,8 @@ def update_ann_index(
     callers log them as the maintenance audit trail).
     """
     spark = new_embeddings.sparkSession
-    cents = spark.read.parquet(f"{path}/centroids").withColumnRenamed("cv", "v")
-    f = _fetch(cents, AnnParams(n_centroids, m=m, ks=ks, dims=dims))
+    p = AnnParams(n_centroids, m=m, ks=ks, dims=dims)
+    f = _fetch(_ann_centroids(spark, path), p)
     cols = ["vec_id", "v"] + [f"code_{g}" for g in range(m)] + ["centroid_id"]
     new_rows = (
         _encoded(_as_double(new_embeddings), f)
@@ -2925,7 +2948,7 @@ def update_ann_index(
     # mid-job) — cutting lineage here makes the merge content a fact
     # on the cluster, not a plan over the files being replaced
     old = (
-        spark.read.parquet(f"{path}/index")
+        _ann_index(spark, path, m)
         .filter(F.col("centroid_id").isin(affected))
         .join(new_rows.select("vec_id"), "vec_id", "left_anti")
         .select(*cols)

@@ -930,31 +930,19 @@ def _input_fingerprint(sf_dir: str, table: str) -> str:
     of that input the same."""
     import hashlib
     import os
-    from urllib.parse import urlparse
 
-    url = urlparse(sf_dir)
-    local = url.path if url.scheme == "file" else sf_dir
-    src = os.path.join(local, f"{table}.parquet")
-    if (url.scheme and url.scheme != "file") or not os.path.exists(src):
+    from data_pipeline_example_spark.sources.tables import data_files, local_path
+
+    src = local_path(f"{sf_dir}/{table}.parquet")
+    if src is None:
         raise ValueError(
             f"cannot fingerprint {sf_dir}/{table}.parquet: not on the local "
             "filesystem"
         )
     parts = []
-    if os.path.isdir(src):
-        for root, dirs, files in os.walk(src):
-            dirs.sort()
-            for f in sorted(files):
-                if f.startswith(("_", ".")):
-                    continue
-                st = os.stat(os.path.join(root, f))
-                parts.append(
-                    f"{os.path.relpath(os.path.join(root, f), src)}"
-                    f":{st.st_size}:{st.st_mtime_ns}"
-                )
-    else:
-        st = os.stat(src)
-        parts.append(f".:{st.st_size}:{st.st_mtime_ns}")
+    for f in data_files(src):
+        st = os.stat(f)
+        parts.append(f"{os.path.relpath(f, src)}:{st.st_size}:{st.st_mtime_ns}")
     return hashlib.md5("|".join(parts).encode()).hexdigest()[:12]
 
 

@@ -33,8 +33,9 @@ _BASE_CONF: dict[str, str] = {
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # partitioned-parquet reads should prune on partition columns
     "spark.sql.parquet.filterPushdown": "true",
-    # testdata events.ts is parquet TIMESTAMP(NANOS), which Spark cannot
-    # read natively — surface it as a long and convert (sources/tables.py)
+    # a parquet TIMESTAMP(NANOS) column (foreign inputs; the test corpora
+    # store micros), which Spark cannot read natively, surfaces as a
+    # long — load_table converts events.ts (sources/tables.py)
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     # InferFiltersFromGenerate turns every explode(expr) into a pushed
     # size(expr)>0 filter. This engine's exploded arrays are almost all

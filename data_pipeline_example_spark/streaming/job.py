@@ -22,6 +22,8 @@ hermetic tests — same downstream plan either way (S3, SURVEY.md §7.4).
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -1380,6 +1382,42 @@ def build_arg_parser():
     return p
 
 
+def _progress_line(progress: dict) -> str:
+    """One JSON line for a micro-batch's progress report (the JSON form
+    of ``StreamingQuery.lastProgress``): its batchId, numInputRows,
+    processedRowsPerSecond, event-time watermark, and the rows held in
+    state summed over the stateful operators."""
+    return json.dumps(
+        {
+            "batchId": progress.get("batchId"),
+            "numInputRows": progress.get("numInputRows"),
+            "processedRowsPerSecond": progress.get("processedRowsPerSecond"),
+            "watermark": (progress.get("eventTime") or {}).get("watermark"),
+            "stateRowsTotal": sum(
+                op.get("numRowsTotal", 0)
+                for op in progress.get("stateOperators") or ()
+            ),
+        }
+    )
+
+
+def _await_with_progress(query: StreamingQuery) -> None:
+    """``query.awaitTermination()`` that prints :func:`_progress_line` to
+    stdout for every progress report the query makes while it runs
+    (polled once a second; reports are ordered by their timestamp, so
+    none is printed twice or skipped between polls)."""
+    last = ""
+    while True:
+        done = query.awaitTermination(1)
+        for report in query.recentProgress:
+            p = json.loads(report.json)
+            if p["timestamp"] > last:
+                last = p["timestamp"]
+                print(_progress_line(p), flush=True)
+        if done:
+            return
+
+
 def main(argv: list[str] | None = None) -> int:
     args = build_arg_parser().parse_args(argv)
     if args.source == "json" and not args.input_path:
@@ -1403,7 +1441,7 @@ def main(argv: list[str] | None = None) -> int:
         checkpoint=args.checkpoint,
         **kwargs,
     )
-    query.awaitTermination()
+    _await_with_progress(query)
     return 0
 
 

@@ -13,10 +13,15 @@ every optimized plan, not just in docstrings.
   discipline the docstrings promise (token_gini's rank window runs
   over ≤|sources| rows, never over the corpus), made mechanical
 * filtered parquet scans actually push their filters (spot-check)
+* every parquet read in the package pins its schema (static scan), so
+  no read fires a schema-inference job, bar an allowlist with reasons
 """
 
 from __future__ import annotations
 
+import ast
+import collections
+import pathlib
 import re
 
 import pytest
@@ -141,3 +146,81 @@ def test_asof_join_single_shuffle_no_pairs_blowup(spark):
     assert "Window" in plan
     assert "CartesianProduct" not in plan
     assert plan.count("Exchange hashpartitioning(user_id") <= 2
+
+
+_PKG = pathlib.Path(__file__).resolve().parent.parent / "data_pipeline_example_spark"
+
+# Parquet reads left to schema inference on purpose, per (file,
+# function): (number of sites, reason).
+_INFERRED_PARQUET_READS = {
+    ("sources/tables.py", "read_parquet_pinned"): (
+        1, "path off the driver's filesystem: no footer to check without a job"),
+    ("sinks.py", "compact_partitions"): (
+        1, "any caller's partitioned table: partition column types inferred"),
+    ("sinks.py", "upsert_partitioned"): (
+        1, "partition types inferred on purpose; a missing path means first write"),
+    ("streaming/job.py", "read_ivm_daily_revenue"): (
+        1, "epoch-partitioned partials: partition column types inferred"),
+    ("streaming/job.py", "compact_ivm_partials"): (
+        1, "partials may not exist yet (AnalysisException means nothing to do)"),
+    ("curation.py", "update_dedup_index"): (
+        1, "the index may not exist yet (AnalysisException means first batch)"),
+    ("curation.py", "rebuild_bloom_sidecar"): (
+        1, "an index of any writer's layout, read whole"),
+    ("curation.py", "update_dedup_index_bloom"): (
+        2, "index and sidecar may not exist yet (AnalysisException)"),
+}
+
+
+def _call_chain(node) -> list[str]:
+    """Attribute names along a method chain, outermost call first."""
+    names = []
+    while True:
+        if isinstance(node, ast.Call):
+            node = node.func
+        elif isinstance(node, ast.Attribute):
+            names.append(node.attr)
+            node = node.value
+        else:
+            return names
+
+
+def _unpinned_parquet_reads() -> collections.Counter:
+    """(file, enclosing function) of every ``.parquet(`` read whose
+    reader chain carries no ``.schema(``."""
+    found: collections.Counter = collections.Counter()
+    for path in sorted(_PKG.rglob("*.py")):
+        rel = path.relative_to(_PKG).as_posix()
+        stack: list[str] = []
+
+        def visit(node):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                stack.append(node.name)
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "parquet"
+            ):
+                chain = _call_chain(node.func.value)
+                if not {"write", "writeStream", "schema"} & set(chain):
+                    found[(rel, stack[-1] if stack else "<module>")] += 1
+            for child in ast.iter_child_nodes(node):
+                visit(child)
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                stack.pop()
+
+        visit(ast.parse(path.read_text(), str(path)))
+    return found
+
+
+def test_parquet_reads_pin_their_schema():
+    """A ``spark.read.parquet`` without ``.schema(`` fires a Spark job
+    to infer what the engine usually knows. New sites must pin
+    (``sources.tables.read_parquet_pinned`` or ``.schema(...)``) or
+    join the allowlist with a reason; stale allowlist entries fail too."""
+    found = _unpinned_parquet_reads()
+    allowed = {k: n for k, (n, _) in _INFERRED_PARQUET_READS.items()}
+    unexpected = {k: n for k, n in found.items() if allowed.get(k) != n}
+    stale = sorted(set(allowed) - set(found))
+    assert not unexpected, f"parquet reads without .schema(: {unexpected}"
+    assert not stale, f"allowlisted sites no longer exist: {stale}"

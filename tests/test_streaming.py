@@ -1497,3 +1497,45 @@ def test_spacesaving_stream_guarantee_and_restart(spark, tmp_path):
     as_dict = {it: (est, err) for it, est, err in final}
     assert as_dict["hot"] == (true["hot"], 0)
     assert as_dict["warm"] == (true["warm"], 0)
+
+
+def test_main_prints_one_progress_line_per_micro_batch(spark, tmp_path, capsys):
+    """The CLI's await loop prints one JSON progress line per micro-batch
+    (batchId, numInputRows, processedRowsPerSecond, watermark, summed
+    state rows) while the availableNow JSON stream drains."""
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    now = time.time()
+    _write_events(
+        str(in_dir / "batch1.json"),
+        [
+            {"product": "A", "event_time": "2025-01-01 10:00:00", "total_price": "10.0"},
+            {"product": "B", "event_time": "2025-01-01 13:00:00", "total_price": "5.0"},
+        ],
+        now - 60,
+    )
+    _write_events(
+        str(in_dir / "batch2.json"),
+        [{"product": "D", "event_time": "2025-01-01 14:00:00", "total_price": "2.0"}],
+        now - 30,
+    )
+    assert job.main([
+        "--source", "json",
+        "--input-path", str(in_dir),
+        "--output", str(tmp_path / "out"),
+        "--checkpoint", str(tmp_path / "ckpt"),
+    ]) == 0
+    lines = [
+        json.loads(line)
+        for line in capsys.readouterr().out.splitlines()
+        if line.startswith("{")
+    ]
+    assert lines
+    assert [p["batchId"] for p in lines] == sorted({p["batchId"] for p in lines})
+    assert sum(p["numInputRows"] for p in lines) == 3
+    data = [p for p in lines if p["numInputRows"]]
+    assert all(p["processedRowsPerSecond"] >= 0 for p in data)
+    # every event lands in state (4 sliding windows each), and the
+    # watermark trails the latest event by the 15-minute delay
+    assert max(p["stateRowsTotal"] for p in lines) > 0
+    assert lines[-1]["watermark"] == "2025-01-01T13:45:00.000Z"

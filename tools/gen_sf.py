@@ -70,9 +70,9 @@ FIXED = ("region", "nation")
 
 
 def upsample(spark, src: str, dst: str, factor: int) -> None:
-    # read through load_table so events.ts (parquet TIMESTAMP(NANOS))
-    # arrives as a proper timestamp and sf1 is written with a plain
-    # timestamp column — downstream load_table handles either layout
+    # read through load_table so events.ts arrives as a proper timestamp
+    # even from a TIMESTAMP(NANOS) source, and sf1 is written with a
+    # plain timestamp column — downstream load_table handles either layout
     from data_pipeline_example_spark.sources import load_table
 
     periods: dict[str, int] = {}
