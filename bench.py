@@ -223,8 +223,8 @@ HEADLINE = [
     "readability_scores",
     "unigram_entropy",
     "heaps_law",
-    # round 12: star-contraction CC over the LSH pair graph (the
-    # diameter-independent scale path), metadata-only URL dedup, and
+    # round 12: CC over the LSH pair graph (the scale pair generator),
+    # metadata-only URL dedup, and
     # per-epoch tokenizer-fertility drift
     "dedup_clusters_scalable",
     "url_canonical_dedup",
@@ -234,7 +234,7 @@ HEADLINE = [
     "boilerplate_prefixes",
     "dup_distance_profile",
     "clustering_silhouette",
-    # cluster coherence composes LSH pairs + star-contraction CC — the
+    # cluster coherence composes LSH pairs + min-label CC — the
     # dedup-quality audit tier, like dup_distance_profile
     "cluster_coherence",
     # contrastive-training pair mining over the capped buckets

@@ -16,8 +16,9 @@ all stage frames are id-only, so the composition adds no text shuffles
 beyond what the member operators already do. The near-dup rule here is
 the cheap deterministic pass (drop the higher doc_id of every verified
 LSH pair whose both endpoints survive so far); ``dedup.dedup_clusters``
-is the principled connected-components version when transitive merge
-order matters.
+(min-label propagation, the engine's one connected-components
+operator) is the principled version when transitive merge order
+matters.
 
 ``curation_summary`` exposes the whole pipeline as one driver-certified
 single-row query (per-stage survivor counts + chunk/token totals); its

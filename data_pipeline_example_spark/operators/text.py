@@ -2458,7 +2458,7 @@ def source_temperature_weights(documents: DataFrame) -> DataFrame:
 def _bm25_match_frame(
     documents: DataFrame, query: tuple[str, ...]
 ) -> DataFrame:
-    """The narrow per-doc frame :func:`bm25_search` checkpoints:
+    """The narrow per-doc frame the BM25 operators checkpoint:
     (doc_id, dl, matched-terms array) from ONE tokenize scan. Split out
     (r15) so composing callers (``curation.retrieval_quality``) can ride
     it on their own fused checkpoint job via ``per_doc_df`` instead of
@@ -2473,6 +2473,66 @@ def _bm25_match_frame(
     )
 
 
+def _bm25_scores(
+    per_doc: DataFrame,
+    queries: tuple[tuple[int, tuple[str, ...]], ...],
+    k1: float,
+    b: float,
+) -> DataFrame:
+    """THE BM25 scorer over a :func:`_bm25_match_frame` frame whose
+    matched arrays hold the union vocabulary of ``queries``: per-(doc,
+    term) tf and per-term df computed ONCE, then fanned out to the
+    queries that asked for each term. Output: query_id, doc_id,
+    n_terms, bm25_micro (unranked)."""
+    stats = per_doc.agg(
+        F.count(F.lit(1)).cast("long").alias("n_docs"),
+        F.coalesce(F.sum("dl"), F.lit(0)).cast("long").alias("sum_dl"),
+    )
+    tf = (
+        per_doc.filter(F.size("m") > 0)
+        .select("doc_id", "dl", F.explode("m").alias("term"))
+        .groupBy("doc_id", "term", "dl")
+        .agg(F.count(F.lit(1)).cast("long").alias("tf"))
+    )
+    dfs = tf.groupBy("term").agg(
+        F.countDistinct("doc_id").cast("long").alias("df")
+    )
+    avgdl = F.col("sum_dl").cast("double") / F.col("n_docs")
+    idf = F.round(
+        F.log((F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0), 6
+    )
+    score6 = F.round(
+        idf * (F.col("tf") * (k1 + 1.0))
+        / (F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / avgdl)),
+        6,
+    )
+    matched = tf.join(F.broadcast(dfs), "term")
+    if len(queries) == 1:
+        # every matched term belongs to the one query: no fan-out join,
+        # whose broadcast of the query table would add a job
+        qid = F.lit(int(queries[0][0])).cast("long")
+        matched = matched.withColumn("query_id", qid)
+    else:
+        qrows = [(int(qid), t) for qid, ts in queries for t in set(ts)]
+        matched = matched.join(
+            F.broadcast(
+                per_doc.sparkSession.createDataFrame(
+                    qrows, "query_id long, term string"
+                )
+            ),
+            "term",
+        )
+    scored = matched.crossJoin(F.broadcast(stats)).select(
+        "query_id",
+        "doc_id",
+        F.round(score6 * 1e6, 0).cast("long").alias("s_micro"),
+    )
+    return scored.groupBy("query_id", "doc_id").agg(
+        F.count(F.lit(1)).cast("long").alias("n_terms"),
+        F.sum("s_micro").cast("long").alias("bm25_micro"),
+    )
+
+
 def bm25_search(
     documents: DataFrame,
     query: tuple[str, ...] = ("spark", "window", "hash"),
@@ -2483,7 +2543,8 @@ def bm25_search(
 ) -> DataFrame:
     """BM25 ranked retrieval over the corpus (Robertson-Spärck Jones,
     the Okapi formula) — the standard lexical-search scorer, here as a
-    top-n query over the documents table.
+    top-n query over the documents table: :func:`bm25_batch` for a batch
+    of one, cut by a TakeOrdered instead of the per-query window.
 
     Exactness: per-(doc, term) scores are a chain of individually
     correctly-rounded IEEE ops on identical inputs (avgdl is the exact
@@ -2503,50 +2564,18 @@ def bm25_search(
     narrow frame — no re-tokenize; only matching (doc, term) rows
     ever shuffle, O(matches), never O(tokens). df and corpus stats
     are planning-sized broadcasts; the top-n is a TakeOrdered.
-    Output: doc_id, n_terms, bm25_micro (micro-units; divide by 1e6
-    for the score), top n by score.
+    ``per_doc_df`` is a caller-materialized :func:`_bm25_match_frame`
+    of the same ``query``. Output: doc_id, n_terms, bm25_micro
+    (micro-units; divide by 1e6 for the score), top n by score.
     """
     per_doc = (
         _bm25_match_frame(documents, query).transform(materialize)
         if per_doc_df is None
         else per_doc_df
     )
-    stats = per_doc.agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.coalesce(F.sum("dl"), F.lit(0)).cast("long").alias("sum_dl"),
-    )
-    tf = (
-        per_doc.filter(F.size("m") > 0)
-        .select("doc_id", "dl", F.explode("m").alias("term"))
-        .groupBy("doc_id", "term", "dl")
-        .agg(F.count(F.lit(1)).cast("long").alias("tf"))
-    )
-    dfs = tf.groupBy("term").agg(
-        F.countDistinct("doc_id").cast("long").alias("df")
-    )
-    avgdl = F.col("sum_dl").cast("double") / F.col("n_docs")
-    idf = F.round(
-        F.log((F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0), 6
-    )
-    score6 = F.round(
-        idf * (F.col("tf") * (k1 + 1.0))
-        / (F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / avgdl)),
-        6,
-    )
-    scored = (
-        tf.join(F.broadcast(dfs), "term")
-        .crossJoin(F.broadcast(stats))
-        .select(
-            "doc_id",
-            F.round(score6 * 1e6, 0).cast("long").alias("s_micro"),
-        )
-    )
     return (
-        scored.groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_terms"),
-            F.sum("s_micro").cast("long").alias("bm25_micro"),
-        )
+        _bm25_scores(per_doc, ((0, query),), k1, b)
+        .select("doc_id", "n_terms", "bm25_micro")
         .orderBy(F.desc("bm25_micro"), F.asc("doc_id"))
         .limit(n)
     )
@@ -2563,86 +2592,34 @@ def bm25_batch(
     b: float = 0.75,
     n: int = 20,
 ) -> DataFrame:
-    """Batched BM25 retrieval — the production serving shape
-    (:func:`bm25_search` scores ONE hardcoded query tuple; real
-    retrieval arrives in batches, and re-running the solo operator
+    """Batched BM25 retrieval — the production serving shape (real
+    retrieval arrives in batches, and re-running :func:`bm25_search`
     per query re-pays the corpus tokenize N times — the
     ``knn_batch``/``ivfpq_knn_index_batch`` precedent).
 
     Plan: ONE column-pruned tokenize scan for the whole batch. Docs
     are projected scan-side to (doc_id, dl, tokens ∩ union-vocabulary)
-    and materialized narrow (the :func:`bm25_search` discipline);
-    per-(doc, term) tf and per-term df are computed ONCE over the
-    union vocabulary, then a broadcast (query_id, term) table fans
-    matched terms out to the queries that asked for them — each
-    (doc, term) pair is tokenized and counted once no matter how many
-    queries share the term. Scores are expression-for-expression the
-    solo operator's (6-dp-rounded ln + per-term micro-unit longs, so
-    per-(query, doc) sums are order-independent), which makes each
-    query's rows BIT-IDENTICAL to its :func:`bm25_search` run
-    (test-pinned). The per-query top-n is a ``row_number() <= n``
-    window that compiles to WindowGroupLimit — map tasks pre-trim
-    before the exchange, so the shuffle carries O(n × queries × tasks)
-    rows, never O(matches).
+    and materialized narrow; :func:`_bm25_scores` computes per-(doc,
+    term) tf and per-term df ONCE over the union vocabulary, then a
+    broadcast (query_id, term) table fans matched terms out to the
+    queries that asked for them — each (doc, term) pair is tokenized
+    and counted once no matter how many queries share the term. The
+    scorer is the solo operator's, so each query's rows are
+    BIT-IDENTICAL to its :func:`bm25_search` run (test-pinned). The
+    per-query top-n is a ``row_number() <= n`` window that compiles to
+    WindowGroupLimit — map tasks pre-trim before the exchange, so the
+    shuffle carries O(n × queries × tasks) rows, never O(matches).
 
     Output: query_id, doc_id, n_terms, bm25_micro, rank (1-based by
     score desc, doc_id asc; ≤ n rows per query).
     """
-    all_terms = sorted({t for _, ts in queries for t in ts})
-    qrows = [(int(qid), t) for qid, ts in queries for t in set(ts)]
-    spark = documents.sparkSession
-    qterms = F.broadcast(
-        spark.createDataFrame(qrows, "query_id long, term string")
-    )
-    toks = widen(documents).select(
-        "doc_id", T.tokens(F.lower(F.col("text"))).alias("t")
-    )
-    per_doc = toks.select(
-        "doc_id",
-        F.size("t").cast("long").alias("dl"),
-        F.filter("t", lambda x: x.isin(*all_terms)).alias("m"),
-    ).transform(materialize)
-    stats = per_doc.agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.coalesce(F.sum("dl"), F.lit(0)).cast("long").alias("sum_dl"),
-    )
-    tf = (
-        per_doc.filter(F.size("m") > 0)
-        .select("doc_id", "dl", F.explode("m").alias("term"))
-        .groupBy("doc_id", "term", "dl")
-        .agg(F.count(F.lit(1)).cast("long").alias("tf"))
-    )
-    dfs = tf.groupBy("term").agg(
-        F.countDistinct("doc_id").cast("long").alias("df")
-    )
-    avgdl = F.col("sum_dl").cast("double") / F.col("n_docs")
-    idf = F.round(
-        F.log((F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0), 6
-    )
-    score6 = F.round(
-        idf * (F.col("tf") * (k1 + 1.0))
-        / (F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / avgdl)),
-        6,
-    )
-    scored = (
-        tf.join(F.broadcast(dfs), "term")
-        .join(qterms, "term")
-        .crossJoin(F.broadcast(stats))
-        .select(
-            "query_id",
-            "doc_id",
-            F.round(score6 * 1e6, 0).cast("long").alias("s_micro"),
-        )
-    )
+    all_terms = tuple(sorted({t for _, ts in queries for t in ts}))
+    per_doc = _bm25_match_frame(documents, all_terms).transform(materialize)
     w = Window.partitionBy("query_id").orderBy(
         F.desc("bm25_micro"), F.asc("doc_id")
     )
     return (
-        scored.groupBy("query_id", "doc_id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_terms"),
-            F.sum("s_micro").cast("long").alias("bm25_micro"),
-        )
+        _bm25_scores(per_doc, queries, k1, b)
         .withColumn("rank", F.row_number().over(w).cast("int"))
         .filter(F.col("rank") <= n)
     )

@@ -1509,7 +1509,7 @@ def segment_value_percentiles(
 
 def _basket_frames(lineitem: DataFrame, materialize_baskets: bool = True):
     """Shared basket/pair construction for :func:`basket_affinity` and
-    :func:`basket_communities`.
+    the graph family's :func:`_copurchase_edges`.
 
     One ``groupBy(l_orderkey).collect_set`` shuffle builds the basket
     arrays (collect_set dedups in the partial aggregate, map-side —
@@ -1550,6 +1550,20 @@ def _basket_frames(lineitem: DataFrame, materialize_baskets: bool = True):
         "p.part_a", "p.part_b"
     )
     return baskets, pairs
+
+
+def _copurchase_edges(lineitem: DataFrame, min_support: int) -> DataFrame:
+    """The co-purchase graph the graph family builds on: one row per
+    unordered part pair (part_a < part_b) bought together in at least
+    ``min_support`` orders, with that order count ``n``. Lazy — each
+    caller places its own ``materialize`` seam; the basket frame is a
+    single-consumer input here, so it never materializes."""
+    _, pair_stream = _basket_frames(lineitem, materialize_baskets=False)
+    return (
+        pair_stream.groupBy("part_a", "part_b")
+        .agg(F.count(F.lit(1)).cast("long").alias("n"))
+        .filter(F.col("n") >= int(min_support))
+    )
 
 
 def basket_affinity(
@@ -2013,8 +2027,8 @@ def basket_communities(
     pair graph — "families" of parts that recur together in baskets
     (the categoryless taxonomy a recommender bootstraps from).
 
-    Composes the :func:`basket_affinity` edge construction
-    (:func:`_basket_frames`: one collect_set shuffle, in-array pair
+    Composes the graph family's edge build
+    (:func:`_copurchase_edges`: one collect_set shuffle, in-array pair
     generation, ``min_support`` pruning the long random-cooccurrence
     tail BEFORE any graph work)
     with :func:`operators.dedup.dedup_clusters`' min-label
@@ -2027,20 +2041,14 @@ def basket_communities(
     """
     from data_pipeline_example_spark.operators.dedup import dedup_clusters
 
-    _, pair_stream = _basket_frames(lineitem, materialize_baskets=False)
     # ONE blocking job for the pruned edge build AND its symmetrization
     # (r15, was two sequential checkpoints: edges, then dedup_clusters'
     # sym over its blocks): the symmetric frame materializes directly
     # off the pair aggregate and rides into the CC via ``sym_df``; the
     # directed edges for the per-community edge count are the a < b
     # half of the same blocks (pair generation emits part_a < part_b).
-    canon = (
-        pair_stream.groupBy(
-            F.col("part_a").alias("a"), F.col("part_b").alias("b")
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        .filter(F.col("n") >= int(min_support))
-        .select("a", "b")
+    canon = _copurchase_edges(lineitem, min_support).select(
+        F.col("part_a").alias("a"), F.col("part_b").alias("b")
     )
     sym = canon.unionByName(
         canon.select(F.col("b").alias("a"), F.col("a").alias("b"))
@@ -2082,7 +2090,7 @@ def product_pagerank(
 
     Algorithm: the classic damped power iteration, run a FIXED
     ``iters`` rounds (deterministic output, no convergence test) over
-    the symmetrized min-support pair graph from :func:`_basket_frames`
+    the symmetrized min-support pair graph from :func:`_copurchase_edges`
     (one collect_set shuffle, in-array pair generation). Each round is
     one keyed join + map-side-combined sum — the dedup_clusters /
     GraphX round shape; per-round lineage is cut through the
@@ -2105,13 +2113,7 @@ def product_pagerank(
     l_partkey) — TakeOrdered, never a full sort of ranks.
     """
     SCALE = 10**12
-    _, pair_stream = _basket_frames(lineitem, materialize_baskets=False)
-    pairs = (
-        pair_stream.groupBy("part_a", "part_b")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        .filter(F.col("n") >= int(min_support))
-        .select("part_a", "part_b")
-    )
+    pairs = _copurchase_edges(lineitem, min_support)
     sym = pairs.select(
         F.col("part_a").alias("src"), F.col("part_b").alias("dst")
     ).union(
@@ -2205,11 +2207,8 @@ def basket_graph_stats(lineitem: DataFrame, min_support: int = 2) -> DataFrame:
     one row — n_nodes, n_edges, n_triangles, n_wedges,
     clustering_micro.
     """
-    _, pair_stream = _basket_frames(lineitem, materialize_baskets=False)
     edges = (
-        pair_stream.groupBy("part_a", "part_b")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        .filter(F.col("n") >= int(min_support))
+        _copurchase_edges(lineitem, min_support)
         .select("part_a", "part_b")
         .transform(materialize)
     )
@@ -2316,13 +2315,7 @@ def copurchase_link_prediction(
     """
     from pyspark.sql.window import Window
 
-    _, pair_stream = _basket_frames(lineitem, materialize_baskets=False)
-    cnt = (
-        pair_stream.groupBy("part_a", "part_b")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        .filter(F.col("n") >= int(min_support))
-        .transform(materialize)
-    )
+    cnt = _copurchase_edges(lineitem, min_support).transform(materialize)
     sym = cnt.select(
         F.col("part_a").alias("x"), F.col("part_b").alias("y"), "n"
     ).unionByName(
@@ -2420,13 +2413,7 @@ def basket_kcore(
     Output: node (l_partkey), degree (within the final survivor set),
     ordered by node.
     """
-    _, pair_stream = _basket_frames(lineitem, materialize_baskets=False)
-    cnt = (
-        pair_stream.groupBy("part_a", "part_b")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        .filter(F.col("n") >= int(min_support))
-        .select("part_a", "part_b")
-    )
+    cnt = _copurchase_edges(lineitem, min_support)
     sym, prev_edges = materialize_counted(
         cnt.select(
             F.col("part_a").alias("x"), F.col("part_b").alias("y")
@@ -2446,10 +2433,10 @@ def basket_kcore(
         # early exit at fixpoint: a round that removes nothing makes
         # every later round a no-op, so breaking is value-identical to
         # running all peel_rounds (the oracle still unrolls them all —
-        # its extra rounds are no-ops too). The count rides the
-        # checkpoint job itself (observe metric — r15: one
-        # driver-blocking job per round, not two). Cut sf10 wall-clock
-        # on graphs that converge in 2-3 rounds (most do).
+        # its extra rounds are no-ops too). Each round is two
+        # driver-blocking jobs: the checkpoint, then a count scan of
+        # its blocks (materialize_counted). Cut sf10 wall-clock on
+        # graphs that converge in 2-3 rounds (most do).
         edges, n = materialize_counted(
             edges.join(keep, "x")
             .join(keep.select(F.col("x").alias("y")), "y")

@@ -1349,9 +1349,8 @@ FROM clusters
 """,
     # same recursive-CTE CC read-off as dedup_clusters, but over the
     # banded-LSH verified pair set (the minhash_lsh_pairs oracle's
-    # CTEs verbatim) — the engine side runs large-star/small-star star
-    # contraction instead of min-label propagation; both compute
-    # min-reachable-id per component, so one oracle covers both.
+    # CTEs verbatim) — the engine side runs the same min-label
+    # propagation (dedup.dedup_clusters) over those pairs.
     "dedup_clusters_scalable": f"""
 WITH RECURSIVE {_SHINGLES},
 hashes AS (

@@ -599,14 +599,11 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_dedup_clusters_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Connected components over the banded-LSH verified pair graph via
-    alternating large-star/small-star contraction (Kiveris et al. 2014)
-    — O(log² n) rounds independent of cluster diameter, the scale path
-    for chain-shaped dup graphs where min-label propagation crawls."""
+    """Connected components over the banded-LSH verified pair graph —
+    the scale pair generator (never O(n²)) feeding the one CC,
+    :func:`dedup.dedup_clusters`' min-label propagation."""
     docs = load_table(spark, sf_dir, "documents")
-    return dedup.dedup_clusters_scalable(
-        dedup.minhash_lsh_pairs(docs, threshold=0.1)
-    )
+    return dedup.dedup_clusters(dedup.minhash_lsh_pairs(docs, threshold=0.1))
 
 
 def q_url_canonical_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -620,8 +617,8 @@ def q_url_canonical_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_cluster_coherence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-cluster dedup-quality audit: pair-graph density + mean
-    verified Jaccard over the star-contraction CC clusters (chain-weld
-    detection)."""
+    verified Jaccard over the min-label CC clusters of the banded-LSH
+    pairs (chain-weld detection)."""
     return dedup.cluster_coherence(load_table(spark, sf_dir, "documents"))
 
 
@@ -2187,6 +2184,12 @@ QUERIES: dict[str, QueryFn] = {
 # changed group (ivfpq_knn_index_batch already sat there), and the
 # eight most-recently-certified names of the tail (the end of the r10
 # cohort head: value_histogram … rolling_revenue_7d) make room.
+# One connected-components core (same derivation): the twelve queries
+# whose code path moved — the CC callers now on min-label propagation,
+# the five co-purchase graph ops on the one edge build, and the two
+# BM25 ops on the one scorer — join the changed group, and the twelve
+# most-recently-certified names of the tail (the whole r10 cohort head
+# and the last two of the r9 remainder) make room.
 _R15_FRONT = [
     # new r15
     "unicode_clean",
@@ -2201,18 +2204,17 @@ _R15_FRONT = [
     "ivf_knn", "ivf_knn_batch", "filtered_ivf_knn", "ivfpq_knn",
     "ivfpq_knn_batch", "ivfpq_recall", "retrieval_quality",
     "rrf_hybrid_search",
+    # changed by the one CC core / co-purchase edge build / BM25 scorer
+    "dedup_clusters", "dedup_clusters_scalable", "dedup_summary",
+    "split_leakage_audit", "cluster_coherence", "basket_communities",
+    "product_pagerank", "basket_graph_stats", "copurchase_link_prediction",
+    "basket_kcore", "bm25_search", "bm25_batch",
     # r9-certified cohort remainder
     "cluster_representatives", "cluster_representatives_lsh",
     "segment_value_percentiles", "daily_revenue_ma7", "event_cooccurrence",
     "lang_source_mix", "token_fertility", "knn_density_outliers",
     "semantic_prune_capped", "nearest_neighbor_capped", "length_buckets",
     "knn_batch", "substring_dedup", "winnowing_fingerprints",
-    "winnowing_overlap_pairs", "simhash_pairs_capped",
-    # r10 cohort head
-    "ngram_novelty", "vocab_drift", "length_pareto",
-    "source_gram_containment", "embedding_drift",
-    "incremental_daily_revenue", "revenue_seasonality", "token_gini",
-    "basket_affinity", "daily_revenue",
 ]
 assert len(_R15_FRONT) == 50 and all(n in QUERIES for n in _R15_FRONT), (
     "window rotation list must name 50 registered queries"

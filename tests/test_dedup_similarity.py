@@ -161,27 +161,50 @@ def test_dedup_clusters_chain_and_summary(spark):
 
 
 def test_dedup_clusters_scalable_matches_min_label(spark):
-    """Large-star/small-star CC equals min-label propagation on planted
-    clusters — including a diameter-63 path that min-label needs 63
-    rounds for, solved here within 12 star rounds (the O(log n)
-    property is the assertion: max_iter=12 raises if contraction ever
-    needed diameter-many rounds)."""
+    """Min-label CC (the one engine CC, behind both dedup_clusters and
+    dedup_clusters_scalable) labels planted clusters — a diameter-63
+    path, a clique and a shared endpoint — with the min id reachable,
+    given a round cap above the path's diameter; below it, it raises
+    instead of returning the half-propagated labels."""
+    import pytest
+
     from data_pipeline_example_spark.operators import dedup as dd
 
     rows = [(i, i + 1) for i in range(63)]  # path 0-1-...-63
     rows += [(a, b) for a in range(100, 105) for b in range(a + 1, 105)]
     rows += [(200, 201), (300, 201)]  # shared endpoint merges 200/201/300
     pairs = spark.createDataFrame(rows, ["doc_a", "doc_b"])
-    want = {
+    got = {
         (r["doc_id"], r["cluster_id"])
         for r in dd.dedup_clusters(pairs, max_iter=80).collect()
     }
-    got = {
-        (r["doc_id"], r["cluster_id"])
-        for r in dd.dedup_clusters_scalable(pairs, max_iter=12).collect()
-    }
+    want = {(i, 0) for i in range(64)}
+    want |= {(i, 100) for i in range(100, 105)}
+    want |= {(200, 200), (201, 200), (300, 200)}
     assert got == want
     assert {c for _, c in got} == {0, 100, 200}
+    with pytest.raises(RuntimeError, match="did not converge in 12 rounds"):
+        dd.dedup_clusters(pairs, max_iter=12)
+
+
+def test_dedup_clusters_raises_on_path_longer_than_max_iter(spark):
+    """A path with more hops than ``max_iter`` leaves labels still
+    changing when the cap is hit: that is an error, not an answer (the
+    far end would keep a label that is not its component minimum)."""
+    import pytest
+
+    from data_pipeline_example_spark.operators import dedup as dd
+
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(10)], ["doc_a", "doc_b"]
+    )
+    with pytest.raises(RuntimeError, match="did not converge in 5 rounds"):
+        dd.dedup_clusters(pairs, max_iter=5)
+    # 10 label-moving rounds plus the one that confirms the fixpoint
+    got = dd.dedup_clusters(pairs, max_iter=11).collect()
+    assert {(r["doc_id"], r["cluster_id"]) for r in got} == {
+        (i, 0) for i in range(11)
+    }
 
 
 def test_dedup_clusters_scalable_empty_and_self_pairs(spark):
@@ -191,12 +214,12 @@ def test_dedup_clusters_scalable_empty_and_self_pairs(spark):
     empty = spark.createDataFrame(
         [], StructType([StructField("doc_a", LongType()), StructField("doc_b", LongType())])
     )
-    assert dd.dedup_clusters_scalable(empty).count() == 0
-    # self-pairs are dropped, not propagated
+    assert dd.dedup_clusters(empty).count() == 0
+    # a self-pair adds no connectivity: 6 still takes 5's label
     selfs = spark.createDataFrame([(5, 5), (5, 6)], ["doc_a", "doc_b"])
     got = {
         (r["doc_id"], r["cluster_id"])
-        for r in dd.dedup_clusters_scalable(selfs).collect()
+        for r in dd.dedup_clusters(selfs).collect()
     }
     assert got == {(5, 5), (6, 5)}
 

@@ -471,18 +471,13 @@ def test_value_cuts_matches_bruteforce(spark, data, descending):
     )
 )
 def test_star_contraction_cc_equals_min_label_on_random_graphs(spark, edges):
-    """dedup_clusters_scalable (large-star/small-star) and
-    dedup_clusters (min-label propagation) compute the same
-    min-reachable-id labeling on arbitrary random graphs, including
-    self-loops, parallel edges, and both edge orientations — and both
-    equal a brute-force union-find ground truth."""
+    """dedup_clusters (min-label propagation, the engine's one CC)
+    computes the min-reachable-id labeling on arbitrary random graphs,
+    including self-loops, parallel edges, and both edge orientations —
+    equal to a brute-force union-find ground truth."""
     from data_pipeline_example_spark.operators import dedup as dd
 
     pairs = spark.createDataFrame(edges, ["doc_a", "doc_b"])
-    scalable = {
-        (r["doc_id"], r["cluster_id"])
-        for r in dd.dedup_clusters_scalable(pairs).collect()
-    }
     label_prop = {
         (r["doc_id"], r["cluster_id"])
         for r in dd.dedup_clusters(pairs, max_iter=80).collect()
@@ -505,22 +500,6 @@ def test_star_contraction_cc_equals_min_label_on_random_graphs(spark, edges):
             parent[max(ra, rb)] = min(ra, rb)
     want = {(v, find(v)) for v in parent}
     assert label_prop == want
-    # the scalable variant drops pure self-loop nodes only when they
-    # have no real edge — match dedup_clusters' contract on the rest
-    scalable_nodes = {v for v, _ in scalable}
-    want_scalable = {
-        (v, c) for v, c in want
-        if v in scalable_nodes
-    }
-    assert scalable == want_scalable
-    # nodes missing from scalable can only be isolated self-loop nodes
-    only_selfloop = {
-        v for v, _ in want if v not in scalable_nodes
-    }
-    assert all(
-        all((a != v or b == v) and (b != v or a == v) for a, b in edges)
-        for v in only_selfloop
-    )
 
 
 @settings(**_SETTINGS)
