@@ -84,22 +84,20 @@ def materialize_counted(df: DataFrame) -> tuple[DataFrame, int]:
 def materialize_disk(df: DataFrame) -> DataFrame:
     """:func:`materialize` for CORPUS-SIZED frames (token/line arrays,
     i.e. roughly the text volume itself). Reliable mode is unchanged —
-    a replicated checkpoint is already disk-backed. Local mode uses a
-    ``DISK_ONLY`` persist with an eager count instead of
-    ``localCheckpoint``: localCheckpoint stores MEMORY_AND_DISK blocks
-    in the unified region, so a corpus-sized frame evicts execution
-    memory and thrashes GC — the r15 sf100 sweep measured
-    ``substring_dedup``/``gopher_repetition`` going ~1.4–1.6× per
-    unit data and ``dsir_weights`` OOM-ing a 48 GB heap on exactly
-    this. Serialized disk blocks leave the heap to the shuffles; the
-    eager count pins the blocks (and their partition ids) before any
-    consumer plans against the InMemoryRelation."""
+    a replicated checkpoint is already disk-backed. Local mode is an
+    eager ``localCheckpoint`` at ``DISK_ONLY`` instead of the default
+    MEMORY_AND_DISK: those blocks sit in the unified region, so a
+    corpus-sized frame evicts execution memory and thrashes GC — the
+    r15 sf100 sweep measured ``substring_dedup``/``gopher_repetition``
+    going ~1.4–1.6× per unit data and ``dsir_weights`` OOM-ing a 48 GB
+    heap on exactly this. Serialized disk blocks leave the heap to the
+    shuffles. Unlike a ``persist``, the checkpoint registers nothing
+    in the session's CacheManager: its blocks are released with the
+    frame instead of staying pinned for the life of the session."""
     spark = df.sparkSession
     mode = (spark.conf.get(MODE_CONF, "") or "").strip().lower()
     if mode == "reliable" or (mode == "" and _checkpoint_dir(spark)):
         return df.checkpoint(eager=True)
     from pyspark import StorageLevel
 
-    out = df.persist(StorageLevel.DISK_ONLY)
-    out.count()
-    return out
+    return df.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)

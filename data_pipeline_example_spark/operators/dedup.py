@@ -175,7 +175,8 @@ def minhash_signatures(
     :func:`_with_minhash_sigs` — one projection, zero exchanges; the
     shingle arrays never shuffle and neither do the signatures.
     """
-    assert num_hashes % 4 == 0, "num_hashes must be a multiple of 4"
+    if num_hashes % 4:
+        raise ValueError(f"num_hashes must be a multiple of 4, got {num_hashes}")
     sh = shingled(documents, k) if shingle_df is None else shingle_df
     return _with_minhash_sigs(sh, num_hashes).select(
         "doc_id", *[f"h{i}" for i in range(num_hashes)]

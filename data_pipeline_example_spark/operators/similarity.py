@@ -4,12 +4,20 @@ LLM-data-pipeline extensions (BASELINE.json north star; the reference
 has no vector operators — every op here is new surface). The search
 ladder, exact to compressed:
 
-* ``knn`` — brute-force cosine top-k for one query vector: broadcast the
-  query row, score every vector with the UDF-free cosine from
-  functions/vectors.py, TakeOrderedAndProject. The correctness baseline;
-  at 100 TB it is a single linear scan (fast, but reads everything).
+* ``knn`` — brute-force cosine top-k for one query vector, a batch of
+  one over ``knn_batch``'s scorer: broadcast the query row, score every
+  vector with the UDF-free cosine from functions/vectors.py,
+  TakeOrderedAndProject. The correctness baseline; at 100 TB it is a
+  single linear scan (fast, but reads everything).
 * ``nearest_neighbor_per_vector`` — all-pairs top-1 neighbor. O(n²)
-  baseline used for oracle-checking the scale paths.
+  baseline used for oracle-checking the scale paths. It and the rest
+  of the exact-neighbor family (``cosine_dup_pairs``,
+  ``nearest_neighbor_blocked`` / ``_capped``, ``semantic_prune`` /
+  ``_capped``, ``knn_density_outliers``) score every bucket with ONE
+  kernel, ``_bucket_cos`` over the fold-exact ``_cos_matrix``; the
+  operators differ only in their bucketed frame (query-replication
+  blocks, fixed-k or capped centroid buckets) and their reduction
+  (top-1, threshold pairs, earliest-survives prune, top-k sum).
 * ``ivf_knn`` — the scale path: IVF-style bucketed search. Vectors are
   assigned to their nearest centroid once (a broadcast join against the
   centroid set), and a query probes only the ``n_probe`` closest
@@ -88,36 +96,174 @@ def knn(embeddings: DataFrame, query_id: int = 0, k: int = 10) -> DataFrame:
 
     BASELINE ONLY — exact single-linear-scan oracle anchor; at corpus
     scale use ``ivf_knn`` (probe-pruned bucketed search, same schema).
-    Output: vec_id, cos_sim (6 dp).
+    A batch of one over :func:`knn_batch`'s scorer (:func:`_knn_core`),
+    cut by a TakeOrdered instead of the per-query window.
+    Output: vec_id, cos_sim (6 dp), best first.
     """
-    e = _as_double(embeddings)
-    # norms factored out of the per-row cosine (r15): the row norm is a
-    # projection column below the join (computed once per row) and the
-    # query norm a column of the 1-row broadcast build (computed once),
-    # so the scored expression dot/(nv·nq) does 64 mult-adds per row
-    # instead of 192 — value-identical to cosine() (same fold, same
-    # a/(b·c) grouping, same doubles)
-    q = e.filter(F.col("vec_id") == query_id).select(
-        F.col("v").alias("qv"), V.norm(F.col("v")).alias("nq")
+    return _knn_core(_as_double(embeddings), [query_id], k).select("vec_id", "cos_sim")
+
+
+def _knn_core(e: DataFrame, query_ids, k: int) -> DataFrame:
+    """THE exact top-k scorer for a query batch over ``e`` (vec_id, v):
+    the rows whose vec_id is in ``query_ids`` broadcast as the query
+    matrix and every corpus vector scores against all of them in one
+    pass. Norms are factored out of the per-(row, query) cosine (r15):
+    the row norm is a projection below the join (once per ROW, not per
+    query) and each query norm a column of the broadcast build, so
+    dot/(nv·nq) is value-identical to cosine() at 64 instead of 192
+    mult-adds per pair. Cut by :func:`_top_k` (one query: TakeOrdered).
+    Output: query_id, vec_id, cos_sim (6 dp), rank (≤ k per query)."""
+    ids = [int(q) for q in query_ids]
+    qs = e.filter(F.col("vec_id").isin(ids)).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("v").alias("qv"),
+        V.norm(F.col("v")).alias("nq"),
     )
-    return (
+    scored = (
         e.select("vec_id", "v", V.norm(F.col("v")).alias("nv"))
-        .crossJoin(F.broadcast(q))
+        .crossJoin(F.broadcast(qs))
         .select(
+            "query_id",
             "vec_id",
             F.round(
                 V.dot(F.col("v"), F.col("qv")) / (F.col("nv") * F.col("nq")),
                 6,
             ).alias("cos_sim"),
         )
-        .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-        .limit(k)
+    )
+    return _top_k(scored, "cos_sim", k, "rank", len(ids) == 1)
+
+
+#: query-replication blocks of the exact all-pairs ops
+#: (:func:`_block_scored`)
+_N_BLOCKS = 16
+
+_NN_SCHEMA = "vec_id long, nn_id long, cos_sim double"
+
+
+def _bucket_cos(rows, queries=None):
+    """THE in-bucket scorer of the exact-neighbor family. ``rows`` (a
+    pandas frame with vec_id, v) sorted by vec_id ascending — so a
+    first-max argmax picks the lowest id on rounded-cosine ties, the
+    oracles' ``ORDER BY cos DESC, id ASC`` — and the :func:`_cos_matrix`
+    cosines (6 dp, bit-exact with the oracle's fold) of ``queries``
+    (default: the same rows) against them, every self-pair (equal
+    vec_id, the oracles' ``a.vec_id != b.vec_id``) masked to -inf.
+    Returns ``(rows_sorted, query_ids, row_ids, S)``."""
+    import numpy as np
+
+    rows = rows.sort_values("vec_id")
+    qs = rows if queries is None else queries
+    R = np.vstack(rows["v"].to_numpy()).astype(np.float64)
+    Q = R if queries is None else np.vstack(qs["v"].to_numpy()).astype(np.float64)
+    q_ids, r_ids = qs["vec_id"].to_numpy(), rows["vec_id"].to_numpy()
+    S = _cos_matrix(Q, R)
+    S[q_ids[:, None] == r_ids[None, :]] = -np.inf
+    return rows, q_ids, r_ids, S
+
+
+def _top1(q_ids, r_ids, S):
+    """Top-1 reduction of a :func:`_bucket_cos` matrix: each query's
+    best row (first max = lowest id on ties); a query whose only
+    candidate is itself emits no row (the oracles' singleton rule)."""
+    import numpy as np
+    import pandas as pd
+
+    j = np.argmax(S, axis=1)
+    best = S[np.arange(len(q_ids)), j]
+    keep = best != -np.inf
+    return pd.DataFrame(
+        {"vec_id": q_ids[keep], "nn_id": r_ids[j[keep]], "cos_sim": best[keep]}
     )
 
 
-def nearest_neighbor_per_vector(
-    embeddings: DataFrame, method: str = "blocked", n_blocks: int = 16
-) -> DataFrame:
+def _block_scored(embeddings: DataFrame, reduce, schema: str) -> DataFrame:
+    """The query-replication block frame of the exact all-pairs ops
+    (block nested loop with vectorized NumPy scoring): every valid
+    vector is a query in each of the ``_N_BLOCKS`` blocks and a corpus
+    row in block ``pmod(vec_id, _N_BLOCKS)``; one ``applyInPandas`` call
+    per block scores (queries × block rows) with :func:`_bucket_cos`
+    and returns ``reduce(query_ids, row_ids, S)`` rows of ``schema``.
+    Arrow transfer is (_N_BLOCKS + 1)·n·d floats; each block's matmul
+    is embarrassingly parallel and the O(n²·d) arithmetic runs at BLAS
+    speed."""
+    import pandas as pd
+
+    e = _as_float(embeddings)
+    blocks = F.explode(F.array(*[F.lit(i) for i in range(_N_BLOCKS)]))
+    frame = e.select(
+        blocks.alias("blk"), F.lit(True).alias("is_query"), "vec_id", "v"
+    ).unionByName(
+        e.select(
+            F.pmod("vec_id", F.lit(_N_BLOCKS)).cast("int").alias("blk"),
+            F.lit(False).alias("is_query"),
+            "vec_id",
+            "v",
+        )
+    )
+    cols = [c.split()[0] for c in schema.split(",")]
+
+    def per_block(pdf: pd.DataFrame) -> pd.DataFrame:
+        qs, rs = pdf[pdf["is_query"]], pdf[~pdf["is_query"]]
+        if qs.empty or rs.empty:
+            return pd.DataFrame({c: [] for c in cols})
+        return reduce(*_bucket_cos(rs, qs)[1:])
+
+    return frame.groupBy("blk").applyInPandas(per_block, schema)
+
+
+def _fixed_buckets(embeddings: DataFrame, n_centroids: int) -> DataFrame:
+    """vec_id, v (float), centroid_id — the fixed-k bucketed frame (the
+    capped twins use :func:`assign_centroids_capped` instead)."""
+    return _as_float(embeddings).join(assign_centroids(embeddings, n_centroids), "vec_id")
+
+
+def _nn_buckets(bucketed: DataFrame, *keys: str) -> DataFrame:
+    """Top-1 neighbor of every vector inside its ``keys`` bucket."""
+    return bucketed.groupBy(*keys).applyInPandas(
+        lambda pdf: _top1(*_bucket_cos(pdf)[1:]), _NN_SCHEMA
+    )
+
+
+def _prune_buckets(bucketed: DataFrame, threshold: float, *keys: str) -> DataFrame:
+    """SemDeDup keep decision inside every ``keys`` bucket: a vector is
+    dropped when an EARLIER (lower vec_id) member of its bucket scores
+    >= ``threshold`` — the lower triangle of the sorted bucket's matrix,
+    rolled up per vector in the same batch, so no pair list is ever
+    materialized or shuffled. Output: vec_id, <keys>, keep,
+    n_earlier_dups, max_cos (NULL for kept vectors)."""
+    import pandas as pd
+
+    def prune(pdf: pd.DataFrame) -> pd.DataFrame:
+        import numpy as np
+
+        rows, ids, _, S = _bucket_cos(pdf)
+        hit = np.tril(S >= threshold, k=-1)  # row j vs earlier cols i<j
+        n_dups = hit.sum(axis=1)
+        # explicit nullable Float64 with pd.NA for kept vectors — the
+        # NULL contract is stated in the dtype, not left to Arrow's
+        # NaN→NULL coercion of a float64 ndarray
+        masked = np.where(hit, S, -np.inf)
+        max_cos = pd.array(masked.max(axis=1, initial=-np.inf), dtype="Float64")
+        max_cos[n_dups == 0] = pd.NA
+        return pd.DataFrame(
+            {
+                "vec_id": ids,
+                **{key: rows[key].to_numpy() for key in keys},
+                "keep": (n_dups == 0).astype("int32"),
+                "n_earlier_dups": n_dups.astype("int64"),
+                "max_cos": max_cos,
+            }
+        )
+
+    key_ddl = "".join(f"{k} {bucketed.schema[k].dataType.simpleString()}, " for k in keys)
+    return bucketed.groupBy(*keys).applyInPandas(
+        prune,
+        f"vec_id long, {key_ddl}keep int, n_earlier_dups long, max_cos double",
+    )
+
+
+def nearest_neighbor_per_vector(embeddings: DataFrame) -> DataFrame:
     """For every vector: its top-1 neighbor (excluding itself).
 
     BASELINE ONLY — all-pairs O(n²·d), the exact anchor the approximate
@@ -127,99 +273,22 @@ def nearest_neighbor_per_vector(
 
     Output: vec_id, nn_id, cos_sim (6 dp).
 
-    ``method="blocked"`` (default): block nested-loop with vectorized
-    NumPy scoring. The corpus is hashed into ``n_blocks`` buckets; every
-    vector is replicated to each bucket as a query, and one
-    ``applyInPandas`` call per bucket computes a (queries × bucket)
-    cosine matrix with a single BLAS matmul, emitting per-bucket top-1
-    partials that a ``max_by`` aggregate reduces to the global top-1.
-    Arrow transfer is (n_blocks+1)·n·d doubles; each bucket's matmul is
-    embarrassingly parallel. The O(n²·d) arithmetic runs at BLAS speed
-    instead of one interpreted lambda per element — two orders of
-    magnitude on wide corpora. (For n where n_blocks·n replication is
-    too much, cap the candidate set first — ``ivf_knn``'s assignment —
-    then run this within buckets.)
-
-    ``method="fold"``: pure built-in expressions (zip_with + aggregate
-    fold per pair) — no Python boundary at all; same results.
-
-    Both shapes: norms computed once per vector, top-1 as a ``max_by``
-    hash aggregate with map-side partials — no global sort, no window
-    shuffle of n² scored rows. Tie-break (desc cos_sim, asc nn_id) is
-    encoded as max over (cos_sim, -nn_id); the rounded cosine is what's
-    ranked, keeping the winner cross-engine deterministic.
+    Scored on the query-replication block frame (:func:`_block_scored`):
+    per-block top-1 partials (:func:`_top1`) reduce to the global top-1
+    with a ``max_by`` hash aggregate with map-side partials — no global
+    sort, no window shuffle of n² scored rows. Tie-break (desc cos_sim,
+    asc nn_id) is encoded as max over (cos_sim, -nn_id); the rounded
+    cosine is what's ranked, keeping the winner cross-engine
+    deterministic.
     """
     best = F.max_by(
         F.struct("nn_id", "cos_sim"), F.struct(F.col("cos_sim"), -F.col("nn_id"))
     ).alias("best")
-
-    if method == "blocked":
-        import pandas as pd  # driver/executor-side only
-
-        e = _as_float(embeddings)
-        queries = e.select(
-            F.explode(F.array(*[F.lit(i) for i in range(n_blocks)])).alias("blk"),
-            F.lit(True).alias("is_query"),
-            "vec_id",
-            "v",
-        )
-        corpus = e.select(
-            F.pmod("vec_id", F.lit(n_blocks)).cast("int").alias("blk"),
-            F.lit(False).alias("is_query"),
-            "vec_id",
-            "v",
-        )
-
-        def partial_nn(pdf: pd.DataFrame) -> pd.DataFrame:
-            import numpy as np
-
-            qs = pdf[pdf["is_query"]]
-            rs = pdf[~pdf["is_query"]].sort_values("vec_id")  # asc → argmax = lowest id
-            if qs.empty or rs.empty:
-                return pd.DataFrame({"vec_id": [], "nn_id": [], "cos_sim": []})
-            Q = np.vstack(qs["v"].to_numpy()).astype(np.float64)
-            R = np.vstack(rs["v"].to_numpy()).astype(np.float64)
-            Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
-            Rn = R / np.linalg.norm(R, axis=1, keepdims=True)
-            S = np.round(Qn @ Rn.T, 6)
-            q_ids = qs["vec_id"].to_numpy()
-            r_ids = rs["vec_id"].to_numpy()
-            # exclude self-matches
-            self_mask = q_ids[:, None] == r_ids[None, :]
-            S[self_mask] = -np.inf
-            j = np.argmax(S, axis=1)  # first max → lowest nn_id on ties
-            keep = ~np.isinf(S[np.arange(len(q_ids)), j])
-            return pd.DataFrame(
-                {
-                    "vec_id": q_ids[keep],
-                    "nn_id": r_ids[j[keep]],
-                    "cos_sim": S[np.arange(len(q_ids)), j][keep],
-                }
-            )
-
-        partials = queries.unionByName(corpus).groupBy("blk").applyInPandas(
-            partial_nn, "vec_id long, nn_id long, cos_sim double"
-        )
-        return partials.groupBy("vec_id").agg(best).select(
-            "vec_id",
-            F.col("best.nn_id").alias("nn_id"),
-            F.col("best.cos_sim").alias("cos_sim"),
-        )
-
-    e = _with_norm(embeddings)
-    a = e.select(F.col("vec_id"), F.col("v"), F.col("nrm"))
-    b = e.select(
-        F.col("vec_id").alias("nn_id"), F.col("v").alias("nv"), F.col("nrm").alias("nnrm")
-    )
-    scored = a.join(b, F.col("vec_id") != F.col("nn_id")).select(
+    partials = _block_scored(embeddings, _top1, _NN_SCHEMA)
+    return partials.groupBy("vec_id").agg(best).select(
         "vec_id",
-        "nn_id",
-        F.round(
-            V.dot(F.col("v"), F.col("nv")) / (F.col("nrm") * F.col("nnrm")), 6
-        ).alias("cos_sim"),
-    )
-    return scored.groupBy("vec_id").agg(best).select(
-        "vec_id", F.col("best.nn_id").alias("nn_id"), F.col("best.cos_sim").alias("cos_sim")
+        F.col("best.nn_id").alias("nn_id"),
+        F.col("best.cos_sim").alias("cos_sim"),
     )
 
 
@@ -307,9 +376,11 @@ def _cos_matrix(M, C):
     S = (M @ C.T) / (na[:, None] * nc[None, :])
     R = np.round(S, 6)
     frac = np.abs(np.modf(S * 1e6)[0])
-    for i, j in zip(*np.where(np.abs(frac - 0.5) < 1e-3)):
-        dot = np.cumsum(M[i] * C[j])[-1]
-        R[i, j] = np.round(dot / (na[i] * nc[j]), 6)
+    i, j = np.where(np.abs(frac - 0.5) < 1e-3)
+    # cumsum along each row is the same strict left-to-right sum per
+    # entry, one vectorized pass over the band instead of a Python loop
+    dot = np.cumsum(M[i] * C[j], axis=1)[:, -1]
+    R[i, j] = np.round(dot / (na[i] * nc[j]), 6)
     return R
 
 
@@ -509,39 +580,8 @@ def semantic_prune_capped(
     the caller already knows it (a composed pipeline) to skip this
     operator's one planning ``count()`` job.
     """
-    import pandas as pd
-
     bucketed = assign_centroids_capped(embeddings, target_bucket, cap, n_rows)
-
-    def bucket_prune(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
-        ids = pdf["vec_id"].to_numpy()
-        order = np.argsort(ids)
-        ids = ids[order]
-        M = np.vstack(pdf["v"].to_numpy()[order]).astype(np.float64)
-        S = _cos_matrix(M, M)  # fold-order bit-exact with the oracle
-        hit = np.tril(S >= threshold, k=-1)
-        n_dups = hit.sum(axis=1)
-        masked = np.where(hit, S, -np.inf)
-        max_cos = pd.array(masked.max(axis=1, initial=-np.inf), dtype="Float64")
-        max_cos[n_dups == 0] = pd.NA
-        return pd.DataFrame(
-            {
-                "vec_id": ids,
-                "centroid_id": pdf["centroid_id"].to_numpy()[order].astype("int64"),
-                "sub_id": pdf["sub_id"].to_numpy()[order].astype("int32"),
-                "keep": (n_dups == 0).astype("int32"),
-                "n_earlier_dups": n_dups.astype("int64"),
-                "max_cos": max_cos,
-            }
-        )
-
-    return bucketed.groupBy("centroid_id", "sub_id").applyInPandas(
-        bucket_prune,
-        "vec_id long, centroid_id long, sub_id int, keep int, "
-        "n_earlier_dups long, max_cos double",
-    )
+    return _prune_buckets(bucketed, threshold, "centroid_id", "sub_id")
 
 
 def nearest_neighbor_capped(
@@ -559,124 +599,50 @@ def nearest_neighbor_capped(
     matching the SQL oracle. ``n_rows``: pass when known to skip the
     planning ``count()`` job. Output: vec_id, nn_id, cos_sim (6 dp).
     """
-    import pandas as pd
-
     bucketed = assign_centroids_capped(embeddings, target_bucket, cap, n_rows)
-
-    def bucket_nn(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
-        pdf = pdf.sort_values("vec_id")  # asc → argmax = lowest nn_id on ties
-        if len(pdf) < 2:
-            return pd.DataFrame({"vec_id": [], "nn_id": [], "cos_sim": []})
-        M = np.vstack(pdf["v"].to_numpy()).astype(np.float64)
-        S = _cos_matrix(M, M)  # fold-order bit-exact with the oracle
-        np.fill_diagonal(S, -np.inf)
-        ids = pdf["vec_id"].to_numpy()
-        j = np.argmax(S, axis=1)
-        return pd.DataFrame(
-            {"vec_id": ids, "nn_id": ids[j], "cos_sim": S[np.arange(len(ids)), j]}
-        )
-
-    return bucketed.groupBy("centroid_id", "sub_id").applyInPandas(
-        bucket_nn, "vec_id long, nn_id long, cos_sim double"
-    )
+    return _nn_buckets(bucketed, "centroid_id", "sub_id")
 
 
-def cosine_dup_pairs(
-    embeddings: DataFrame,
-    threshold: float = 0.35,
-    method: str = "blocked",
-    n_blocks: int = 16,
-) -> DataFrame:
+def cosine_dup_pairs(embeddings: DataFrame, threshold: float = 0.35) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (vec_a < vec_b).
 
     All-pairs exact scoring, kept when >= threshold. Output: vec_a,
-    vec_b, cos_sim (6 dp). ``method="blocked"`` (default) runs the n²·d
-    arithmetic as per-bucket NumPy matmuls (same block nested-loop shape
-    as ``nearest_neighbor_per_vector``): each unordered pair is scored
-    exactly once — in the corpus-block of its higher vec_id — so no
-    dedup pass is needed. ``method="fold"`` is the pure-expression twin.
-    Exact recall either way; for approximate-recall candidate pruning at
-    corpus scale see ``cosine_dup_pairs_blocked`` (centroid buckets).
+    vec_b, cos_sim (6 dp). Runs on the query-replication block frame
+    of ``nearest_neighbor_per_vector`` (:func:`_block_scored`): each
+    unordered pair is scored exactly once — in the corpus-block of its
+    higher vec_id — so no dedup pass is needed. Exact recall; for
+    approximate-recall candidate pruning at corpus scale see
+    ``cosine_dup_pairs_blocked`` (centroid buckets).
     """
-    if method == "blocked":
-        import pandas as pd
+    import pandas as pd
 
-        e = _as_float(embeddings)
-        queries = e.select(
-            F.explode(F.array(*[F.lit(i) for i in range(n_blocks)])).alias("blk"),
-            F.lit(True).alias("is_query"),
-            "vec_id",
-            "v",
-        )
-        corpus = e.select(
-            F.pmod("vec_id", F.lit(n_blocks)).cast("int").alias("blk"),
-            F.lit(False).alias("is_query"),
-            "vec_id",
-            "v",
+    def pairs(q_ids, r_ids, S) -> pd.DataFrame:
+        import numpy as np
+
+        qi, ri = np.where((S >= threshold) & (q_ids[:, None] < r_ids[None, :]))
+        return pd.DataFrame(
+            {"vec_a": q_ids[qi], "vec_b": r_ids[ri], "cos_sim": S[qi, ri]}
         )
 
-        def partial_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-            import numpy as np
-
-            qs = pdf[pdf["is_query"]]
-            rs = pdf[~pdf["is_query"]]
-            if qs.empty or rs.empty:
-                return pd.DataFrame({"vec_a": [], "vec_b": [], "cos_sim": []})
-            Q = np.vstack(qs["v"].to_numpy()).astype(np.float64)
-            R = np.vstack(rs["v"].to_numpy()).astype(np.float64)
-            Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
-            Rn = R / np.linalg.norm(R, axis=1, keepdims=True)
-            S = np.round(Qn @ Rn.T, 6)
-            q_ids = qs["vec_id"].to_numpy()
-            r_ids = rs["vec_id"].to_numpy()
-            qi, ri = np.where((S >= threshold) & (q_ids[:, None] < r_ids[None, :]))
-            return pd.DataFrame(
-                {"vec_a": q_ids[qi], "vec_b": r_ids[ri], "cos_sim": S[qi, ri]}
-            )
-
-        return queries.unionByName(corpus).groupBy("blk").applyInPandas(
-            partial_pairs, "vec_a long, vec_b long, cos_sim double"
-        )
-
-    e = _with_norm(embeddings)
-    a = e.select(F.col("vec_id").alias("vec_a"), F.col("v").alias("va"), F.col("nrm").alias("na"))
-    b = e.select(F.col("vec_id").alias("vec_b"), F.col("v").alias("vb"), F.col("nrm").alias("nb"))
-    return (
-        a.join(b, F.col("vec_a") < F.col("vec_b"))
-        .select(
-            "vec_a",
-            "vec_b",
-            F.round(
-                V.dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), 6
-            ).alias("cos_sim"),
-        )
-        .filter(F.col("cos_sim") >= threshold)
-    )
+    return _block_scored(embeddings, pairs, "vec_a long, vec_b long, cos_sim double")
 
 
 def cosine_dup_pairs_blocked(
     embeddings: DataFrame,
     threshold: float = 0.35,
     n_centroids: int = 16,
-    assigned: DataFrame | None = None,
 ) -> DataFrame:
     """Scale path for embedding near-dup: candidates limited to pairs
     assigned to the same centroid bucket, so the join is an equi-join on
     centroid_id instead of an all-pairs cross product — per-bucket cost
     is (n/k)² and buckets shuffle independently. Recall is approximate
-    (a pair straddling two buckets is missed); precision exact.
-    Callers that already hold the centroid assignment (``semantic_prune``)
-    pass it via ``assigned`` so it is computed once. Fixed k is the
-    oracle-stable registered shape; at corpus scale derive k with
+    (a pair straddling two buckets is missed); precision exact. Fixed k
+    is the oracle-stable registered shape; at corpus scale derive k with
     :func:`n_centroids_for` (or use the hard-capped assignment of
     :func:`assign_centroids_capped`) so per-bucket work stays bounded.
     """
     e = _with_norm(embeddings)
-    if assigned is None:
-        assigned = assign_centroids(embeddings, n_centroids)
-    assigned = assigned.select("vec_id", "centroid_id")
+    assigned = assign_centroids(embeddings, n_centroids)
     # both sides of the block self-join read the normed+assigned frame —
     # materialize once so the corpus is scanned and assigned once, not
     # once per side (PLANS.md scans column: 12 → 0 + 1 construction)
@@ -707,7 +673,6 @@ def semantic_prune(
     embeddings: DataFrame,
     threshold: float = 0.35,
     n_centroids: int = 16,
-    method: str = "blocked",
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication decision per vector: inside
     each centroid bucket, a vector is DROPPED when any earlier vector
@@ -715,19 +680,11 @@ def semantic_prune(
     the earliest member of every near-dup group survives (Abbas et al.,
     SemDeDup — the declarative, non-iterative keep rule).
 
-    ``method="blocked"`` (default): one shuffle keyed on centroid_id,
-    then per-bucket BLAS — each bucket's (n/k)² similarity matrix is a
-    single float64 matmul inside Arrow-batched ``applyInPandas``, and
-    the per-vector (count, max) rollup happens in the same batch, so
-    no pair list is ever materialized or shuffled. np.round(·, 6)
-    applies the same float64 rounding as the expression path; the BLAS
-    matmul accumulates in a different order than the sequential fold,
-    so knife-edge values could in principle differ in the last ulp
-    before rounding — in practice the 6-dp results match the oracle on
-    every certified run. ``method="fold"`` is the
-    pure-expression twin: pairs from ``cosine_dup_pairs_blocked`` + one
-    aggregation — same result, JVM-only, but it shuffles vectors into a
-    self-join and evaluates a d-dim fold per pair.
+    One shuffle keyed on centroid_id, then per-bucket BLAS inside
+    Arrow-batched ``applyInPandas`` (:func:`_prune_buckets`): each
+    bucket's (n/k)² matrix comes from :func:`_cos_matrix`, bit-exact
+    with the oracle's sequential fold after 6-dp rounding, so no
+    knife-edge keep/drop decision can flip between engines.
 
     Output: vec_id, centroid_id, keep (1/0 — int for cross-engine hash
     parity), n_earlier_dups, max_cos (max_cos NULL for kept vectors —
@@ -738,55 +695,7 @@ def semantic_prune(
     per-bucket cap + two-level assignment, total work
     O(n·(√k + cap)·dims) instead of O(n²/k).
     """
-    assigned = assign_centroids(embeddings, n_centroids)
-    if method == "blocked":
-        import pandas as pd
-
-        bucketed = _as_float(embeddings).join(assigned, "vec_id")
-
-        def bucket_prune(pdf: pd.DataFrame) -> pd.DataFrame:
-            import numpy as np
-
-            ids = pdf["vec_id"].to_numpy()
-            order = np.argsort(ids)
-            ids = ids[order]
-            V = np.vstack(pdf["v"].to_numpy()[order]).astype(np.float64)
-            Vn = V / np.linalg.norm(V, axis=1, keepdims=True)
-            S = np.round(Vn @ Vn.T, 6)
-            hit = np.tril(S >= threshold, k=-1)  # row j vs earlier cols i<j
-            n_dups = hit.sum(axis=1)
-            masked = np.where(hit, S, -np.inf)
-            # explicit nullable Float64 with pd.NA for kept vectors —
-            # the NULL contract is stated in the dtype, not left to
-            # Arrow's NaN→NULL coercion of a float64 ndarray
-            max_cos = pd.array(masked.max(axis=1, initial=-np.inf), dtype="Float64")
-            max_cos[n_dups == 0] = pd.NA
-            return pd.DataFrame(
-                {
-                    "vec_id": ids,
-                    "centroid_id": pdf["centroid_id"].to_numpy()[order].astype("int64"),
-                    "keep": (n_dups == 0).astype("int32"),
-                    "n_earlier_dups": n_dups.astype("int64"),
-                    "max_cos": max_cos,
-                }
-            )
-
-        return bucketed.groupBy("centroid_id").applyInPandas(
-            bucket_prune,
-            "vec_id long, centroid_id long, keep int, n_earlier_dups long, max_cos double",
-        )
-    pairs = cosine_dup_pairs_blocked(embeddings, threshold, n_centroids, assigned)
-    dropped = pairs.groupBy(F.col("vec_b").alias("vec_id")).agg(
-        F.count(F.lit(1)).alias("n_earlier_dups"),
-        F.round(F.max("cos_sim"), 6).alias("max_cos"),
-    )
-    return assigned.join(dropped, "vec_id", "left").select(
-        "vec_id",
-        "centroid_id",
-        F.col("n_earlier_dups").isNull().cast("int").alias("keep"),
-        F.coalesce("n_earlier_dups", F.lit(0)).cast("long").alias("n_earlier_dups"),
-        "max_cos",
-    )
+    return _prune_buckets(_fixed_buckets(embeddings, n_centroids), threshold, "centroid_id")
 
 
 def embedding_prototypes(
@@ -843,35 +752,7 @@ def nearest_neighbor_blocked(
     6-dp-rounded cosine, lowest nn_id wins (rows sorted asc, first
     argmax), cross-engine deterministic.
     """
-    import pandas as pd  # driver/executor-side only
-
-    e = _as_float(embeddings)
-    assigned = assign_centroids(embeddings, n_centroids)
-    bucketed = e.join(assigned, "vec_id")
-
-    def bucket_nn(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
-        pdf = pdf.sort_values("vec_id")  # asc → argmax = lowest nn_id on ties
-        if len(pdf) < 2:
-            return pd.DataFrame({"vec_id": [], "nn_id": [], "cos_sim": []})
-        M = np.vstack(pdf["v"].to_numpy()).astype(np.float64)
-        Mn = M / np.linalg.norm(M, axis=1, keepdims=True)
-        S = np.round(Mn @ Mn.T, 6)
-        np.fill_diagonal(S, -np.inf)
-        ids = pdf["vec_id"].to_numpy()
-        j = np.argmax(S, axis=1)
-        return pd.DataFrame(
-            {
-                "vec_id": ids,
-                "nn_id": ids[j],
-                "cos_sim": S[np.arange(len(ids)), j],
-            }
-        )
-
-    return bucketed.groupBy("centroid_id").applyInPandas(
-        bucket_nn, "vec_id long, nn_id long, cos_sim double"
-    )
+    return _nn_buckets(_fixed_buckets(embeddings, n_centroids), "centroid_id")
 
 
 def _pynorm(vec) -> float:
@@ -1606,7 +1487,6 @@ def srp_dup_pairs(
     n_bits: int | None = None,
     bands: int = 4,
     dims: int = 64,
-    method: str = "blas",
     n_rows: int | None = None,
 ) -> DataFrame:
     """Signed-random-projection (hyperplane) LSH near-dup pairs — the
@@ -1628,35 +1508,23 @@ def srp_dup_pairs(
     that drops into a STREAMING ingest (sign bits computed per
     micro-batch row with zero state) and lets signatures be precomputed
     once and stored as a 64-bit column beside the corpus. Candidates
-    meet only inside (band, bucket) partitions; shuffle carries ids +
-    4 small ints, never vectors; verification re-reads vectors only for
-    candidate ids. Banded first-match emission (the join requires every
-    earlier band to differ) keeps each pair single-sourced with no
-    dedup shuffle — same trick as ``minhash_lsh_pairs``/
-    ``simhash_pairs``.
+    meet only inside (band, bucket) partitions. Banded first-match
+    emission (a pair counts only in the first band where it collides)
+    keeps each pair single-sourced with no dedup shuffle — same trick
+    as ``minhash_lsh_pairs``/``simhash_pairs``.
 
-    ``method="blas"`` (default): a single Arrow pipeline — signatures
-    computed batch-wise, then ONE hash shuffle on (band, bucket) and an
-    ``applyInPandas`` that enumerates same-bucket pairs, applies the
-    first-match band mask, and verifies with row-wise dots in the same
-    task. BIT-EXACT with the ``"fold"`` expression twin because every
-    sum is taken with ``np.cumsum`` (strict left-to-right float64, the
-    same order as ``aggregate``'s sequential fold and DuckDB's list
+    Plan: a single Arrow pipeline — signatures computed batch-wise,
+    then ONE hash shuffle on (band, bucket) and an ``applyInPandas``
+    that enumerates same-bucket pairs, applies the first-match band
+    mask, and verifies with row-wise dots in the same task. Every sum is
+    taken with ``np.cumsum`` (strict left-to-right float64, the same
+    order as the SQL oracle's ``aggregate`` fold and DuckDB's list
     fold; no pairwise/BLAS re-association anywhere near a rounding
-    boundary, so a knife-edge signature bit or cosine can't flip
-    between engines). vs the fold/join twin: no interpreted
-    higher-order-function folds (the twin spends ~30M lambda
-    invocations verifying the sf0.1 candidate set), no double
-    evaluation of the signature stage through a self-join, no
-    candidate×vector join — the shuffle carries each vector ``bands``
-    times (fixed-size replicas), and per-task memory is bounded by the
+    boundary), so a knife-edge signature bit or cosine can't flip
+    between engines. The shuffle carries each vector ``bands`` times
+    (fixed-size replicas), and per-task memory is bounded by the
     largest (band, bucket) group, the usual bucketed-BLAS tradeoff (a
-    hot bucket means too few bits per band). ``method="fold"``: pure
-    column expressions + streaming candidate join — the
-    unbounded-memory-safe twin, kept for parity debugging (plan
-    expressions emitted as SQL strings — one parse each — because 16
-    fold-dot projections built op-by-op would cost thousands of py4j
-    round trips, see simhash_signatures).
+    hot bucket means too few bits per band).
 
     ``n_bits=None`` (default) derives the signature length from the
     corpus: bits per band = max(4, ceil(log2(n / 64))), so the bucket
@@ -1682,138 +1550,83 @@ def srp_dup_pairs(
         nb = max(4, math.ceil(math.log2(max(n, 1) / 64)) if n > 64 else 4)
         n_bits = nb * bands
     nb_per_band = n_bits // bands
-    assert nb_per_band * bands == n_bits, "bands must divide n_bits"
-    signs = _srp_signs(n_bits, dims)
+    if nb_per_band * bands != n_bits:
+        raise ValueError(f"bands must divide n_bits: {bands} does not divide {n_bits}")
 
-    if method == "blas":
-        import numpy as np
-        import pandas as pd
+    import numpy as np
+    import pandas as pd
 
-        H = np.array(signs, dtype=np.float64)  # (n_bits, dims)
-        ef = _as_float(embeddings)
-        bucket_cols = ", ".join(f"bucket{b} int" for b in range(bands))
-        sig_schema = f"vec_id long, v array<float>, {bucket_cols}"
+    H = np.array(_srp_signs(n_bits, dims), dtype=np.float64)  # (n_bits, dims)
+    ef = _as_float(embeddings)
+    bucket_cols = ", ".join(f"bucket{b} int" for b in range(bands))
+    sig_schema = f"vec_id long, v array<float>, {bucket_cols}"
 
-        def sig_batches(batches):
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                M = np.vstack(pdf["v"].to_numpy()).astype(np.float64)
-                # (rows × n_bits × dims) elementwise product, summed
-                # LEFT-TO-RIGHT via cumsum → identical to the fold
-                prod = M[:, None, :] * H[None, :, :]
-                dots = np.round(np.cumsum(prod, axis=2)[:, :, -1], 6)
-                bits_m = dots >= 0  # -0.0 >= 0 is True, as in SQL
-                out = {"vec_id": pdf["vec_id"], "v": pdf["v"]}
-                for b in range(bands):
-                    val = np.zeros(len(pdf), dtype="int32")
-                    for j in range(nb_per_band):
-                        val += bits_m[:, b * nb_per_band + j].astype("int32") << j
-                    out[f"bucket{b}"] = val
-                yield pd.DataFrame(out)
-
-        sig = ef.mapInPandas(sig_batches, sig_schema)
-        band_structs = ", ".join(
-            f"struct({b} AS band, bucket{b} AS bucket)" for b in range(bands)
-        )
-        banded = sig.selectExpr(
-            "vec_id",
-            "v",
-            *[f"bucket{b}" for b in range(bands)],
-            f"explode(array({band_structs})) AS bb",
-        ).selectExpr(
-            "vec_id",
-            "v",
-            *[f"bucket{b}" for b in range(bands)],
-            "bb.band AS band",
-            "bb.bucket AS bucket",
-        )
-
-        def pair_verify(key, pdf):
-            band = key[0]
-            empty = pd.DataFrame({"vec_a": [], "vec_b": [], "cos_sim": []})
-            m = len(pdf)
-            if m < 2:
-                return empty
-            pdf = pdf.sort_values("vec_id")
-            ids = pdf["vec_id"].to_numpy()
-            ai, bi = np.triu_indices(m, k=1)  # ids sorted → vec_a < vec_b
-            # first-match emission: candidate counted in THIS band only
-            # if every earlier band's buckets differ
-            ok = np.ones(len(ai), dtype=bool)
-            for k in range(band):
-                bk = pdf[f"bucket{k}"].to_numpy()
-                ok &= bk[ai] != bk[bi]
-            ai, bi = ai[ok], bi[ok]
-            if not len(ai):
-                return empty
+    def sig_batches(batches):
+        for pdf in batches:
+            if pdf.empty:
+                continue
             M = np.vstack(pdf["v"].to_numpy()).astype(np.float64)
-            A, B = M[ai], M[bi]
-            dot = np.cumsum(A * B, axis=1)[:, -1]
-            na = np.sqrt(np.cumsum(A * A, axis=1)[:, -1])
-            nb = np.sqrt(np.cumsum(B * B, axis=1)[:, -1])
-            cos = np.round(dot / (na * nb), 6)
-            keep = cos >= threshold
-            return pd.DataFrame(
-                {"vec_a": ids[ai[keep]], "vec_b": ids[bi[keep]], "cos_sim": cos[keep]}
-            )
+            # (rows × n_bits × dims) elementwise product, summed
+            # LEFT-TO-RIGHT via cumsum → identical to the fold
+            prod = M[:, None, :] * H[None, :, :]
+            dots = np.round(np.cumsum(prod, axis=2)[:, :, -1], 6)
+            bits_m = dots >= 0  # -0.0 >= 0 is True, as in SQL
+            out = {"vec_id": pdf["vec_id"], "v": pdf["v"]}
+            for b in range(bands):
+                val = np.zeros(len(pdf), dtype="int32")
+                for j in range(nb_per_band):
+                    val += bits_m[:, b * nb_per_band + j].astype("int32") << j
+                out[f"bucket{b}"] = val
+            yield pd.DataFrame(out)
 
-        return banded.groupBy("band", "bucket").applyInPandas(
-            pair_verify, "vec_a long, vec_b long, cos_sim double"
-        )
-
-    e = _as_double(embeddings)
-    proj_exprs = []
-    for j in range(n_bits):
-        arr = ", ".join(f"{s:.1f}D" for s in signs[j])
-        proj_exprs.append(
-            f"round(aggregate(zip_with(v, array({arr}), (x, y) -> x * y), "
-            f"0.0D, (acc, x) -> acc + x), 6) >= 0 AS bit{j}"
-        )
-    bits = e.selectExpr("vec_id", *proj_exprs)
-    bucket_exprs = [
-        " + ".join(f"cast(bit{b * nb_per_band + j} as int) * {1 << j}" for j in range(nb_per_band))
-        + f" AS bucket{b}"
-        for b in range(bands)
-    ]
-    sig = bits.selectExpr("vec_id", *bucket_exprs)
-    band_structs = ", ".join(f"struct({b} AS band, bucket{b} AS bucket)" for b in range(bands))
+    sig = ef.mapInPandas(sig_batches, sig_schema)
+    band_structs = ", ".join(
+        f"struct({b} AS band, bucket{b} AS bucket)" for b in range(bands)
+    )
     banded = sig.selectExpr(
         "vec_id",
+        "v",
         *[f"bucket{b}" for b in range(bands)],
         f"explode(array({band_structs})) AS bb",
     ).selectExpr(
-        "vec_id", *[f"bucket{b}" for b in range(bands)], "bb.band AS band", "bb.bucket AS bucket"
+        "vec_id",
+        "v",
+        *[f"bucket{b}" for b in range(bands)],
+        "bb.band AS band",
+        "bb.bucket AS bucket",
     )
-    a, b = banded.alias("a"), banded.alias("b")
-    first_match = " AND ".join(
-        f"(a.band <= {k} OR a.bucket{k} != b.bucket{k})" for k in range(bands - 1)
-    )
-    cand = a.join(
-        b,
-        F.expr(
-            f"a.band = b.band AND a.bucket = b.bucket AND a.vec_id < b.vec_id AND {first_match}"
-        ),
-    ).selectExpr("a.vec_id AS vec_a", "b.vec_id AS vec_b")
 
-    ev = _with_norm(embeddings)
-    ea = ev.select(
-        F.col("vec_id").alias("vec_a"), F.col("v").alias("va"), F.col("nrm").alias("na")
-    )
-    eb = ev.select(
-        F.col("vec_id").alias("vec_b"), F.col("v").alias("vb"), F.col("nrm").alias("nb")
-    )
-    return (
-        cand.join(ea, "vec_a")
-        .join(eb, "vec_b")
-        .select(
-            "vec_a",
-            "vec_b",
-            F.round(
-                V.dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), 6
-            ).alias("cos_sim"),
+    def pair_verify(key, pdf):
+        band = key[0]
+        empty = pd.DataFrame({"vec_a": [], "vec_b": [], "cos_sim": []})
+        m = len(pdf)
+        if m < 2:
+            return empty
+        pdf = pdf.sort_values("vec_id")
+        ids = pdf["vec_id"].to_numpy()
+        ai, bi = np.triu_indices(m, k=1)  # ids sorted → vec_a < vec_b
+        # first-match emission: candidate counted in THIS band only
+        # if every earlier band's buckets differ
+        ok = np.ones(len(ai), dtype=bool)
+        for k in range(band):
+            bk = pdf[f"bucket{k}"].to_numpy()
+            ok &= bk[ai] != bk[bi]
+        ai, bi = ai[ok], bi[ok]
+        if not len(ai):
+            return empty
+        M = np.vstack(pdf["v"].to_numpy()).astype(np.float64)
+        A, B = M[ai], M[bi]
+        dot = np.cumsum(A * B, axis=1)[:, -1]
+        na = np.sqrt(np.cumsum(A * A, axis=1)[:, -1])
+        nb = np.sqrt(np.cumsum(B * B, axis=1)[:, -1])
+        cos = np.round(dot / (na * nb), 6)
+        keep = cos >= threshold
+        return pd.DataFrame(
+            {"vec_a": ids[ai[keep]], "vec_b": ids[bi[keep]], "cos_sim": cos[keep]}
         )
-        .filter(F.col("cos_sim") >= threshold)
+
+    return banded.groupBy("band", "bucket").applyInPandas(
+        pair_verify, "vec_a long, vec_b long, cos_sim double"
     )
 
 
@@ -2151,44 +1964,18 @@ def cluster_balance_audit(embeddings: DataFrame, n_centroids: int = 16) -> DataF
 
 def knn_batch(embeddings: DataFrame, n_queries: int = 4, k: int = 5) -> DataFrame:
     """Batched exact top-k — the serving shape for scoring MANY queries
-    against the corpus in ONE scan (``knn``/``ivf_knn`` are
-    one-query-per-scan; a recommendation or retrieval batch is not).
-    The ``n_queries`` lowest vec_ids play the query batch: the query
-    matrix broadcasts, every corpus vector scores against all queries
-    in a single pass, and the per-query ``rank ≤ k`` window compiles to
-    WindowGroupLimit — map tasks pre-trim to k rows per query BEFORE
-    the exchange, so the shuffle carries O(k × queries × tasks) rows
-    regardless of corpus size. Self included at rank 1 (cos 1.0), the
-    ``knn`` contract. Output: query_id, vec_id, cos_sim (6 dp), rank.
+    against the corpus in ONE scan (:func:`_knn_core`; ``knn`` is its
+    batch of one). The ``n_queries`` lowest vec_ids play the query
+    batch: the query matrix broadcasts, every corpus vector scores
+    against all queries in a single pass, and the per-query ``rank ≤ k``
+    window compiles to WindowGroupLimit — map tasks pre-trim to k rows
+    per query BEFORE the exchange, so the shuffle carries
+    O(k × queries × tasks) rows regardless of corpus size. Self included
+    at rank 1 (cos 1.0), the ``knn`` contract. Output: query_id, vec_id,
+    cos_sim (6 dp), rank.
     """
-    e = _as_double(embeddings)
-    # norms factored out of the per-(row, query) cosine (r15): the row
-    # norm is computed once per ROW below the join (not once per
-    # query) and each query norm once at broadcast build (not once per
-    # joined row) — dot/(nv·nq) is value-identical to cosine() and cuts
-    # the scored expression from 192 to 64 mult-adds per pair
-    qs = e.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        V.norm(F.col("v")).alias("nq"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("vec_id")
-    )
-    return (
-        e.select("vec_id", "v", V.norm(F.col("v")).alias("nv"))
-        .crossJoin(F.broadcast(qs))
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(
-                V.dot(F.col("v"), F.col("qv")) / (F.col("nv") * F.col("nq")),
-                6,
-            ).alias("cos_sim"),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _knn_core(_as_double(embeddings), range(n_queries), k)
+
 
 def ivf_knn_batch(
     embeddings: DataFrame,
@@ -2344,21 +2131,16 @@ def knn_density_outliers(
     def bucket_density(pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
 
-        pdf = pdf.sort_values("vec_id")
-        if len(pdf) < 2:
-            return pd.DataFrame(
-                {"vec_id": [], "n_nbrs": [], "knn_sum_micro": []}
-            )
-        M = np.vstack(pdf["v"].to_numpy()).astype(np.float64)
-        S = _cos_matrix(M, M)  # 6-dp, fold-order bit-exact with the oracle
-        np.fill_diagonal(S, -np.inf)
-        kk = min(k, len(pdf) - 1)
-        top = -np.sort(-S, axis=1)[:, :kk]
+        _, ids, _, S = _bucket_cos(pdf)
+        if len(ids) < 2:
+            return pd.DataFrame({"vec_id": [], "n_nbrs": [], "knn_sum_micro": []})
+        kk = min(k, len(ids) - 1)
+        top = -np.sort(-S, axis=1)[:, :kk]  # self (-inf) sorts last
         micro = np.rint(top * 1e6).astype(np.int64).sum(axis=1)
         return pd.DataFrame(
             {
-                "vec_id": pdf["vec_id"].to_numpy(),
-                "n_nbrs": np.full(len(pdf), kk, dtype=np.int64),
+                "vec_id": ids,
+                "n_nbrs": np.full(len(ids), kk, dtype=np.int64),
                 "knn_sum_micro": micro,
             }
         )
@@ -2567,7 +2349,10 @@ def clustering_silhouette(
     Output: cluster_id, n_vecs, mean_silhouette_micro, ordered by
     cluster_id.
     """
-    assert n_centroids >= 2, "silhouette needs a second-best centroid"
+    if n_centroids < 2:
+        raise ValueError(
+            f"silhouette needs a second-best centroid: n_centroids={n_centroids} < 2"
+        )
     e = _as_double(embeddings)
     cents = e.filter(F.col("vec_id") < n_centroids).select(
         F.col("vec_id").alias("centroid_id"), F.col("v").alias("cv")

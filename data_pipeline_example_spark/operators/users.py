@@ -991,8 +991,9 @@ def event_markov_transitions(events: DataFrame) -> DataFrame:
     reference's per-window aggregation (streaming_sales_aggregator.py)
     with the sequential structure it never models.
 
-    Sequence order is (ts, event_id) per user — event_id breaks
-    timestamp ties so the lag is fully deterministic; null-user events
+    Sequence order is (ts NULLS FIRST, event_id) per user — event_id
+    breaks timestamp ties so the lag is fully deterministic, and an
+    event with no timestamp opens its user's sequence; null-user events
     carry no sequence and are excluded. Probabilities are integer
     milli-units per ROW of the matrix (n × 1000 div row total), so the
     output hash-matches the oracle exactly.
@@ -1007,7 +1008,9 @@ def event_markov_transitions(events: DataFrame) -> DataFrame:
     """
     from pyspark.sql.window import Window
 
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    # NULL ts first: Spark's ascending default, stated so the oracle
+    # twin can say the same (DuckDB's default puts NULLs last)
+    w = Window.partitionBy("user_id").orderBy(F.asc_nulls_first("ts"), "event_id")
     pairs = (
         events.filter(F.col("user_id").isNotNull())
         .select(
@@ -1289,7 +1292,8 @@ def bootstrap_revenue_ci(events: DataFrame, n_boot: int = 16) -> DataFrame:
     """
     from pyspark.sql.window import Window
 
-    assert n_boot <= 16, "16-bit slicing yields at most 16 replicates"
+    if n_boot > 16:
+        raise ValueError(f"16-bit slicing yields at most 16 replicates, got n_boot={n_boot}")
     cents = F.round(F.col("value") * 100, 0).cast("long")
     th = _POISSON1_U16
 

@@ -6512,11 +6512,12 @@ ORDER BY doc_id
 
 
 # Markov transitions (operators/users.py event_markov_transitions):
-# lag over (ts, event_id) per user, milli row-normalization.
+# lag over (ts NULLS FIRST, event_id) per user — the engine's stated
+# order (Spark's ascending default) — milli row-normalization.
 ORACLES["event_markov_transitions"] = """
 WITH seq AS (
   SELECT event_type AS next_event,
-         lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_event
+         lag(event_type) OVER (PARTITION BY user_id ORDER BY ts NULLS FIRST, event_id) AS prev_event
   FROM events WHERE user_id IS NOT NULL
 ),
 counts AS (

@@ -2190,6 +2190,13 @@ QUERIES: dict[str, QueryFn] = {
 # BM25 ops on the one scorer — join the changed group, and the twelve
 # most-recently-certified names of the tail (the whole r10 cohort head
 # and the last two of the r9 remainder) make room.
+# One exact-neighbor core (same derivation): the thirteen queries whose
+# code path moved — the exact top-k on the one scorer, the in-bucket
+# family on the one kernel, srp_dup_pairs without its fold twin, the
+# two disk-checkpointed text ops and the NULL-first Markov order — form
+# the newest changed group (five of them move up from the r9
+# remainder), and the eight most-recently-certified names left in the
+# tail (cluster_representatives_lsh … winnowing_fingerprints) make room.
 _R15_FRONT = [
     # new r15
     "unicode_clean",
@@ -2209,12 +2216,14 @@ _R15_FRONT = [
     "split_leakage_audit", "cluster_coherence", "basket_communities",
     "product_pagerank", "basket_graph_stats", "copurchase_link_prediction",
     "basket_kcore", "bm25_search", "bm25_batch",
+    # changed by the one exact-neighbor core / disk checkpoint / NULL order
+    "knn_bruteforce", "knn_batch", "nearest_neighbor",
+    "nearest_neighbor_blocked", "nearest_neighbor_capped",
+    "cosine_dup_pairs", "semantic_prune", "semantic_prune_capped",
+    "knn_density_outliers", "srp_dup_pairs", "substring_dedup",
+    "gopher_repetition", "event_markov_transitions",
     # r9-certified cohort remainder
-    "cluster_representatives", "cluster_representatives_lsh",
-    "segment_value_percentiles", "daily_revenue_ma7", "event_cooccurrence",
-    "lang_source_mix", "token_fertility", "knn_density_outliers",
-    "semantic_prune_capped", "nearest_neighbor_capped", "length_buckets",
-    "knn_batch", "substring_dedup", "winnowing_fingerprints",
+    "cluster_representatives",
 ]
 assert len(_R15_FRONT) == 50 and all(n in QUERIES for n in _R15_FRONT), (
     "window rotation list must name 50 registered queries"

@@ -694,7 +694,10 @@ def bloom_admission_stream(
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
     from pyspark.sql.types import BinaryType, IntegerType, LongType
 
-    assert m_bits % (n_buckets * 8) == 0, "m_bits must be bytes per bucket"
+    if m_bits % (n_buckets * 8):
+        raise ValueError(
+            f"m_bits must be whole bytes per bucket: {m_bits} % ({n_buckets} * 8) != 0"
+        )
     m_local = m_bits // n_buckets
 
     fp = T.fingerprint(F.col("text"))

@@ -360,6 +360,67 @@ def test_materialize_seam_switches_to_reliable_checkpoint(spark, tmp_path):
             )
 
 
+def test_disk_materialized_text_ops_leave_no_cached_frame(spark):
+    """substring_dedup and gopher_repetition cut lineage on corpus-sized
+    frames through materialize_disk; a local DISK_ONLY checkpoint leaves
+    nothing registered in the session's CacheManager, where a persist
+    would pin the frame for the life of a long-lived session."""
+    from data_pipeline_example_spark.operators import text as tx
+
+    docs = spark.createDataFrame(
+        [
+            (1, "the cat sat on the mat and the cat sat on the mat again"),
+            (2, "a dog ran in the park and the cat sat on the mat"),
+            (3, "nothing repeats here at all"),
+        ],
+        "doc_id long, text string",
+    )
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    assert tx.substring_dedup(docs, k=4).collect()
+    assert tx.gopher_repetition(docs).collect()
+    assert cache.isEmpty()
+
+
+def _guard_cases():
+    from data_pipeline_example_spark.operators import dedup, similarity, users
+    from data_pipeline_example_spark.streaming import curation
+
+    def emb(spark):
+        rows = [(i, [float(i % 3), 1.0, 0.5, 0.25], 0) for i in range(8)]
+        return spark.createDataFrame(rows, "vec_id long, embedding array<float>, label int")
+
+    def docs(spark):
+        return spark.createDataFrame([(1, "a b c d")], "doc_id long, text string")
+
+    def events(spark):
+        return spark.createDataFrame([(1, 2.5)], "event_id long, value double")
+
+    return {
+        "srp_bands_divide_bits": lambda s: similarity.srp_dup_pairs(
+            emb(s), n_bits=10, bands=4, dims=4
+        ),
+        "silhouette_two_centroids": lambda s: similarity.clustering_silhouette(
+            emb(s), n_centroids=1
+        ),
+        "minhash_hashes_multiple_of_4": lambda s: dedup.minhash_signatures(
+            docs(s), num_hashes=6
+        ),
+        "bootstrap_at_most_16": lambda s: users.bootstrap_revenue_ci(events(s), n_boot=17),
+        "bloom_bytes_per_bucket": lambda s: curation.bloom_admission_stream(
+            docs(s), m_bits=1000, n_buckets=8
+        ),
+    }
+
+
+@pytest.mark.parametrize("case", sorted(_guard_cases()))
+def test_parameter_guards_raise_value_error(spark, case):
+    """Parameter guards fail loudly with ValueError — an ``assert``
+    vanishes under ``python -O`` and lets a bad parameter through."""
+    with pytest.raises(ValueError):
+        _guard_cases()[case](spark)
+
+
 def test_token_budget_caps_null_source_is_its_own_group(spark):
     """NULL source must survive the cuts join as one partition group —
     matching the window twin and SQL PARTITION BY semantics (a plain
