@@ -4,7 +4,10 @@ The reference implements this twice, inline and subtly differently, in
 `services/batch/pipeline_batch.py:131-202` and
 `services/streaming/streaming_sales_aggregator.py:203-263` (SURVEY.md §2.3).
 Here it is one named operator, ``conform(df, spec)``, parameterized by a
-``ConformSpec`` so both historical behaviors are preserved exactly:
+``ConformSpec`` so both historical behaviors are preserved exactly. The
+spec holds only the knobs on which the two paths differ; what they share
+(product/amount/price synonyms, the total-price and quantity columns,
+the 2-dp rounding) is a module constant:
 
 * header normalization (P1): lower+strip all column names
 * product synonym resolution (P2) + blank/null backfill to UNKNOWN (P11)
@@ -14,8 +17,8 @@ Here it is one named operator, ``conform(df, spec)``, parameterized by a
 * multi-format timestamp parsing (P4/P5) and date derivation (P6)
 * numeric try_cast (P7), amount derivation (P8 batch: branch on column
   *presence*; P9 streaming: branch on row-level *nullity*), 2-dp round (P10)
-* invalid-row filters (F1/F2/F3) with `df.observe` diagnostics replacing the
-  reference's extra count() actions (SURVEY.md §4 "hand-rolled
+* invalid-row filters (F1/F2/F3) with optional ``Observation`` diagnostics
+  replacing the reference's extra count() actions (SURVEY.md §4 "hand-rolled
   inefficiencies")
 
 Documented deviation: the reference's yyyyMMdd fallback is dead code due to
@@ -29,7 +32,7 @@ the operator is safe at any scale.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -47,34 +50,28 @@ STREAMING_TS_FORMATS: tuple[str, ...] = (
     "yyyy-MM-dd'T'HH:mm:ss.SSSXXX",
 )
 
+# Column synonyms and output rounding shared by both reference paths
+PRODUCT_CANDIDATES: tuple[str, ...] = ("product", "item")
+AMOUNT_CANDIDATES: tuple[str, ...] = ("amount",)
+PRICE_CANDIDATES: tuple[str, ...] = ("unit_price", "price")
+TOTAL_PRICE_COL = "total_price"
+QUANTITY_COL = "quantity"
+ROUND_SCALE = 2
+
 
 @dataclass(frozen=True)
 class ConformSpec:
-    """Declarative description of one schema-drift-normalization policy."""
+    """Declarative description of one schema-drift-normalization policy:
+    exactly the knobs on which the batch and streaming paths differ."""
 
-    product_candidates: tuple[str, ...] = ("product", "item")
     date_candidates: tuple[str, ...] = (
         # batch order, pipeline_batch.py:143-147
         "order_date", "date", "order_time", "timestamp", "event_time",
     )
     # P8 "column_presence" (batch) vs P9 "row_nullity" (streaming)
     amount_mode: str = "column_presence"
-    amount_candidates: tuple[str, ...] = ("amount",)
-    total_price_col: str = "total_price"
-    quantity_col: str = "quantity"
-    price_candidates: tuple[str, ...] = ("unit_price", "price")
     # streaming multi-format parse chain; batch uses plain try_cast + yyyyMMdd
     ts_formats: tuple[str, ...] = ()
-    # BOTH reference paths pick the first *existing* column
-    # (streaming_sales_aggregator.py:216-221 `choose_timestamp`;
-    # pipeline_batch.py:143-147) — under streaming's fixed 12-field
-    # schema that is always `event_time`, so a row with a null
-    # event_time is dropped even when order_time holds a value. The
-    # row-coalesce modes below are OPT-IN drift-tolerant extensions
-    # (coalesce *values* across candidates per row), not reference
-    # behavior; both historical specs keep them off.
-    ts_row_coalesce: bool = False
-    product_row_coalesce: bool = False
     # P11 null/blank→UNKNOWN backfill is batch-only
     # (pipeline_batch.py:199-202); streaming only trims, a null product
     # stays null (streaming_sales_aggregator.py:208-210)
@@ -84,13 +81,10 @@ class ConformSpec:
     # output shaping
     amount_out: str = "amount"
     keep_order_ts: bool = False  # batch drops it (P13); streaming keeps it
-    derive_order_date: bool = True
-    round_scale: int = 2
     drop_invalid_dates: bool = True    # F1 (batch, on order_date)
     drop_invalid_ts: bool = False      # F3 (streaming, on order_ts)
     drop_null_amounts: bool = True     # F2 (batch)
     null_amount_to_zero: bool = False  # streaming maps null → 0.0 instead
-    observe_name: str | None = None    # set to emit drop-diagnostic metrics
 
 
 BATCH_SPEC = ConformSpec()
@@ -148,14 +142,11 @@ def _resolve_product(df: DataFrame, spec: ConformSpec) -> Column:
     """P2 (+ P11 backfill when the spec says so —
     pipeline_batch.py:134-140,199-202; streaming trims only,
     streaming_sales_aggregator.py:208-210)."""
-    present = [c for c in spec.product_candidates if c in df.columns]
-    if not present:
+    # both reference paths pick the first *existing* candidate column
+    product_col = _first_present(df.columns, PRODUCT_CANDIDATES)
+    if product_col is None:
         return F.lit(UNKNOWN_PRODUCT)
-    if spec.product_row_coalesce and len(present) > 1:
-        raw = F.coalesce(*[F.col(c) for c in present])
-    else:
-        raw = F.col(present[0])
-    trimmed = F.trim(raw.cast("string"))
+    trimmed = F.trim(F.col(product_col).cast("string"))
     if not spec.product_backfill_unknown:
         return trimmed
     return F.when(trimmed.isNull() | (trimmed == ""), F.lit(UNKNOWN_PRODUCT)).otherwise(trimmed)
@@ -190,25 +181,25 @@ def _derive_amount(df: DataFrame, spec: ConformSpec) -> Column:
     cols = df.columns
     if spec.amount_mode == "column_presence":
         # P8, pipeline_batch.py:179-194: branch on which columns EXIST
-        amount_col = _first_present(cols, spec.amount_candidates)
+        amount_col = _first_present(cols, AMOUNT_CANDIDATES)
         if amount_col is not None:
             return _try_cast(F.col(amount_col), "double")
-        price_col = _first_present(cols, spec.price_candidates)
-        if spec.quantity_col in cols and price_col is not None:
-            return _try_cast(F.col(spec.quantity_col), "double") * _try_cast(
+        price_col = _first_present(cols, PRICE_CANDIDATES)
+        if QUANTITY_COL in cols and price_col is not None:
+            return _try_cast(F.col(QUANTITY_COL), "double") * _try_cast(
                 F.col(price_col), "double"
             )
         return F.lit(0.0)
     # P9, streaming_sales_aggregator.py:249-261: branch on row-level nullity
     total = (
-        _try_cast(F.col(spec.total_price_col), "double")
-        if spec.total_price_col in cols
+        _try_cast(F.col(TOTAL_PRICE_COL), "double")
+        if TOTAL_PRICE_COL in cols
         else F.lit(None).cast("double")
     )
-    price_col = _first_present(cols, spec.price_candidates)
+    price_col = _first_present(cols, PRICE_CANDIDATES)
     qty = (
-        _try_cast(F.col(spec.quantity_col), "double")
-        if spec.quantity_col in cols
+        _try_cast(F.col(QUANTITY_COL), "double")
+        if QUANTITY_COL in cols
         else F.lit(None).cast("double")
     )
     unit = _try_cast(F.col(price_col), "double") if price_col else F.lit(None).cast("double")
@@ -222,20 +213,19 @@ def conform(df: DataFrame, spec: ConformSpec = BATCH_SPEC, observation=None) -> 
     Pass a ``pyspark.sql.Observation`` as ``observation`` to collect the
     row-drop diagnostics (invalid_dates / null_amounts) from the first
     action on the result — the zero-extra-job replacement for the
-    reference's diagnostic ``count()`` passes (SURVEY.md §4). A plain
-    ``spec.observe_name`` string registers listener-visible metrics
-    instead (streaming: surfaced per micro-batch in progress events).
+    reference's diagnostic ``count()`` passes (SURVEY.md §4).
     """
     df = normalize_headers(df)
 
     df = df.withColumn("product", _resolve_product(df, spec))
 
-    present = [c for c in spec.date_candidates if c in df.columns]
-    if present:
-        if spec.ts_row_coalesce and len(present) > 1:
-            raw = F.coalesce(*[F.col(c) for c in present])
-        else:
-            raw = F.col(present[0])
+    # first *existing* candidate (streaming_sales_aggregator.py:216-221
+    # `choose_timestamp`; pipeline_batch.py:143-147): under streaming's
+    # fixed 12-field schema that is always `event_time`, so a row with a
+    # null event_time is dropped even when order_time holds a value
+    ts_col = _first_present(df.columns, spec.date_candidates)
+    if ts_col is not None:
+        raw = F.col(ts_col)
         order_ts = _parse_timestamp(raw, spec)
     elif spec.epoch_default_when_no_ts:
         # T7, streaming_sales_aggregator.py:222-223
@@ -246,24 +236,21 @@ def conform(df: DataFrame, spec: ConformSpec = BATCH_SPEC, observation=None) -> 
         order_ts = F.lit(None).cast("timestamp")
     df = df.withColumn("order_ts", order_ts)
 
-    if spec.derive_order_date:
-        if spec.ts_formats:
-            # streaming: date strictly from the parsed ts (P6)
-            df = df.withColumn("order_date", F.to_date(F.col("order_ts")))
-        else:
-            df = df.withColumn("order_date", _derive_date(raw, F.col("order_ts")))
+    if spec.ts_formats:
+        # streaming: date strictly from the parsed ts (P6)
+        df = df.withColumn("order_date", F.to_date(F.col("order_ts")))
+    else:
+        df = df.withColumn("order_date", _derive_date(raw, F.col("order_ts")))
 
     amount = _derive_amount(df, spec)
     if spec.null_amount_to_zero:
         amount = F.when(amount.isNull(), F.lit(0.0)).otherwise(amount)
-    df = df.withColumn(spec.amount_out, F.round(amount, spec.round_scale))
+    df = df.withColumn(spec.amount_out, F.round(amount, ROUND_SCALE))
 
-    if observation is not None or spec.observe_name:
+    if observation is not None:
         df = df.observe(
-            observation if observation is not None else spec.observe_name,
-            F.count(F.when(F.col("order_date").isNull(), 1)).alias("invalid_dates")
-            if spec.derive_order_date
-            else F.count(F.when(F.col("order_ts").isNull(), 1)).alias("invalid_ts"),
+            observation,
+            F.count(F.when(F.col("order_date").isNull(), 1)).alias("invalid_dates"),
             F.count(F.when(F.col(spec.amount_out).isNull(), 1)).alias("null_amounts"),
         )
 

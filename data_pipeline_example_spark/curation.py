@@ -205,7 +205,11 @@ def update_dedup_index(spark, documents: DataFrame, index_path: str) -> DataFram
             "doc_id", T.fingerprint(F.col("text")).alias("fingerprint")
         )
     try:
-        index = spark.read.parquet(index_path)
+        # pinned: no schema-inference job per call (one per micro-batch
+        # in streaming ingest); a missing path still raises here
+        index = spark.read.schema("fingerprint string, keep_doc_id long").parquet(
+            index_path
+        )
     except AnalysisException:
         index = None
     if index is not None:
@@ -218,195 +222,6 @@ def update_dedup_index(spark, documents: DataFrame, index_path: str) -> DataFram
         .transform(materialize)
     )
     admitted.write.mode("append").parquet(index_path)
-    return admitted
-
-
-def _bloom_positions(fp_col, m_bits: int, k_hashes: int):
-    """Array of the k Bloom bit positions for a fingerprint column —
-    the repo's md5 hash family (the exact family
-    ``streaming.curation.bloom_admission_stream`` and
-    ``operators.dedup.minhash_signatures`` use), pure column exprs:
-    position i = conv(substr(md5(i ':' fp), 1, 8), 16, 10) % m_bits."""
-    return F.array(
-        *[
-            F.conv(
-                F.substring(F.md5(F.concat(F.lit(f"{i}:"), fp_col)), 1, 8), 16, 10
-            ).cast("long")
-            % m_bits
-            for i in range(k_hashes)
-        ]
-    )
-
-
-def _bloom_sidecar_path(index_path: str) -> str:
-    # sibling dir — never inside index_path (the index reader globs it)
-    return index_path.rstrip("/") + "_bloom"
-
-
-def rebuild_bloom_sidecar(
-    spark, index_path: str, m_bits: int = 1 << 20, k_hashes: int = 3
-) -> None:
-    """Bootstrap/compact the Bloom sidecar from the FULL fingerprint
-    index: the distinct set-bit positions of every indexed fingerprint,
-    overwritten in one pass. Run once to adopt the sidecar over an
-    existing index, or periodically to compact the append-only updates
-    :func:`update_dedup_index_bloom` writes.
-
-    Every row carries (m_bits, k_hashes) alongside the position — the
-    sketch parameters ARE the state format (the HLL p_bits lesson), so
-    a later reader can refuse a parameter mismatch instead of silently
-    mis-hashing; constant columns cost nothing in parquet."""
-    index = spark.read.parquet(index_path)
-    (
-        index.select(
-            F.explode(
-                _bloom_positions(F.col("fingerprint"), m_bits, k_hashes)
-            ).alias("pos")
-        )
-        .distinct()
-        .select(
-            "pos",
-            F.lit(m_bits).cast("long").alias("m_bits"),
-            F.lit(k_hashes).cast("long").alias("k_hashes"),
-        )
-        .coalesce(1)  # ≤ m_bits longs — one small file
-        .write.mode("overwrite")
-        .parquet(_bloom_sidecar_path(index_path))
-    )
-
-
-def update_dedup_index_bloom(
-    spark,
-    documents: DataFrame,
-    index_path: str,
-    m_bits: int = 1 << 20,
-    k_hashes: int = 3,
-) -> DataFrame:
-    """:func:`update_dedup_index` with a BLOOM SIDECAR prefilter over
-    the persisted index (VERDICT r13 #8): the exact gate's LEFT ANTI
-    join reads the full fingerprint index — 1 row per distinct document
-    EVER admitted, so at 100 TB/day the per-micro-batch join input
-    grows without bound even though each batch is tiny. The sidecar is
-    the index's Bloom digest (≤ ``m_bits`` distinct set-bit positions,
-    ~8 MB of longs at the default 2^20 — broadcastable forever): a
-    batch row whose k positions are NOT all set is **definitely new**
-    (Bloom's no-false-negative direction) and is admitted WITHOUT
-    touching the index; only the bloom-positive slice — true
-    duplicates plus novel docs at the classic FP rate p ≈
-    (1−e^(−kn/m))^k — pays the index anti-join. Admission is therefore
-    EXACT (identical output to :func:`update_dedup_index`, pinned by
-    test); the approximation only bounds how much of the batch reaches
-    the expensive join.
-
-    The sidecar is maintained append-only here (the new fingerprints'
-    positions, written BEFORE the index append — a crash between the
-    two writes then leaves only harmless extra bits, which still route
-    through the exact anti-join, instead of index rows the sidecar
-    doesn't know about, which would break the no-false-negative
-    invariant on replay) and compacted by :func:`rebuild_bloom_sidecar`;
-    if it is missing the function falls back to the plain exact gate
-    and bootstraps it. A sidecar written with DIFFERENT (m_bits,
-    k_hashes) raises with the rebuild instruction — silently mis-binned
-    positions would admit duplicates (the hll_cardinality_stream
-    restore-validation contract). Index append semantics, idempotence,
-    and the min-doc_id keeper rule are exactly
-    :func:`update_dedup_index`'s.
-    """
-    from pyspark.errors import AnalysisException
-
-    if "fingerprint" in documents.columns:
-        fp = documents.select("doc_id", "fingerprint")
-    else:
-        fp = documents.select(
-            "doc_id", T.fingerprint(F.col("text")).alias("fingerprint")
-        )
-    try:
-        index = spark.read.parquet(index_path)
-    except AnalysisException:
-        index = None
-    sidecar = None
-    if index is not None:
-        try:
-            sidecar = spark.read.parquet(_bloom_sidecar_path(index_path))
-        except AnalysisException:
-            sidecar = None
-    if sidecar is not None:
-        params = sidecar.select("m_bits", "k_hashes").first()
-        if params is None:
-            sidecar = None  # empty sidecar — rebootstrap below
-        elif (params["m_bits"], params["k_hashes"]) != (m_bits, k_hashes):
-            raise ValueError(
-                f"update_dedup_index_bloom: sidecar at "
-                f"{_bloom_sidecar_path(index_path)} was built with "
-                f"m_bits={params['m_bits']}, k_hashes={params['k_hashes']} "
-                f"but the call uses m_bits={m_bits}, k_hashes={k_hashes}; "
-                "the sketch parameters cannot change in place — run "
-                "rebuild_bloom_sidecar with the new parameters first"
-            )
-        else:
-            sidecar = sidecar.select("pos")
-
-    if index is not None and sidecar is not None:
-        pos = fp.withColumn(
-            "bloom_pos",
-            F.array_distinct(
-                _bloom_positions(F.col("fingerprint"), m_bits, k_hashes)
-            ),
-        )
-        hits = (
-            pos.select(
-                "doc_id", "fingerprint", F.explode("bloom_pos").alias("pos")
-            )
-            .join(F.broadcast(sidecar.distinct()), "pos", "left_semi")
-            .groupBy("doc_id", "fingerprint")
-            .agg(F.count(F.lit(1)).alias("n_hits"))
-        )
-        flagged = pos.join(hits, ["doc_id", "fingerprint"], "left").select(
-            "doc_id",
-            "fingerprint",
-            (F.coalesce("n_hits", F.lit(0)) == F.size("bloom_pos")).alias(
-                "maybe_indexed"
-            ),
-        )
-        candidates = flagged.filter("maybe_indexed").drop("maybe_indexed")
-        definite_new = flagged.filter(~F.col("maybe_indexed")).drop("maybe_indexed")
-        checked = candidates.join(
-            index.select("fingerprint"), "fingerprint", "left_anti"
-        )
-        fp = definite_new.unionByName(checked)
-    elif index is not None:
-        fp = fp.join(index.select("fingerprint"), "fingerprint", "left_anti")
-
-    admitted = (
-        fp.groupBy("fingerprint")
-        .agg(F.min("doc_id").alias("keep_doc_id"))
-        .transform(materialize)
-    )
-    # sidecar bits FIRST, index second: a crash in between leaves extra
-    # bits (harmless false positives that still hit the exact anti-join)
-    # rather than indexed fingerprints the sidecar can't see (silent
-    # duplicate admission on replay)
-    if sidecar is not None:
-        (
-            admitted.select(
-                F.explode(
-                    _bloom_positions(F.col("fingerprint"), m_bits, k_hashes)
-                ).alias("pos")
-            )
-            .distinct()
-            .select(
-                "pos",
-                F.lit(m_bits).cast("long").alias("m_bits"),
-                F.lit(k_hashes).cast("long").alias("k_hashes"),
-            )
-            .write.mode("append")
-            .parquet(_bloom_sidecar_path(index_path))
-        )
-    admitted.write.mode("append").parquet(index_path)
-    if sidecar is None:
-        # bootstrap: digest the WHOLE index as it now stands so the
-        # no-false-negative invariant holds from the first use
-        rebuild_bloom_sidecar(spark, index_path, m_bits, k_hashes)
     return admitted
 
 

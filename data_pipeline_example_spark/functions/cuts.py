@@ -30,9 +30,8 @@ Eager-construction contract: step 2's materialization (the shared
 :mod:`~data_pipeline_example_spark.functions.materialize` seam) runs a
 Spark job at DataFrame-construction time. Default is a
 ``localCheckpoint`` (unreplicated executor blocks — an executor loss
-makes the frame unrecoverable); set a reliable checkpoint dir (or
-``spark.data_pipeline_example.checkpoint.mode=reliable``) to switch
-every site to replicated ``checkpoint()`` for long-lived plans.
+makes the frame unrecoverable); set a reliable checkpoint dir to
+switch every site to replicated ``checkpoint()`` for long-lived plans.
 
 ``LAST_DRIVER_ROWS`` records the size of the most recent step-3
 collect so tests can pin the O(#partitions + #groups) bound.
@@ -85,7 +84,6 @@ def value_cuts(
     group_cols: Sequence[str] = (),
     weight_col: str | None = None,
     descending: bool = False,
-    partitions: int | None = None,
 ) -> tuple[DataFrame, "CutsTotals"]:
     """Per-distinct-value prefix statistics, distributed.
 
@@ -116,12 +114,9 @@ def value_cuts(
     if weight_col is not None:
         aggs.append(F.sum(weight_col).alias("_w"))
     hist = df.groupBy(*gcols, value_col).agg(*aggs)
-    if partitions is not None:
-        n_parts = int(partitions)
-    else:
-        n_parts = _conf_partitions(
-            spark.conf.get("spark.sql.shuffle.partitions", "200")
-        )
+    n_parts = _conf_partitions(
+        spark.conf.get("spark.sql.shuffle.partitions", "200")
+    )
     order = [F.asc(c) for c in gcols] + [
         F.desc(value_col) if descending else F.asc(value_col)
     ]

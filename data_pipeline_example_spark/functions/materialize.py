@@ -14,19 +14,11 @@ had no code seam to act on.
 
 :func:`materialize` is that seam. Call sites use the postfix
 ``df.transform(materialize)`` form (drop-in for ``.localCheckpoint()``
-at the end of a builder chain), and the behavior is chosen per
-session:
-
-* ``spark.data_pipeline_example.checkpoint.mode = reliable`` — use
-  ``DataFrame.checkpoint()`` (HDFS/object-store replicated blocks;
-  requires ``sparkContext.setCheckpointDir`` and survives executor
-  loss). This is the 100 TB / production setting.
-* ``... = local`` — force ``localCheckpoint()`` even when a checkpoint
-  dir is set (e.g. the dir was configured for GraphX/streaming use
-  only).
-* unset (default) — ``checkpoint()`` when the session has a checkpoint
-  dir configured, else ``localCheckpoint()``; setting the dir IS the
-  opt-in.
+at the end of a builder chain), and the behavior follows the session:
+``DataFrame.checkpoint()`` (HDFS/object-store replicated blocks;
+survives executor loss — the 100 TB / production setting) when the
+session has a checkpoint dir configured, else ``localCheckpoint()``.
+Setting the dir with ``sparkContext.setCheckpointDir`` IS the opt-in.
 
 Both paths are eager (run a job at construction time) — the
 eager-construction contract in ``operators/text.py`` is unchanged.
@@ -36,31 +28,22 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-#: session conf consulted by :func:`materialize`
-MODE_CONF = "spark.data_pipeline_example.checkpoint.mode"
 
-
-def _checkpoint_dir(spark) -> str | None:
+def _reliable(spark) -> bool:
+    """True when the session has a checkpoint dir configured."""
     try:
-        d = spark.sparkContext.getCheckpointDir()
+        return bool(spark.sparkContext.getCheckpointDir())
     except Exception:  # pragma: no cover - connect-mode sessions
-        return None
-    return d
+        return False
 
 
 def materialize(df: DataFrame) -> DataFrame:
-    """Cut lineage on ``df`` eagerly, reliably when the session asks.
+    """Cut lineage on ``df`` eagerly, reliably when the session has a
+    checkpoint dir.
 
-    Drop-in for ``.localCheckpoint()`` via ``df.transform(materialize)``
-    — see the module docstring for the mode selection rules.
+    Drop-in for ``.localCheckpoint()`` via ``df.transform(materialize)``.
     """
-    spark = df.sparkSession
-    mode = (spark.conf.get(MODE_CONF, "") or "").strip().lower()
-    if mode not in ("", "local", "reliable"):
-        raise ValueError(
-            f"{MODE_CONF} must be 'local' or 'reliable', got {mode!r}"
-        )
-    if mode == "reliable" or (mode == "" and _checkpoint_dir(spark)):
+    if _reliable(df.sparkSession):
         return df.checkpoint(eager=True)
     return df.localCheckpoint(eager=True)
 
@@ -83,8 +66,8 @@ def materialize_counted(df: DataFrame) -> tuple[DataFrame, int]:
 
 def materialize_disk(df: DataFrame) -> DataFrame:
     """:func:`materialize` for CORPUS-SIZED frames (token/line arrays,
-    i.e. roughly the text volume itself). Reliable mode is unchanged —
-    a replicated checkpoint is already disk-backed. Local mode is an
+    i.e. roughly the text volume itself). The reliable path is unchanged
+    — a replicated checkpoint is already disk-backed. The local path is an
     eager ``localCheckpoint`` at ``DISK_ONLY`` instead of the default
     MEMORY_AND_DISK: those blocks sit in the unified region, so a
     corpus-sized frame evicts execution memory and thrashes GC — the
@@ -94,9 +77,7 @@ def materialize_disk(df: DataFrame) -> DataFrame:
     shuffles. Unlike a ``persist``, the checkpoint registers nothing
     in the session's CacheManager: its blocks are released with the
     frame instead of staying pinned for the life of the session."""
-    spark = df.sparkSession
-    mode = (spark.conf.get(MODE_CONF, "") or "").strip().lower()
-    if mode == "reliable" or (mode == "" and _checkpoint_dir(spark)):
+    if _reliable(df.sparkSession):
         return df.checkpoint(eager=True)
     from pyspark import StorageLevel
 

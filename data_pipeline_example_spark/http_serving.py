@@ -21,14 +21,22 @@ and cached; request handling serves the cached dict and never touches
 Spark. A refresh hook re-runs the queries on demand (the reference
 re-aggregates per request in pandas — per-request Spark jobs would be
 the same anti-pattern at scale, hence the cache-and-refresh contract).
+A failed refresh keeps the last good payloads and shows up on
+``/health`` as ``stale`` with its error; ``refreshed_at`` names the last
+good refresh, so clients compute payload age themselves and the health
+body stays byte-identical between refreshes.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import sys
 import threading
+import time
+import traceback
 from collections.abc import Callable
+from datetime import datetime, timezone
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from typing import Any
 
@@ -49,7 +57,9 @@ _PAGES = {
 class DashboardServer:
     """Serves ``/api/daily``, ``/api/stream`` and ``/health`` from
     payload factories. Factories run on refresh (not per request);
-    ``refresh()`` recomputes both caches atomically."""
+    ``refresh()`` recomputes both caches atomically. ``refreshed_at``
+    (UTC ISO-8601) marks the last successful refresh and ``last_error``
+    (``"<Type>: <msg>"``) the failure since then, if any."""
 
     def __init__(
         self,
@@ -62,6 +72,8 @@ class DashboardServer:
         self._stream_fn = stream_fn
         self._cache: dict[str, dict[str, Any]] = {}
         self._lock = threading.Lock()
+        self.refreshed_at: str | None = None
+        self.last_error: str | None = None
         self.refresh()
 
         handler = self._make_handler()
@@ -93,21 +105,34 @@ class DashboardServer:
 
     def refresh(self) -> None:
         """Recompute payloads (runs the Spark queries). Swaps the cache
-        under the lock so readers always see a complete payload pair."""
+        under the lock so readers always see a complete payload pair.
+        A failing factory leaves the last good payloads in place,
+        records ``last_error`` and re-raises."""
         fresh: dict[str, dict[str, Any]] = {}
-        if self._daily_fn is not None:
-            fresh["/api/daily"] = self._daily_fn()
-        if self._stream_fn is not None:
-            fresh["/api/stream"] = self._stream_fn()
+        try:
+            if self._daily_fn is not None:
+                fresh["/api/daily"] = self._daily_fn()
+            if self._stream_fn is not None:
+                fresh["/api/stream"] = self._stream_fn()
+        except Exception as exc:
+            with self._lock:
+                self.last_error = f"{type(exc).__name__}: {exc}"
+            raise
         with self._lock:
             self._cache = fresh
+            self.refreshed_at = datetime.now(timezone.utc).isoformat()
+            self.last_error = None
 
     # -- request handling --------------------------------------------------
 
     def _payload_for(self, path: str) -> tuple[int, dict[str, Any]]:
-        if path == "/health":  # streaming_dashboard/app.py health probe
-            return 200, {"status": "ok"}
         with self._lock:
+            if path == "/health":  # streaming_dashboard/app.py health probe
+                return 200, {
+                    "status": "stale" if self.last_error else "ok",
+                    "refreshed_at": self.refreshed_at,
+                    "last_error": self.last_error,
+                }
             payload = self._cache.get(path)
         if payload is None:
             return 404, {"status": "error", "error": f"no route {path}"}
@@ -175,9 +200,9 @@ def main(argv: list[str] | None = None) -> int:
     (`dashboard/app.py` + `streaming_dashboard/app.py`, wired by the
     compose files): one process serving /api/daily, /api/stream,
     /health and the static front-ends, refreshed from the engine's
-    queries over ``--sf-dir``."""
+    queries over ``--sf-dir``. A failed refresh prints one JSON line to
+    stderr and the server keeps serving the last good payloads."""
     import argparse
-    import time
 
     from data_pipeline_example_spark.session import get_spark
 
@@ -195,7 +220,21 @@ def main(argv: list[str] | None = None) -> int:
     try:
         while True:
             time.sleep(args.refresh_seconds)
-            server.refresh()
+            try:
+                server.refresh()
+            except Exception:
+                print(
+                    json.dumps(
+                        {
+                            "event": "refresh_failed",
+                            "error": server.last_error,
+                            "refreshed_at": server.refreshed_at,
+                            "traceback": traceback.format_exc(),
+                        }
+                    ),
+                    file=sys.stderr,
+                    flush=True,
+                )
     except KeyboardInterrupt:
         server.stop()
     return 0

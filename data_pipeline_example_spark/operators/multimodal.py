@@ -293,7 +293,7 @@ def decode_image(content: bytes) -> object:
     return img
 
 
-def extract_features(media: DataFrame, batch_limit: int | None = None) -> DataFrame:
+def extract_features(media: DataFrame) -> DataFrame:
     """Per-payload typed metadata + a REAL decode attempt via
     Arrow-batched ``mapInPandas``. Byte metadata (n_bytes, content_md5)
     is computed for every payload; width/height come from a successful
@@ -311,8 +311,6 @@ def extract_features(media: DataFrame, batch_limit: int | None = None) -> DataFr
         import pandas as pd
 
         for pdf in batches:
-            if batch_limit is not None:
-                pdf = pdf.head(batch_limit)
             widths: list = []
             heights: list = []
             flags: list = []

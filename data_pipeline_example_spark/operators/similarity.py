@@ -469,7 +469,6 @@ def assign_centroids_capped(
     embeddings: DataFrame,
     target_bucket: int = 64,
     cap: int = 96,
-    n_rows: int | None = None,
 ) -> DataFrame:
     """Centroid assignment with a HARD per-bucket size bound.
 
@@ -525,7 +524,7 @@ def assign_centroids_capped(
     # planning count over the COMPUTE-VALID rows — k must be derived
     # from the same population the assignment runs on (oracle twin:
     # _CAPPED_SUBBED counts FROM the guarded e)
-    n = valid_embeddings(embeddings).count() if n_rows is None else n_rows
+    n = valid_embeddings(embeddings).count()
     spark = embeddings.sparkSession
     out_schema = "vec_id long, v array<double>, centroid_id long"
     if n == 0:
@@ -560,7 +559,6 @@ def semantic_prune_capped(
     threshold: float = 0.35,
     target_bucket: int = 64,
     cap: int = 96,
-    n_rows: int | None = None,
 ) -> DataFrame:
     """:func:`semantic_prune` with bounded per-bucket work — the 100 TB
     shape. Centroid count adapts to corpus size and every similarity
@@ -576,11 +574,9 @@ def semantic_prune_capped(
 
     Output: vec_id, centroid_id, sub_id, keep, n_earlier_dups, max_cos
     — the fixed-k schema plus the sub-bucket id, so the bound is
-    auditable downstream. ``n_rows``: pass the corpus row count when
-    the caller already knows it (a composed pipeline) to skip this
-    operator's one planning ``count()`` job.
+    auditable downstream.
     """
-    bucketed = assign_centroids_capped(embeddings, target_bucket, cap, n_rows)
+    bucketed = assign_centroids_capped(embeddings, target_bucket, cap)
     return _prune_buckets(bucketed, threshold, "centroid_id", "sub_id")
 
 
@@ -588,7 +584,6 @@ def nearest_neighbor_capped(
     embeddings: DataFrame,
     target_bucket: int = 64,
     cap: int = 96,
-    n_rows: int | None = None,
 ) -> DataFrame:
     """:func:`nearest_neighbor_blocked` with adaptive centroid count and
     a hard per-bucket cap (see :func:`assign_centroids_capped`): every
@@ -596,10 +591,9 @@ def nearest_neighbor_capped(
     O(n·(√k + cap)·dims) — two-level assignment plus the capped
     per-bucket scan — at any corpus size. Recall approximate (neighbor must share the
     sub-bucket), precision exact; singleton sub-buckets emit no row,
-    matching the SQL oracle. ``n_rows``: pass when known to skip the
-    planning ``count()`` job. Output: vec_id, nn_id, cos_sim (6 dp).
+    matching the SQL oracle. Output: vec_id, nn_id, cos_sim (6 dp).
     """
-    bucketed = assign_centroids_capped(embeddings, target_bucket, cap, n_rows)
+    bucketed = assign_centroids_capped(embeddings, target_bucket, cap)
     return _nn_buckets(bucketed, "centroid_id", "sub_id")
 
 
@@ -1487,7 +1481,6 @@ def srp_dup_pairs(
     n_bits: int | None = None,
     bands: int = 4,
     dims: int = 64,
-    n_rows: int | None = None,
 ) -> DataFrame:
     """Signed-random-projection (hyperplane) LSH near-dup pairs — the
     data-INDEPENDENT bucketed scale path for embedding dedup.
@@ -1543,10 +1536,9 @@ def srp_dup_pairs(
     if n_bits is None:
         import math
 
-        # one planning-stats scalar — skipped entirely when the caller
-        # already knows the corpus size (composed pipelines pass n_rows);
-        # counted over the compute-valid rows like the SQL twin
-        n = valid_embeddings(embeddings).count() if n_rows is None else n_rows
+        # one planning-stats scalar, counted over the compute-valid rows
+        # like the SQL twin
+        n = valid_embeddings(embeddings).count()
         nb = max(4, math.ceil(math.log2(max(n, 1) / 64)) if n > 64 else 4)
         n_bits = nb * bands
     nb_per_band = n_bits // bands
@@ -2102,7 +2094,6 @@ def knn_density_outliers(
     k: int = 5,
     target_bucket: int = 64,
     cap: int = 96,
-    n_rows: int | None = None,
 ) -> DataFrame:
     """kNN-density scoring for embedding-space data pruning (the
     SemDeDup/D4 family's ranking signal): each vector's mean cosine to
@@ -2126,7 +2117,7 @@ def knn_density_outliers(
     """
     import pandas as pd
 
-    bucketed = assign_centroids_capped(embeddings, target_bucket, cap, n_rows)
+    bucketed = assign_centroids_capped(embeddings, target_bucket, cap)
 
     def bucket_density(pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
@@ -2403,7 +2394,6 @@ def hard_negatives(
     embeddings: DataFrame,
     target_bucket: int = 64,
     cap: int = 96,
-    n_rows: int | None = None,
 ) -> DataFrame:
     """Hard-negative mining for contrastive training — per anchor, the
     most-similar vector with a DIFFERENT label: the pair-construction
@@ -2424,7 +2414,7 @@ def hard_negatives(
     """
     import pandas as pd
 
-    bucketed = assign_centroids_capped(embeddings, target_bucket, cap, n_rows)
+    bucketed = assign_centroids_capped(embeddings, target_bucket, cap)
     lab = embeddings.select(
         "vec_id", F.coalesce(F.col("label"), F.lit(-1)).cast("long").alias("label")
     )
@@ -2469,7 +2459,6 @@ def contrastive_triplets(
     embeddings: DataFrame,
     target_bucket: int = 64,
     cap: int = 96,
-    n_rows: int | None = None,
 ) -> DataFrame:
     """Triplet mining for contrastive training — per anchor, the
     hardest (anchor, positive, negative) triple within its hard-capped
@@ -2492,7 +2481,7 @@ def contrastive_triplets(
     """
     import pandas as pd
 
-    bucketed = assign_centroids_capped(embeddings, target_bucket, cap, n_rows)
+    bucketed = assign_centroids_capped(embeddings, target_bucket, cap)
     lab = embeddings.select(
         "vec_id", F.coalesce(F.col("label"), F.lit(-1)).cast("long").alias("label")
     )

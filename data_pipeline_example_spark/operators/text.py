@@ -15,12 +15,11 @@ time. Every site goes through the ONE checkpoint seam,
 ``.transform(materialize)``): by default it is a ``localCheckpoint``
 — UNREPLICATED executor storage, fine single-JVM but unrecoverable on
 executor loss — and on a real (preemptible/churning) cluster setting
-``spark.sparkContext.setCheckpointDir`` (or conf
-``spark.data_pipeline_example.checkpoint.mode=reliable``) switches
-ALL sites to replicated ``DataFrame.checkpoint()`` with no library
-edits. The eager trade itself is deliberate: each materialized frame
-feeds 2+ downstream branches, and re-deriving it per branch measured
-slower at every scale tested (see PLANS.md's scans column).
+``spark.sparkContext.setCheckpointDir`` switches ALL sites to
+replicated ``DataFrame.checkpoint()`` with no library edits. The eager
+trade itself is deliberate: each materialized frame feeds 2+ downstream
+branches, and re-deriving it per branch measured slower at every scale
+tested (see PLANS.md's scans column).
 """
 
 from __future__ import annotations

@@ -2222,8 +2222,8 @@ _R15_FRONT = [
     "cosine_dup_pairs", "semantic_prune", "semantic_prune_capped",
     "knn_density_outliers", "srp_dup_pairs", "substring_dedup",
     "gopher_repetition", "event_markov_transitions",
-    # r9-certified cohort remainder
-    "cluster_representatives",
+    # changed by the option census (extract_features' UDF body)
+    "media_features",
 ]
 assert len(_R15_FRONT) == 50 and all(n in QUERIES for n in _R15_FRONT), (
     "window rotation list must name 50 registered queries"

@@ -7,11 +7,9 @@ CSV to a ``<out>_kpis`` sibling.
 
 Scale notes: ``repartition(partition_col)`` before a partitioned write
 produces one file per partition (reference behavior, fine when partitions
-are day-sized); at 100 TB prefer ``partition_file_target`` > 1 so each
-date partition writes multiple right-sized files in parallel instead of
-funneling a whole day through one task. ``coalesce(1)`` sinks exist for
-demo parity only — never use them on large outputs (the docstring is the
-guardrail the reference lacked).
+are day-sized; at 100 TB a whole day funnels through one writer task).
+``coalesce(1)`` sinks exist for demo parity only — never use them on
+large outputs (the docstring is the guardrail the reference lacked).
 """
 
 from __future__ import annotations
@@ -25,30 +23,15 @@ def write_partitioned_parquet(
     df: DataFrame,
     path: str,
     partition_col: str = "order_date",
-    partition_file_target: int = 1,
 ) -> None:
     """K1 + M1 — dynamic-overwrite date-partitioned Parquet
-    (`pipeline_batch.py:215-221`, config `:59`).
-
-    ``partition_file_target=1`` reproduces the reference's one file per
-    date; larger values salt the shuffle key so each date's rows spread
-    over ~N writer tasks → ~N files per date partition (use
-    ceil(partition_bytes / 128MB) at scale). Dynamic partition
-    overwrite is a per-writer option, not a session-conf mutation.
+    (`pipeline_batch.py:215-221`, config `:59`): one file per date, the
+    reference's layout. Dynamic partition overwrite is a per-writer
+    option, not a session-conf mutation.
     """
-    if partition_file_target == 1:
-        out = df.repartition(partition_col)
-    else:
-        # (date, salt) composite shuffle key: rows of one date land on
-        # ~partition_file_target distinct reducers; bucket count stays
-        # spark.sql.shuffle.partitions (NOT partition_file_target, which
-        # would cap the whole write at that many tasks)
-        salt = F.pmod(
-            F.xxhash64(*[F.col(c) for c in df.columns]), F.lit(partition_file_target)
-        )
-        out = df.repartition(F.col(partition_col), salt)
     (
-        out.write.mode("overwrite")
+        df.repartition(partition_col)
+        .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy(partition_col)
         .parquet(path)
@@ -268,16 +251,11 @@ def upsert_partitioned(
     write_partitioned_parquet(merged, path, partition_col=partition_col)
 
 
-def write_json(df: DataFrame, path: str, compression: str | None = None) -> None:
+def write_json(df: DataFrame, path: str) -> None:
     """JSON-lines sink (one object per row) — the interchange twin of
     the Kafka producer payloads (`kafka_event_producer.py:119-120`) and
-    the standard LLM-corpus exchange layout (`.jsonl.gz` shards when
-    ``compression="gzip"``; gzip keeps shards splittable-by-file, which
-    is how corpus consumers parallelize anyway)."""
-    w = df.write.mode("overwrite")
-    if compression is not None:
-        w = w.option("compression", compression)
-    w.json(path)
+    the standard LLM-corpus exchange layout."""
+    df.write.mode("overwrite").json(path)
 
 
 def write_orc(df: DataFrame, path: str) -> None:

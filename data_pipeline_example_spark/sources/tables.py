@@ -66,9 +66,9 @@ def read_csv_dir(
     spark: SparkSession,
     path: str,
     schema: StructType | None = None,
-    infer: bool = True,
 ) -> DataFrame:
-    """S1 — read every ``*.csv`` under ``path`` (recursive, header row).
+    """S1 — read every ``*.csv`` under ``path`` (recursive, header row),
+    inferring column types unless ``schema`` is given.
 
     Passing an explicit ``schema`` is preferred at scale: it skips the
     extra inference pass the reference pays (`pipeline_batch.py:116`)
@@ -82,7 +82,7 @@ def read_csv_dir(
     )
     if schema is not None:
         reader = reader.schema(schema)
-    elif infer:
+    else:
         reader = reader.option("inferSchema", True)
     return reader.csv(path)
 

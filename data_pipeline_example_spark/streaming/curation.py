@@ -90,41 +90,6 @@ def gate_and_dedup(
     )
 
 
-def gate_and_dedup_bloom(
-    docs: DataFrame,
-    min_quality: float = 0.05,
-    min_tokens: int = 10,
-    m_bits: int = 65536,
-    k_hashes: int = 3,
-    n_buckets: int = 8,
-) -> DataFrame:
-    """:func:`gate_and_dedup` with the BLOOM admission stage in place of
-    ``dropDuplicatesWithinWatermark`` — same quality gate, same output
-    shape (doc_id, text, ingest_ts, fingerprint), different state
-    contract: the exact path holds one key per distinct doc inside the
-    watermark horizon (unbounded in corpus terms); this path holds
-    ``m_bits`` TOTAL, never evicts (duplicates are caught forever, not
-    just inside the horizon), and wrongly drops novel docs at the
-    measured FP rate. Pick by corpus size vs loss tolerance; the
-    downstream index gate in :func:`run_doc_ingest` is exact either
-    way."""
-    n_tok = T.token_count(F.col("text"))
-    gated = docs.filter(
-        (T.quality_score(F.col("text")) >= min_quality) & (n_tok >= min_tokens)
-    )
-    return (
-        bloom_admission_stream(
-            gated,
-            m_bits=m_bits,
-            k_hashes=k_hashes,
-            n_buckets=n_buckets,
-            carry=("text", "ingest_ts"),
-        )
-        .filter(F.col("admitted") == 1)
-        .select("doc_id", "text", "ingest_ts", "fingerprint")
-    )
-
-
 def curate_doc_stream(
     docs: DataFrame,
     min_quality: float = 0.05,
@@ -249,29 +214,10 @@ def run_doc_ingest(
     stride: int = 48,
     max_files_per_trigger: int | None = None,
     available_now: bool = True,
-    admission: str = "exact",
-    index_gate: str = "exact",
 ):
     """The wired lambda pipeline: landing zone → quality gate →
     watermarked in-horizon dedup → **foreachBatch** {persistent
     fingerprint-index gate → chunk fan-out → corpus append}.
-
-    ``admission`` picks the streaming dedup stage: ``"exact"`` (default,
-    ``dropDuplicatesWithinWatermark`` — one state key per distinct doc
-    inside the horizon) or ``"bloom"``
-    (:func:`gate_and_dedup_bloom` — ``m_bits`` TOTAL state, never
-    evicts, wrongly drops novel docs at the measured FP rate). The
-    index gate below is exact in both modes, so the corpus itself never
-    gains a duplicate either way; the bloom mode only changes which
-    novel docs might be lost upstream and how much state the stream
-    carries.
-
-    ``index_gate`` picks the persisted-index admission:
-    ``"exact"`` (default, :func:`curation.update_dedup_index` — every
-    batch row anti-joins the ever-growing index) or
-    ``"bloom_prefilter"`` (:func:`curation.update_dedup_index_bloom` —
-    a broadcastable Bloom sidecar routes definitely-new rows past the
-    index join; admission stays EXACT, only the join input is bounded).
 
     The stream's ``dropDuplicatesWithinWatermark`` state catches
     duplicates inside the horizon; ``curation.update_dedup_index``
@@ -282,36 +228,20 @@ def run_doc_ingest(
     on already-indexed fingerprints), a micro-batch replayed after a
     failure admits nothing twice: the corpus append is guarded by the
     same admission set, so the sink is effectively exactly-once at the
-    document level.
+    document level. Both stages are exact; the bounded-state Bloom
+    admission is the standalone :func:`bloom_admission_stream`.
 
     Returns the started StreamingQuery (caller awaits/stops).
     """
     from data_pipeline_example_spark import curation as batch_curation
 
-    if admission not in ("exact", "bloom"):
-        raise ValueError(f"admission must be 'exact' or 'bloom', got {admission!r}")
-    if index_gate not in ("exact", "bloom_prefilter"):
-        # a typo here must not silently fall back to the unbounded
-        # exact join the caller believed they replaced
-        raise ValueError(
-            f"index_gate must be 'exact' or 'bloom_prefilter', got {index_gate!r}"
-        )
-
     docs = decode_doc_stream(
         read_doc_stream(spark, input_path, max_files_per_trigger)
     )
-    if admission == "bloom":
-        admitted_stream = gate_and_dedup_bloom(docs, min_quality, min_tokens)
-    else:
-        admitted_stream = gate_and_dedup(docs, min_quality, min_tokens, watermark)
+    admitted_stream = gate_and_dedup(docs, min_quality, min_tokens, watermark)
 
     def _sink(batch: DataFrame, batch_id: int) -> None:
-        gate = (
-            batch_curation.update_dedup_index_bloom
-            if index_gate == "bloom_prefilter"
-            else batch_curation.update_dedup_index
-        )
-        admitted = gate(spark, batch, index_path)
+        admitted = batch_curation.update_dedup_index(spark, batch, index_path)
         # per-micro-batch admission set is small — broadcast it back
         # against the batch rather than shuffling the batch
         kept = batch.join(
@@ -331,10 +261,7 @@ def run_doc_ingest(
     writer = (
         admitted_stream.writeStream.foreachBatch(_sink)
         .option("checkpointLocation", checkpoint)
-        # the bloom stage is an update-mode stateful op; the exact path
-        # is append (dropDuplicates emits once). foreachBatch consumes
-        # either — the mode just has to match the plan's stateful ops.
-        .outputMode("update" if admission == "bloom" else "append")
+        .outputMode("append")
     )
     if available_now:
         writer = writer.trigger(availableNow=True)
@@ -646,7 +573,6 @@ def bloom_admission_stream(
     m_bits: int = 65536,
     k_hashes: int = 3,
     n_buckets: int = 8,
-    carry: tuple[str, ...] = (),
 ) -> DataFrame:
     """Bounded-state APPROXIMATE admission for streaming exact dedup —
     the state-size escape hatch for :func:`gate_and_dedup`'s
@@ -683,11 +609,11 @@ def bloom_admission_stream(
     order within each (bucket, micro-batch) so checkpoint replays
     re-admit identically.
 
-    Output stream (update mode): doc_id, fingerprint, admitted (int),
-    plus any ``carry`` columns passed through the stateful op verbatim
-    (their types copied from the input schema) — what lets
-    :func:`run_doc_ingest` compose this stage in place of the exact
-    dedup while the sink still sees text and event time.
+    A standalone operator: :func:`run_doc_ingest` keeps the exact
+    watermarked dedup, and a caller trading exactness for bounded state
+    filters this stream on ``admitted == 1`` itself.
+
+    Output stream (update mode): doc_id, fingerprint, admitted (int).
     """
     import pandas as pd  # local import: worker-side dependency
 
@@ -716,12 +642,10 @@ def bloom_admission_stream(
             for i in range(k_hashes)
         ]
     )
-    in_fields = {f.name: f for f in docs.schema.fields}
     typed = (
         docs.select(
             F.col("doc_id").cast("long").alias("doc_id"),
             fp.alias("fingerprint"),
-            *[F.col(c) for c in carry],
         )
         .withColumn(
             "bucket",
@@ -739,7 +663,6 @@ def bloom_admission_stream(
             StructField("fingerprint", StringType()),
             StructField("admitted", IntegerType()),
         ]
-        + [StructField(c, in_fields[c].dataType) for c in carry]
     )
     state_schema = StructType([StructField("bits", BinaryType())])
 
@@ -756,14 +679,13 @@ def bloom_admission_stream(
                     bits[p // 8] |= 1 << (p % 8)
             admitted.append(0 if seen else 1)
         state.update((bytes(bits),))
-        out = {
-            "doc_id": pdf["doc_id"].astype("int64"),
-            "fingerprint": pdf["fingerprint"].astype("object"),
-            "admitted": pd.Series(admitted, dtype="int32", index=pdf.index),
-        }
-        for c in carry:
-            out[c] = pdf[c]
-        yield pd.DataFrame(out)
+        yield pd.DataFrame(
+            {
+                "doc_id": pdf["doc_id"].astype("int64"),
+                "fingerprint": pdf["fingerprint"].astype("object"),
+                "admitted": pd.Series(admitted, dtype="int32", index=pdf.index),
+            }
+        )
 
     return typed.groupBy("bucket").applyInPandasWithState(
         update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout

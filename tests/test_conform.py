@@ -134,16 +134,18 @@ def test_streaming_candidate_order_differs_from_batch(spark):
 
 
 def test_observe_metrics(spark):
-    from dataclasses import replace
+    from pyspark.sql import Observation
 
     df = spark.createDataFrame(
         [("a", "bad-date", "1.0"), ("b", "2025-01-01", "xx")],
         ["product", "order_date", "amount"],
     )
-    spec = replace(BATCH_SPEC, observe_name="conform_metrics")
-    out = conform(df, spec)
+    obs = Observation("conform_metrics")
+    out = conform(df, BATCH_SPEC, observation=obs)
     observation_rows = out.count()  # trigger an action
     assert observation_rows == 0  # both rows invalid
+    assert obs.get["invalid_dates"] == 1
+    assert obs.get["null_amounts"] == 1
 
 
 # --- property-based: conform never crashes and keeps its contract ------

@@ -66,240 +66,3 @@ def test_update_dedup_index_is_incremental_and_idempotent(spark, tmp_path):
     a3 = curation.update_dedup_index(spark, b2, idx)
     assert a3.count() == 0
     assert spark.read.parquet(idx).count() == 3
-
-
-def test_update_dedup_index_bloom_is_exact_and_maintains_sidecar(spark, tmp_path):
-    """The Bloom-sidecar gate must admit EXACTLY what the plain gate
-    admits (the sidecar only routes definitely-new rows past the index
-    join — Bloom's no-false-negative direction), across batches,
-    including idempotent replay; and the sidecar must stay COMPLETE
-    w.r.t. the index (every indexed fingerprint's k positions set),
-    replayed here bit-for-bit in plain Python."""
-    import hashlib
-
-    m_bits, k = 1 << 16, 3
-    texts1 = [(1, "alpha beta gamma"), (2, "alpha beta gamma"),
-              (3, "delta epsilon zeta")]
-    texts2 = [(10, "alpha beta gamma"), (11, "brand new text here"),
-              (12, "delta epsilon zeta"), (13, "another novel doc")]
-
-    def df(rows):
-        return spark.createDataFrame(
-            [(i, "en", "s", t) for i, t in rows],
-            "doc_id long, lang string, source string, text string",
-        )
-
-    idx_plain, idx_bloom = str(tmp_path / "fpi_plain"), str(tmp_path / "fpi_bloom")
-    for batch in (texts1, texts2):
-        plain = curation.update_dedup_index(spark, df(batch), idx_plain)
-        bloom = curation.update_dedup_index_bloom(
-            spark, df(batch), idx_bloom, m_bits=m_bits, k_hashes=k
-        )
-        assert (
-            {tuple(r) for r in plain.collect()}
-            == {tuple(r) for r in bloom.collect()}
-        )
-    # idempotent replay admits nothing and the indexes agree
-    assert curation.update_dedup_index_bloom(
-        spark, df(texts2), idx_bloom, m_bits=m_bits, k_hashes=k
-    ).count() == 0
-    index_fps = {r["fingerprint"] for r in spark.read.parquet(idx_bloom).collect()}
-    assert index_fps == {
-        r["fingerprint"] for r in spark.read.parquet(idx_plain).collect()
-    }
-
-    # sidecar completeness: exactly the union of every indexed
-    # fingerprint's k md5-family positions (Spark md5(concat) == python
-    # md5 over utf-8)
-    want_bits = set()
-    for fp in index_fps:
-        for i in range(k):
-            h = hashlib.md5(f"{i}:{fp}".encode()).hexdigest()
-            want_bits.add(int(h[:8], 16) % m_bits)
-    got_bits = {
-        r["pos"]
-        for r in spark.read.parquet(
-            curation._bloom_sidecar_path(idx_bloom)
-        ).collect()
-    }
-    assert got_bits == want_bits
-
-    # rebuild (compaction) preserves the set
-    curation.rebuild_bloom_sidecar(spark, idx_bloom, m_bits=m_bits, k_hashes=k)
-    got2 = {
-        r["pos"]
-        for r in spark.read.parquet(
-            curation._bloom_sidecar_path(idx_bloom)
-        ).collect()
-    }
-    assert got2 == want_bits
-
-
-def test_bloom_prefilter_routes_definite_new_past_index_join(spark, tmp_path):
-    """The point of the sidecar: with the index holding unrelated
-    fingerprints, a batch of novel docs should be admitted through the
-    definitely-new path — verified by checking the bloom positions of
-    the novel fingerprints genuinely miss the sidecar (so the exactness
-    above isn't vacuously passing through the candidate join)."""
-    import hashlib
-
-    m_bits, k = 1 << 16, 3
-    idx = str(tmp_path / "fpi_route")
-    seed = spark.createDataFrame(
-        [(1, "en", "s", "seed document one"), (2, "en", "s", "seed document two")],
-        "doc_id long, lang string, source string, text string",
-    )
-    curation.update_dedup_index_bloom(spark, seed, idx, m_bits=m_bits, k_hashes=k)
-    sidecar = {
-        r["pos"]
-        for r in spark.read.parquet(curation._bloom_sidecar_path(idx)).collect()
-    }
-    novel = spark.createDataFrame(
-        [(5, "en", "s", "completely different content")],
-        "doc_id long, lang string, source string, text string",
-    )
-    out = curation.update_dedup_index_bloom(
-        spark, novel, idx, m_bits=m_bits, k_hashes=k
-    )
-    assert {r["keep_doc_id"] for r in out.collect()} == {5}
-    fp = out.first()["fingerprint"]
-    miss = [
-        int(hashlib.md5(f"{i}:{fp}".encode()).hexdigest()[:8], 16) % m_bits
-        not in sidecar
-        for i in range(k)
-    ]
-    assert any(miss)  # at least one unset bit → took the definite-new path
-
-
-def test_bloom_sidecar_crash_window_preserves_admission_contract(spark, tmp_path):
-    """The write-ORDERING claim (sidecar bits BEFORE index append),
-    argued with both crash interleavings instead of assumed (r14
-    VERDICT item 5):
-
-    A. The reachable crash state — batch-2's sidecar bits landed, its
-       index append did NOT. On replay the batch is bloom-positive
-       (extra bits = harmless false positives), routes through the
-       EXACT anti-join, and admission is identical to a clean run:
-       novel docs admitted exactly once, known duplicates rejected.
-       Duplicate admission never happens.
-    B. The inverse state (index row without its sidecar bits) — only
-       reachable if the writes were ordered the other way — breaks the
-       no-false-negative invariant: the replayed duplicate reads
-       definitely-new and is admitted AGAIN. Pinning the hazard proves
-       the ordering is load-bearing, not stylistic.
-    """
-    from data_pipeline_example_spark.functions import text as T
-
-    m_bits, k = 1 << 16, 3
-
-    def df(rows):
-        return spark.createDataFrame(
-            [(i, "en", "s", t) for i, t in rows],
-            "doc_id long, lang string, source string, text string",
-        )
-
-    # --- A: sidecar written, index append missing -----------------------
-    idx = str(tmp_path / "fpi_crash")
-    curation.update_dedup_index_bloom(
-        spark, df([(1, "seed doc one"), (2, "seed doc two")]), idx,
-        m_bits=m_bits, k_hashes=k,
-    )
-    batch2 = [(10, "seed doc one"), (11, "novel crash survivor")]
-    # replicate EXACTLY the first of the two writes, then "crash"
-    (
-        df(batch2)
-        .select(T.fingerprint(F.col("text")).alias("fingerprint"))
-        .select(
-            F.explode(
-                curation._bloom_positions(F.col("fingerprint"), m_bits, k)
-            ).alias("pos")
-        )
-        .distinct()
-        .select(
-            "pos",
-            F.lit(m_bits).cast("long").alias("m_bits"),
-            F.lit(k).cast("long").alias("k_hashes"),
-        )
-        .write.mode("append")
-        .parquet(curation._bloom_sidecar_path(idx))
-    )
-    assert spark.read.parquet(idx).count() == 2  # index untouched by the crash
-
-    # replay the whole batch: admission decisions must equal a clean run
-    out = curation.update_dedup_index_bloom(
-        spark, df(batch2), idx, m_bits=m_bits, k_hashes=k
-    )
-    assert {r["keep_doc_id"] for r in out.collect()} == {11}
-    assert spark.read.parquet(idx).count() == 3
-    # and replaying AGAIN admits nothing (idempotence survived the crash)
-    assert curation.update_dedup_index_bloom(
-        spark, df(batch2), idx, m_bits=m_bits, k_hashes=k
-    ).count() == 0
-
-    # --- B: the inverse interleaving the ordering makes unreachable -----
-    idx_b = str(tmp_path / "fpi_inverse")
-    curation.update_dedup_index_bloom(
-        spark, df([(1, "seed doc one")]), idx_b, m_bits=m_bits, k_hashes=k
-    )
-    # index append WITHOUT its sidecar bits (the forbidden order)
-    (
-        df([(20, "phantom indexed doc")])
-        .select(
-            T.fingerprint(F.col("text")).alias("fingerprint"),
-            F.col("doc_id").alias("keep_doc_id"),
-        )
-        .write.mode("append")
-        .parquet(idx_b)
-    )
-    dup = curation.update_dedup_index_bloom(
-        spark, df([(21, "phantom indexed doc")]), idx_b,
-        m_bits=m_bits, k_hashes=k,
-    )
-    # the duplicate sails through as definitely-new: EXACTLY the silent
-    # duplicate admission the sidecar-first ordering rules out
-    assert {r["keep_doc_id"] for r in dup.collect()} == {21}
-    fps = [r["fingerprint"] for r in spark.read.parquet(idx_b).collect()]
-    assert len(fps) == 3 and len(set(fps)) == 2  # index now holds a dup row
-
-
-def test_bloom_sidecar_rejects_parameter_change(spark, tmp_path):
-    """A sidecar written with different (m_bits, k_hashes) must raise
-    with the rebuild instruction — silently mis-binned positions would
-    admit duplicates (the HLL p_bits restore-validation contract)."""
-    import pytest
-
-    idx = str(tmp_path / "fpi_params")
-    docs = spark.createDataFrame(
-        [(1, "en", "s", "some document text")],
-        "doc_id long, lang string, source string, text string",
-    )
-    curation.update_dedup_index_bloom(spark, docs, idx, m_bits=1 << 16, k_hashes=3)
-    with pytest.raises(ValueError, match="rebuild_bloom_sidecar"):
-        curation.update_dedup_index_bloom(
-            spark, docs, idx, m_bits=1 << 15, k_hashes=3
-        )
-    # rebuild with the new parameters unblocks the gate, still exact
-    curation.rebuild_bloom_sidecar(spark, idx, m_bits=1 << 15, k_hashes=3)
-    again = curation.update_dedup_index_bloom(
-        spark, docs, idx, m_bits=1 << 15, k_hashes=3
-    )
-    assert again.count() == 0  # idempotent: already indexed
-
-
-def test_run_doc_ingest_rejects_unknown_gate_values(spark, tmp_path):
-    import pytest
-
-    from data_pipeline_example_spark.streaming import curation as sc2
-
-    with pytest.raises(ValueError, match="index_gate"):
-        sc2.run_doc_ingest(
-            spark, str(tmp_path / "i"), str(tmp_path / "c"),
-            str(tmp_path / "x"), str(tmp_path / "k"),
-            index_gate="bloom-prefilter",
-        )
-    with pytest.raises(ValueError, match="admission"):
-        sc2.run_doc_ingest(
-            spark, str(tmp_path / "i"), str(tmp_path / "c"),
-            str(tmp_path / "x"), str(tmp_path / "k"),
-            admission="blomo",
-        )

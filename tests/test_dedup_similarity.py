@@ -517,33 +517,6 @@ def test_cos_matrix_bit_exact_with_sequential_fold():
             assert got[i, j] == fold_cos(M[i], C[j]), (i, j)
 
 
-def test_capped_ops_skip_count_when_n_rows_given(spark, monkeypatch):
-    """Composed pipelines pass n_rows so the capped ops and srp_dup_pairs
-    add zero planning count() jobs — one scan per pipeline."""
-    import pytest
-
-    rows = [(i, [float(i % 7), 1.0, 0.5, 0.25], 0) for i in range(64)]
-    emb = spark.createDataFrame(rows, ["vec_id", "embedding", "label"])
-    n = emb.count()  # caller-side count, before the patch
-
-    def boom(self):
-        raise AssertionError("count() must not run when n_rows is given")
-
-    # patch the CONCRETE class (Spark 4: pyspark.sql.DataFrame is an
-    # abstract base whose subclass overrides count)
-    monkeypatch.setattr(type(emb), "count", boom)
-    pruned = similarity.semantic_prune_capped(emb, n_rows=n)
-    nn = similarity.nearest_neighbor_capped(emb, n_rows=n)
-    srp = similarity.srp_dup_pairs(emb, dims=4, n_rows=n)
-    monkeypatch.undo()
-    assert len(pruned.collect()) == n
-    nn.collect()  # executes without a hidden count
-    srp.collect()
-    with pytest.raises(AssertionError):
-        monkeypatch.setattr(type(emb), "count", boom)
-        similarity.semantic_prune_capped(emb)  # no n_rows → counts
-
-
 def test_semantic_prune_capped_keep_rule_and_bound(spark):
     """Within a sub-bucket of identical vectors only the earliest id is
     kept; group sizes stay at or under the cap; every vector gets a row."""

@@ -31,7 +31,15 @@ def server(spark, sf_dir):
 def test_health(server):
     status, body = _get(server.port, "/health")
     assert status == 200
-    assert body == {"status": "ok"}
+    assert body == {
+        "status": "ok",
+        "refreshed_at": server.refreshed_at,
+        "last_error": None,
+    }
+    import datetime
+
+    stamp = datetime.datetime.fromisoformat(body["refreshed_at"])
+    assert stamp.utcoffset() == datetime.timedelta(0)
 
 
 def test_daily_endpoint_equals_serving_payload(spark, sf_dir, server):
@@ -228,3 +236,81 @@ def test_ui_pages_reference_only_served_endpoints(server):
         _, _, body = _get_raw(server.port, path)
         for url in re.findall(r"fetch\(\"([^\"]+)\"\)", body):
             assert url in served, (path, url)
+
+
+def _flaky_daily(fail_on: set[int]):
+    """A daily payload factory that raises on the given (1-based) calls."""
+    calls = {"n": 0}
+
+    def daily_fn():
+        calls["n"] += 1
+        if calls["n"] in fail_on:
+            raise RuntimeError(f"refresh {calls['n']} failed")
+        return {"status": "ok", "daily": [calls["n"]]}
+
+    return daily_fn
+
+
+def test_failed_refresh_keeps_last_payload_and_reports_stale():
+    srv = DashboardServer(daily_fn=_flaky_daily({2}))
+    srv.start()
+    try:
+        _, first_health = _get(srv.port, "/health")
+        with pytest.raises(RuntimeError, match="refresh 2 failed"):
+            srv.refresh()
+        status, body = _get(srv.port, "/api/daily")
+        assert status == 200 and body["daily"] == [1]  # last good payload
+        status, health = _get(srv.port, "/health")
+        assert status == 200
+        assert health == {
+            "status": "stale",
+            "refreshed_at": first_health["refreshed_at"],
+            "last_error": "RuntimeError: refresh 2 failed",
+        }
+        # the body is stable between refreshes (clients derive the age)
+        assert _get(srv.port, "/health")[1] == health
+
+        srv.refresh()  # a later good refresh clears the error
+        _, body = _get(srv.port, "/api/daily")
+        assert body["daily"] == [3]
+        _, health = _get(srv.port, "/health")
+        assert health["status"] == "ok" and health["last_error"] is None
+        assert health["refreshed_at"] >= first_health["refreshed_at"]
+    finally:
+        srv.stop()
+
+
+def test_main_survives_a_failing_refresh(monkeypatch, capsys):
+    import types
+
+    from data_pipeline_example_spark import http_serving, session
+
+    servers = []
+
+    def fake_serve(spark, sf_dir, host, port):
+        srv = DashboardServer(daily_fn=_flaky_daily({2}), host="127.0.0.1")
+        srv.start()
+        servers.append(srv)
+        return srv
+
+    sleeps = {"n": 0}
+
+    def fake_sleep(_seconds):
+        sleeps["n"] += 1
+        if sleeps["n"] > 2:  # two loop turns: one failing, one good refresh
+            raise KeyboardInterrupt
+
+    monkeypatch.setattr(session, "get_spark", lambda **_: None)
+    monkeypatch.setattr(http_serving, "serve_dashboards", fake_serve)
+    # patched in the module only: py4j's own threads sleep too
+    monkeypatch.setattr(http_serving, "time", types.SimpleNamespace(sleep=fake_sleep))
+
+    assert http_serving.main(["--sf-dir", "unused", "--port", "0"]) == 0
+    (srv,) = servers
+    assert srv.last_error is None and srv.refreshed_at is not None
+    lines = capsys.readouterr().err.strip().splitlines()
+    assert len(lines) == 1
+    record = json.loads(lines[0])
+    assert record["event"] == "refresh_failed"
+    assert record["error"] == "RuntimeError: refresh 2 failed"
+    assert "RuntimeError: refresh 2 failed" in record["traceback"]

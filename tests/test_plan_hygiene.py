@@ -163,12 +163,6 @@ _INFERRED_PARQUET_READS = {
         1, "epoch-partitioned partials: partition column types inferred"),
     ("streaming/job.py", "compact_ivm_partials"): (
         1, "partials may not exist yet (AnalysisException means nothing to do)"),
-    ("curation.py", "update_dedup_index"): (
-        1, "the index may not exist yet (AnalysisException means first batch)"),
-    ("curation.py", "rebuild_bloom_sidecar"): (
-        1, "an index of any writer's layout, read whole"),
-    ("curation.py", "update_dedup_index_bloom"): (
-        2, "index and sidecar may not exist yet (AnalysisException)"),
 }
 
 
@@ -224,3 +218,19 @@ def test_parquet_reads_pin_their_schema():
     stale = sorted(set(allowed) - set(found))
     assert not unexpected, f"parquet reads without .schema(: {unexpected}"
     assert not stale, f"allowlisted sites no longer exist: {stale}"
+
+
+def test_no_engine_session_conf_options():
+    """The engine reads no options of its own from the session conf: a
+    ``spark.data_pipeline_example.*`` key is a knob no caller sets, and
+    a behavior switch belongs in a parameter a real caller passes."""
+    prefix = "spark.data_pipeline_example."
+    found = [
+        f"{path.relative_to(_PKG).as_posix()}:{node.lineno}"
+        for path in sorted(_PKG.rglob("*.py"))
+        for node in ast.walk(ast.parse(path.read_text(), str(path)))
+        if isinstance(node, ast.Constant)
+        and isinstance(node.value, str)
+        and node.value.startswith(prefix)
+    ]
+    assert not found, f"session-conf option keys under {prefix!r}: {found}"

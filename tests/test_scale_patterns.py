@@ -306,14 +306,10 @@ def test_ivfpq_index_batch_rejects_truncated_codebook(spark, sf_dir, tmp_path):
 def test_materialize_seam_switches_to_reliable_checkpoint(spark, tmp_path):
     """The one checkpoint seam (functions.materialize): default is a
     localCheckpoint; setting a checkpoint dir (the production opt-in)
-    switches every call site to replicated DataFrame.checkpoint(), and
-    the explicit mode conf overrides in both directions. The r7
+    switches every call site to replicated DataFrame.checkpoint(). The r7
     verdict's gap: the eager-construction contract told 100 TB users
     to 'swap in a reliable checkpoint dir' with no code seam to do it."""
-    from data_pipeline_example_spark.functions.materialize import (
-        MODE_CONF,
-        materialize,
-    )
+    from data_pipeline_example_spark.functions.materialize import materialize
 
     df = spark.range(100)
     sc = spark.sparkContext
@@ -325,15 +321,7 @@ def test_materialize_seam_switches_to_reliable_checkpoint(spark, tmp_path):
     old_dir = sc.getCheckpointDir()
     sc.setCheckpointDir(str(tmp_path / "reliable_ckpt"))
     try:
-        # dir set, conf unset → reliable
-        dbg = materialize(df).rdd.toDebugString().decode()
-        assert "ReliableCheckpoint" in dbg
-        # dir set, conf forces local → local
-        spark.conf.set(MODE_CONF, "local")
-        dbg = materialize(df).rdd.toDebugString().decode()
-        assert "LocalCheckpoint" in dbg and "ReliableCheckpoint" not in dbg
-        # conf forces reliable → reliable
-        spark.conf.set(MODE_CONF, "reliable")
+        # dir set → reliable
         dbg = materialize(df).rdd.toDebugString().decode()
         assert "ReliableCheckpoint" in dbg
         # a cuts-backed operator run under reliable mode stays correct
@@ -344,14 +332,7 @@ def test_materialize_seam_switches_to_reliable_checkpoint(spark, tmp_path):
         joined = C.join_cuts(src, cuts, "v")
         assert joined.count() == 500
         assert totals[()][0] == 500
-        # bad mode value fails loudly
-        spark.conf.set(MODE_CONF, "bogus")
-        import pytest
-
-        with pytest.raises(ValueError, match="must be 'local' or 'reliable'"):
-            materialize(df)
     finally:
-        spark.conf.unset(MODE_CONF)
         if old_dir:
             sc.setCheckpointDir(old_dir)
         else:

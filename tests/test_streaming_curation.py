@@ -221,110 +221,6 @@ def test_run_doc_ingest_index_gate_survives_stream_state_loss(spark, tmp_path):
     assert d1 == [(0, 16), (1, 16), (2, 3)]
 
 
-def test_run_doc_ingest_bloom_admission_end_to_end(spark, tmp_path):
-    """run_doc_ingest(admission='bloom'): within-run exact dups are
-    dropped by the Bloom stage (never-evicting bounded state), novel
-    docs flow through the foreachBatch index gate into the corpus with
-    chunk shape intact — the composed pipeline works with the
-    approximate admission swapped in."""
-    in1 = tmp_path / "in1"
-    corpus, idx = str(tmp_path / "corpus"), str(tmp_path / "idx")
-    in1.mkdir()
-    now = time.time()
-
-    _write_docs(
-        str(in1 / "b1.json"),
-        [
-            {"doc_id": "1", "text": GOOD, "ingest_ts": "2025-01-01 10:00:00"},
-            {"doc_id": "2", "text": OTHER, "ingest_ts": "2025-01-01 10:01:00"},
-        ],
-        now - 10,
-    )
-    _write_docs(
-        str(in1 / "b2.json"),
-        [
-            # exact dup of doc 1 in a LATER batch — caught by the bloom
-            # bits recovered from the same run's state
-            {"doc_id": "7", "text": GOOD, "ingest_ts": "2025-01-01 11:00:00"},
-            {
-                "doc_id": "8",
-                "text": OTHER + " fresh unique continuation tokens here",
-                "ingest_ts": "2025-01-01 11:01:00",
-            },
-        ],
-        now,
-    )
-    q = sc.run_doc_ingest(
-        spark, str(in1), corpus, idx, str(tmp_path / "ck_bloom"),
-        chunk_size=16, stride=16, max_files_per_trigger=1,
-        admission="bloom",
-    )
-    q.awaitTermination(120)
-
-    out = spark.read.parquet(corpus)
-    surviving = {r["doc_id"] for r in out.select("doc_id").distinct().collect()}
-    assert surviving == {1, 2, 8}  # 7 dropped by the bloom stage
-    assert spark.read.parquet(idx).count() == 3
-    d1 = sorted(
-        (r["chunk_id"], r["n_tokens"]) for r in out.filter("doc_id = 1").collect()
-    )
-    assert d1 == [(0, 16), (1, 16), (2, 3)]
-
-
-def test_run_doc_ingest_bloom_prefilter_index_gate_cross_run(spark, tmp_path):
-    """run_doc_ingest(index_gate='bloom_prefilter'): the persisted-index
-    gate stays EXACT with the Bloom sidecar routing — a doc re-arriving
-    in a SECOND run (fresh checkpoint, stream state gone) is still
-    rejected by the index, novel docs admit, and the sidecar exists
-    beside the index."""
-    in1, in2 = tmp_path / "pin1", tmp_path / "pin2"
-    corpus, idx = str(tmp_path / "pcorpus"), str(tmp_path / "pidx")
-    in1.mkdir()
-    in2.mkdir()
-    now = time.time()
-
-    _write_docs(
-        str(in1 / "b1.json"),
-        [
-            {"doc_id": "1", "text": GOOD, "ingest_ts": "2025-01-01 10:00:00"},
-            {"doc_id": "2", "text": OTHER, "ingest_ts": "2025-01-01 10:01:00"},
-        ],
-        now - 10,
-    )
-    q = sc.run_doc_ingest(
-        spark, str(in1), corpus, idx, str(tmp_path / "pck1"),
-        chunk_size=16, stride=16, index_gate="bloom_prefilter",
-    )
-    q.awaitTermination(120)
-
-    # run 2: FRESH checkpoint (stream dedup state lost) — only the
-    # persisted index + sidecar can reject the re-arrival of doc 1
-    _write_docs(
-        str(in2 / "b1.json"),
-        [
-            {"doc_id": "9", "text": GOOD, "ingest_ts": "2025-01-02 10:00:00"},
-            {
-                "doc_id": "10",
-                "text": OTHER + " fresh unique continuation tokens here",
-                "ingest_ts": "2025-01-02 10:01:00",
-            },
-        ],
-        now,
-    )
-    q = sc.run_doc_ingest(
-        spark, str(in2), corpus, idx, str(tmp_path / "pck2"),
-        chunk_size=16, stride=16, index_gate="bloom_prefilter",
-    )
-    q.awaitTermination(120)
-
-    out = spark.read.parquet(corpus)
-    surviving = {r["doc_id"] for r in out.select("doc_id").distinct().collect()}
-    assert surviving == {1, 2, 10}  # 9 rejected by the sidecar-gated index
-    assert spark.read.parquet(idx).count() == 3
-    from data_pipeline_example_spark import curation as bc
-    assert spark.read.parquet(bc._bloom_sidecar_path(idx)).count() > 0
-
-
 def test_dedup_image_stream_admits_by_perceptual_hash(spark, tmp_path):
     """Image-modality streaming dedup: a LATER payload with DIFFERENT
     bytes but the same decoded pixels (header whitespace variant) is
