@@ -23,6 +23,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from data_pipeline_example_spark.operators.users import user_key
+
 
 def asof_join_events(
     events: DataFrame,
@@ -157,10 +159,6 @@ def attribution_last_touch(
     the window via a per-row unique key (no shared-NULL partition).
     Output: channel, n_purchases, revenue, share_micro.
     """
-    ukey = F.coalesce(
-        F.col("user_id").cast("string"),
-        F.concat(F.lit("\x00null\x00"), F.col("event_id").cast("string")),
-    )
     is_purchase = (F.col("event_type") == purchase_type).cast("int")
     touch = F.when(
         F.col("event_type") != purchase_type,
@@ -171,7 +169,7 @@ def attribution_last_touch(
         ),
     )
     tagged = events.select(
-        ukey.alias("ukey"),
+        user_key().alias("ukey"),
         "ts",
         "event_id",
         "user_id",

@@ -2728,17 +2728,13 @@ def update_ann_index(
         .select(*cols)
     ).transform(materialize)
     merged = old.unionByName(new_rows.select(*cols))
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            merged.repartition("centroid_id")
-            .write.mode("overwrite")
-            .partitionBy("centroid_id")
-            .parquet(f"{path}/index")
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    (
+        merged.repartition("centroid_id")
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("centroid_id")
+        .parquet(f"{path}/index")
+    )
     return affected
 
 

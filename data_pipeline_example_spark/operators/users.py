@@ -14,6 +14,27 @@ from pyspark.sql import functions as F
 
 from data_pipeline_example_spark.functions.materialize import materialize
 
+NULL_USER_PREFIX = "\x00null\x00"
+
+
+def user_key():
+    """Per-user grouping key with no shared NULL group: ``user_id`` as
+    a string, or ``'\\x00null\\x00' || event_id`` for a NULL user — a
+    per-row unique key, so NULL-user rows are each alone in their
+    partition and the shared-NULL hot key never forms. The batch
+    anchors (:func:`event_debounce`, ``asof.attribution_last_touch``)
+    and their streaming twins group on this one expression."""
+    return F.coalesce(
+        F.col("user_id").cast("string"),
+        F.concat(F.lit(NULL_USER_PREFIX), F.col("event_id").cast("string")),
+    )
+
+
+def is_null_user_key(key) -> bool:
+    """True for a synthetic :func:`user_key` of a NULL user — a key no
+    later row can share, so a stream must persist no state for it."""
+    return str(key).startswith(NULL_USER_PREFIX)
+
 
 def _half_users(
     events: DataFrame, split: str, threshold: float, first: bool
@@ -850,11 +871,7 @@ def event_debounce(events: DataFrame, gap_s: int = 60) -> DataFrame:
     # NULL users get a per-row unique partition key: alone in their
     # window they have no lag predecessor (never dropped), and the
     # shared-NULL hot partition (memory'd skew hazard) never forms.
-    ukey = F.coalesce(
-        F.col("user_id").cast("string"),
-        F.concat(F.lit("\x00null\x00"), F.col("event_id").cast("string")),
-    )
-    w = Window.partitionBy(ukey, "event_type").orderBy("ts", "event_id")
+    w = Window.partitionBy(user_key(), "event_type").orderBy("ts", "event_id")
     prev_ts = F.lag("ts").over(w)
     dropped = (
         F.col("user_id").isNotNull()

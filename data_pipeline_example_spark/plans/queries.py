@@ -2197,6 +2197,13 @@ QUERIES: dict[str, QueryFn] = {
 # the newest changed group (five of them move up from the r9
 # remainder), and the eight most-recently-certified names left in the
 # tail (cluster_representatives_lsh … winnowing_fingerprints) make room.
+# One keyed-state core (same derivation): the two batch anchors whose
+# NULL-user key moved onto the shared ``users.user_key`` join as the
+# newest changed group. No cohort tail is left, so the two most
+# recently certified names of the r15 changed group whose code has not
+# moved since that certification (order_gap_percentiles,
+# embedding_dimension_health — r16 hash, latest registry positions)
+# make room.
 _R15_FRONT = [
     # new r15
     "unicode_clean",
@@ -2205,8 +2212,7 @@ _R15_FRONT = [
     "window_summary_stats", "revenue_rollup", "returns_cube",
     "quantize_embeddings", "embedding_profile", "day_over_day_revenue",
     "event_volume_changepoint", "corpus_funnel",
-    "embedding_dimension_health", "packed_block_audit",
-    "order_gap_percentiles", "ivfpq_knn_index_batch",
+    "packed_block_audit", "ivfpq_knn_index_batch",
     # changed by the ANN retrieval-core rewrite
     "ivf_knn", "ivf_knn_batch", "filtered_ivf_knn", "ivfpq_knn",
     "ivfpq_knn_batch", "ivfpq_recall", "retrieval_quality",
@@ -2224,6 +2230,8 @@ _R15_FRONT = [
     "gopher_repetition", "event_markov_transitions",
     # changed by the option census (extract_features' UDF body)
     "media_features",
+    # changed by the one keyed-state core (the shared NULL-user key)
+    "attribution_last_touch", "event_debounce",
 ]
 assert len(_R15_FRONT) == 50 and all(n in QUERIES for n in _R15_FRONT), (
     "window rotation list must name 50 registered queries"

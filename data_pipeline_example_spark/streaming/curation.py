@@ -32,10 +32,12 @@ from pyspark.sql.types import (
 
 from data_pipeline_example_spark.functions import text as T
 from data_pipeline_example_spark.operators import text
+from data_pipeline_example_spark.streaming.job import keyed_state, read_json_stream
 
-# landing-zone contract mirrors streaming/job.py's EVENT_SCHEMA
-# philosophy: every field arrives as a nullable string, typing happens
-# in the decode step (schema drift tolerance)
+# landing-zone contracts, each read by ``read_json_stream``; they
+# mirror streaming/job.py's EVENT_SCHEMA philosophy: fields arrive as
+# nullable strings, typing happens in the decode step (schema drift
+# tolerance)
 DOC_SCHEMA = StructType(
     [
         StructField("doc_id", StringType()),
@@ -43,17 +45,6 @@ DOC_SCHEMA = StructType(
         StructField("ingest_ts", StringType()),
     ]
 )
-
-
-def read_doc_stream(
-    spark: SparkSession, path: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
-    """JSON-lines landing directory → raw document stream (the Kafka
-    twin is `job.read_stream("kafka")` + `from_json(DOC_SCHEMA)`)."""
-    reader = spark.readStream.schema(DOC_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.json(path)
 
 
 def decode_doc_stream(raw: DataFrame) -> DataFrame:
@@ -135,17 +126,6 @@ EMB_SCHEMA = StructType(
 )
 
 
-def read_embedding_stream(
-    spark: SparkSession, path: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
-    """JSON-lines landing directory → raw embedding stream (the Kafka
-    twin decodes the same schema out of the message value)."""
-    reader = spark.readStream.schema(EMB_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.json(path)
-
-
 def decode_embedding_stream(raw: DataFrame) -> DataFrame:
     """Typed embedding stream: vec_id long, embedding array<float>,
     ingest_ts timestamp (event time for the dedup watermark)."""
@@ -213,11 +193,12 @@ def run_doc_ingest(
     chunk_size: int = 64,
     stride: int = 48,
     max_files_per_trigger: int | None = None,
-    available_now: bool = True,
 ):
     """The wired lambda pipeline: landing zone → quality gate →
     watermarked in-horizon dedup → **foreachBatch** {persistent
-    fingerprint-index gate → chunk fan-out → corpus append}.
+    fingerprint-index gate → chunk fan-out → corpus append}, run with
+    an ``availableNow`` trigger: each run drains the landing zone's
+    pending files, then stops.
 
     The stream's ``dropDuplicatesWithinWatermark`` state catches
     duplicates inside the horizon; ``curation.update_dedup_index``
@@ -236,7 +217,7 @@ def run_doc_ingest(
     from data_pipeline_example_spark import curation as batch_curation
 
     docs = decode_doc_stream(
-        read_doc_stream(spark, input_path, max_files_per_trigger)
+        read_json_stream(spark, input_path, DOC_SCHEMA, max_files_per_trigger)
     )
     admitted_stream = gate_and_dedup(docs, min_quality, min_tokens, watermark)
 
@@ -258,14 +239,13 @@ def run_doc_ingest(
         )
         chunks.write.mode("append").parquet(corpus_path)
 
-    writer = (
+    return (
         admitted_stream.writeStream.foreachBatch(_sink)
         .option("checkpointLocation", checkpoint)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 # media landing-zone contract: id + base64 payload + event time (JSON
@@ -277,16 +257,6 @@ MEDIA_STREAM_SCHEMA = StructType(
         StructField("ingest_ts", StringType()),
     ]
 )
-
-
-def read_media_stream(
-    spark: SparkSession, path: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
-    """JSON-lines landing directory → raw media stream."""
-    reader = spark.readStream.schema(MEDIA_STREAM_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.json(path)
 
 
 def decode_media_stream(raw: DataFrame) -> DataFrame:
@@ -615,11 +585,6 @@ def bloom_admission_stream(
 
     Output stream (update mode): doc_id, fingerprint, admitted (int).
     """
-    import pandas as pd  # local import: worker-side dependency
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import BinaryType, IntegerType, LongType
-
     if m_bits % (n_buckets * 8):
         raise ValueError(
             f"m_bits must be whole bytes per bucket: {m_bits} % ({n_buckets} * 8) != 0"
@@ -657,44 +622,29 @@ def bloom_admission_stream(
         .withColumn("pos", pos)
     )
 
-    out_schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("fingerprint", StringType()),
-            StructField("admitted", IntegerType()),
-        ]
-    )
-    state_schema = StructType([StructField("bits", BinaryType())])
-
-    def update(key: tuple, pdfs, state: GroupState):
-        bits = (
-            bytearray(state.get[0]) if state.exists else bytearray(m_local // 8)
-        )
-        pdf = pd.concat(list(pdfs)).sort_values("doc_id")
+    def step(key, state, rows):
+        bits = bytearray(state[0]) if state else bytearray(m_local // 8)
         admitted = []
-        for plist in pdf["pos"]:
+        for plist in rows["pos"]:
             seen = all(bits[p // 8] & (1 << (p % 8)) for p in plist)
             if not seen:
                 for p in plist:
                     bits[p // 8] |= 1 << (p % 8)
             admitted.append(0 if seen else 1)
-        state.update((bytes(bits),))
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"].astype("int64"),
-                "fingerprint": pdf["fingerprint"].astype("object"),
-                "admitted": pd.Series(admitted, dtype="int32", index=pdf.index),
-            }
-        )
+        out = {
+            "doc_id": rows["doc_id"].astype("int64"),
+            "fingerprint": rows["fingerprint"],
+            "admitted": admitted,
+        }
+        return (bytes(bits),), out
 
-    return typed.groupBy("bucket").applyInPandasWithState(
-        update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
+    return keyed_state(
+        typed, ["bucket"], ["doc_id"],
+        "doc_id long, fingerprint string, admitted int", "bits binary", step,
     )
 
 
-def budget_admission_stream(
-    docs: DataFrame, budget: int = 800, state_ttl_ms: int | None = None
-) -> DataFrame:
+def budget_admission_stream(docs: DataFrame, budget: int = 800) -> DataFrame:
     """Streaming per-source TOKEN-budget admission — the online twin of
     batch ``text.token_budget_caps``: a greedy quota keyed on source.
     State is ONE long per source (tokens admitted so far); an arriving
@@ -708,23 +658,14 @@ def budget_admission_stream(
     aggregations — a stop-and-restart from the same checkpoint resumes
     each source's spent total (asserted by restart test).
 
-    State is O(#sources) — NoTimeout (the default) is safe for bounded
-    source vocabularies. For OPEN source domains pass ``state_ttl_ms``:
-    a source idle longer than the TTL has its quota entry dropped via a
-    ProcessingTimeTimeout (its budget resets on next arrival —
-    admission becomes per-activity-epoch, the standard quota-TTL
-    semantics), which bounds state to sources active within the TTL
-    horizon.
+    State is O(#sources) and never expires: a source's quota is spent
+    for the life of the query, which suits the bounded source
+    vocabularies this op is keyed on.
 
     Input: a decoded doc stream with doc_id, text and (optionally)
     source columns. Output stream (update mode): doc_id, source,
     n_tokens, admitted (int).
     """
-    import pandas as pd  # local import: worker-side dependency
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import IntegerType, LongType
-
     cols = docs.columns
     src = (
         F.coalesce(F.col("source"), F.lit("unknown"))
@@ -736,55 +677,26 @@ def budget_admission_stream(
         src.cast("string").alias("source"),
         T.token_count(F.col("text")).cast("long").alias("n_tokens"),
     )
-    out_schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("source", StringType()),
-            StructField("n_tokens", LongType()),
-            StructField("admitted", IntegerType()),
-        ]
-    )
-    state_schema = StructType([StructField("used", LongType())])
-
-    def update(key: tuple, pdfs, state: GroupState):
-        if state_ttl_ms is not None and state.hasTimedOut:
-            state.remove()
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series([], dtype="int64"),
-                    "source": pd.Series([], dtype="object"),
-                    "n_tokens": pd.Series([], dtype="int64"),
-                    "admitted": pd.Series([], dtype="int64"),
-                }
-            )
-            return
-        used = int(state.get[0]) if state.exists else 0
-        pdf = pd.concat(list(pdfs)).sort_values("doc_id")
+    def step(key, state, rows):
+        (used,) = state or (0,)
         admitted = []
-        for nt in pdf["n_tokens"]:
+        for nt in rows["n_tokens"]:
             ok = used + int(nt) <= budget
             if ok:
                 used += int(nt)
             admitted.append(1 if ok else 0)
-        state.update((used,))
-        if state_ttl_ms is not None:
-            state.setTimeoutDuration(state_ttl_ms)
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"].astype("int64"),
-                "source": key[0],
-                "n_tokens": pdf["n_tokens"].astype("int64"),
-                "admitted": admitted,
-            }
-        )
+        out = {
+            "doc_id": rows["doc_id"].astype("int64"),
+            "source": key[0],
+            "n_tokens": rows["n_tokens"].astype("int64"),
+            "admitted": admitted,
+        }
+        return (used,), out
 
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if state_ttl_ms is not None
-        else GroupStateTimeout.NoTimeout
-    )
-    return typed.groupBy("source").applyInPandasWithState(
-        update, out_schema, state_schema, "update", timeout
+    return keyed_state(
+        typed, ["source"], ["doc_id"],
+        "doc_id long, source string, n_tokens long, admitted int", "used long",
+        step,
     )
 
 
@@ -814,11 +726,6 @@ def countmin_stream(
     mode), one row per sketch row per batch: i, mass (total
     increments absorbed so far), nonzero_cells, max_cell, cells.
     """
-    import pandas as pd  # local import: worker-side dependency
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import ArrayType, IntegerType, LongType
-
     terms = docs.select(
         F.explode(T.tokens(F.lower(F.col("text")))).alias("term")
     )
@@ -851,41 +758,21 @@ def countmin_stream(
         ).alias("rb")
     ).select(F.col("rb.i").alias("i"), F.col("rb.bucket").alias("bucket"))
 
-    out_schema = StructType(
-        [
-            StructField("i", IntegerType()),
-            StructField("mass", LongType()),
-            StructField("nonzero_cells", IntegerType()),
-            StructField("max_cell", LongType()),
-            StructField("cells", ArrayType(LongType())),
-        ]
-    )
-    state_schema = StructType(
-        [StructField("cells", ArrayType(LongType()))]
-    )
+    def step(key, state, rows):
+        cells = list(state[0]) if state else [0] * width
+        for b, c in rows["bucket"].value_counts().items():
+            cells[int(b)] += int(c)
+        out = {
+            "i": [key[0]],
+            "mass": [sum(cells)],
+            "nonzero_cells": [sum(1 for c in cells if c > 0)],
+            "max_cell": [max(cells)],
+            "cells": [cells],
+        }
+        return (cells,), out
 
-    def update(key: tuple, pdfs, state: GroupState):
-        cells = list(state.get[0]) if state.exists else [0] * width
-        for pdf in pdfs:
-            for b, c in pdf["bucket"].value_counts().items():
-                cells[int(b)] += int(c)
-        state.update((cells,))
-        yield pd.DataFrame(
-            {
-                "i": pd.Series([key[0]], dtype="int32"),
-                "mass": pd.Series([sum(cells)], dtype="int64"),
-                "nonzero_cells": pd.Series(
-                    [sum(1 for c in cells if c > 0)], dtype="int32"
-                ),
-                "max_cell": pd.Series([max(cells)], dtype="int64"),
-                "cells": [cells],
-            }
-        )
-
-    return incs.groupBy("i").applyInPandasWithState(
-        update,
-        out_schema,
-        state_schema,
-        "update",
-        GroupStateTimeout.NoTimeout,
+    return keyed_state(
+        incs, ["i"], [],
+        "i int, mass long, nonzero_cells int, max_cell long, cells array<long>",
+        "cells array<long>", step,
     )

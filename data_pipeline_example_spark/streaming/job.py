@@ -33,6 +33,11 @@ from data_pipeline_example_spark.conform import STREAMING_SPEC, conform
 from data_pipeline_example_spark.functions.materialize import (
     materialize as _materialize,
 )
+from data_pipeline_example_spark.operators.users import (
+    _hll_params,
+    is_null_user_key,
+    user_key,
+)
 
 # streaming_sales_aggregator.py:187-200 — every field a nullable string
 EVENT_FIELDS = (
@@ -71,6 +76,24 @@ def kafka_reader_options(
     }
 
 
+def read_json_stream(
+    spark: SparkSession,
+    path: str,
+    schema: StructType,
+    max_files_per_trigger: int | None = None,
+) -> DataFrame:
+    """A JSON-lines landing directory read as a stream with ``schema``
+    applied — the one file-source reader for the order events
+    (:data:`EVENT_SCHEMA`) and the curation landing zones
+    (``streaming.curation`` DOC/EMB/MEDIA schemas). Unknown keys are
+    dropped, missing keys read NULL; ``max_files_per_trigger`` caps the
+    files per micro-batch (one file per batch orders hermetic tests)."""
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return reader.json(path)
+
+
 def read_stream(
     spark: SparkSession,
     source: str = "kafka",
@@ -90,10 +113,7 @@ def read_stream(
         )
         return reader.load()
     if source == "json":
-        reader = spark.readStream.schema(EVENT_SCHEMA)
-        if max_files_per_trigger:
-            reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-        return reader.json(path)
+        return read_json_stream(spark, path, EVENT_SCHEMA, max_files_per_trigger)
     raise ValueError(f"unknown stream source {source!r}")
 
 
@@ -139,11 +159,11 @@ def write_stream(
     path: str,
     checkpoint: str,
     *,
-    trigger_interval: str | None = "30 seconds",
     available_now: bool = False,
 ) -> StreamingQuery:
     """K4 — append-mode parquet sink with checkpoint
-    (`streaming_sales_aggregator.py:333-349`). ``available_now=True``
+    (`streaming_sales_aggregator.py:333-349`), triggered every 30 s
+    (the reference's processing-time trigger). ``available_now=True``
     drains all pending input then stops (test/backfill mode)."""
     writer = (
         df.writeStream.format("parquet")
@@ -152,10 +172,8 @@ def write_stream(
         .option("checkpointLocation", checkpoint)
     )
     if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_interval:
-        writer = writer.trigger(processingTime=trigger_interval)
-    return writer.start()
+        return writer.trigger(availableNow=True).start()
+    return writer.trigger(processingTime="30 seconds").start()
 
 
 def run_pipeline(
@@ -178,20 +196,17 @@ def run_pipeline(
     )
 
 
-def dedup_stream(
-    df: DataFrame,
-    keys: list[str] | None = None,
-    watermark: str = "15 minutes",
-) -> DataFrame:
+def dedup_stream(df: DataFrame, watermark: str = "15 minutes") -> DataFrame:
     """T8 extension — streaming deduplication with bounded state.
 
-    ``dropDuplicatesWithinWatermark`` keeps one row per key and evicts
-    state once the watermark passes, so state size is O(keys per
-    watermark horizon) instead of O(all keys ever) — the only safe shape
-    for an unbounded stream. Default key: (product, order_ts).
+    ``dropDuplicatesWithinWatermark`` keeps one row per
+    (product, order_ts) and evicts state once the watermark passes, so
+    state size is O(keys per watermark horizon) instead of O(all keys
+    ever) — the only safe shape for an unbounded stream.
     """
-    keys = keys or ["product", "order_ts"]
-    return df.withWatermark("order_ts", watermark).dropDuplicatesWithinWatermark(keys)
+    return df.withWatermark("order_ts", watermark).dropDuplicatesWithinWatermark(
+        ["product", "order_ts"]
+    )
 
 
 def session_aggregations(
@@ -216,47 +231,74 @@ def session_aggregations(
     )
 
 
+def keyed_state(
+    staged: DataFrame,
+    keys: list[str],
+    order: list[str],
+    out_ddl: str,
+    state_ddl: str,
+    step,
+) -> DataFrame:
+    """The one custom-state core (``applyInPandasWithState``) behind
+    every stateful stream twin — the escape hatch for semantics a
+    windowed aggregation can't express.
+
+    Per key and micro-batch it concatenates the key's rows of
+    ``staged``, stable-sorts them by ``order`` (empty keeps arrival
+    order) and calls ``step(key, state, rows)`` with the restored state
+    tuple (None for a key never seen). ``step`` returns ``(new_state,
+    out_columns)``: ``new_state`` None persists nothing — how a
+    per-row synthetic :func:`operators.users.user_key` never leaks a
+    state entry — and ``out_columns`` maps the ``out_ddl`` fields to
+    column values (update output mode).
+
+    The state store checkpoints exactly like a built-in aggregation's,
+    so a stop-and-restart from the same checkpoint resumes every key.
+    There is no timeout: state lives as long as its key, so a twin over
+    an open key space (users, sources) holds O(#keys) state.
+    """
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    def update(key: tuple, pdfs, state):
+        import pandas as pd  # local import: worker-side dependency
+
+        rows = pd.concat(list(pdfs), ignore_index=True)
+        if order:
+            rows = rows.sort_values(order, kind="mergesort", ignore_index=True)
+        new_state, out = step(key, tuple(state.get) if state.exists else None, rows)
+        if new_state is not None:
+            state.update(new_state)
+        yield pd.DataFrame(out)
+
+    return staged.groupBy(*keys).applyInPandasWithState(
+        update, out_ddl, state_ddl, "update", GroupStateTimeout.NoTimeout
+    )
+
+
 def running_product_totals(df: DataFrame) -> DataFrame:
-    """Custom stateful operator via ``applyInPandasWithState`` — the
-    escape hatch for semantics windowed aggregation can't express
-    (cumulative, never-closing totals emitted every micro-batch).
+    """Cumulative, never-closing per-product totals emitted every
+    micro-batch — the :func:`keyed_state` twin of the windowed revenue.
 
     State: one double per product. Each micro-batch updates the running
-    total and emits (product, total, batch_rows). Arrow-batched; state
-    store checkpointed exactly like built-in aggregations — a
-    stop-and-restart from the same checkpoint resumes the totals
-    (asserted by restart test). NoTimeout: totals are cumulative
-    forever (state is O(#products), which is small by definition here —
-    for unbounded key spaces use the ``state_ttl_ms`` pattern of
-    ``streaming.curation.budget_admission_stream``).
+    total and emits (product, total, batch_rows); a stop-and-restart
+    from the same checkpoint resumes the totals (asserted by restart
+    test). State is O(#products), small by definition here; the twins
+    keyed on an open domain (:func:`attribution_stream`,
+    :func:`debounce_stream`, :func:`funnel_stream`,
+    :func:`markov_transition_stream` per user,
+    ``streaming.curation.budget_admission_stream`` per source) hold
+    O(#keys) state for as long as the query runs.
     """
-    import pandas as pd  # local import: worker-side dependency
 
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import DoubleType, LongType
+    def step(key, state, rows):
+        (total,) = state or (0.0,)
+        total += float(rows["line_amount"].fillna(0.0).sum())
+        out = {"product": [key[0]], "total": [round(total, 2)], "batch_rows": [len(rows)]}
+        return (total,), out
 
-    out_schema = StructType(
-        [
-            StructField("product", StringType()),
-            StructField("total", DoubleType()),
-            StructField("batch_rows", LongType()),
-        ]
-    )
-    state_schema = StructType([StructField("total", DoubleType())])
-
-    def update(key: tuple, pdfs, state: GroupState):
-        total = state.get[0] if state.exists else 0.0
-        n = 0
-        for pdf in pdfs:
-            total += float(pdf["line_amount"].fillna(0.0).sum())
-            n += len(pdf)
-        state.update((total,))
-        yield pd.DataFrame(
-            {"product": [key[0]], "total": [round(total, 2)], "batch_rows": [n]}
-        )
-
-    return df.groupBy("product").applyInPandasWithState(
-        update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
+    return keyed_state(
+        df, ["product"], [], "product string, total double, batch_rows long",
+        "total double", step,
     )
 
 
@@ -264,7 +306,6 @@ def attribution_stream(
     events: DataFrame,
     purchase_type: str = "purchase",
     lookback_s: int = 7 * 86400,
-    state_ttl_ms: int | None = None,
 ) -> DataFrame:
     """T8 extension — STREAMING last-touch attribution, the continuous
     twin of batch :func:`operators.asof.attribution_last_touch` (the
@@ -287,34 +328,20 @@ def attribution_stream(
     is attribution the batch op can see but a stream, by definition,
     cannot.
 
-    NULL-user purchases get a per-row unique key (the batch op's
-    no-shared-NULL-partition rule) so they emit ``unattributed``
+    NULL-user purchases get the batch op's per-row unique
+    :func:`operators.users.user_key` so they emit ``unattributed``
     without ever creating shared state — and synthetic keys NEVER
     persist state at all (a per-row-unique key can never be read
-    again, so a ``state.update`` for it would be a permanent leak in
-    the state store under null-user traffic). For unbounded user
-    domains
-    pass ``state_ttl_ms`` — an idle user's touch is dropped by a
-    ProcessingTimeTimeout; since any touch older than ``lookback_s``
-    can never win, a TTL at or above the lookback horizon changes
-    nothing semantically while bounding state to active users.
+    again, so storing it would be a permanent leak in the state store
+    under null-user traffic).
 
     Exactness: purchase values are 2-dp-rounded to integer CENTS
     (the batch op's discipline); channel rollups downstream stay
     integer-exact. Output stream (update mode): purchase_id, user_id,
     channel, cents.
     """
-    import pandas as pd  # local import: worker-side dependency
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import LongType
-
-    ukey = F.coalesce(
-        F.col("user_id").cast("string"),
-        F.concat(F.lit("\x00null\x00"), F.col("event_id").cast("string")),
-    )
     typed = events.select(
-        ukey.alias("ukey"),
+        user_key().alias("ukey"),
         F.col("event_id").cast("long").alias("event_id"),
         F.col("user_id").cast("long").alias("user_id"),
         F.col("event_type").cast("string").alias("event_type"),
@@ -323,42 +350,14 @@ def attribution_stream(
         (F.col("event_type") == purchase_type).cast("int").alias("is_purchase"),
         F.round(F.round(F.col("value"), 2) * 100, 0).cast("long").alias("cents"),
     )
-    out_schema = StructType(
-        [
-            StructField("purchase_id", LongType()),
-            StructField("user_id", LongType()),
-            StructField("channel", StringType()),
-            StructField("cents", LongType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("t_sec", LongType()),
-            StructField("t_id", LongType()),
-            StructField("t_type", StringType()),
-        ]
-    )
 
-    def update(key: tuple, pdfs, state: GroupState):
-        if state_ttl_ms is not None and state.hasTimedOut:
-            state.remove()
-            yield pd.DataFrame(
-                {
-                    "purchase_id": pd.Series([], dtype="int64"),
-                    "user_id": pd.Series([], dtype="float64"),
-                    "channel": pd.Series([], dtype="object"),
-                    "cents": pd.Series([], dtype="int64"),
-                }
-            )
-            return
-        touch = tuple(state.get) if state.exists else None
-        pdf = pd.concat(list(pdfs)).sort_values(
-            ["ts", "is_purchase", "event_id"], kind="mergesort"
-        )
+    def step(key, touch, rows):
+        import pandas as pd  # local import: worker-side dependency
+
         out: dict[str, list] = {
             "purchase_id": [], "user_id": [], "channel": [], "cents": []
         }
-        for row in pdf.itertuples(index=False):
+        for row in rows.itertuples(index=False):
             if row.is_purchase:
                 within = (
                     touch is not None
@@ -372,30 +371,16 @@ def attribution_stream(
                 out["cents"].append(0 if pd.isna(row.cents) else int(row.cents))
             else:
                 touch = (int(row.sec), int(row.event_id), str(row.event_type))
-        # A synthetic per-row null-user key is never grouped with a
-        # later row, so persisting its touch would leak one state-store
-        # entry per null-user event forever. Only real users keep state.
-        if touch is not None and not str(key[0]).startswith("\x00null\x00"):
-            state.update(touch)
-            if state_ttl_ms is not None:
-                state.setTimeoutDuration(state_ttl_ms)
-        yield pd.DataFrame(out)
+        return (None if is_null_user_key(key[0]) else touch), out
 
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if state_ttl_ms is not None
-        else GroupStateTimeout.NoTimeout
-    )
-    return typed.groupBy("ukey").applyInPandasWithState(
-        update, out_schema, state_schema, "update", timeout
+    return keyed_state(
+        typed, ["ukey"], ["ts", "is_purchase", "event_id"],
+        "purchase_id long, user_id long, channel string, cents long",
+        "t_sec long, t_id long, t_type string", step,
     )
 
 
-def debounce_stream(
-    events: DataFrame,
-    gap_s: int = 60,
-    state_ttl_ms: int | None = None,
-) -> DataFrame:
+def debounce_stream(events: DataFrame, gap_s: int = 60) -> DataFrame:
     """T8 extension — STREAMING rapid-repeat suppression, the
     continuous twin of batch
     :func:`operators.users.event_debounce` (the oracle anchor): an
@@ -408,29 +393,17 @@ def debounce_stream(
     second. Rows process in the batch window order ``(ts, event_id)``
     within each micro-batch; cross-batch the stream assumes per-user
     event-time-ordered arrival (the :func:`attribution_stream`
-    contract). NULL-user events get a per-row unique key: alone in
-    their group they have no predecessor, are never dropped, the
-    shared-NULL hot key never forms, and NO state is persisted for
-    them (a per-row-unique key is never read again — storing it would
-    leak one state entry per null-user event). A ``state_ttl_ms`` at
-    or above
-    ``gap_s`` × 1000 bounds state to active (user, type) pairs with
-    unchanged semantics — an entry older than the gap can never
-    suppress anything.
+    contract). NULL-user events get the batch op's per-row unique
+    :func:`operators.users.user_key`: alone in their group they have
+    no predecessor, are never dropped, the shared-NULL hot key never
+    forms, and NO state is persisted for them (a per-row-unique key is
+    never read again — storing it would leak one state entry per
+    null-user event).
 
     Output stream (update mode): event_id, user_id, event_type, kept.
     """
-    import pandas as pd  # local import: worker-side dependency
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import IntegerType, LongType
-
-    ukey = F.coalesce(
-        F.col("user_id").cast("string"),
-        F.concat(F.lit("\x00null\x00"), F.col("event_id").cast("string")),
-    )
     typed = events.select(
-        ukey.alias("ukey"),
+        user_key().alias("ukey"),
         F.col("event_type").cast("string").alias("event_type"),
         F.col("event_id").cast("long").alias("event_id"),
         F.col("user_id").cast("long").alias("user_id"),
@@ -438,36 +411,15 @@ def debounce_stream(
         F.unix_timestamp(F.col("ts").cast("timestamp")).alias("sec"),
         F.col("user_id").isNotNull().alias("has_user"),
     )
-    out_schema = StructType(
-        [
-            StructField("event_id", LongType()),
-            StructField("user_id", LongType()),
-            StructField("event_type", StringType()),
-            StructField("kept", IntegerType()),
-        ]
-    )
-    state_schema = StructType([StructField("last_sec", LongType())])
 
-    def update(key: tuple, pdfs, state: GroupState):
-        if state_ttl_ms is not None and state.hasTimedOut:
-            state.remove()
-            yield pd.DataFrame(
-                {
-                    "event_id": pd.Series([], dtype="int64"),
-                    "user_id": pd.Series([], dtype="int64"),
-                    "event_type": pd.Series([], dtype="object"),
-                    "kept": pd.Series([], dtype="int64"),
-                }
-            )
-            return
-        last = int(state.get[0]) if state.exists else None
-        pdf = pd.concat(list(pdfs)).sort_values(
-            ["ts", "event_id"], kind="mergesort"
-        )
+    def step(key, state, rows):
+        import pandas as pd  # local import: worker-side dependency
+
+        last = int(state[0]) if state else None
         out: dict[str, list] = {
             "event_id": [], "user_id": [], "event_type": [], "kept": []
         }
-        for row in pdf.itertuples(index=False):
+        for row in rows.itertuples(index=False):
             dropped = (
                 bool(row.has_user)
                 and last is not None
@@ -480,21 +432,12 @@ def debounce_stream(
             out["event_type"].append(str(row.event_type))
             out["kept"].append(0 if dropped else 1)
             last = int(row.sec)
-        # Synthetic per-row null-user keys never recur — persisting
-        # their timestamp would leak state per null-user event.
-        if last is not None and not str(key[0]).startswith("\x00null\x00"):
-            state.update((last,))
-            if state_ttl_ms is not None:
-                state.setTimeoutDuration(state_ttl_ms)
-        yield pd.DataFrame(out)
+        return (None if is_null_user_key(key[0]) else (last,)), out
 
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if state_ttl_ms is not None
-        else GroupStateTimeout.NoTimeout
-    )
-    return typed.groupBy("ukey", "event_type").applyInPandasWithState(
-        update, out_schema, state_schema, "update", timeout
+    return keyed_state(
+        typed, ["ukey", "event_type"], ["ts", "event_id"],
+        "event_id long, user_id long, event_type string, kept int",
+        "last_sec long", step,
     )
 
 
@@ -505,7 +448,7 @@ def streaks_stream(df: DataFrame) -> DataFrame:
     per-(product, day) aggregate; a stream cannot renumber history, so
     the island structure lives in O(1) state per product instead:
     (last day seen, current run [start/length/cents], best run
-    [length/start/end/cents], active-day and streak counters) — eleven
+    [length/start/end/cents], active-day and streak counters) — ten
     longs, never an event buffer.
 
     Each micro-batch processes a product's rows in ``order_date``
@@ -522,11 +465,6 @@ def streaks_stream(df: DataFrame) -> DataFrame:
     Output stream: product, active_days, n_streaks, longest_streak,
     streak_start (date), streak_end (date), streak_revenue.
     """
-    import pandas as pd  # local import: worker-side dependency
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import DateType, DoubleType, LongType
-
     typed = df.select(
         F.col("product").cast("string").alias("product"),
         F.datediff(
@@ -538,46 +476,17 @@ def streaks_stream(df: DataFrame) -> DataFrame:
         .cast("long")
         .alias("cents"),
     ).filter(F.col("day").isNotNull())
-    out_schema = StructType(
-        [
-            StructField("product", StringType()),
-            StructField("active_days", LongType()),
-            StructField("n_streaks", LongType()),
-            StructField("longest_streak", LongType()),
-            StructField("streak_start", DateType()),
-            StructField("streak_end", DateType()),
-            StructField("streak_revenue", DoubleType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("last_day", LongType()),
-            StructField("cur_start", LongType()),
-            StructField("cur_len", LongType()),
-            StructField("cur_cents", LongType()),
-            StructField("best_len", LongType()),
-            StructField("best_start", LongType()),
-            StructField("best_end", LongType()),
-            StructField("best_cents", LongType()),
-            StructField("active_days", LongType()),
-            StructField("n_streaks", LongType()),
-        ]
-    )
 
-    def update(key: tuple, pdfs, state: GroupState):
+    def step(key, state, rows):
         import datetime as _dt
 
-        if state.exists:
-            (last_day, cur_start, cur_len, cur_cents, best_len, best_start,
-             best_end, best_cents, active_days, n_streaks) = (
-                int(v) for v in state.get
-            )
-        else:
-            last_day = 0
-            cur_start = cur_len = cur_cents = 0
-            best_len, best_start, best_end, best_cents = 0, 0, 0, 0
-            active_days = n_streaks = 0
-        seen = state.exists
+        import pandas as pd  # local import: worker-side dependency
+
+        (last_day, cur_start, cur_len, cur_cents, best_len, best_start,
+         best_end, best_cents, active_days, n_streaks) = (
+            int(v) for v in state or (0,) * 10
+        )
+        seen = state is not None
 
         def fold_best():
             # batch comparator: longer wins; ties prefer EARLIER start.
@@ -592,8 +501,7 @@ def streaks_stream(df: DataFrame) -> DataFrame:
                 best_len, best_start, best_cents = cur_len, cur_start, cur_cents
                 best_end = cur_start + cur_len - 1
 
-        pdf = pd.concat(list(pdfs)).sort_values(["day"], kind="mergesort")
-        for row in pdf.itertuples(index=False):
+        for row in rows.itertuples(index=False):
             day, cents = int(row.day), 0 if pd.isna(row.cents) else int(row.cents)
             if not seen:
                 cur_start, cur_len, cur_cents = day, 1, cents
@@ -612,25 +520,27 @@ def streaks_stream(df: DataFrame) -> DataFrame:
                 n_streaks += 1
             last_day = day
         fold_best()
-        state.update(
-            (last_day, cur_start, cur_len, cur_cents, best_len, best_start,
-             best_end, best_cents, active_days, n_streaks)
-        )
         epoch = _dt.date(1970, 1, 1)
-        yield pd.DataFrame(
-            {
-                "product": [key[0]],
-                "active_days": [active_days],
-                "n_streaks": [n_streaks],
-                "longest_streak": [best_len],
-                "streak_start": [epoch + _dt.timedelta(days=best_start)],
-                "streak_end": [epoch + _dt.timedelta(days=best_end)],
-                "streak_revenue": [round(best_cents / 100.0, 2)],
-            }
-        )
+        out = {
+            "product": [key[0]],
+            "active_days": [active_days],
+            "n_streaks": [n_streaks],
+            "longest_streak": [best_len],
+            "streak_start": [epoch + _dt.timedelta(days=best_start)],
+            "streak_end": [epoch + _dt.timedelta(days=best_end)],
+            "streak_revenue": [round(best_cents / 100.0, 2)],
+        }
+        return (last_day, cur_start, cur_len, cur_cents, best_len, best_start,
+                best_end, best_cents, active_days, n_streaks), out
 
-    return typed.groupBy("product").applyInPandasWithState(
-        update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
+    return keyed_state(
+        typed, ["product"], ["day"],
+        "product string, active_days long, n_streaks long, longest_streak long, "
+        "streak_start date, streak_end date, streak_revenue double",
+        "last_day long, cur_start long, cur_len long, cur_cents long, "
+        "best_len long, best_start long, best_end long, best_cents long, "
+        "active_days long, n_streaks long",
+        step,
     )
 
 
@@ -657,11 +567,6 @@ def funnel_stream(
     counts: ``users(stage i) = #users with depth > i``. Output stream:
     user_id, depth.
     """
-    import pandas as pd  # local import: worker-side dependency
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import LongType
-
     n_stages = len(stages)
     typed = events.select(
         F.col("user_id").cast("long").alias("user_id"),
@@ -670,23 +575,11 @@ def funnel_stream(
         F.col("ts").cast("timestamp").alias("ts"),
         F.unix_micros(F.col("ts").cast("timestamp")).alias("us"),
     ).filter(F.col("user_id").isNotNull() & F.col("ts").isNotNull())
-    out_schema = StructType(
-        [
-            StructField("user_id", LongType()),
-            StructField("depth", LongType()),
-        ]
-    )
-    state_schema = StructType(
-        [StructField(f"t{i}", LongType()) for i in range(n_stages)]
-    )
     stage_idx = {s: i for i, s in enumerate(stages)}
 
-    def update(key: tuple, pdfs, state: GroupState):
-        ts = list(state.get) if state.exists else [None] * n_stages
-        pdf = pd.concat(list(pdfs)).sort_values(
-            ["ts", "event_id"], kind="mergesort"
-        )
-        for row in pdf.itertuples(index=False):
+    def step(key, state, rows):
+        ts = list(state or (None,) * n_stages)
+        for row in rows.itertuples(index=False):
             i = stage_idx.get(str(row.event_type))
             if i is None or ts[i] is not None:
                 continue
@@ -694,16 +587,12 @@ def funnel_stream(
                 ts[0] = int(row.us)
             elif ts[i - 1] is not None and int(row.us) > ts[i - 1]:
                 ts[i] = int(row.us)
-        state.update(tuple(ts))
-        depth = 0
-        for t in ts:
-            if t is None:
-                break
-            depth += 1
-        yield pd.DataFrame({"user_id": [int(key[0])], "depth": [depth]})
+        depth = next((i for i, t in enumerate(ts) if t is None), n_stages)
+        return tuple(ts), {"user_id": [int(key[0])], "depth": [depth]}
 
-    return typed.groupBy("user_id").applyInPandasWithState(
-        update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
+    return keyed_state(
+        typed, ["user_id"], ["ts", "event_id"], "user_id long, depth long",
+        ", ".join(f"t{i} long" for i in range(n_stages)), step,
     )
 
 
@@ -732,13 +621,6 @@ def hll_cardinality_stream(df: DataFrame, p_bits: int = 6) -> DataFrame:
     array. Emits per key per micro-batch: event_type, n_buckets_hit,
     hll_estimate_milli (integer milli, exact arithmetic).
     """
-    import pandas as pd  # local import: worker-side dependency
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import ArrayType, LongType
-
-    from ..operators.users import _hll_params
-
     m, w, alpha_milli = _hll_params(p_bits)
     numer = alpha_milli * m * m * (1 << (w + 1))
 
@@ -764,17 +646,8 @@ def hll_cardinality_stream(df: DataFrame, p_bits: int = 6) -> DataFrame:
         )
     )
 
-    out_schema = StructType(
-        [
-            StructField("event_type", StringType()),
-            StructField("n_buckets_hit", LongType()),
-            StructField("hll_estimate_milli", LongType()),
-        ]
-    )
-    state_schema = StructType([StructField("regs", ArrayType(LongType()))])
-
-    def update(key: tuple, pdfs, state: GroupState):
-        regs = list(state.get[0]) if state.exists else [0] * m
+    def step(key, state, rows):
+        regs = list(state[0]) if state else [0] * m
         if len(regs) != m:
             # The state format is a function of p_bits (m = 2^p_bits
             # registers). Resuming a checkpoint written with a
@@ -788,28 +661,24 @@ def hll_cardinality_stream(df: DataFrame, p_bits: int = 6) -> DataFrame:
                 "the query with a FRESH checkpoint location when "
                 "changing p_bits"
             )
-        for pdf in pdfs:
-            for b, r in (
-                pdf.groupby("bucket")["rho"].max().items()
-            ):
-                b = int(b)
-                if r > regs[b]:
-                    regs[b] = int(r)
-        state.update((regs,))
+        for b, r in rows.groupby("bucket")["rho"].max().items():
+            if r > regs[int(b)]:
+                regs[int(b)] = int(r)
         hit = sum(1 for r in regs if r > 0)
         s_total = sum(1 << (w + 1 - r) for r in regs if r > 0) + (m - hit) * (
             1 << (w + 1)
         )
-        yield pd.DataFrame(
-            {
-                "event_type": [key[0]],
-                "n_buckets_hit": [hit],
-                "hll_estimate_milli": [numer // s_total],
-            }
-        )
+        out = {
+            "event_type": [key[0]],
+            "n_buckets_hit": [hit],
+            "hll_estimate_milli": [numer // s_total],
+        }
+        return (regs,), out
 
-    return staged.groupBy("event_type").applyInPandasWithState(
-        update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
+    return keyed_state(
+        staged, ["event_type"], [],
+        "event_type string, n_buckets_hit long, hll_estimate_milli long",
+        "regs array<long>", step,
     )
 
 
@@ -834,11 +703,6 @@ def markov_transition_stream(df: DataFrame) -> DataFrame:
 
     Emits one row per transition: user_id, prev_event, next_event.
     """
-    import pandas as pd  # local import: worker-side dependency
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import LongType
-
     staged = df.filter(F.col("user_id").isNotNull()).select(
         F.col("user_id").cast("long").alias("user_id"),
         (F.col("ts").cast("double") * 1_000_000).cast("long").alias("ts_us"),
@@ -846,47 +710,24 @@ def markov_transition_stream(df: DataFrame) -> DataFrame:
         F.col("event_type").cast("string").alias("event_type"),
     )
 
-    out_schema = StructType(
-        [
-            StructField("user_id", LongType()),
-            StructField("prev_event", StringType()),
-            StructField("next_event", StringType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("ts_us", LongType()),
-            StructField("event_id", LongType()),
-            StructField("event_type", StringType()),
-        ]
-    )
-
-    def update(key: tuple, pdfs, state: GroupState):
-        prev = tuple(state.get) if state.exists else None
+    def step(key, prev, rows):
         out_prev, out_next = [], []
-        rows = []
-        for pdf in pdfs:
-            rows.extend(
-                pdf[["ts_us", "event_id", "event_type"]].itertuples(index=False)
-            )
-        rows.sort(key=lambda r: (r.ts_us, r.event_id))
-        for r in rows:
+        for r in rows.itertuples(index=False):
             if prev is not None:
                 out_prev.append(prev[2])
                 out_next.append(r.event_type)
             prev = (int(r.ts_us), int(r.event_id), str(r.event_type))
-        if prev is not None:
-            state.update(prev)
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]] * len(out_prev),
-                "prev_event": out_prev,
-                "next_event": out_next,
-            }
-        )
+        out = {
+            "user_id": [key[0]] * len(out_prev),
+            "prev_event": out_prev,
+            "next_event": out_next,
+        }
+        return prev, out
 
-    return staged.groupBy("user_id").applyInPandasWithState(
-        update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
+    return keyed_state(
+        staged, ["user_id"], ["ts_us", "event_id"],
+        "user_id long, prev_event string, next_event string",
+        "ts_us long, event_id long, event_type string", step,
     )
 
 
@@ -915,11 +756,6 @@ def cusum_alert_stream(
     post-batch accumulator), n_alerts (alerts fired THIS batch),
     last_alert_event_id (0 when none yet).
     """
-    import pandas as pd  # local import: worker-side dependency
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import LongType
-
     staged = df.select(
         F.col("event_type").cast("string").alias("event_type"),
         (F.col("ts").cast("double") * 1_000_000).cast("long").alias("ts_us"),
@@ -929,52 +765,27 @@ def cusum_alert_stream(
         .alias("v_micro"),
     )
 
-    out_schema = StructType(
-        [
-            StructField("event_type", StringType()),
-            StructField("s_micro", LongType()),
-            StructField("n_alerts", LongType()),
-            StructField("last_alert_event_id", LongType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("s_micro", LongType()),
-            StructField("last_alert_event_id", LongType()),
-        ]
-    )
-
-    def update(key: tuple, pdfs, state: GroupState):
-        s, last_alert = (
-            (int(state.get[0]), int(state.get[1]))
-            if state.exists
-            else (0, 0)
-        )
-        rows = []
-        for pdf in pdfs:
-            rows.extend(
-                pdf[["ts_us", "event_id", "v_micro"]].itertuples(index=False)
-            )
-        rows.sort(key=lambda r: (r.ts_us, r.event_id))
+    def step(key, state, rows):
+        s, last_alert = (int(v) for v in state or (0, 0))
         n_alerts = 0
-        for r in rows:
+        for r in rows.itertuples(index=False):
             s = max(0, s + int(r.v_micro) - ref_micro)
             if s >= threshold_micro:
                 n_alerts += 1
                 last_alert = int(r.event_id)
                 s = 0  # reset after the alarm (standard restart rule)
-        state.update((s, last_alert))
-        yield pd.DataFrame(
-            {
-                "event_type": [key[0]],
-                "s_micro": [s],
-                "n_alerts": [n_alerts],
-                "last_alert_event_id": [last_alert],
-            }
-        )
+        out = {
+            "event_type": [key[0]],
+            "s_micro": [s],
+            "n_alerts": [n_alerts],
+            "last_alert_event_id": [last_alert],
+        }
+        return (s, last_alert), out
 
-    return staged.groupBy("event_type").applyInPandasWithState(
-        update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
+    return keyed_state(
+        staged, ["event_type"], ["ts_us", "event_id"],
+        "event_type string, s_micro long, n_alerts long, last_alert_event_id long",
+        "s_micro long, last_alert_event_id long", step,
     )
 
 
@@ -1002,11 +813,6 @@ def spacesaving_topk_stream(df: DataFrame, k: int = 8) -> DataFrame:
     event_type, item, est_count, err, rank (1 = heaviest; ties by
     item ASC).
     """
-    import pandas as pd  # local import: worker-side dependency
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import ArrayType, IntegerType, LongType
-
     staged = df.filter(F.col("user_id").isNotNull()).select(
         F.col("event_type").cast("string").alias("event_type"),
         (F.col("ts").cast("double") * 1_000_000).cast("long").alias("ts_us"),
@@ -1014,40 +820,9 @@ def spacesaving_topk_stream(df: DataFrame, k: int = 8) -> DataFrame:
         F.col("user_id").cast("string").alias("item"),
     )
 
-    out_schema = StructType(
-        [
-            StructField("event_type", StringType()),
-            StructField("item", StringType()),
-            StructField("est_count", LongType()),
-            StructField("err", LongType()),
-            StructField("rank", IntegerType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("items", ArrayType(StringType())),
-            StructField("counts", ArrayType(LongType())),
-            StructField("errs", ArrayType(LongType())),
-        ]
-    )
-
-    def update(key: tuple, pdfs, state: GroupState):
-        if state.exists:
-            items, counts, errs = (
-                list(state.get[0]),
-                list(state.get[1]),
-                list(state.get[2]),
-            )
-            summary = {
-                it: [c, e] for it, c, e in zip(items, counts, errs)
-            }
-        else:
-            summary = {}
-        rows = []
-        for pdf in pdfs:
-            rows.extend(pdf[["ts_us", "event_id", "item"]].itertuples(index=False))
-        rows.sort(key=lambda r: (r.ts_us, r.event_id))
-        for r in rows:
+    def step(key, state, rows):
+        summary = {it: [c, e] for it, c, e in zip(*state)} if state else {}
+        for r in rows.itertuples(index=False):
             it = str(r.item)
             if it in summary:
                 summary[it][0] += 1
@@ -1060,25 +835,22 @@ def spacesaving_topk_stream(df: DataFrame, k: int = 8) -> DataFrame:
                 c = summary.pop(victim)[0]
                 summary[it] = [c + 1, c]
         ordered = sorted(summary.items(), key=lambda kv: (-kv[1][0], kv[0]))
-        state.update(
-            (
-                [it for it, _ in ordered],
-                [v[0] for _, v in ordered],
-                [v[1] for _, v in ordered],
-            )
-        )
-        yield pd.DataFrame(
-            {
-                "event_type": [key[0]] * len(ordered),
-                "item": [it for it, _ in ordered],
-                "est_count": [v[0] for _, v in ordered],
-                "err": [v[1] for _, v in ordered],
-                "rank": list(range(1, len(ordered) + 1)),
-            }
-        )
+        items = [it for it, _ in ordered]
+        counts = [v[0] for _, v in ordered]
+        errs = [v[1] for _, v in ordered]
+        out = {
+            "event_type": [key[0]] * len(ordered),
+            "item": items,
+            "est_count": counts,
+            "err": errs,
+            "rank": list(range(1, len(ordered) + 1)),
+        }
+        return (items, counts, errs), out
 
-    return staged.groupBy("event_type").applyInPandasWithState(
-        update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
+    return keyed_state(
+        staged, ["event_type"], ["ts_us", "event_id"],
+        "event_type string, item string, est_count long, err long, rank int",
+        "items array<string>, counts array<long>, errs array<long>", step,
     )
 
 
@@ -1193,13 +965,9 @@ def _write_ivm_epoch_partials(batch_df: DataFrame, epoch_id: int, path: str) -> 
         )
         .withColumn("epoch", F.lit(int(epoch_id)))
     )
-    spark = batch_df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        partials.write.mode("overwrite").partitionBy("epoch").parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    partials.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy("epoch").parquet(path)
 
 
 def write_stream_ivm_daily_revenue(
@@ -1254,11 +1022,9 @@ def read_ivm_daily_revenue(spark, path: str) -> DataFrame:
     )
 
 
-def compact_ivm_partials(
-    spark, path: str, upto_epoch: int | None = None
-) -> dict[str, int]:
-    """Compact the IVM partials table: fold every epoch partition
-    ≤ ``upto_epoch`` into a single consolidated base partition — the
+def compact_ivm_partials(spark, path: str) -> dict[str, int]:
+    """Compact the IVM partials table: fold every epoch partition but
+    the latest into a single consolidated base partition — the
     standing maintenance job for :func:`write_stream_ivm_daily_revenue`,
     whose partials table otherwise grows one tiny partition per
     micro-batch forever (at 100 TB/day that is thousands of partitions
@@ -1298,13 +1064,10 @@ def compact_ivm_partials(
     epochs = sorted(
         r["epoch"] for r in df.select("epoch").distinct().collect()
     )
-    if not epochs:
-        return {"epochs_compacted": 0}
-    ceiling = epochs[-1] - 1 if upto_epoch is None else min(upto_epoch, epochs[-1] - 1)
-    eligible = [e for e in epochs if e <= ceiling]
+    eligible = epochs[:-1]
     if len(eligible) < 2:
         return {"epochs_compacted": 0}
-    base = eligible[0]
+    base, ceiling = eligible[0], eligible[-1]
     # already-compacted short-circuit: dynamic overwrite cannot delete a
     # partition, so compacted epochs persist as zero sentinels — if every
     # eligible non-base partition is already all-zero there is nothing to
@@ -1347,12 +1110,9 @@ def compact_ivm_partials(
     out = merged.select(
         "order_date", "product", "n_rows", "total_cents", "epoch"
     ).union(sentinels)
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        out.write.mode("overwrite").partitionBy("epoch").parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    out.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy("epoch").parquet(path)
     return {"epochs_compacted": len(eligible), "base_epoch": int(base)}
 
 

@@ -15,6 +15,9 @@ every optimized plan, not just in docstrings.
 * filtered parquet scans actually push their filters (spot-check)
 * every parquet read in the package pins its schema (static scan), so
   no read fires a schema-inference job, bar an allowlist with reasons
+* the stateful streams share one ``applyInPandasWithState`` site with
+  no TTL parameter, and no write flips the session's partition
+  overwrite mode (static scans)
 """
 
 from __future__ import annotations
@@ -234,3 +237,55 @@ def test_no_engine_session_conf_options():
         and node.value.startswith(prefix)
     ]
     assert not found, f"session-conf option keys under {prefix!r}: {found}"
+
+
+def _package_nodes():
+    """(file, node) for every AST node of the package source."""
+    for path in sorted(_PKG.rglob("*.py")):
+        rel = path.relative_to(_PKG).as_posix()
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            yield rel, node
+
+
+def test_one_keyed_state_site():
+    """Every custom-state stream goes through ``streaming.job.keyed_state``,
+    the package's only ``applyInPandasWithState`` call."""
+    found = [
+        f"{rel}:{node.lineno}"
+        for rel, node in _package_nodes()
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "applyInPandasWithState"
+    ]
+    assert len(found) == 1 and found[0].startswith("streaming/job.py:"), found
+
+
+def test_no_state_ttl_parameter():
+    """Keyed state never times out: no ``state_ttl_ms`` parameter."""
+    found = [
+        f"{rel}:{node.lineno}"
+        for rel, node in _package_nodes()
+        if isinstance(node, ast.arg) and node.arg == "state_ttl_ms"
+    ]
+    assert not found, f"state_ttl_ms parameters: {found}"
+
+
+def test_no_session_partition_overwrite_toggle():
+    """A dynamic partition overwrite is the writer option
+    ``partitionOverwriteMode``; setting the session conf would change
+    every other write in the session while it is set."""
+    found = [
+        f"{rel}:{node.lineno}"
+        for rel, node in _package_nodes()
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "set"
+        and "conf" in _call_chain(node.func.value)
+        and any(
+            isinstance(a, ast.Constant)
+            and isinstance(a.value, str)
+            and "partitionOverwriteMode" in a.value
+            for a in node.args
+        )
+    ]
+    assert not found, f"session conf toggles of partitionOverwriteMode: {found}"

@@ -1033,6 +1033,53 @@ def test_ivm_compaction_survives_pre_commit_crash_debris(spark, tmp_path):
     assert served() == want
 
 
+def test_ivm_overwrites_stay_dynamic_under_a_static_session(spark, tmp_path):
+    """The IVM epoch writer and the compaction ask for a dynamic
+    partition overwrite on the write itself: under a session whose
+    ``partitionOverwriteMode`` is ``static`` (Spark's default), an
+    epoch replay and a compaction replace only the partitions they
+    write, every other epoch survives, and the session conf still
+    reads ``static`` afterwards."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    out_dir = str(tmp_path / "out")
+
+    def batch(rows):
+        return spark.createDataFrame(
+            rows, "product string, order_date string, amount double"
+        ).selectExpr("product", "cast(order_date as date) order_date", "amount")
+
+    def epochs_on_disk():
+        return sorted(
+            r["epoch"]
+            for r in spark.read.parquet(out_dir).select("epoch").distinct().collect()
+        )
+
+    def served():
+        return {
+            (str(r["order_date"]), r["product"]): (r["n_rows"], r["total_cents"])
+            for r in job.read_ivm_daily_revenue(spark, out_dir).collect()
+        }
+
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try:
+        job._write_ivm_epoch_partials(batch([("A", "2024-01-01", 1.00)]), 0, out_dir)
+        job._write_ivm_epoch_partials(batch([("A", "2024-01-01", 2.00)]), 1, out_dir)
+        job._write_ivm_epoch_partials(batch([("B", "2024-01-02", 5.00)]), 2, out_dir)
+        want = {("2024-01-01", "A"): (2, 300), ("2024-01-02", "B"): (1, 500)}
+        # replay of epoch 1: its own partition is replaced, 0 and 2 stay
+        job._write_ivm_epoch_partials(batch([("A", "2024-01-01", 2.00)]), 1, out_dir)
+        assert epochs_on_disk() == [0, 1, 2]
+        assert served() == want
+        stats = job.compact_ivm_partials(spark, out_dir)
+        assert stats == {"epochs_compacted": 2, "base_epoch": 0}
+        assert epochs_on_disk() == [0, 1, 2]
+        assert served() == want
+        assert spark.conf.get(key) == "static"
+    finally:
+        spark.conf.set(key, prev)
+
+
 def test_hll_stream_matches_batch_twin_and_survives_restart(spark, tmp_path):
     """Bounded-state streaming HLL (job.hll_cardinality_stream) pinned
     to its batch anchor (users.user_cardinality_hll) across a

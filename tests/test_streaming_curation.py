@@ -51,7 +51,7 @@ def test_stream_curation_gates_dedups_and_chunks(spark, tmp_path):
         now + 2,
     )
 
-    raw = sc.read_doc_stream(spark, str(in_dir), max_files_per_trigger=1)
+    raw = sc.read_json_stream(spark, str(in_dir), sc.DOC_SCHEMA, max_files_per_trigger=1)
     curated = sc.curate_doc_stream(
         sc.decode_doc_stream(raw), chunk_size=16, stride=16
     )
@@ -142,7 +142,7 @@ def test_stream_embedding_srp_dedup_across_microbatches(spark, tmp_path):
         now + 2,
     )
 
-    raw = scur.read_embedding_stream(spark, str(in_dir), max_files_per_trigger=1)
+    raw = scur.read_json_stream(spark, str(in_dir), scur.EMB_SCHEMA, max_files_per_trigger=1)
     admitted = scur.dedup_embedding_stream(
         scur.decode_embedding_stream(raw), n_bits=n_bits, dims=dims
     )
@@ -271,7 +271,9 @@ def test_dedup_image_stream_admits_by_perceptual_hash(spark, tmp_path):
         now + 2,
     )
 
-    raw = scur.read_media_stream(spark, str(in_dir), max_files_per_trigger=1)
+    raw = scur.read_json_stream(
+        spark, str(in_dir), scur.MEDIA_STREAM_SCHEMA, max_files_per_trigger=1
+    )
     admitted = scur.dedup_image_stream(scur.decode_media_stream(raw))
     q = (
         admitted.writeStream.format("parquet")
@@ -330,7 +332,9 @@ def test_dedup_audio_stream_admits_by_window_digest_across_restart(spark, tmp_pa
     now = time.time()
 
     def run_once():
-        raw = scur.read_media_stream(spark, str(in_dir), max_files_per_trigger=1)
+        raw = scur.read_json_stream(
+        spark, str(in_dir), scur.MEDIA_STREAM_SCHEMA, max_files_per_trigger=1
+    )
         q = (
             scur.dedup_audio_stream(scur.decode_media_stream(raw))
             .writeStream.format("parquet")
@@ -444,7 +448,7 @@ def test_dedup_lines_stream_suppresses_boilerplate_across_batches(spark, tmp_pat
     )
 
     stream = sc.decode_doc_stream(
-        sc.read_doc_stream(spark, str(in_dir), max_files_per_trigger=1)
+        sc.read_json_stream(spark, str(in_dir), sc.DOC_SCHEMA, max_files_per_trigger=1)
     )
     admitted = sc.dedup_lines_stream(stream, watermark="1 hour")
     q = (
@@ -499,7 +503,7 @@ def test_gate_agreement_stream_matches_batch_census_across_restart(spark, tmp_pa
 
     def run():
         stream = sc.decode_doc_stream(
-            sc.read_doc_stream(spark, str(in_dir), max_files_per_trigger=1)
+            sc.read_json_stream(spark, str(in_dir), sc.DOC_SCHEMA, max_files_per_trigger=1)
         )
         q = (
             sc.gate_agreement_stream(stream, window="1 hour", watermark="10 minutes")
@@ -576,7 +580,7 @@ def test_unicode_clean_stream_strips_and_rejects_across_batches(spark, tmp_path)
     )
 
     stream = sc.decode_doc_stream(
-        sc.read_doc_stream(spark, str(in_dir), max_files_per_trigger=1)
+        sc.read_json_stream(spark, str(in_dir), sc.DOC_SCHEMA, max_files_per_trigger=1)
     )
     q = (
         sc.unicode_clean_stream(stream)
@@ -728,58 +732,6 @@ def test_budget_admission_state_survives_checkpoint_restart(spark, tmp_path):
     ]
     # exactly-once: batch-1 rows exactly once each, never re-emitted
     assert sorted(rows) == [(1, 1), (2, 1), (3, 0), (4, 1)]
-
-
-def test_budget_admission_ttl_expires_idle_source_quota(spark, tmp_path):
-    """state_ttl_ms: a source idle past the TTL has its quota entry
-    dropped (ProcessingTimeTimeout), so a later arrival is admitted
-    against a FRESH budget — and state stays bounded to TTL-active
-    sources. Without the TTL the same arrival is rejected (covered by
-    the quota test above)."""
-    import json as _json
-    import os as _os
-    import time as _time
-
-    from data_pipeline_example_spark.streaming import curation as sc
-
-    in_dir, ckpt = tmp_path / "in", str(tmp_path / "ckpt")
-    in_dir.mkdir()
-    now = _time.time()
-
-    def write(name, rows, mtime):
-        p = str(in_dir / name)
-        with open(p, "w") as f:
-            for r in rows:
-                f.write(_json.dumps(r) + "\n")
-        _os.utime(p, (mtime, mtime))
-
-    # batch 1 exhausts s1's budget; batch 2 carries only s2 — during
-    # that trigger s1 is a no-data key whose 1 ms TTL has passed, so
-    # its quota entry is dropped (timeouts fire only for keys WITHOUT
-    # data in a batch); batch 3's s1 doc then sees a fresh budget
-    write("b1.json", [{"doc_id": "1", "source": "s1", "text": "a b c d e f g h i j"}], now - 30)
-    write("b2.json", [{"doc_id": "9", "source": "s2", "text": "m"}], now - 15)
-    write("b3.json", [{"doc_id": "2", "source": "s1", "text": "p q r"}], now)
-    schema = "doc_id string, source string, text string"
-    raw = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .json(str(in_dir))
-    )
-    out = sc.budget_admission_stream(raw, budget=10, state_ttl_ms=1)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("budget_ttl")
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = {r["doc_id"]: r["admitted"] for r in spark.sql(
-        "SELECT * FROM budget_ttl").collect()}
-    assert rows[1] == 1        # 10 tokens exactly fill the budget
-    assert rows[2] == 1        # would be rejected (10+3>10) had state survived the TTL
 
 
 def test_countmin_stream_state_survives_restart_and_equals_batch(spark, tmp_path):
