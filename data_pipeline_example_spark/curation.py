@@ -270,32 +270,25 @@ def corpus_funnel(documents: DataFrame) -> DataFrame:
     txt = F.coalesce(F.col("text"), F.lit(""))
     lines = F.split(txt, "\n")
 
-    def line_words(l):
-        return F.when(F.trim(l) == "", F.lit(0)).otherwise(
-            F.size(F.split(F.trim(l), r"\s+"))
-        )
-
     # c4_clean(require_terminal=False, min_kept_lines=1) page flag
     f2 = (
         (F.locate("lorem ipsum", F.lower(txt)) == 0)
         & (F.locate("{", txt) == 0)
-        & (F.size(F.filter(lines, lambda l: line_words(l) >= 5)) >= 1)
+        & (F.size(F.filter(lines, text.c4_line_rule(5, False))) >= 1)
     ).cast("int")
     # line_dedup(min_words=4) ingredients: structural-line presence
     # (never dedup keys → always kept) and the keyed lines (same md5
     # normalization, posexplode-compatible 0-based positions)
     has_short = (
-        F.size(F.filter(lines, lambda l: line_words(l) < 4)) > 0
+        F.size(F.filter(lines, lambda l: text.line_words(l) < 4)) > 0
     ).cast("int")
     keyed = F.filter(
         F.transform(
             lines,
             lambda l, i: F.struct(
-                F.md5(
-                    F.lower(F.regexp_replace(F.trim(l), r"\s+", " "))
-                ).alias("k"),
+                text.line_key(l).alias("k"),
                 i.alias("pos"),
-                line_words(l).alias("nw"),
+                text.line_words(l).alias("nw"),
             ),
         ),
         lambda s: s["nw"] >= 4,

@@ -121,20 +121,6 @@ def rolling_fingerprint(col: Column) -> Column:
     )
 
 
-def token_shingles(col: Column, k: int = 3) -> Column:
-    """Distinct k-token shingles ('w1 w2 w3' strings) for Jaccard/MinHash.
-
-    Token shingles (not char shingles) keep the shingle→doc inverted index
-    sparse on natural text, which bounds the candidate-pair blowup of the
-    LSH bucket join at scale.
-
-    Prefer binding the token array to a real column in a lower projection
-    and calling ``shingles_from_tokens`` on it (see ``dedup.shingled``) —
-    this convenience form inlines the tokenizer subtree into every
-    reference."""
-    return shingles_from_tokens(tokens(F.lower(col)), k)
-
-
 def shingles_from_tokens(toks: Column, k: int = 3) -> Column:
     """Distinct k-shingles from an (ideally already-materialized) token
     array column.

@@ -21,6 +21,7 @@ function of the bytes, so that pipeline stays oracle-checkable in SQL.
 from __future__ import annotations
 
 import hashlib
+import struct
 from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
@@ -165,8 +166,6 @@ def encode_netpbm(img: StdlibImage) -> bytes:
 def _decode_bmp(content: bytes) -> StdlibImage:
     """24-bit uncompressed (BI_RGB) BITMAPINFOHEADER BMP; rows stored
     bottom-up, BGR, padded to 4 bytes — returned top-down RGB."""
-    import struct
-
     if content[:2] != b"BM" or len(content) < 54:
         raise ValueError("not a BMP payload")
     data_off = struct.unpack_from("<I", content, 10)[0]
@@ -193,8 +192,6 @@ def _decode_bmp(content: bytes) -> StdlibImage:
 
 
 def encode_bmp(img: StdlibImage) -> bytes:
-    import struct
-
     if img.mode != "RGB":
         raise NotImplementedError("BMP encoder is 24-bit RGB only")
     w, h = img.width, img.height
@@ -426,59 +423,78 @@ def decoded_image_features(media: DataFrame) -> DataFrame:
     return media.mapInPandas(_decode, schema=DECODED_SCHEMA)
 
 
+def _walk_chunks(
+    content: bytes, order: str, magic: bytes, form: bytes, wanted: dict
+) -> list:
+    """The one IFF chunk walker behind :func:`decode_wav` (RIFF,
+    little-endian) and :func:`decode_aiff` (FORM, big-endian) — the two
+    containers differ only in byte order, magic and chunk names.
+    Validates the ``magic``/``form`` header and the declared size, then
+    WALKS the word-aligned chunk list (a fixed-offset reader breaks on
+    LIST/INFO or ANNO metadata), skipping unknown chunks and checking
+    each ``wanted`` chunk against its minimum size. Returns the bodies
+    of the ``wanted`` chunks in its order (the last one of each id wins).
+    Every structural fault is a ``ValueError``."""
+    if len(content) < 12 or content[:4] != magic or content[8:12] != form:
+        raise ValueError(f"not a {magic.decode()}/{form.decode()} payload")
+    u32 = order + "I"
+    declared = struct.unpack_from(u32, content, 4)[0]
+    if declared + 8 != len(content):
+        raise ValueError(
+            f"{magic.decode()} size {declared} != payload size {len(content)} - 8"
+        )
+    found = {}
+    pos = 12
+    while pos + 8 <= len(content):
+        cid = content[pos : pos + 4]
+        csize = struct.unpack_from(u32, content, pos + 4)[0]
+        body = content[pos + 8 : pos + 8 + csize]
+        if len(body) != csize:
+            raise ValueError(f"truncated chunk {cid!r}")
+        if cid in wanted:
+            if csize < wanted[cid]:
+                raise ValueError(f"{cid.decode().strip()} chunk too short")
+            found[cid] = body
+        pos += 8 + csize + (csize & 1)  # chunks are word-aligned
+    if len(found) < len(wanted):
+        ids = "/".join(c.decode().strip() for c in wanted)
+        raise ValueError(f"missing {ids} chunk in {magic.decode()}/{form.decode()}")
+    return [found[c] for c in wanted]
+
+
+def _pcm16_mono(data: bytes, order: str, n_channels: int) -> tuple:
+    """Signed int16 samples of a mono PCM16 data block in byte ``order``;
+    other channel counts raise ``NotImplementedError``, an odd byte
+    count ``ValueError``."""
+    if n_channels != 1:
+        raise NotImplementedError(f"mono only (channels={n_channels})")
+    if len(data) % 2:
+        raise ValueError(f"odd PCM16 data length {len(data)}")
+    return struct.unpack(f"{order}{len(data) // 2}h", data)
+
+
 def decode_wav(content: bytes) -> tuple:
-    """Parse a RIFF/WAVE container with stdlib ``struct`` only — the
-    BMP-codec discipline applied to audio (closes the r12 residue
-    where the audio path interpreted raw payload bytes as PCM16
-    without a container parse): validate the RIFF header and declared
-    size, WALK the word-aligned chunk list skipping unknown chunks (a
-    fixed-44-byte-offset reader breaks on LIST/INFO metadata), read
-    the PCM fmt chunk and the data chunk, and unpack the samples as
+    """Parse a RIFF/WAVE container with stdlib ``struct`` only (the
+    BMP-codec discipline applied to audio): :func:`_walk_chunks` finds
+    the PCM fmt chunk and the data chunk, and the samples unpack as
     signed little-endian int16. Returns (sample_rate, n_channels,
     samples).
 
     Only integer PCM16 mono is implemented — compressed / float /
-    multichannel formats raise loudly (the ``decode_image``
-    NotImplementedError contract), never silently misread.
+    multichannel formats raise ``NotImplementedError`` (the
+    ``decode_image`` contract), never silently misread; a malformed
+    container raises ``ValueError``.
     """
-    import struct
-
-    if len(content) < 12 or content[:4] != b"RIFF" or content[8:12] != b"WAVE":
-        raise ValueError("not a RIFF/WAVE payload")
-    declared = struct.unpack("<I", content[4:8])[0]
-    if declared + 8 != len(content):
-        raise ValueError(
-            f"RIFF size {declared} != payload size {len(content)} - 8"
-        )
-    fmt = None
-    data = None
-    pos = 12
-    while pos + 8 <= len(content):
-        cid = content[pos : pos + 4]
-        csize = struct.unpack("<I", content[pos + 4 : pos + 8])[0]
-        body = content[pos + 8 : pos + 8 + csize]
-        if len(body) != csize:
-            raise ValueError(f"truncated chunk {cid!r}")
-        if cid == b"fmt ":
-            if csize < 16:
-                raise ValueError("fmt chunk too short")
-            fmt = struct.unpack("<HHIIHH", body[:16])
-        elif cid == b"data":
-            data = body
-        pos += 8 + csize + (csize & 1)  # chunks are word-aligned
-    if fmt is None or data is None:
-        raise ValueError("missing fmt/data chunk")
-    audio_format, n_channels, sample_rate, _byte_rate, _block_align, bits = fmt
+    wanted = {b"fmt ": 16, b"data": 0}  # chunk id -> minimum size
+    fmt, data = _walk_chunks(content, "<", b"RIFF", b"WAVE", wanted)
+    audio_format, n_channels, sample_rate, _rate, _align, bits = struct.unpack(
+        "<HHIIHH", fmt[:16]
+    )
     if audio_format != 1 or bits != 16:
         raise NotImplementedError(
             f"PCM16 only (audio_format={audio_format}, bits={bits})"
         )
-    if n_channels != 1:
-        raise NotImplementedError(f"mono only (channels={n_channels})")
-    if len(data) % 2:
-        raise ValueError("odd data-chunk length for PCM16")
-    samples = struct.unpack("<%dh" % (len(data) // 2), data)
-    return sample_rate, n_channels, samples
+    return sample_rate, n_channels, _pcm16_mono(data, "<", n_channels)
 
 
 _WAV_RATES = (8000, 16000, 22050, 44100)
@@ -566,8 +582,6 @@ def _parse_extended80(b10: bytes) -> int:
     AIFF COMM chunk stores the sample rate in, STRICTLY: only positive
     integral rates are supported (every real audio rate is), anything
     fractional / negative / denormal raises instead of rounding."""
-    import struct
-
     exp_field = struct.unpack(">H", b10[:2])[0]
     mant = struct.unpack(">Q", b10[2:])[0]
     if exp_field & 0x8000:
@@ -588,59 +602,27 @@ def _parse_extended80(b10: bytes) -> int:
 
 def decode_aiff(content: bytes) -> tuple:
     """Parse a FORM/AIFF container with stdlib ``struct`` only — the
-    BIG-ENDIAN twin of :func:`decode_wav` (AIFF is the classic
-    Mac/broadcast interchange container; everything in it, including
-    the PCM samples, is big-endian, and the sample rate is an 80-bit
-    extended float): validate the FORM header and declared size, WALK
-    the even-aligned chunk list skipping unknown chunks (ANNO/NAME
-    metadata breaks fixed-offset readers), read the COMM parameters and
-    the SSND data chunk, and unpack the samples as signed BIG-endian
-    int16. Returns (sample_rate, n_channels, samples).
+    BIG-ENDIAN twin of :func:`decode_wav` on the same
+    :func:`_walk_chunks` (AIFF is the classic Mac/broadcast interchange
+    container; everything in it, including the PCM samples, is
+    big-endian, and the sample rate is an 80-bit extended float): read
+    the COMM parameters and the SSND data chunk and unpack the samples
+    as signed BIG-endian int16. Returns (sample_rate, n_channels,
+    samples).
 
     Only integer PCM16 mono with zero SSND offset/blockSize is
     implemented — everything else raises loudly (the
     :func:`decode_wav` contract), never silently misreads.
     """
-    import struct
-
-    if len(content) < 12 or content[:4] != b"FORM" or content[8:12] != b"AIFF":
-        raise ValueError("not a FORM/AIFF payload")
-    declared = struct.unpack(">I", content[4:8])[0]
-    if declared + 8 != len(content):
-        raise ValueError(f"FORM size {declared} != payload size {len(content)} - 8")
-    comm = None
-    ssnd = None
-    pos = 12
-    while pos + 8 <= len(content):
-        cid = content[pos : pos + 4]
-        csize = struct.unpack(">I", content[pos + 4 : pos + 8])[0]
-        body = content[pos + 8 : pos + 8 + csize]
-        if len(body) != csize:
-            raise ValueError(f"truncated chunk {cid!r}")
-        if cid == b"COMM":
-            if csize < 18:
-                raise ValueError("COMM chunk too short")
-            comm = body
-        elif cid == b"SSND":
-            if csize < 8:
-                raise ValueError("SSND chunk too short")
-            ssnd = body
-        pos += 8 + csize + (csize & 1)  # chunks are even-aligned
-    if comm is None or ssnd is None:
-        raise ValueError("missing COMM/SSND chunk")
+    wanted = {b"COMM": 18, b"SSND": 8}  # chunk id -> minimum size
+    comm, ssnd = _walk_chunks(content, ">", b"FORM", b"AIFF", wanted)
     n_channels, n_frames, bits = struct.unpack(">HIH", comm[:8])
     rate = _parse_extended80(comm[8:18])
     if bits != 16:
         raise NotImplementedError(f"PCM16 only (bits={bits})")
-    if n_channels != 1:
-        raise NotImplementedError(f"mono only (channels={n_channels})")
-    offset, block = struct.unpack(">II", ssnd[:8])
-    if offset or block:
+    if struct.unpack(">II", ssnd[:8]) != (0, 0):
         raise NotImplementedError("SSND offset/blockSize not supported")
-    data = ssnd[8:]
-    if len(data) % 2:
-        raise ValueError("odd SSND data length for PCM16")
-    samples = struct.unpack(">%dh" % (len(data) // 2), data)
+    samples = _pcm16_mono(ssnd[8:], ">", n_channels)
     if len(samples) != n_frames:
         raise ValueError(
             f"COMM numSampleFrames {n_frames} != SSND sample count {len(samples)}"
@@ -721,118 +703,104 @@ def attach_aiff(documents: DataFrame) -> DataFrame:
     )
 
 
-def decoded_audio_windows(
-    media: DataFrame, window_ms: int = 1000, decoder=None
-) -> DataFrame:
-    """REAL audio-decoder path — the audio twin of
-    :func:`decoded_image_features`: Arrow-batched ``mapInPandas``, one
-    container decode per payload (``decoder`` — :func:`decode_wav` by
-    default, :func:`decode_aiff` for the big-endian family), then
-    fixed-duration windows over the DECODED samples at the PARSED
-    sample rate (not a caller-side guess): samples-per-window =
-    rate·window_ms div 1000, last partial window kept. Emits
-    exact-integer per-window stats (count, Σ|s|, max|s|) so the whole
-    container parse + sample decode + fan-out is SQL-checkable against
-    the synthesis closed form — a parser that misreads the rate, drops
-    the metadata-chunk handling, or mis-signs a sample hash-mismatches
-    immediately.
-    """
-    decoder = decoder or decode_wav
+def decode_audio(content: bytes) -> tuple:
+    """The container dispatch of the audio family: the magic bytes pick
+    the parser — ``RIFF`` → :func:`decode_wav`, ``FORM`` →
+    :func:`decode_aiff`; any other payload raises ``ValueError``.
+    Returns (sample_rate, n_channels, samples)."""
+    if content[:4] == b"RIFF":
+        return decode_wav(content)
+    if content[:4] == b"FORM":
+        return decode_aiff(content)
+    raise ValueError("not a RIFF or FORM audio container")
 
-    def _win(batches: Iterator) -> Iterator:
+
+def audio_window_slices(samples, rate: int, window_ms: int) -> Iterator:
+    """The window slicer: (window_idx, samples of that window) for
+    fixed ``window_ms`` windows at ``rate`` — max(rate·window_ms div
+    1000, 1) samples each, the last partial window kept."""
+    spw = max(rate * window_ms // 1000, 1)
+    for w in range((len(samples) + spw - 1) // spw):
+        yield w, samples[w * spw : (w + 1) * spw]
+
+
+def window_digest(chunk, window_idx: int) -> str:
+    """The window digest: md5 over the window's PCM16 little-endian
+    bytes rendered as an UPPERCASE HEX STRING + ':' + window_idx (hex
+    because the oracle's md5 is VARCHAR-only; same samples ⇔ same hex,
+    so it is an exact segment-identity key). :func:`wav_dup_windows`
+    and the stream twin ``streaming.curation.dedup_audio_stream`` both
+    key on it, so their duplicate decisions agree."""
+    pcm = struct.pack(f"<{len(chunk)}h", *chunk)
+    return hashlib.md5(f"{pcm.hex().upper()}:{window_idx}".encode()).hexdigest()
+
+
+def map_audio_payloads(
+    media: DataFrame, schema: StructType, rows, carry: tuple = ()
+) -> DataFrame:
+    """The one Arrow-batched loop of the audio family (``mapInPandas``):
+    ``rows(content_bytes, doc_id, *carry_values)`` turns one payload
+    into its output tuples in ``schema`` order — each operator supplies
+    only its decode error policy and per-window reduction. Never ships
+    samples, only the reduced rows."""
+
+    def _map(batches: Iterator) -> Iterator:
         import pandas as pd
 
-        cols = (
-            "doc_id", "sample_rate", "window_idx", "start_ms",
-            "n_samples", "sum_abs", "peak_abs",
-        )
         for pdf in batches:
-            rows: dict = {k: [] for k in cols}
-            for doc_id, content in zip(pdf["doc_id"], pdf["content"]):
-                rate, _ch, samples = decoder(bytes(content))
-                spw = max(rate * window_ms // 1000, 1)
-                for w_idx in range((len(samples) + spw - 1) // spw):
-                    chunk = samples[w_idx * spw : (w_idx + 1) * spw]
-                    rows["doc_id"].append(doc_id)
-                    rows["sample_rate"].append(rate)
-                    rows["window_idx"].append(w_idx)
-                    rows["start_ms"].append(w_idx * window_ms)
-                    rows["n_samples"].append(len(chunk))
-                    rows["sum_abs"].append(sum(abs(s) for s in chunk))
-                    rows["peak_abs"].append(max(abs(s) for s in chunk))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.array(rows["doc_id"], dtype="int64"),
-                    "sample_rate": pd.array(rows["sample_rate"], dtype="int64"),
-                    "window_idx": pd.array(rows["window_idx"], dtype="int32"),
-                    "start_ms": pd.array(rows["start_ms"], dtype="int64"),
-                    "n_samples": pd.array(rows["n_samples"], dtype="int64"),
-                    "sum_abs": pd.array(rows["sum_abs"], dtype="int64"),
-                    "peak_abs": pd.array(rows["peak_abs"], dtype="int64"),
-                }
-            )
+            cols = (pdf["content"], pdf["doc_id"], *(pdf[c] for c in carry))
+            out = [r for raw, *key in zip(*cols) for r in rows(bytes(raw), *key)]
+            yield pd.DataFrame(out, columns=schema.names)
 
-    return media.mapInPandas(_win, schema=WAV_WINDOW_SCHEMA)
+    return media.mapInPandas(_map, schema=schema)
+
+
+def decoded_audio_windows(media: DataFrame, window_ms: int = 1000) -> DataFrame:
+    """REAL audio-decoder path — the audio twin of
+    :func:`decoded_image_features`: one container decode per payload
+    (:func:`decode_audio` — the magic bytes pick WAV or AIFF), then
+    :func:`audio_window_slices` over the DECODED samples at the PARSED
+    sample rate (not a caller-side guess). Emits exact-integer
+    per-window stats (count, Σ|s|, max|s|) so the whole container parse
+    + sample decode + fan-out is SQL-checkable against the synthesis
+    closed form — a parser that misreads the rate, drops the
+    metadata-chunk handling, or mis-signs a sample hash-mismatches
+    immediately. An undecodable payload fails the job.
+    """
+
+    def rows(raw: bytes, doc_id):
+        rate, _ch, samples = decode_audio(raw)
+        for w, chunk in audio_window_slices(samples, rate, window_ms):
+            mags = [abs(s) for s in chunk]
+            yield doc_id, rate, w, w * window_ms, len(chunk), sum(mags), max(mags)
+
+    return map_audio_payloads(media, WAV_WINDOW_SCHEMA, rows)
 
 
 def wav_dup_windows(documents: DataFrame, window_ms: int = 1) -> DataFrame:
-    """Exact-duplicate audio segments over REAL decoded containers —
-    the container-decode counterpart of :func:`audio_dup_windows`
-    (whose registered query exercises the headerless raw-PCM path):
-    synthesize valid WAVs (:func:`attach_wav`), parse each through
-    :func:`decode_wav`, window the DECODED samples at the PARSED rate,
-    and group on a per-WINDOW content digest — docs whose text lengths
-    coincide produce byte-identical sample streams by the synthesis
-    closed form, so real duplicate segments exist and the whole
-    decode→window→dedup chain is SQL-checkable.
-
-    Digest: md5 over the window's PCM bytes rendered as an UPPERCASE
-    HEX STRING (+ ':' + window_idx) — hex-string hashing because the
-    oracle's md5 is VARCHAR-only; same-content ⇔ same-hex makes it an
-    exact segment-identity key. One Arrow-batched decode pass fans out
-    to ≤ ceil(n/spw) digest rows per payload (never the samples
-    themselves), then one map-side-combinable aggregate; the shuffle
-    carries (digest, partials). Output (digests in >1 doc):
-    window_digest, n_copies, n_docs, first_doc — ordered by digest.
+    """Exact-duplicate audio SEGMENTS over REAL decoded containers:
+    synthesize valid WAVs (:func:`attach_wav`), decode them
+    (:func:`decode_audio`), window the decoded samples at the parsed
+    rate and group on each window's :func:`window_digest` — docs whose
+    text lengths coincide produce byte-identical sample streams by the
+    synthesis closed form, so real duplicate segments exist and the
+    whole decode→window→dedup chain is SQL-checkable. One decode pass
+    fans out to ≤ ceil(n/spw) digest rows per payload (never the
+    samples themselves), then one map-side-combinable aggregate; the
+    shuffle carries (digest, partials). An undecodable payload fails
+    the job. Output (digests in >1 doc): window_digest, n_copies,
+    n_docs, first_doc — ordered by digest.
     """
-    media = attach_wav(documents)
 
-    def _dig(batches: Iterator) -> Iterator:
-        import struct
+    def rows(raw: bytes, doc_id):
+        rate, _ch, samples = decode_audio(raw)
+        for w, chunk in audio_window_slices(samples, rate, window_ms):
+            yield doc_id, window_digest(chunk, w)
 
-        import pandas as pd
-
-        for pdf in batches:
-            doc_ids: list = []
-            digests: list = []
-            for doc_id, content in zip(pdf["doc_id"], pdf["content"]):
-                rate, _ch, samples = decode_wav(bytes(content))
-                spw = max(rate * window_ms // 1000, 1)
-                for w in range((len(samples) + spw - 1) // spw):
-                    chunk = samples[w * spw : (w + 1) * spw]
-                    pcm = struct.pack("<%dh" % len(chunk), *chunk)
-                    doc_ids.append(doc_id)
-                    digests.append(
-                        hashlib.md5(
-                            (pcm.hex().upper() + ":" + str(w)).encode()
-                        ).hexdigest()
-                    )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.array(doc_ids, dtype="int64"),
-                    "window_digest": pd.array(digests, dtype=object),
-                }
-            )
-
-    dig = media.mapInPandas(
-        _dig,
-        schema=StructType(
-            [
-                StructField("doc_id", LongType()),
-                StructField("window_digest", StringType()),
-            ]
-        ),
+    schema = StructType(
+        [StructField("doc_id", LongType()), StructField("window_digest", StringType())]
     )
+    dig = map_audio_payloads(attach_wav(documents), schema, rows)
     return (
         dig.groupBy("window_digest")
         .agg(
@@ -868,9 +836,7 @@ def decoded_aiff_stats(documents: DataFrame) -> DataFrame:
     synthesis closed form, so a parser that misreads the extended
     float, the even-chunk alignment, or the sample byte order
     hash-mismatches."""
-    return decoded_audio_windows(
-        attach_aiff(documents), window_ms=1, decoder=decode_aiff
-    )
+    return decoded_audio_windows(attach_aiff(documents), window_ms=1)
 
 
 AUDIO_SCHEMA = StructType(
@@ -890,87 +856,43 @@ def audio_windows(
     """Audio windowing plumbing — the third modality next to images
     (``extract_features``/``decoded_image_features``) and video
     (``sample_frames``): one payload row fans out to one row per
-    fixed-duration analysis window, the shape a real PCM decoder /
-    feature extractor (fbank, VAD, diarization) plugs into.
+    fixed-duration analysis window (:func:`audio_window_slices`), the
+    shape a real PCM decoder / feature extractor (fbank, VAD,
+    diarization) plugs into.
 
-    Container-aware: payloads with a RIFF magic are parsed through the
-    REAL :func:`decode_wav` (chunk walk, PCM16 fmt, data chunk), FORM
-    magics through :func:`decode_aiff` (the big-endian family), and
-    windowed over the DECODED samples at the PARSED rate — the
-    ``sample_rate`` argument applies only to headerless payloads,
-    which keep the documented raw-PCM16-mono interpretation
-    (n_samples = len(bytes) // 2), the convention for bare PCM
-    streams. Windows are ``window_ms`` each; the last partial window
-    is kept (real feature pipelines pad it). window_md5 =
-    md5(pcm_bytes ':' idx) over the PCM bytes actually analyzed (data
-    chunk for WAV, whole payload for raw) — a pure function of the
-    bytes, so the whole fan-out is SQL-checkable like the frame
-    sampler.
+    Container-aware: a payload :func:`decode_audio` parses (a valid
+    PCM16-mono WAV or AIFF) is windowed over its DECODED samples at the
+    PARSED rate. Any other payload — headerless, or a RIFF/FORM-prefixed
+    one that FAILS the strict parse (stereo/float/truncated container,
+    or a text payload that happens to start with 'RIFF'/'FORM' via
+    ``attach_binary``) — degrades per row to the documented raw-PCM16-
+    mono interpretation at ``sample_rate`` (n_samples = len(bytes) // 2)
+    instead of killing the job.
 
-    A RIFF/FORM-prefixed payload that FAILS the strict container parse
-    (stereo/float/truncated container, or a text payload that happens
-    to start with 'RIFF'/'FORM' via ``attach_binary``) falls back to the
-    documented raw-PCM16 interpretation instead of killing the job —
-    a per-row degrade, never an engine crash. The registered
-    ``audio_windows`` oracle replays the raw closed form for every
-    document, which this fallback keeps exact for any non-decodable
-    payload; the only payloads that diverge from it are genuinely
-    valid PCM16-mono WAV or AIFF containers, which the
+    window_md5 is NOT a per-window content hash: it is md5 over the
+    WHOLE analyzed buffer (the decoded samples as PCM16 little-endian
+    bytes, or the whole raw payload) + ':' + window_idx — so two windows
+    share a digest exactly when their payloads' whole buffers are
+    identical and the index matches. A pure function of the bytes, so
+    the whole fan-out is SQL-checkable like the frame sampler: the
+    registered ``audio_windows`` oracle replays the raw closed form for
+    every document (the fallback keeps it exact for any non-decodable
+    payload); valid containers are certified through the
     ``decoded_audio_stats`` / ``decoded_aiff_stats`` /
-    ``wav_dup_windows`` oracles certify through the decode paths.
+    ``wav_dup_windows`` oracles.
     """
-    spw = sample_rate * window_ms // 1000  # samples per window (raw path)
 
-    def _windows(batches: Iterator) -> Iterator:
-        import struct
+    def rows(raw: bytes, doc_id):
+        try:
+            rate, _ch, samples = decode_audio(raw)
+            pcm = struct.pack(f"<{len(samples)}h", *samples)
+        except (ValueError, NotImplementedError):  # degrade to raw PCM16
+            rate, samples, pcm = sample_rate, range(len(raw) // 2), raw
+        for w, chunk in audio_window_slices(samples, rate, window_ms):
+            md5 = hashlib.md5(pcm + b":%d" % w).hexdigest()
+            yield doc_id, w, w * window_ms, len(chunk), md5
 
-        import pandas as pd
-
-        for pdf in batches:
-            doc_ids: list[int] = []
-            idxs: list[int] = []
-            starts: list[int] = []
-            counts: list[int] = []
-            md5s: list[str] = []
-            for doc_id, content in zip(pdf["doc_id"], pdf["content"]):
-                raw = bytes(content)
-                decoded = None
-                if raw[:4] in (b"RIFF", b"FORM"):
-                    try:
-                        decoded = (
-                            decode_wav(raw)
-                            if raw[:4] == b"RIFF"
-                            else decode_aiff(raw)
-                        )
-                    except (ValueError, NotImplementedError):
-                        decoded = None  # per-row degrade to raw path
-                if decoded is not None:
-                    rate, _ch, samples = decoded
-                    pcm = struct.pack("<%dh" % len(samples), *samples)
-                    n_samples = len(samples)
-                    spw_i = max(rate * window_ms // 1000, 1)
-                else:
-                    pcm = raw
-                    n_samples = len(raw) // 2
-                    spw_i = spw
-                n_windows = max((n_samples + spw_i - 1) // spw_i, 0)
-                for i in range(n_windows):
-                    doc_ids.append(doc_id)
-                    idxs.append(i)
-                    starts.append(i * window_ms)
-                    counts.append(min(spw_i, n_samples - i * spw_i))
-                    md5s.append(hashlib.md5(pcm + b":" + str(i).encode()).hexdigest())
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.array(doc_ids, dtype="int64"),
-                    "window_idx": pd.array(idxs, dtype="int32"),
-                    "start_ms": pd.array(starts, dtype="int64"),
-                    "n_samples": pd.array(counts, dtype="int64"),
-                    "window_md5": pd.array(md5s, dtype=object),
-                }
-            )
-
-    return media.mapInPandas(_windows, schema=AUDIO_SCHEMA)
+    return map_audio_payloads(media, AUDIO_SCHEMA, rows)
 
 
 def sample_frames(media: DataFrame, every: int = 10, modulus: int = 100) -> DataFrame:
@@ -1199,12 +1121,14 @@ def phash_dup_pairs(documents: DataFrame, max_hamming: int = 8) -> DataFrame:
 
 
 def audio_dup_windows(media: DataFrame, window_ms: int = 1000) -> DataFrame:
-    """Exact-duplicate audio segments across documents: group the
-    :func:`audio_windows` fan-out on the window content digest and keep
-    digests appearing in more than one document — the audio-modality
-    exact-dedup (window_md5 is a pure function of the window bytes, so
-    equal digests ⇔ byte-identical segments; near-dup would swap the
-    digest for an acoustic fingerprint, same plan shape).  One
+    """WHOLE-PAYLOAD audio duplicates across documents, reported window
+    by window: group the :func:`audio_windows` fan-out on its
+    ``window_md5`` and keep digests appearing in more than one document.
+    ``window_md5`` hashes the whole analyzed buffer (+ window index), so
+    a group is one window position shared by documents whose entire
+    analyzed buffers are byte-identical — two payloads that share only
+    some segments never collide. The per-SEGMENT sweep is
+    :func:`wav_dup_windows` (one :func:`window_digest` per window). One
     map-side-combined aggregation over the fan-out; the shuffle carries
     (digest, partials), never samples.
 

@@ -1665,7 +1665,6 @@ def pq_codes(
     m: int = 4,
     ks: int = 16,
     dims: int = 64,
-    codebook: DataFrame | None = None,
 ) -> DataFrame:
     """Product-quantization codes: split each vector into ``m`` contiguous
     subspaces of ``dims // m`` components and snap every sub-vector to its
@@ -1694,19 +1693,8 @@ def pq_codes(
     e = _as_double(embeddings)
     slices = F.array(*[F.slice("v", g * sub_len + 1, sub_len) for g in range(m)])
     parts = e.select("vec_id", F.posexplode(slices).alias("g", "sv"))
-    # sub-centroids come from `codebook` when given (callers coding a
-    # SUBSET — e.g. ivfpq_knn's probed buckets — must still quantize
-    # against the full-corpus codebook or codes change meaning)
-    cb = _as_double(codebook) if codebook is not None else e
-    cparts = (
-        cb.filter(F.col("vec_id") < ks)
-        .select(F.col("vec_id").alias("cid"), "v")
-        .select(
-            "cid",
-            F.posexplode(
-                F.array(*[F.slice("v", g * sub_len + 1, sub_len) for g in range(m)])
-            ).alias("g", "cv"),
-        )
+    cparts = e.filter(F.col("vec_id") < ks).select(
+        F.col("vec_id").alias("cid"), F.posexplode(slices).alias("g", "cv")
     )
     scored = parts.join(F.broadcast(cparts), "g").select(
         "vec_id",
@@ -1903,15 +1891,8 @@ def pq_distortion(
     e = _as_double(embeddings)
     slices = F.array(*[F.slice("v", g * sub_len + 1, sub_len) for g in range(m)])
     parts = e.select("vec_id", F.posexplode(slices).alias("g", "sv"))
-    cparts = (
-        e.filter(F.col("vec_id") < ks)
-        .select(F.col("vec_id").alias("cid"), "v")
-        .select(
-            "cid",
-            F.posexplode(
-                F.array(*[F.slice("v", g * sub_len + 1, sub_len) for g in range(m)])
-            ).alias("g", "cv"),
-        )
+    cparts = e.filter(F.col("vec_id") < ks).select(
+        F.col("vec_id").alias("cid"), F.posexplode(slices).alias("g", "cv")
     )
     scored = parts.join(F.broadcast(cparts), "g").select(
         "vec_id", "g", F.round(V.cosine(F.col("sv"), F.col("cv")), 6).alias("cos")

@@ -479,20 +479,37 @@ def _gopher_scored(documents: DataFrame, extras: tuple = ()) -> DataFrame:
     )
 
 
-def c4_kept_lines(txt):
-    """Array of lines surviving the PUBLISHED C4 line rules (≥ 5
-    whitespace words AND terminal punctuation ``. ! ? "``) as one
-    column expression — the single source of truth for
-    :func:`c4_line_stats` and :func:`gate_agreement` (``c4_clean``
-    keeps its own parameterized copy because its thresholds are
-    caller-tunable; its defaults equal these rules)."""
-    line_words = lambda l: F.when(  # noqa: E731 — local expression builder
-        F.trim(l) == "", F.lit(0)
-    ).otherwise(F.size(F.split(F.trim(l), r"\s+")))
-    return F.filter(
-        F.split(txt, "\n"),
-        lambda l: (line_words(l) >= 5) & l.rlike(r'[.!?"]\s*$'),
+def line_words(line):
+    """Whitespace word count of one line (0 for a blank line) — the one
+    line-length rule of the line-level ops (C4 rules, line dedup, the
+    curation funnel and the streaming line dedup)."""
+    return F.when(F.trim(line) == "", F.lit(0)).otherwise(
+        F.size(F.split(F.trim(line), r"\s+"))
     )
+
+
+def line_key(line):
+    """Normalized line identity: md5 of the trimmed, lower-cased line
+    with whitespace runs collapsed — the one dedup key of the batch and
+    streaming line dedup and the curation funnel."""
+    return F.md5(F.lower(F.regexp_replace(F.trim(line), r"\s+", " ")))
+
+
+def c4_line_rule(min_words: int, require_terminal: bool):
+    """The C4 line filter (a lambda over one line): ≥ ``min_words``
+    whitespace words and, when ``require_terminal``, terminal
+    punctuation ``. ! ? "``. The published rules are (5, True)."""
+    if not require_terminal:
+        return lambda l: line_words(l) >= min_words
+    return lambda l: (line_words(l) >= min_words) & l.rlike(r'[.!?"]\s*$')
+
+
+def c4_kept_lines(txt):
+    """Array of lines surviving the PUBLISHED C4 line rules
+    (≥ 5 whitespace words AND terminal punctuation) as one column
+    expression — the single source of truth for :func:`c4_line_stats`
+    and :func:`gate_agreement`."""
+    return F.filter(F.split(txt, "\n"), c4_line_rule(5, True))
 
 
 def c4_page_pass(txt):
@@ -1114,15 +1131,9 @@ def line_dedup(documents: DataFrame, min_words: int = 4) -> DataFrame:
     lines = widen(documents).select(
         "doc_id", F.posexplode(F.split(txt, "\n")).alias("pos", "line")
     )
-    n_words = F.when(F.trim("line") == "", F.lit(0)).otherwise(
-        F.size(F.split(F.trim("line"), r"\s+"))
-    )
+    line = F.col("line")
     keyed = lines.withColumn(
-        "k",
-        F.when(
-            n_words >= min_words,
-            F.md5(F.lower(F.regexp_replace(F.trim("line"), r"\s+", " "))),
-        ),
+        "k", F.when(line_words(line) >= min_words, line_key(line))
     )
     keepers = (
         keyed.filter(F.col("k").isNotNull())
@@ -1724,14 +1735,7 @@ def c4_clean(
     (surviving pages only).
     """
     txt = F.coalesce(F.col("text"), F.lit(""))
-    line_words = lambda l: F.when(  # noqa: E731 — local expression builder
-        F.trim(l) == "", F.lit(0)
-    ).otherwise(F.size(F.split(F.trim(l), r"\s+")))
-    line_ok = (
-        (lambda l: (line_words(l) >= min_line_words) & l.rlike(r'[.!?"]\s*$'))
-        if require_terminal
-        else (lambda l: line_words(l) >= min_line_words)
-    )
+    line_ok = c4_line_rule(min_line_words, require_terminal)
     kept = F.filter(F.split(txt, "\n"), line_ok)
     base = documents.select(
         "doc_id",

@@ -12,6 +12,8 @@ product, value → amount.
 
 from __future__ import annotations
 
+import hashlib
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -509,7 +511,10 @@ def q_phash_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_audio_dup_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-document exact-duplicate audio segments (digest grouping)."""
+    """Cross-document WHOLE-PAYLOAD audio duplicates, one row per shared
+    window: window_md5 hashes the whole analyzed buffer + the window
+    index, so only byte-identical payloads collide (the per-segment
+    sweep is wav_dup_windows)."""
     return multimodal.audio_dup_windows(
         multimodal.attach_binary(load_table(spark, sf_dir, "documents")),
         window_ms=10,
@@ -738,7 +743,8 @@ def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_audio_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audio-window fan-out plumbing (headerless raw-PCM16 path; 10 ms
     windows at 16 kHz so the synthetic payloads yield several windows
-    each). The container-decode path is certified separately by
+    each; window_md5 digests the whole payload + window index). The
+    container-decode path is certified separately by
     decoded_audio_stats."""
     return multimodal.audio_windows(
         multimodal.attach_binary(load_table(spark, sf_dir, "documents")),
@@ -910,24 +916,18 @@ def q_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.minhash_incremental(new, old, threshold=0.1)
 
 
-_PACKED_CACHE: dict[tuple[str, str], str] = {}
-
-
 def _input_fingerprint(sf_dir: str, table: str) -> str:
     """Cheap driver-side fingerprint of a table's parquet input:
     (relative path, size, mtime_ns) of every data file, walked in
     sorted order (directories too, so nested/partitioned inputs hash
-    the same on every run), hashed. Keys the in-session AND on-disk
-    ANN-index / packed-blocks caches, so a corpus REGENERATED in place
+    the same on every run), hashed. Keys :func:`_served_layout`'s
+    in-session and on-disk caches, so a corpus REGENERATED in place
     (the degenerate/non-ASCII sweeps rewrite ``.localdata/sfdeg``)
     rebuilds its layout instead of serving a stale one. stat() only —
     never reads data. Raises ValueError for a table that is not on
     the local filesystem (a URI scheme other than ``file:``, or no
     such path): hashing an empty listing would key every generation
     of that input the same."""
-    import hashlib
-    import os
-
     from data_pipeline_example_spark.sources.tables import data_files, local_path
 
     src = local_path(f"{sf_dir}/{table}.parquet")
@@ -943,6 +943,34 @@ def _input_fingerprint(sf_dir: str, table: str) -> str:
     return hashlib.md5("|".join(parts).encode()).hexdigest()[:12]
 
 
+# (kind, sf_dir, input fingerprint) -> on-disk path of a served layout
+_SERVED_LAYOUTS: dict[tuple[str, str, str], str] = {}
+
+
+def _served_layout(
+    sf_dir: str, table: str, kind: str, version: str, parts: tuple, build
+) -> str:
+    """Path of a layout built from ``sf_dir``'s ``table`` and served
+    from ``.localdata/<kind>/<tag>`` in the checkout: cached in session
+    and on disk, keyed by the input fingerprint (taken on every call,
+    so a corpus REGENERATED in place, even mid-session, rebuilds its
+    layout instead of serving a stale one) — never the applicationId,
+    whose tags minted a fresh copy per session that was never reused.
+    ``tag`` = md5 of ``sf_dir:fingerprint:version`` (``version`` names
+    the layout format). ``build(path)`` runs unless every ``parts``
+    subdirectory holds a ``_SUCCESS`` marker."""
+    fp = _input_fingerprint(sf_dir, table)
+    path = _SERVED_LAYOUTS.get((kind, sf_dir, fp))
+    if path is None:
+        tag = hashlib.md5(f"{sf_dir}:{fp}:{version}".encode()).hexdigest()[:12]
+        repo = os.path.dirname(os.path.dirname(os.path.dirname(__file__)))
+        path = os.path.join(repo, ".localdata", kind, tag)
+        if not all(os.path.isfile(os.path.join(path, p, "_SUCCESS")) for p in parts):
+            build(path)
+        _SERVED_LAYOUTS[(kind, sf_dir, fp)] = path
+    return path
+
+
 def q_packed_block_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audit of the MATERIALIZED packing layout: writes
     ``sinks.write_packed_blocks`` (capacity 512) to a repo-local
@@ -953,31 +981,13 @@ def q_packed_block_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     DIRECTLY from the documents table (token-level positions → block
     arithmetic), so a green row certifies the on-disk blocks byte-for-
     byte at the block-boundary granularity."""
-    import hashlib
-    import os
-
     from data_pipeline_example_spark import sinks
 
     docs = load_table(spark, sf_dir, "documents")
-    # key = sf_dir + INPUT FINGERPRINT (+ format version on disk): a
-    # corpus regenerated under the same path, even mid-session,
-    # rebuilds its layout
-    fp = _input_fingerprint(sf_dir, "documents")
-    path = _PACKED_CACHE.get((sf_dir, fp))
-    if path is None:
-        tag = hashlib.md5(f"{sf_dir}:{fp}:pack512:v1".encode()).hexdigest()[:12]
-        path = os.path.join(
-            os.path.dirname(os.path.dirname(os.path.dirname(__file__))),
-            ".localdata",
-            "packed_cache",
-            tag,
-        )
-        if not (
-            os.path.isfile(os.path.join(path, "blocks", "_SUCCESS"))
-            and os.path.isfile(os.path.join(path, "manifest", "_SUCCESS"))
-        ):
-            sinks.write_packed_blocks(docs, path, capacity=512)
-        _PACKED_CACHE[(sf_dir, fp)] = path
+    path = _served_layout(
+        sf_dir, "documents", "packed_cache", "pack512:v1", ("blocks", "manifest"),
+        lambda p: sinks.write_packed_blocks(docs, p, capacity=512),
+    )
     # explicit schema — inference fails on the zero-file dataset an
     # empty corpus writes (r15 degenerate-empty sweep)
     blocks = spark.read.schema(sinks.PACKED_BLOCKS_SCHEMA).parquet(
@@ -1315,42 +1325,18 @@ def q_token_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text.token_fertility(load_table(spark, sf_dir, "documents"))
 
 
-_ANN_INDEX_CACHE: dict[tuple[str, str], str] = {}
-
-
 def q_ivfpq_knn_index_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Query batch served from the materialized IVF-PQ index: writes
     ``write_ann_index``'s centroid-partitioned layout to a repo-local
     scratch dir (once per session × sf_dir — cached, so repeat bench
     runs pay only the serve) and serves the 4 lowest vec_ids from it
     in ONE partition-pruned read."""
-    import hashlib
-    import os
-
     emb = load_table(spark, sf_dir, "embeddings")
-    # keyed by (sf_dir, input fingerprint), in session and on disk (plus
-    # the index-format version) — never the applicationId: an appId-
-    # derived tag minted a fresh full index copy per session and no
-    # layout was ever reused or evicted. v2: valid_embeddings guard
-    # added to the index build (r15). The fingerprint is taken on every
-    # call, so a corpus REGENERATED in place, even mid-session, rebuilds
-    # the layout instead of serving a stale index.
-    fp = _input_fingerprint(sf_dir, "embeddings")
-    path = _ANN_INDEX_CACHE.get((sf_dir, fp))
-    if path is None:
-        tag = hashlib.md5(f"{sf_dir}:{fp}:v2".encode()).hexdigest()[:12]
-        path = os.path.join(
-            os.path.dirname(os.path.dirname(os.path.dirname(__file__))),
-            ".localdata",
-            "ann_cache",
-            tag,
-        )
-        if not (
-            os.path.isfile(os.path.join(path, "index", "_SUCCESS"))
-            and os.path.isfile(os.path.join(path, "centroids", "_SUCCESS"))
-        ):
-            similarity.write_ann_index(emb, path)
-        _ANN_INDEX_CACHE[(sf_dir, fp)] = path
+    # v2: valid_embeddings guard added to the index build (r15)
+    path = _served_layout(
+        sf_dir, "embeddings", "ann_cache", "v2", ("index", "centroids"),
+        lambda p: similarity.write_ann_index(emb, p),
+    )
     qvs = [
         (int(r["vec_id"]), [float(x) for x in r["embedding"]])
         for r in emb.filter(F.col("vec_id") < 4).collect()
@@ -2204,14 +2190,22 @@ QUERIES: dict[str, QueryFn] = {
 # moved since that certification (order_gap_percentiles,
 # embedding_dimension_health — r16 hash, latest registry positions)
 # make room.
+# One audio decode-and-window core (same derivation): the five audio
+# queries whose code path moved onto the one container dispatch, chunk
+# walker, window slicer and window digest join as the newest changed
+# group; the five most recently certified names of the r15 changed
+# group whose code has not moved since (returns_cube,
+# quantize_embeddings, embedding_profile, day_over_day_revenue,
+# event_volume_changepoint — r16 hash, latest registry positions) make
+# room. corpus_funnel (the shared line rule and key),
+# packed_block_audit and ivfpq_knn_index_batch (the shared served-
+# layout cache) moved this round too and stay.
 _R15_FRONT = [
     # new r15
     "unicode_clean",
     # changed r15 (ascending last-certified round, ties by position)
     "sliding_window_revenue", "user_sessions", "timeline_points",
-    "window_summary_stats", "revenue_rollup", "returns_cube",
-    "quantize_embeddings", "embedding_profile", "day_over_day_revenue",
-    "event_volume_changepoint", "corpus_funnel",
+    "window_summary_stats", "revenue_rollup", "corpus_funnel",
     "packed_block_audit", "ivfpq_knn_index_batch",
     # changed by the ANN retrieval-core rewrite
     "ivf_knn", "ivf_knn_batch", "filtered_ivf_knn", "ivfpq_knn",
@@ -2232,6 +2226,9 @@ _R15_FRONT = [
     "media_features",
     # changed by the one keyed-state core (the shared NULL-user key)
     "attribution_last_touch", "event_debounce",
+    # changed by the one audio decode-and-window core
+    "audio_windows", "audio_dup_windows", "decoded_audio_stats",
+    "decoded_aiff_stats", "wav_dup_windows",
 ]
 assert len(_R15_FRONT) == 50 and all(n in QUERIES for n in _R15_FRONT), (
     "window rotation list must name 50 registered queries"

@@ -355,12 +355,9 @@ def dedup_lines_stream(
             "pos", "line"
         ),
     )
-    n_words = F.when(F.trim("line") == "", F.lit(0)).otherwise(
-        F.size(F.split(F.trim("line"), r"\s+"))
-    )
-    keyed = exploded.filter(n_words >= min_words).withColumn(
-        "line_hash",
-        F.md5(F.lower(F.regexp_replace(F.trim("line"), r"\s+", " "))),
+    line = F.col("line")
+    keyed = exploded.filter(text.line_words(line) >= min_words).withColumn(
+        "line_hash", text.line_key(line)
     )
     return (
         keyed.withWatermark("ingest_ts", watermark)
@@ -460,23 +457,23 @@ def dedup_audio_stream(
     embedding (``dedup_embedding_stream``) and image
     (``dedup_image_stream``) admission stages: arriving audio payloads
     are container-decoded IN the micro-batch and admitted at analysis-
-    window granularity, keyed on exactly the per-window content digest
-    the batch :func:`operators.multimodal.wav_dup_windows` sweep groups
-    on — md5 over the window's PCM bytes as an uppercase hex string +
-    ':' + window_idx — so the streamed admission decisions and the
-    periodic batch dup sweep agree row-for-row (the restart test pins
-    the streamed rejects to the batch anchor's dup groups).
+    window granularity, keyed on :func:`operators.multimodal.window_digest`
+    — the very function the batch
+    :func:`operators.multimodal.wav_dup_windows` sweep groups on, over
+    the same :func:`operators.multimodal.audio_window_slices` windows —
+    so the streamed admission decisions and the periodic batch dup
+    sweep agree row-for-row (the restart test pins the streamed rejects
+    to the batch anchor's dup groups).
 
-    Decode is the REAL container parse via the same Arrow-batched
-    ``mapInPandas`` seam as ``dedup_image_stream`` — RIFF magics
-    through :func:`decode_wav`, FORM magics through
-    :func:`decode_aiff` (both audio container families admit into the
-    SAME digest space: a WAV and an AIFF carrying identical PCM
-    windows collide, which is the correct dedup outcome); undecodable
-    payloads (wrong magic, truncated container, non-PCM16) are DROPPED
-    inside the batch, never keyed — a shared failure key would swallow
-    every later broken payload as a "duplicate", the NULL-key trap the
-    embedding stage documents.
+    Decode is the batch family's container dispatch
+    (:func:`operators.multimodal.decode_audio`) inside its one
+    Arrow-batched loop: WAV and AIFF admit into the SAME digest space (a
+    WAV and an AIFF carrying identical PCM windows collide, which is the
+    correct dedup outcome); undecodable payloads (wrong magic,
+    truncated container, non-PCM16) are DROPPED inside the batch, never
+    keyed — a shared failure key would swallow every later broken
+    payload as a "duplicate", the NULL-key trap the embedding stage
+    documents.
 
     State is one digest per distinct admitted window inside the
     watermark horizon, evicted after it (``dropDuplicatesWithinWatermark``)
@@ -488,50 +485,23 @@ def dedup_audio_stream(
     Output: the admitted window stream (doc_id, window_idx,
     window_digest, ingest_ts).
     """
-    from data_pipeline_example_spark.operators.multimodal import (
-        decode_aiff,
-        decode_wav,
-    )
+    from data_pipeline_example_spark.operators import multimodal as mm
 
-    def _digest(batches):
-        import hashlib
-        import struct
+    def rows(raw: bytes, doc_id, ts):
+        try:
+            rate, _ch, samples = mm.decode_audio(raw)
+        except (ValueError, NotImplementedError):
+            return  # reject: undecodable payload
+        for w, chunk in mm.audio_window_slices(samples, rate, window_ms):
+            yield doc_id, w, mm.window_digest(chunk, w), ts
 
-        import pandas as pd
-
-        for pdf in batches:
-            ids, tss, idxs, digs = [], [], [], []
-            for doc_id, ts, b in zip(pdf["doc_id"], pdf["ingest_ts"], pdf["content"]):
-                raw = bytes(b)
-                try:
-                    decoder = decode_aiff if raw[:4] == b"FORM" else decode_wav
-                    rate, _ch, samples = decoder(raw)
-                except Exception:
-                    continue  # reject: undecodable payload
-                spw = max(rate * window_ms // 1000, 1)
-                for w in range((len(samples) + spw - 1) // spw):
-                    chunk = samples[w * spw : (w + 1) * spw]
-                    pcm = struct.pack("<%dh" % len(chunk), *chunk)
-                    ids.append(doc_id)
-                    tss.append(ts)
-                    idxs.append(w)
-                    digs.append(
-                        hashlib.md5(
-                            (pcm.hex().upper() + ":" + str(w)).encode()
-                        ).hexdigest()
-                    )
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "window_idx": pd.array(idxs, dtype="int32"),
-                    "window_digest": digs,
-                    "ingest_ts": tss,
-                }
-            )
-
-    digested = media.filter(F.col("content").isNotNull()).mapInPandas(
-        _digest,
-        "doc_id long, window_idx int, window_digest string, ingest_ts timestamp",
+    digested = mm.map_audio_payloads(
+        media.filter(F.col("content").isNotNull()),
+        StructType.fromDDL(
+            "doc_id long, window_idx int, window_digest string, ingest_ts timestamp"
+        ),
+        rows,
+        carry=("ingest_ts",),
     )
     return digested.withWatermark(
         "ingest_ts", watermark

@@ -703,23 +703,6 @@ def test_new_embedding_ops_handle_tiny_and_empty_inputs(spark):
     assert top and top[0]["vec_id"] == 2 and top[0]["cos_sim"] == 1.0
 
 
-def test_pq_codes_codebook_override_matches_full_run(spark, sf_dir):
-    """Coding a SUBSET against the full-corpus codebook yields exactly
-    the codes the full run assigns those vectors — the contract that
-    lets an indexer code shards/partitions independently."""
-    from pyspark.sql import functions as F
-
-    from data_pipeline_example_spark.operators.similarity import pq_codes
-    from data_pipeline_example_spark.sources import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    subset = emb.filter(F.col("vec_id") % 5 == 3)  # excludes all vec_id < 16
-    full = {r["vec_id"]: tuple(r)[1:] for r in pq_codes(emb).collect()}
-    part = {r["vec_id"]: tuple(r)[1:] for r in
-            pq_codes(subset, codebook=emb).collect()}
-    assert part and all(full[k] == v for k, v in part.items())
-
-
 def test_simhash_pairs_capped_subset_and_cap_semantics(spark, sf_dir):
     """Capped pairs ⊆ full pairs with identical hamming values; equal
     when the cap exceeds every bucket; under a binding cap, surviving

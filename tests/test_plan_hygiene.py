@@ -18,6 +18,8 @@ every optimized plan, not just in docstrings.
 * the stateful streams share one ``applyInPandasWithState`` site with
   no TTL parameter, and no write flips the session's partition
   overwrite mode (static scans)
+* the audio family has one container dispatch and one window digest,
+  and no tool puts a fixed checkout path on ``sys.path`` (static scans)
 """
 
 from __future__ import annotations
@@ -289,3 +291,68 @@ def test_no_session_partition_overwrite_toggle():
         )
     ]
     assert not found, f"session conf toggles of partitionOverwriteMode: {found}"
+
+
+def _nodes_with_function(root: pathlib.Path):
+    """(file, outermost enclosing function or ``<module>``, node) for
+    every AST node of the ``*.py`` files under ``root``."""
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        tree = ast.parse(path.read_text(), str(path))
+        for top in tree.body:
+            owner = top.name if isinstance(top, ast.FunctionDef) else "<module>"
+            for node in ast.walk(top):
+                yield rel, owner, node
+
+
+def test_one_audio_decode_and_window_core():
+    """The audio family decodes through one container dispatch and keys
+    duplicate windows on one digest: ``decode_wav`` / ``decode_aiff``
+    are named only inside ``multimodal.decode_audio``, the PCM hex the
+    window digest hashes is rendered only inside
+    ``multimodal.window_digest``, and the batch sweep and its stream
+    twin both call that function."""
+    decoders = {"decode_wav", "decode_aiff"}
+    named, hexed, digest_callers = [], [], set()
+    for rel, owner, node in _nodes_with_function(_PKG):
+        site = (rel, owner)
+        if isinstance(node, ast.Name) and node.id in decoders:
+            named.append(site)
+        if isinstance(node, ast.ImportFrom):
+            named += [site for a in node.names if a.name in decoders]
+        if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
+            if node.func.attr == "hex":
+                hexed.append(site)
+            if node.func.attr == "window_digest":
+                digest_callers.add(site)
+        if isinstance(node, ast.Call) and isinstance(node.func, ast.Name):
+            if node.func.id == "window_digest":
+                digest_callers.add(site)
+    dispatch = ("operators/multimodal.py", "decode_audio")
+    assert named and set(named) == {dispatch}, named
+    assert hexed == [("operators/multimodal.py", "window_digest")], hexed
+    assert {
+        ("operators/multimodal.py", "wav_dup_windows"),
+        ("streaming/curation.py", "dedup_audio_stream"),
+    } <= digest_callers, digest_callers
+
+
+def test_tools_resolve_the_checkout_from_their_own_path():
+    """``tools/*.py`` find the package relative to their own file: a
+    string literal on ``sys.path`` would make a tool run from another
+    checkout silently import (and measure) a different copy of the
+    code."""
+    tools = pathlib.Path(__file__).resolve().parent.parent / "tools"
+    found = [
+        f"{rel}:{node.lineno}"
+        for rel, _, node in _nodes_with_function(tools)
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr in ("insert", "append")
+        and _call_chain(node.func.value) == ["path"]
+        and any(
+            isinstance(a, ast.Constant) and isinstance(a.value, str)
+            for a in node.args
+        )
+    ]
+    assert not found, f"string literals put on sys.path: {found}"

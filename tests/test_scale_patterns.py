@@ -1287,45 +1287,60 @@ def test_update_ann_index_incremental_equals_rebuild(spark, sf_dir, tmp_path):
 
 
 def test_ann_index_cache_follows_corpus_rewritten_mid_session(spark, sf_dir, tmp_path):
-    """The in-session index cache is keyed by (sf_dir, input fingerprint):
-    rewriting a corpus's embeddings in place between two calls of the
-    registered ivfpq_knn_index_batch query serves an index rebuilt from
-    the NEW vectors (row-identical to the in-plan batch over them), not
-    the layout cached for the old ones."""
+    """The in-session served-layout cache is keyed by (kind, sf_dir,
+    input fingerprint): rewriting a corpus table in place between two
+    calls of a query served from a cached layout — the IVF-PQ index of
+    ivfpq_knn_index_batch (embeddings) and the packed blocks of
+    packed_block_audit (documents) — serves a layout rebuilt from the
+    NEW rows (row-identical to the in-plan batch / the DuckDB oracle
+    over them), not the layout cached for the old ones."""
     import shutil
 
+    import duckdb
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     from data_pipeline_example_spark.operators import similarity
     from data_pipeline_example_spark.plans import queries
+    from data_pipeline_example_spark.plans.oracles import ORACLES
 
     sf = str(tmp_path / "sf")
     (tmp_path / "sf").mkdir()
-    src = pq.read_table(f"{sf_dir}/embeddings.parquet")
-    pq.write_table(src, f"{sf}/embeddings.parquet")
 
     def rows(df):
         return sorted(tuple(r) for r in df.collect())
 
+    def packed_oracle():
+        con = duckdb.connect()
+        con.execute(
+            "CREATE VIEW documents AS SELECT * FROM "
+            f"read_parquet('{sf}/documents.parquet')"
+        )
+        return sorted(con.execute(ORACLES["packed_block_audit"]).fetchall())
+
+    cases = (
+        ("embeddings", "embedding", queries.q_ivfpq_knn_index_batch,
+         lambda: rows(similarity.ivfpq_knn_batch(load_table(spark, sf, "embeddings")))),
+        ("documents", "text", queries.q_packed_block_audit, packed_oracle),
+    )
     try:
-        before = rows(queries.q_ivfpq_knn_index_batch(spark, sf))
-        # same ids and labels, every id given its successor's vector
-        vecs = src.column("embedding").to_pylist()
-        flipped = src.set_column(
-            src.schema.get_field_index("embedding"),
-            "embedding",
-            pa.array(vecs[1:] + vecs[:1], type=src.schema.field("embedding").type),
-        )
-        pq.write_table(flipped, f"{sf}/embeddings.parquet")
-        after = rows(queries.q_ivfpq_knn_index_batch(spark, sf))
-        want = rows(
-            similarity.ivfpq_knn_batch(load_table(spark, sf, "embeddings"))
-        )
-        assert after == want
-        assert after != before
+        for table, column, query, want in cases:
+            src = pq.read_table(f"{sf_dir}/{table}.parquet")
+            pq.write_table(src, f"{sf}/{table}.parquet")
+            before = rows(query(spark, sf))
+            # same ids and labels, every row given its successor's value
+            vals = src.column(column).to_pylist()
+            flipped = src.set_column(
+                src.schema.get_field_index(column),
+                column,
+                pa.array(vals[1:] + vals[:1], type=src.schema.field(column).type),
+            )
+            pq.write_table(flipped, f"{sf}/{table}.parquet")
+            after = rows(query(spark, sf))
+            assert after == want(), table
+            assert after != before, table
     finally:
-        for (d, _), path in list(queries._ANN_INDEX_CACHE.items()):
+        for (_, d, _), path in list(queries._SERVED_LAYOUTS.items()):
             if d == sf:
                 shutil.rmtree(path, ignore_errors=True)
 

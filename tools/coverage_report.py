@@ -14,16 +14,16 @@ import pathlib
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = pathlib.Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
 
 
 def main() -> None:
     from data_pipeline_example_spark.plans.oracles import ORACLES
     from data_pipeline_example_spark.plans.queries import QUERIES
 
-    repo = pathlib.Path("/root/repo")
     certified: dict[str, str] = {}
-    for rnd in sorted(repo.glob("CORRECTNESS_r*.json")):
+    for rnd in sorted(REPO.glob("CORRECTNESS_r*.json")):
         label = rnd.stem.split("_r")[-1].lstrip("0") or "0"
         data = json.loads(rnd.read_text())
         for name, row in data.items():
@@ -58,7 +58,7 @@ def main() -> None:
                     obj = getattr(obj, p)
                 f = inspect.getsourcefile(obj)
                 ln = inspect.getsourcelines(obj)[1]
-                rel = pathlib.Path(f).relative_to(repo)
+                rel = pathlib.Path(f).relative_to(REPO)
                 impl = f"`{target}` ({rel}:{ln})"
             except Exception:
                 pass

@@ -11,10 +11,11 @@ Usage: python tools/plan_report.py [sf_dir] > PLANS.md
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:

@@ -30,10 +30,11 @@ from __future__ import annotations
 
 import hashlib
 import math
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def norm_cell(v) -> str:
@@ -81,7 +82,6 @@ def main() -> int:
     if corpus is not None:
         # regenerate the adversarial corpus from sf_dir, then sweep THERE —
         # the standing-gate form of the r14 hand-run non-ASCII audit
-        import os
         import subprocess
 
         tools_dir = os.path.dirname(os.path.abspath(__file__))
@@ -126,10 +126,8 @@ def main() -> int:
         # testdata ships single files; gen_sf.py scale dirs ship Spark
         # dataset DIRECTORIES — glob those so the oracle gate also runs
         # against .localdata/sf1 and beyond
-        import os as _os
-
         src = f"{sf_dir}/{t}.parquet"
-        if _os.path.isdir(src):
+        if os.path.isdir(src):
             src = f"{src}/*.parquet"
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{src}')")
 
