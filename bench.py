@@ -389,7 +389,10 @@ def main() -> None:
     # Same min-of-2 protocol as the primary metric — this host's bursty
     # stalls would otherwise pollute the recorded ratio. Disable with
     # SPARK_GRAFT_SCALING=0.
-    sf1_dir = os.environ.get("SPARK_GRAFT_SF1_DIR", "/root/repo/.localdata/sf1")
+    sf1_dir = os.environ.get(
+        "SPARK_GRAFT_SF1_DIR",
+        os.path.join(os.path.dirname(os.path.abspath(__file__)), ".localdata", "sf1"),
+    )
     if (
         os.environ.get("SPARK_GRAFT_SCALING", "1") != "0"
         and os.path.isdir(sf1_dir)

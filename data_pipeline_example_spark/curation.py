@@ -254,9 +254,11 @@ def corpus_funnel(documents: DataFrame) -> DataFrame:
     expression the five members need — the C4 page flag, the Gopher
     metrics + pass flag (via ``text._gopher_scored``'s passthrough
     hook, so the expressions are the member operators' own), the exact
-    fingerprint, the ≥4-word line keys with positions, and the 3-token
-    shingle set — and is ``localCheckpoint``-ed, so the corpus is read
-    ONCE and tokenized ONCE. The three cross-doc members (line-dedup
+    fingerprint, the ≥4-word line keys with positions, and the word
+    tokens — and the 3-token shingle set is built over that BOUND token
+    column (an inline tokenizer would re-run at every reference
+    ``word_grams`` makes) before the ``localCheckpoint``, so the corpus
+    is read ONCE. The three cross-doc members (line-dedup
     winners, exact keepers, contamination) are narrow shuffles over the
     checkpointed columns, never the text; the conjunction is doc-keyed
     joins plus a constant-size aggregate unpivoted with ``stack``.
@@ -305,7 +307,7 @@ def corpus_funnel(documents: DataFrame) -> DataFrame:
         ("fingerprint", T.fingerprint(F.col("text"))),
         ("has_short", has_short),
         ("keyed", keyed),
-        ("shingles", T.shingles_from_tokens(T.tokens(F.lower(F.col("text"))), 3)),
+        ("toks", T.lower_tokens(F.col("text"))),
     )
     enriched = (
         text._gopher_scored(widen(documents), extras)
@@ -316,7 +318,7 @@ def corpus_funnel(documents: DataFrame) -> DataFrame:
             "has_short",
             "fingerprint",
             "keyed",
-            "shingles",
+            F.array_distinct(T.word_grams("toks", 3)).alias("shingles"),
             text.gopher_passes().cast("int").alias("f7"),
         )
         .transform(materialize)

@@ -55,9 +55,9 @@ def shingled(documents: DataFrame, k: int = 3) -> DataFrame:
     """doc_id + distinct k-token shingle array (empty arrays filtered —
     docs with < k tokens can never match anything).
 
-    The token array is materialized in its own projection below the
-    shingle assembly: the downstream expression references it k+1 times,
-    and building shingles from a bound column instead of k+1 copies of
+    The token array is bound in its own projection below the shingle
+    assembly (``functions.text.word_grams`` reads it several times):
+    building shingles from a bound column instead of repeated copies of
     the tokenizer subtree measured 5× faster on the corpus (the giant
     single-projection expression defeats codegen subexpression
     elimination).
@@ -67,10 +67,10 @@ def shingled(documents: DataFrame, k: int = 3) -> DataFrame:
     operator, and a one-partition input would serialize them on one
     core (observed 4.3 s → sub-second at sf0.1 on local[32])."""
     toks_df = widen(documents).select(
-        "doc_id", T.tokens(F.lower(F.col("text"))).alias("toks")
+        "doc_id", T.lower_tokens(F.col("text")).alias("toks")
     )
     return toks_df.select(
-        "doc_id", T.shingles_from_tokens(F.col("toks"), k).alias("shingles")
+        "doc_id", F.array_distinct(T.word_grams("toks", k)).alias("shingles")
     ).filter(F.size("shingles") > 0)
 
 
@@ -381,7 +381,7 @@ def simhash_signatures(documents: DataFrame) -> DataFrame:
     # on a busy production driver that latency is queueing delay for
     # every other job.
     toks = widen(documents).select(
-        "doc_id", F.explode(F.array_distinct(T.tokens(F.lower(F.col("text"))))).alias("tok")
+        "doc_id", F.explode(F.array_distinct(T.lower_tokens(F.col("text")))).alias("tok")
     )
     # parse the 64 hash bits into two 32-bit longs in a projection BELOW
     # the aggregate — 2 conv calls per token, with the 64 per-bit votes

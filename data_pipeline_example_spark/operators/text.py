@@ -418,9 +418,9 @@ def _gopher_scored(documents: DataFrame, extras: tuple = ()) -> DataFrame:
     ``extras`` is a tuple of (name, Column) pairs evaluated against the
     RAW input frame in the same base projection and carried through —
     the hook that lets ``curation.corpus_funnel`` compute its
-    fingerprint/line-key/shingle columns in the SAME single corpus scan
-    as the Gopher metrics (one scan, one tokenize, instead of one per
-    member operator).
+    fingerprint/line-key/token columns in the SAME single corpus scan
+    as the Gopher metrics (one scan instead of one per member
+    operator; the stopword count tokenizes ``t`` on its own).
     """
     txt = F.coalesce(F.col("text"), F.lit(""))
     words = F.when(F.trim(txt) == "", F.array().cast("array<string>")).otherwise(
@@ -458,11 +458,7 @@ def _gopher_scored(documents: DataFrame, extras: tuple = ()) -> DataFrame:
     # sweep finding); intersect of distinct tokens is engine-identical
     n_stops = F.size(
         F.array_intersect(
-            F.array_distinct(
-                F.regexp_extract_all(
-                    F.lower(F.col("t")), F.lit(f"({T.TOKEN_PATTERN})"), 1
-                )
-            ),
+            F.array_distinct(T.lower_tokens(F.col("t"))),
             F.array(*[F.lit(s) for s in GOPHER_STOPS]),
         )
     ).cast("long")
@@ -577,14 +573,9 @@ def repetition_stats(documents: DataFrame) -> DataFrame:
     measure). Output: doc_id, n_bigrams, top_bigram_n, top_bigram_ratio,
     distinct_bigram_ratio.
     """
-    t = T.tokens(F.lower(F.col("text")))
-    bigrams = F.expr(
-        "transform(slice(t, 1, greatest(size(t) - 1, 0)), "
-        "(x, i) -> concat(x, ' ', element_at(t, i + 2)))"
-    )
     counts = (
-        documents.select("doc_id", t.alias("t"))
-        .select("doc_id", F.explode(bigrams).alias("bigram"))
+        documents.select("doc_id", T.lower_tokens(F.col("text")).alias("t"))
+        .select("doc_id", F.explode(T.word_grams("t", 2)).alias("bigram"))
         .groupBy("doc_id", "bigram")
         .agg(F.count(F.lit(1)).alias("c"))
     )
@@ -620,15 +611,11 @@ def dup_ngram_fraction(documents: DataFrame, n: int = 8) -> DataFrame:
     measured, nothing to drop on). Output: doc_id, n_ngrams,
     n_distinct, dup_fraction.
     """
-    grams = (
-        f"transform(slice(t, 1, greatest(size(t) - {n} + 1, 0)), "
-        f"(x, i) -> array_join(slice(t, i + 1, {n}), ' '))"
-    )
     # widen: n-gram string building is the cost; a single-file corpus
     # scan must not serialize it onto one core
     base = widen(documents).select(
-        "doc_id", T.tokens(F.lower(F.col("text"))).alias("t")
-    ).select("doc_id", F.expr(grams).alias("g"))
+        "doc_id", T.lower_tokens(F.col("text")).alias("t")
+    ).select("doc_id", T.word_grams("t", n).alias("g"))
     total = F.size("g").cast("long")
     distinct = F.size(F.array_distinct("g")).cast("long")
     return base.select(
@@ -662,14 +649,10 @@ def corpus_dup_ngrams(documents: DataFrame, n: int = 8) -> DataFrame:
 
     Output: doc_id, n_ngrams, n_cross_dup, cross_dup_fraction (4 dp).
     """
-    grams = (
-        f"transform(slice(t, 1, greatest(size(t) - {n} + 1, 0)), "
-        f"(x, i) -> array_join(slice(t, i + 1, {n}), ' '))"
-    )
     pos = (
         widen(documents)
-        .select("doc_id", T.tokens(F.lower(F.col("text"))).alias("t"))
-        .select("doc_id", F.explode(F.expr(grams)).alias("gram"))
+        .select("doc_id", T.lower_tokens(F.col("text")).alias("t"))
+        .select("doc_id", F.explode(T.word_grams("t", n)).alias("gram"))
     )
     per_pair = pos.groupBy("doc_id", "gram").agg(F.count(F.lit(1)).alias("occ"))
     gram_docs = per_pair.groupBy("gram").agg(F.count(F.lit(1)).alias("nd"))
@@ -832,19 +815,15 @@ def top_bigrams(documents: DataFrame, n: int = 50) -> DataFrame:
     with *occurrence* counts (unlike the dedup shingles, which are
     per-doc distinct sets).
 
-    The pair construction is a pure array expression (slice + indexed
-    transform) — no UDF, no self-join; one explode then one count
-    aggregate keyed on the bigram string. Ties rank alphabetically so
-    top-k is deterministic. Output: bigram, n_occurrences.
+    The pair construction is a pure array expression
+    (``functions.text.word_grams`` over the bound token column) — no
+    UDF, no self-join; one explode then one count aggregate keyed on
+    the bigram string. Ties rank alphabetically so top-k is
+    deterministic. Output: bigram, n_occurrences.
     """
-    t = T.tokens(F.lower(F.col("text")))
-    bigrams = F.expr(
-        "transform(slice(t, 1, greatest(size(t) - 1, 0)), "
-        "(x, i) -> concat(x, ' ', element_at(t, i + 2)))"
-    )
     return (
-        documents.select(t.alias("t"))
-        .select(F.explode(bigrams).alias("bigram"))
+        documents.select(T.lower_tokens(F.col("text")).alias("t"))
+        .select(F.explode(T.word_grams("t", 2)).alias("bigram"))
         .groupBy("bigram")
         .agg(F.count(F.lit(1)).alias("n_occurrences"))
         .orderBy(F.desc("n_occurrences"), F.asc("bigram"))
@@ -866,7 +845,7 @@ def tfidf_top_terms(documents: DataFrame, top_per_doc: int = 3) -> DataFrame:
     from pyspark.sql.window import Window
 
     exploded = documents.select(
-        "doc_id", F.explode(T.tokens(F.lower(F.col("text")))).alias("term")
+        "doc_id", F.explode(T.lower_tokens(F.col("text"))).alias("term")
     )
     tf = exploded.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     df_ = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
@@ -923,7 +902,7 @@ def chunk_documents(
     """
     src = widen(documents) if widen_input else documents
     toks_df = src.select(
-        "doc_id", *carry, T.tokens(F.lower(F.col("text"))).alias("toks")
+        "doc_id", *carry, T.lower_tokens(F.col("text")).alias("toks")
     )
     starts = F.sequence(F.lit(0), F.size("toks") - 1, F.lit(stride))
     chunks = toks_df.filter(F.size("toks") > 0).select(
@@ -1035,7 +1014,7 @@ def frequent_terms(documents: DataFrame, eps: float = 0.005) -> DataFrame:
 
     k = int(math.ceil(1.0 / eps))
     toks = widen(documents).select(
-        F.explode(T.tokens(F.lower(F.col("text")))).alias("term")
+        F.explode(T.lower_tokens(F.col("text"))).alias("term")
     )
 
     def mg(batches):
@@ -1086,7 +1065,7 @@ def unigram_scores(documents: DataFrame) -> DataFrame:
     far inside the rounding).
     """
     toks = widen(documents).select(
-        "doc_id", F.explode(T.tokens(F.lower(F.col("text")))).alias("term")
+        "doc_id", F.explode(T.lower_tokens(F.col("text"))).alias("term")
     )
     vocab = toks.groupBy("term").agg(F.count(F.lit(1)).alias("tc"))
     total = toks.agg(F.count(F.lit(1)).alias("n_total"))
@@ -1406,11 +1385,7 @@ def dsir_weights(documents: DataFrame, n_buckets: int = 1024) -> DataFrame:
         if mq_row is not None
         else F.lit(None).cast("double")
     )
-    t = T.tokens(F.lower(F.col("text")))
-    bigrams = F.expr(
-        "transform(slice(t, 1, greatest(size(t) - 1, 0)), "
-        "(x, i) -> concat(x, ' ', element_at(t, i + 2)))"
-    )
+    t = T.lower_tokens(F.col("text"))
     # scans 2/3: the per-bigram frame with is_t derived INLINE from the
     # same bound-count projection doc_stats uses (bit-identical quality
     # expression + the broadcast mean) — no per-doc flag frame, no
@@ -1426,7 +1401,7 @@ def dsir_weights(documents: DataFrame, n_buckets: int = 1024) -> DataFrame:
         .select(
             "doc_id",
             (_quality_from_counts() >= mq_lit).cast("int").alias("is_t"),
-            F.explode(bigrams).alias("bigram"),
+            F.explode(T.word_grams("t", 2)).alias("bigram"),
         )
         .select(
             "doc_id",
@@ -1565,7 +1540,7 @@ def bigram_lm_scores(documents: DataFrame) -> DataFrame:
     Output: doc_id, n_bigrams, total_nll_micro, avg_nll_micro
     (micro-bits; divide by 1e6 for bits) — docs with ≥ 1 bigram.
     """
-    t = T.tokens(F.lower(F.col("text")))
+    t = T.lower_tokens(F.col("text"))
     # tokenize ONCE: the bigram explode, the unigram explode, and both
     # scoring joins all derive from this frame (previously 4 re-tokenize
     # text scans through branch lineage)
@@ -1573,10 +1548,11 @@ def bigram_lm_scores(documents: DataFrame) -> DataFrame:
     pairs = toked.select(
         "doc_id",
         F.explode(
-            F.expr(
-                "transform(slice(t, 1, greatest(size(t) - 1, 0)), "
-                "(x, i) -> struct(x AS w1, "
-                "concat(x, ' ', element_at(t, i + 2)) AS bg))"
+            F.transform(
+                T.word_grams("t", 2),
+                lambda g, i: F.struct(
+                    F.element_at("t", i + 1).alias("w1"), g.alias("bg")
+                ),
             )
         ).alias("p"),
     ).select("doc_id", "p.w1", "p.bg")
@@ -1687,7 +1663,7 @@ def oov_rate(documents: DataFrame, vocab_size: int = 1000) -> DataFrame:
     # the opposite trade from the array-shaped frames in
     # bigram_lm_scores/dsir_weights
     toks = widen(documents).select(
-        "doc_id", F.explode(T.tokens(F.lower(F.col("text")))).alias("term")
+        "doc_id", F.explode(T.lower_tokens(F.col("text"))).alias("term")
     )
     top = (
         toks.groupBy("term")
@@ -1927,15 +1903,12 @@ def _winnowing_sel_arrays(
     overlap-pairs index shape): the window minimum needs no positional
     struct at all, only ``array_min`` over the hash slice.
     """
-    toks_df = widen(documents).select(
-        "doc_id", T.tokens(F.lower(F.col("text"))).alias("t")
+    grams_df = (
+        widen(documents)
+        .select("doc_id", T.lower_tokens(F.col("text")).alias("t"))
+        .select("doc_id", T.word_grams("t", k).alias("g"))
     )
-    h_expr = (
-        f"CASE WHEN size(t) < {k} THEN array() "
-        f"ELSE transform(sequence(1, size(t) - {k} + 1), "
-        f"i -> cast(conv(substring(md5(array_join(slice(t, i, {k}), ' ')), 1, 12), 16, 10) as long)) "
-        "END"
-    )
+    h_expr = "transform(g, x -> cast(conv(substring(md5(x), 1, 12), 16, 10) as long))"
     if with_pos:
         s_expr = (
             f"element_at(transform(array({h_expr}), "
@@ -1954,7 +1927,7 @@ def _winnowing_sel_arrays(
             f"transform(sequence(1, greatest(size(H) - {w} + 1, 1)), "
             f"i -> array_min(slice(H, i, {w})))) END), 1)"
         )
-    return toks_df.selectExpr("doc_id", f"{sel_expr} AS sels")
+    return grams_df.selectExpr("doc_id", f"{sel_expr} AS sels")
 
 
 def winnowing_overlap_pairs(
@@ -2050,13 +2023,10 @@ def substring_dedup(documents: DataFrame, k: int = 50) -> DataFrame:
     # MEMORY_AND_DISK blocks starved the shuffles at the r15 sf100
     # sweep (x13.5 on x10 data)
     base = widen(documents).select(
-        "doc_id", T.tokens(F.lower(F.col("text"))).alias("t")
+        "doc_id", T.lower_tokens(F.col("text")).alias("t")
     ).transform(materialize_disk)
-    grams = base.selectExpr(
-        "doc_id",
-        f"CASE WHEN size(t) < {k} THEN array() "
-        f"ELSE transform(sequence(1, size(t) - {k} + 1), "
-        f"i -> md5(array_join(slice(t, i, {k}), ' '))) END AS H",
+    grams = base.select(
+        "doc_id", F.transform(T.word_grams("t", k), F.md5).alias("H")
     ).select("doc_id", F.posexplode("H").alias("p0", "h")).select(
         "doc_id", (F.col("p0") + 1).alias("pos"), "h"
     )
@@ -2164,7 +2134,7 @@ def gopher_repetition(documents: DataFrame) -> DataFrame:
         .select(
             "doc_id",
             lines_col.alias("l"),
-            T.tokens(F.lower(F.col("text"))).alias("t"),
+            T.lower_tokens(F.col("text")).alias("t"),
         )
         .transform(materialize_disk)
     )
@@ -2179,23 +2149,17 @@ def gopher_repetition(documents: DataFrame) -> DataFrame:
         ),
         F.length(F.array_join("t", " ")).cast("long").alias("tchars"),
     )
-    gram_rows = (
-        base.select(
-            "doc_id",
-            "t",
-            F.explode(F.array(F.lit(2), F.lit(3), F.lit(4))).alias("n"),
-        )
-        .select(
-            "doc_id",
-            "n",
-            F.explode(
-                F.expr(
-                    "transform(slice(t, 1, greatest(size(t) - n + 1, 0)), "
-                    "(x, i) -> array_join(slice(t, i + 1, n), ' '))"
-                )
-            ).alias("gram"),
-        )
-    )
+    def tagged(n):
+        return lambda g: F.struct(F.lit(n).alias("n"), g.alias("gram"))
+
+    gram_rows = base.select(
+        "doc_id",
+        F.explode(
+            F.concat(
+                *[F.transform(T.word_grams("t", n), tagged(n)) for n in (2, 3, 4)]
+            )
+        ).alias("p"),
+    ).select("doc_id", "p.n", "p.gram")
     cnts = gram_rows.groupBy("doc_id", "n", "gram").agg(F.count(F.lit(1)).alias("c"))
     top = (
         cnts.groupBy("doc_id", "n")
@@ -2467,7 +2431,7 @@ def _bm25_match_frame(
     it on their own fused checkpoint job via ``per_doc_df`` instead of
     paying a separate sequential blocking job."""
     toks = widen(documents).select(
-        "doc_id", T.tokens(F.lower(F.col("text"))).alias("t")
+        "doc_id", T.lower_tokens(F.col("text")).alias("t")
     )
     return toks.select(
         "doc_id",
@@ -2720,7 +2684,7 @@ def corr_length_diversity(documents: DataFrame) -> DataFrame:
     """
     xy = widen(documents).select(
         "source",
-        T.tokens(F.lower(F.col("text"))).alias("t"),
+        T.lower_tokens(F.col("text")).alias("t"),
     ).select(
         "source",
         F.size("t").cast("long").alias("x"),
@@ -2783,7 +2747,7 @@ def countmin_term_error(
     """
     tf = (
         widen(documents)
-        .select(F.explode(T.tokens(F.lower(F.col("text")))).alias("term"))
+        .select(F.explode(T.lower_tokens(F.col("text"))).alias("term"))
         .groupBy("term")
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
         .transform(materialize)
@@ -3141,18 +3105,14 @@ def benchmark_decontamination(
             "doc_id",
             "source",
             (F.col("doc_id") % modulus == 0).alias("is_bench"),
-            T.tokens(F.lower(F.col("text"))).alias("t"),
+            T.lower_tokens(F.col("text")).alias("t"),
         )
         .select(
             "doc_id",
             "source",
             "is_bench",
             F.array_distinct(
-                F.expr(
-                    f"CASE WHEN size(t) < {k} THEN array() "
-                    f"ELSE transform(sequence(1, size(t) - {k} + 1), "
-                    f"i -> md5(array_join(slice(t, i, {k}), ' '))) END"
-                )
+                F.transform(T.word_grams("t", k), F.md5)
             ).alias("H"),
         )
         # the size filter sits ABOVE the checkpoint: below it, Catalyst
@@ -3235,7 +3195,7 @@ def tfidf_keywords(documents: DataFrame, top_n: int = 5) -> DataFrame:
 
     tc = (
         widen(documents)
-        .select("source", F.explode(T.tokens(F.lower(F.col("text")))).alias("term"))
+        .select("source", F.explode(T.lower_tokens(F.col("text"))).alias("term"))
         .groupBy("source", "term")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
         .transform(materialize)
@@ -3415,17 +3375,13 @@ def ngram_novelty(
         .select(
             F.col("doc_id"),
             F.expr(f"(doc_id * {int(n_epochs)}) div n").alias("epoch"),
-            T.tokens(F.lower(F.col("text"))).alias("t"),
+            T.lower_tokens(F.col("text")).alias("t"),
         )
         .select(
             "doc_id",
             "epoch",
             F.array_distinct(
-                F.expr(
-                    f"CASE WHEN size(t) < {k} THEN array() "
-                    f"ELSE transform(sequence(1, size(t) - {k} + 1), "
-                    f"i -> md5(array_join(slice(t, i, {k}), ' '))) END"
-                )
+                F.transform(T.word_grams("t", k), F.md5)
             ).alias("H"),
         )
     )
@@ -3520,7 +3476,7 @@ def vocab_drift(documents: DataFrame, n_epochs: int = 10) -> DataFrame:
         .crossJoin(F.broadcast(n))
         .select(
             F.expr(f"(doc_id * {int(n_epochs)}) div n").alias("epoch"),
-            F.explode(T.tokens(F.lower(F.col("text")))).alias("term"),
+            F.explode(T.lower_tokens(F.col("text"))).alias("term"),
         )
         .groupBy("epoch", "term")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
@@ -3739,18 +3695,12 @@ def source_gram_containment(documents: DataFrame, k: int = 3) -> DataFrame:
         widen(documents)
         .select(
             "source",
-            T.tokens(F.lower(F.col("text"))).alias("t"),
+            T.lower_tokens(F.col("text")).alias("t"),
         )
         .select(
             "source",
             F.explode(
-                F.array_distinct(
-                    F.expr(
-                        f"CASE WHEN size(t) < {k} THEN array() "
-                        f"ELSE transform(sequence(1, size(t) - {k} + 1), "
-                        f"i -> md5(array_join(slice(t, i, {k}), ' '))) END"
-                    )
-                )
+                F.array_distinct(F.transform(T.word_grams("t", k), F.md5))
             ).alias("h"),
         )
         .distinct()
@@ -3871,16 +3821,14 @@ def quality_classifier(documents: DataFrame, n_buckets: int = 4096) -> DataFrame
     flags = scored.crossJoin(F.broadcast(mean_q)).select(
         "doc_id", (F.col("quality") >= F.col("mq")).cast("int").alias("label")
     )
-    t = T.tokens(F.lower(F.col("text")))
-    bigrams = F.expr(
-        "transform(slice(t, 1, greatest(size(t) - 1, 0)), "
-        "(x, i) -> concat(x, ' ', element_at(t, i + 2)))"
-    )
     feats = (
         widen(documents)
-        .select("doc_id", t.alias("t"))
+        .select("doc_id", T.lower_tokens(F.col("text")).alias("t"))
         .select(
-            "doc_id", F.explode(F.concat(F.col("t"), bigrams)).alias("feat")
+            "doc_id",
+            F.explode(F.concat(F.col("t"), T.word_grams("t", 2))).alias(
+                "feat"
+            ),
         )
         .select(
             "doc_id",
@@ -4103,7 +4051,7 @@ def unigram_entropy(documents: DataFrame) -> DataFrame:
         widen(documents)
         .select(
             F.coalesce(F.col("source"), F.lit("unknown")).alias("source"),
-            F.explode(T.tokens(F.lower(F.col("text")))).alias("term"),
+            F.explode(T.lower_tokens(F.col("text"))).alias("term"),
         )
         .groupBy("source", "term")
         .agg(F.count(F.lit(1)).cast("long").alias("f"))
@@ -4173,7 +4121,7 @@ def heaps_law(documents: DataFrame) -> DataFrame:
         widen(documents)
         .select(
             F.coalesce(F.col("source"), F.lit("unknown")).alias("source"),
-            F.explode(T.tokens(F.lower(F.col("text")))).alias("term"),
+            F.explode(T.lower_tokens(F.col("text"))).alias("term"),
         )
         .groupBy("source", "term")
         .agg(F.count(F.lit(1)).cast("long").alias("f"))
@@ -4246,7 +4194,7 @@ def zipf_fit(documents: DataFrame, top_k: int = 256) -> DataFrame:
         widen(documents)
         .select(
             F.coalesce(F.col("source"), F.lit("unknown")).alias("source"),
-            F.explode(T.tokens(F.lower(F.col("text")))).alias("term"),
+            F.explode(T.lower_tokens(F.col("text"))).alias("term"),
         )
         .groupBy("source", "term")
         .agg(F.count(F.lit(1)).cast("long").alias("freq"))
@@ -4421,7 +4369,7 @@ def boilerplate_prefixes(documents: DataFrame, k: int = 3) -> DataFrame:
     aggregate — no corpus-sized window, no sort). Output: source,
     n_docs, top_prefix, n_with_prefix, share_micro, ordered by source.
     """
-    toks = T.tokens(F.lower(F.col("text")))
+    toks = T.lower_tokens(F.col("text"))
     pref = documents.select(
         F.coalesce(F.col("source"), F.lit("unknown")).alias("source"),
         F.when(
@@ -4479,7 +4427,7 @@ def vocab_nearest_typo(documents: DataFrame, max_dist: int = 2) -> DataFrame:
     mirrored), ordered by term.
     """
     toks = widen(documents).select(
-        F.explode(T.tokens(F.lower(F.col("text")))).alias("term")
+        F.explode(T.lower_tokens(F.col("text"))).alias("term")
     )
     vocab = toks.groupBy("term").agg(
         F.count(F.lit(1)).cast("long").alias("cnt")
@@ -4621,7 +4569,7 @@ def cdc_chunks(documents: DataFrame, divisor: int = 8) -> DataFrame:
     md5 of the space-joined slice. Output: doc_id, chunk_idx,
     n_tokens, chunk_hash.
     """
-    toks = T.tokens(F.lower(F.col("text")))
+    toks = T.lower_tokens(F.col("text"))
     base = widen(documents).select("doc_id", toks.alias("t"))
     is_boundary = (
         "conv(substring(md5(x), 1, 8), 16, 10) % {d} = 0".format(d=divisor)

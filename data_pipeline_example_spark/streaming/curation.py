@@ -697,7 +697,7 @@ def countmin_stream(
     increments absorbed so far), nonzero_cells, max_cell, cells.
     """
     terms = docs.select(
-        F.explode(T.tokens(F.lower(F.col("text")))).alias("term")
+        F.explode(T.lower_tokens(F.col("text"))).alias("term")
     )
     incs = terms.select(
         F.explode(

@@ -529,6 +529,33 @@ def test_wav_dup_windows_planted_equal_lengths(spark):
     assert want in {r["window_digest"] for r in rows}
 
 
+def test_audio_dup_windows_groups_whole_payload_copies(spark):
+    """Two byte-identical payloads share every window digest; a third
+    that shares only their prefix shares none (the digest covers the
+    whole buffer), so each group is exactly the two copies."""
+    from data_pipeline_example_spark.operators.multimodal import (
+        attach_binary,
+        audio_dup_windows,
+        audio_windows,
+    )
+
+    shared = "".join(chr(97 + i % 26) for i in range(1000))  # 500 samples
+    docs = spark.createDataFrame(
+        [(7, shared), (3, shared), (5, shared + " and a tail")],
+        "doc_id long, text string",
+    )
+    rows = audio_dup_windows(attach_binary(docs), window_ms=10).collect()
+    # raw PCM16 at 16 kHz, 10 ms -> 160 samples a window -> 4 windows
+    assert len(rows) == 4
+    assert len({r["window_md5"] for r in rows}) == 4
+    for r in rows:
+        assert (r["n_docs"], r["n_copies"], r["first_doc"]) == (2, 2, 3)
+    prefixed = audio_windows(attach_binary(docs.filter("doc_id = 5")), window_ms=10)
+    assert {r["window_md5"] for r in prefixed.collect()}.isdisjoint(
+        r["window_md5"] for r in rows
+    )
+
+
 def test_audio_oracles_agree_on_non_ascii_text(spark, tmp_path):
     """Cross-engine regression for the strlen-vs-length class: the
     audio synthesis closed forms key on CHARACTER length, and a

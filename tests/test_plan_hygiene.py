@@ -356,3 +356,26 @@ def test_tools_resolve_the_checkout_from_their_own_path():
         )
     ]
     assert not found, f"string literals put on sys.path: {found}"
+
+
+def test_one_word_rule_and_one_word_gram_builder():
+    """The text family knows one word rule and one word-gram build:
+    ``functions.text.lower_tokens`` and ``functions.text.word_grams``.
+    No other package file spells out a lowercase tokenize, the token
+    regex, or a hand-built k-gram."""
+    banned = (
+        "array_join(slice(",
+        "element_at(t, i + 2)",
+        "shingles_from_tokens",
+        "T.tokens(F.lower(",
+        "TOKEN_PATTERN",
+    )
+    found = [
+        f"{path.relative_to(_PKG).as_posix()}:{lineno}: {needle}"
+        for path in sorted(_PKG.rglob("*.py"))
+        if path.relative_to(_PKG).as_posix() != "functions/text.py"
+        for lineno, line in enumerate(path.read_text().splitlines(), 1)
+        for needle in banned
+        if needle in line
+    ]
+    assert not found, f"word rule or word-gram build outside functions/text.py: {found}"

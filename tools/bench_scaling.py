@@ -35,7 +35,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO)
 
 
 def _drop_persisted(spark) -> None:
@@ -154,7 +155,7 @@ def main() -> None:
         subset = argv[i + 1].split(",")
         argv = argv[:i] + argv[i + 2 :]
     small = argv[0] if argv else "/root/testdata/sf0.1"
-    big = argv[1] if len(argv) > 1 else "/root/repo/.localdata/sf1"
+    big = argv[1] if len(argv) > 1 else os.path.join(_REPO, ".localdata", "sf1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     # sf10 fits in 8g; third-decade (sf100) chunks need more — override
     # per run, the JVM heap is fixed at session start

@@ -2,7 +2,7 @@
 testdata sf directory by an integer factor with key-shifted replicas.
 
     python tools/gen_sf.py [src_dir] [dst_dir] [factor]
-    # default: /root/testdata/sf0.1 -> /root/repo/.localdata/sf1  x10
+    # default: the sf0.1 test corpus -> <checkout>/.localdata/sf1  x10
 
 Replication, not regeneration: every table's value distributions,
 per-key group sizes, and join fan-outs are preserved EXACTLY — replica
@@ -36,7 +36,8 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO)
 
 from pyspark.sql import DataFrame, functions as F  # noqa: E402
 
@@ -155,7 +156,7 @@ def main() -> None:
     from data_pipeline_example_spark.session import get_spark
 
     src = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    dst = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/.localdata/sf1"
+    dst = sys.argv[2] if len(sys.argv) > 2 else os.path.join(_REPO, ".localdata", "sf1")
     factor = int(sys.argv[3]) if len(sys.argv) > 3 else 10
     spark = get_spark(
         app_name="gen_sf",
