@@ -18,6 +18,15 @@ each with a different scale profile:
   bounds the blowup on natural text, but worst case is quadratic — at
   scale prefer ``minhash_lsh_pairs``.
 
+Every near-dup pair operator builds its candidates on one of two cores
+(bucket, then verify): :func:`band_join` — the banded first-match join
+over per-band keys, used by the MinHash, SimHash and image-hash
+operators — and :func:`shared_key_pairs` — the shared-key self-join
+and pair count, used by the shingle Jaccard/containment baselines and
+winnowing overlap. An operator supplies its signature (band keys or
+keys) and its verify step; the 64-bit signatures share one
+:func:`hamming` distance.
+
 No UDFs anywhere: shingling, hashing, min-over-array, intersection are
 all Spark SQL built-ins (higher-order functions), JVM-side.
 """
@@ -52,8 +61,8 @@ def exact_dedup(documents: DataFrame) -> DataFrame:
 
 
 def shingled(documents: DataFrame, k: int = 3) -> DataFrame:
-    """doc_id + distinct k-token shingle array (empty arrays filtered —
-    docs with < k tokens can never match anything).
+    """doc_id + distinct k-token shingle array (docs with < k tokens
+    have none and can never match anything, so they are dropped).
 
     The token array is bound in its own projection below the shingle
     assembly (``functions.text.word_grams`` reads it several times):
@@ -65,19 +74,64 @@ def shingled(documents: DataFrame, k: int = 3) -> DataFrame:
     ``widen`` guards against single-file scans: shingling + the md5s
     built on top of this frame are the dominant CPU of every dedup
     operator, and a one-partition input would serialize them on one
-    core (observed 4.3 s → sub-second at sf0.1 on local[32])."""
-    toks_df = widen(documents).select(
-        "doc_id", T.lower_tokens(F.col("text")).alias("toks")
+    core (observed 4.3 s → sub-second at sf0.1 on local[32]).
+
+    The short-document filter reads the bound tokens (``size(toks) >=
+    k``, the same rows as a non-empty shingle array for k ≥ 1): a filter
+    on the shingles would be pushed below ``widen``'s repartition and
+    build every document's shingles a second time from an inline
+    tokenizer."""
+    toks_df = (
+        widen(documents)
+        .select("doc_id", T.lower_tokens(F.col("text")).alias("toks"))
+        .filter(F.size("toks") >= k)
     )
     return toks_df.select(
         "doc_id", F.array_distinct(T.word_grams("toks", k)).alias("shingles")
-    ).filter(F.size("shingles") > 0)
+    )
 
 
 def _jaccard(a: Column, b: Column) -> Column:
     inter = F.size(F.array_intersect(a, b)).cast("double")
     union = F.size(F.array_union(a, b)).cast("double")
     return F.round(inter / union, 4)
+
+
+def shared_key_pairs(rows: DataFrame, key: str) -> DataFrame:
+    """The shared-key pair core: ``rows`` holds one (doc_id, ``key``)
+    row per distinct key of a document; the output has one row per
+    pair of documents sharing at least one key — doc_a, doc_b (doc_a <
+    doc_b) and n_shared, the number of keys they share. One self-join
+    keyed on the key (the inverted index) and one rollup keyed on the
+    doc-id pair (uniform keys)."""
+    a, b = rows.alias("a"), rows.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col(f"a.{key}") == F.col(f"b.{key}"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        .agg(F.count(F.lit(1)).alias("n_shared"))
+    )
+
+
+def _shingle_overlap(documents: DataFrame, k: int) -> DataFrame:
+    """doc_a, doc_b, n_shared (shared shingles), sz_a, sz_b (shingle-set
+    sizes) for every pair sharing a shingle: the candidates and counts
+    both exact shingle scores need."""
+    # materialize the shingle table once — explode and sizes both read it,
+    # and regexp shingling is the dominant CPU of these operators
+    sh = shingled(documents, k).transform(materialize)
+    ex = sh.select("doc_id", F.explode("shingles").alias("sh"))
+    sizes = sh.select("doc_id", F.size("shingles").cast("long").alias("sz"))
+    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("sz_a"))
+    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("sz_b"))
+    return (
+        shared_key_pairs(ex, "sh")
+        .join(sa, "doc_a")
+        .join(sb, "doc_b")
+    )
 
 
 def jaccard_pairs(
@@ -89,30 +143,18 @@ def jaccard_pairs(
     paths; at corpus scale use ``minhash_lsh_pairs`` (banded LSH, same
     output schema, probabilistic recall / exact precision).
 
-    Exploded shingles self-join → intersection counts → Jaccard from
+    Shared-shingle counts (:func:`shared_key_pairs`) → Jaccard from
     per-doc set sizes. Group-bys are keyed on doc-id pairs (uniform).
     """
-    # materialize the shingle table once — explode and sizes both read it,
-    # and regexp shingling is the dominant CPU of this operator
-    sh = shingled(documents, k).transform(materialize)
-    ex = sh.select("doc_id", F.explode("shingles").alias("sh"))
-    sizes = sh.select("doc_id", F.size("shingles").alias("sz"))
-    a, b = ex.alias("a"), ex.alias("b")
-    inter = (
-        a.join(b, (F.col("a.sh") == F.col("b.sh")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("sz_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("sz_b"))
     return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
+        _shingle_overlap(documents, k)
         .select(
             "doc_a",
             "doc_b",
             F.round(
-                F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")), 4
+                F.col("n_shared")
+                / (F.col("sz_a") + F.col("sz_b") - F.col("n_shared")),
+                4,
             ).alias("jaccard"),
         )
         .filter(F.col("jaccard") >= threshold)
@@ -183,49 +225,53 @@ def minhash_signatures(
     )
 
 
-def _banded(
-    sigs: DataFrame, num_hashes: int, bands: int, keep_sigs: bool = False
-) -> DataFrame:
-    """Signature frame → one row per (doc, band): all columns of ``sigs``
-    plus ``bk`` (the array of every band's key: the band's hash slice
-    concatenated) and the exploded (band, key). The raw concatenation IS
-    the bucket id — hashing it again (md5) would only relabel equal keys
-    equal."""
-    rpb = num_hashes // bands
-    bk = F.array(
-        *[
-            F.concat_ws(
-                "|", *[F.col(f"h{b * rpb + j}") for j in range(rpb)]
-            )
-            for b in range(bands)
+def band_join(left: DataFrame, right: DataFrame, keys: list[Column]) -> DataFrame:
+    """The banded candidate core: ``left`` ⋈ ``right``, aliased ``a`` /
+    ``b``, on a shared band bucket. ``keys`` holds band i's key as the
+    i-th expression over either side's columns; each side gets the
+    array ``bk`` of its keys, posexploded into (band, key), and rows
+    meet on equal (band, key) — only same-bucket rows ever share a
+    shuffle partition, never O(n²). Everything else a side carries is
+    there for the caller's verify step.
+
+    First-match emission: a row pair joins only in its LOWEST band with
+    equal keys (every earlier band's key must differ), so a multi-band
+    collision surfaces exactly once and the candidate set needs no
+    dropDuplicates shuffle. Self-pair callers add ``a.<id> < b.<id>``;
+    a one-sided join (new ⋈ old) adds no ordering. The predicate is
+    unrolled over the bands, plain codegen: as one ``zip_with`` lambda
+    it made ``simhash_pairs``' candidate join (1.3 M pairs at sf0.1,
+    4 cores) 2.8× slower."""
+
+    def banded(side: DataFrame) -> DataFrame:
+        with_bk = side.select("*", F.array(*keys).alias("bk"))
+        return with_bk.selectExpr("*", "posexplode(bk) AS (band, key)")
+
+    # one SQL string and, for a self-join, one banded frame: the driver
+    # builds this plan on every call, and each Column op or DataFrame
+    # step is a py4j round trip plus an analysis
+    cond = " AND ".join(
+        ["a.band = b.band", "a.key = b.key"]
+        + [
+            f"(a.band <= {i} OR element_at(a.bk, {i + 1}) != element_at(b.bk, {i + 1}))"
+            for i in range(len(keys) - 1)
         ]
     )
-    # slim rows (r15): the band join needs only (doc_id, bk, band, key)
-    # — carrying the num_hashes signature columns through the self-join
-    # exchange multiplied every shuffled row's width for columns no
-    # consumer reads. ``minhash_jaccard_estimates`` (which scores the
-    # estimate from the signatures INSIDE the join) passes
-    # ``keep_sigs=True``.
-    cols = ["doc_id", "bk"]
-    if keep_sigs:
-        cols += [f"h{i}" for i in range(num_hashes)]
-    return sigs.withColumn("bk", bk).select(
-        *cols, F.posexplode("bk").alias("band", "key")
-    )
+    a = banded(left)
+    b = a if right is left else banded(right)
+    return a.alias("a").join(b.alias("b"), F.expr(cond))
 
 
-def _band_match(bands: int) -> Column:
-    """Join condition for aliased ``a``/``b`` band rows: same (band, key),
-    AND every earlier band's key differs — the canonical first-match
-    emission that makes a multi-band collision surface exactly once (no
-    dropDuplicates pass needed on the candidate set)."""
-    cond = (F.col("a.band") == F.col("b.band")) & (F.col("a.key") == F.col("b.key"))
-    for k in range(bands - 1):
-        cond = cond & (
-            (F.col("a.band") <= k)
-            | (F.element_at(F.col("a.bk"), k + 1) != F.element_at(F.col("b.bk"), k + 1))
-        )
-    return cond
+def _band_keys(num_hashes: int, bands: int) -> list[Column]:
+    """MinHash band keys of a signature frame (h0..h{n-1}): band i's key
+    is its slice of the signature joined by '|'. The raw concatenation
+    IS the bucket id — hashing it again (md5) would only relabel equal
+    keys equal."""
+    rpb = num_hashes // bands
+    return [
+        F.concat_ws("|", *[F.col(f"h{b * rpb + j}") for j in range(rpb)])
+        for b in range(bands)
+    ]
 
 
 def minhash_lsh_pairs(
@@ -238,13 +284,12 @@ def minhash_lsh_pairs(
 ) -> DataFrame:
     """MinHash + banded-LSH near-dup pairs, verified with exact Jaccard.
 
-    Pipeline: signatures → per-band bucket id (md5 of the band's slice)
-    → self-join on (band, bucket) → distinct candidate pairs → exact
-    Jaccard via array_intersect on the carried shingle sets → threshold.
-    Output matches ``jaccard_pairs`` (doc_a, doc_b, jaccard) restricted
-    to LSH candidates — recall is probabilistic, precision exact.
+    Pipeline: signatures → per-band keys → :func:`band_join` on (band,
+    key), first match only → exact Jaccard via array_intersect on the
+    carried shingle sets → threshold. Output matches ``jaccard_pairs``
+    (doc_a, doc_b, jaccard) restricted to LSH candidates — recall is
+    probabilistic, precision exact.
     """
-    rows_per_band = num_hashes // bands
     # ONE materialization (r15, was two): the scan-side signatures ride
     # the same frame as the shingle arrays, so a single checkpoint
     # (doc_id, shingles, h0..h{n-1}) feeds the band self-join (both
@@ -253,27 +298,28 @@ def minhash_lsh_pairs(
     # materialized shingle frame; the fused checkpoint reads it once.
     sh_raw = shingled(documents, k) if shingle_df is None else shingle_df
     base = _with_minhash_sigs(sh_raw, num_hashes).transform(materialize)
-    sh_mat = base.select("doc_id", "shingles")
-    sigs = base.select("doc_id", *[f"h{i}" for i in range(num_hashes)])
-    # slim band rows: (doc_id, all band keys, exploded band) — the
-    # shingle arrays stay out of the LSH join entirely. Carrying the
-    # band-key array on both sides lets the join emit each colliding
-    # pair ONLY from its lowest matching band ("first-match"): every
-    # earlier band must differ, so the candidate set needs no
-    # dropDuplicates shuffle afterwards — same set, one shuffle fewer.
-    buckets = _banded(sigs, num_hashes, bands)
-    a, b = buckets.alias("a"), buckets.alias("b")
-    candidates = a.join(
-        b, _band_match(bands) & (F.col("a.doc_id") < F.col("b.doc_id"))
-    ).select(
-        F.col("a.doc_id").alias("doc_a"),
-        F.col("b.doc_id").alias("doc_b"),
+    # slim band rows (r15): the join reads only doc_id and the band
+    # keys, so the shingle arrays and signatures are pruned from its
+    # exchange
+    candidates = (
+        band_join(base, base, _band_keys(num_hashes, bands))
+        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
+        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
     )
-    # verification: fetch shingle sets only for candidate docs
-    sa = sh_mat.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
-    sb = sh_mat.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
+    return _jaccard_verified(candidates, base, base, threshold)
+
+
+def _jaccard_verified(
+    pairs: DataFrame, left: DataFrame, right: DataFrame, threshold: float
+) -> DataFrame:
+    """Candidate pairs (doc_a, doc_b) scored by the exact Jaccard of
+    their shingle sets — doc_a's from ``left``, doc_b's from ``right``
+    (doc_id, shingles): fetched only for candidate docs. Output: doc_a,
+    doc_b, jaccard (4 dp) >= ``threshold``."""
+    sa = left.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
+    sb = right.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
     return (
-        candidates.join(sa, "doc_a")
+        pairs.join(sa, "doc_a")
         .join(sb, "doc_b")
         .select("doc_a", "doc_b", _jaccard(F.col("sh_a"), F.col("sh_b")).alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
@@ -296,15 +342,14 @@ def minhash_incremental(
     a batch that is a sliver of it).
 
     Pipeline: both sides get signatures via the shared machinery, the
-    banded join runs NEW × OLD only (first-match band emission — the
-    ``_band_match`` discipline, so a multi-band collision surfaces
-    once with no dropDuplicates pass), candidates verify with exact
-    Jaccard on the carried shingle sets, and each new doc keeps its
-    BEST corpus match (max jaccard, lowest old doc_id on ties — a
-    struct-min aggregate, no window). At 100 TB the old side's
-    banded frame is the persisted index (write once, the
-    ``write_ann_index`` precedent) and the join is one-sided: cost
-    scales with the BATCH, not the corpus².
+    banded join (:func:`band_join`, first-match emission, so a
+    multi-band collision surfaces once with no dropDuplicates pass)
+    runs NEW × OLD only, candidates verify with exact Jaccard on the
+    carried shingle sets, and each new doc keeps its BEST corpus match
+    (max jaccard, lowest old doc_id on ties — a struct-min aggregate,
+    no window). At 100 TB the old side's banded frame is the persisted
+    index (write once, the ``write_ann_index`` precedent) and the join
+    is one-sided: cost scales with the BATCH, not the corpus².
 
     Output: one row per NEW doc — doc_id, admit (1 = no corpus match
     ≥ threshold), dup_of (best matching old doc_id, NULL when
@@ -314,30 +359,15 @@ def minhash_incremental(
     """
     sh_new = shingled(documents_new, k).transform(materialize)
     sh_old = shingled(documents_old, k).transform(materialize)
-    sigs_new = minhash_signatures(documents_new, k, num_hashes, shingle_df=sh_new)
-    sigs_old = minhash_signatures(documents_old, k, num_hashes, shingle_df=sh_old)
-    a = _banded(sigs_new, num_hashes, bands).alias("a")
-    b = _banded(sigs_old, num_hashes, bands).alias("b")
-    candidates = a.join(b, _band_match(bands)).select(
-        F.col("a.doc_id").alias("doc_id"), F.col("b.doc_id").alias("dup_of")
-    )
-    sa = sh_new.select("doc_id", F.col("shingles").alias("sh_a"))
-    sb = sh_old.select(
-        F.col("doc_id").alias("dup_of"), F.col("shingles").alias("sh_b")
-    )
-    verified = (
-        candidates.join(sa, "doc_id")
-        .join(sb, "dup_of")
-        .select(
-            "doc_id",
-            "dup_of",
-            _jaccard(F.col("sh_a"), F.col("sh_b")).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
-    best = verified.groupBy("doc_id").agg(
+    candidates = band_join(
+        minhash_signatures(documents_new, k, num_hashes, shingle_df=sh_new),
+        minhash_signatures(documents_old, k, num_hashes, shingle_df=sh_old),
+        _band_keys(num_hashes, bands),
+    ).select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+    verified = _jaccard_verified(candidates, sh_new, sh_old, threshold)
+    best = verified.groupBy(F.col("doc_a").alias("doc_id")).agg(
         F.min(
-            F.struct((-F.col("jaccard")).alias("nj"), F.col("dup_of").alias("d"))
+            F.struct((-F.col("jaccard")).alias("nj"), F.col("doc_b").alias("d"))
         ).alias("b")
     )
     return documents_new.select("doc_id").join(best, "doc_id", "left").select(
@@ -414,63 +444,51 @@ def simhash_signatures(documents: DataFrame) -> DataFrame:
     return votes.selectExpr("doc_id", f"concat({digits}) AS simhash")
 
 
+def hamming() -> str:
+    """SQL for the bit distance between the 64-bit signatures of a pair
+    join's two sides, each carried as two 32-bit longs ``hi`` / ``lo``:
+    two XORs and two popcounts (int). A string, so a caller's output
+    projection stays one ``selectExpr``."""
+    return "cast(bit_count(a.hi ^ b.hi) + bit_count(a.lo ^ b.lo) as int)"
+
+
+def _simhash_chunks(documents: DataFrame) -> DataFrame:
+    """doc_id and the SimHash signature as two 32-bit longs (hi, lo),
+    read by :func:`hamming` and by the band keys
+    (:func:`_simhash_bands`). The signature aggregate feeds both sides of
+    the chunk join — materialized once, |docs| rows of 16 chars."""
+    return simhash_signatures(documents).transform(materialize).selectExpr(
+        "doc_id",
+        "cast(conv(substring(simhash, 1, 8), 16, 10) as long) AS hi",
+        "cast(conv(substring(simhash, 9, 8), 16, 10) as long) AS lo",
+    )
+
+
+def _simhash_bands() -> list[Column]:
+    """The band keys of :func:`_simhash_chunks`: the signature's four
+    16-bit chunks, most significant first, by shift and mask."""
+    return [
+        F.expr(f"shiftright({'hi' if c < 2 else 'lo'}, {16 * (1 - c % 2)}) & 65535")
+        for c in range(4)
+    ]
+
+
 def simhash_pairs(documents: DataFrame, max_hamming: int = 8) -> DataFrame:
     """SimHash near-dup candidate pairs with exact Hamming distance.
 
     LSH-style banding on the four 16-bit chunks of the signature (a pair
     within Hamming ≤ 8 of 64 usually agrees on ≥1 chunk): candidates
-    join only on chunk equality — never O(n²) — then exact Hamming is
-    computed digit-wise with a popcount lookup. Output: doc_a, doc_b,
-    hamming (int), ascending-unique pairs.
+    join only on chunk equality (:func:`band_join`, first match only) —
+    never O(n²) — and the chunk rows carry the signature as two longs,
+    so the exact Hamming distance is computed inside the join with no
+    signature lookup afterwards. Output: doc_a, doc_b, hamming (int),
+    ascending-unique pairs.
     """
-    # the signature aggregate feeds both chunk-join sides — materialize
-    # it once; |docs| rows of 16 chars
-    sigs = simhash_signatures(documents).transform(materialize)
-    # chunk rows carry the signature pre-parsed into two 32-bit longs so
-    # hamming (2 xor + 2 bit_count) AND every chunk value (shift + mask)
-    # are computable inside the chunk join itself — no signature lookup
-    # join afterwards, no string comparisons in the join
-    # (expressions emitted as SQL strings — see simhash_signatures — so
-    # plan construction stays a handful of py4j calls, not hundreds)
-    def _chunk_val(side: str, c: int) -> str:  # 16-bit chunk c of the sig
-        src = f"{side}.hi" if c < 2 else f"{side}.lo"
-        return f"(shiftright({src}, {16 * (1 - c % 2)}) & 65535)"
-
-    chunk_structs = ", ".join(
-        f"struct({c} AS chunk, cast(conv(substring(simhash, {4 * c + 1}, 4), 16, 10) as int) AS val)"
-        for c in range(4)
-    )
-    chunks = sigs.selectExpr(
-        "doc_id",
-        "cast(conv(substring(simhash, 1, 8), 16, 10) as long) AS hi",
-        "cast(conv(substring(simhash, 9, 8), 16, 10) as long) AS lo",
-        f"explode(array({chunk_structs})) AS cc",
-    ).selectExpr("doc_id", "hi", "lo", "cc.chunk AS chunk", "cc.val AS val")
-    a, b = chunks.alias("a"), chunks.alias("b")
-    # canonical first-match emission: a pair colliding in several chunks
-    # is emitted ONLY from its lowest matching chunk — the join condition
-    # requires every earlier chunk to differ (recomputed from hi/lo by
-    # shift+mask, pure codegen). Each qualifying pair is produced exactly
-    # once, so the millions-of-rows dropDuplicates shuffle that used to
-    # canonicalize the candidate set disappears entirely; the result SET
-    # is identical (anything with >=1 matching chunk still surfaces).
-    first_match = " AND ".join(
-        f"(a.chunk <= {k} OR {_chunk_val('a', k)} != {_chunk_val('b', k)})"
-        for k in range(3)
-    )
+    chunks = _simhash_chunks(documents)
     return (
-        a.join(
-            b,
-            F.expr(
-                "a.chunk = b.chunk AND a.val = b.val AND a.doc_id < b.doc_id"
-                f" AND {first_match}"
-            ),
-        )
-        .selectExpr(
-            "a.doc_id AS doc_a",
-            "b.doc_id AS doc_b",
-            "cast(bit_count(a.hi ^ b.hi) + bit_count(a.lo ^ b.lo) as int) AS hamming",
-        )
+        band_join(chunks, chunks, _simhash_bands())
+        .filter("a.doc_id < b.doc_id")
+        .selectExpr("a.doc_id AS doc_a", "b.doc_id AS doc_b", f"{hamming()} AS hamming")
         .filter(F.col("hamming") <= max_hamming)
     )
 
@@ -495,18 +513,17 @@ def minhash_jaccard_estimates(
     consumer ("scanned exactly once" is only true if the plan reuses the
     scan). Band rows carry the full signature through the join — fixed
     num_hashes × 8-char payload — so the estimate is computed INSIDE the
-    candidate join (no post-join signature lookups), and first-match band
-    emission (see ``_band_match``) yields each colliding pair exactly
-    once with no dropDuplicates shuffle.
+    candidate join (no post-join signature lookups), and
+    :func:`band_join`'s first-match emission yields each colliding pair
+    exactly once with no dropDuplicates shuffle.
     """
     sigs = minhash_signatures(documents, k, num_hashes).transform(materialize)
-    banded = _banded(sigs, num_hashes, bands, keep_sigs=True)
-    a, b = banded.alias("a"), banded.alias("b")
     matches = sum(
         (F.col(f"a.h{i}") == F.col(f"b.h{i}")).cast("int") for i in range(num_hashes)
     )
     return (
-        a.join(b, _band_match(bands) & (F.col("a.doc_id") < F.col("b.doc_id")))
+        band_join(sigs, sigs, _band_keys(num_hashes, bands))
+        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
         .select(
             F.col("a.doc_id").alias("doc_a"),
             F.col("b.doc_id").alias("doc_b"),
@@ -895,35 +912,19 @@ def containment_dup_pairs(
 
     Same candidate machinery as ``jaccard_pairs`` (exact baseline; at
     corpus scale the banded-LSH candidate generator feeds the same
-    scorer): one checkpointed shingle materialization, exploded
-    self-join keyed on the shingle, per-pair counts, sizes joined back.
-    The score is a SINGLE long/long division + 4-dp round — the
-    certified-safe float shape. Output: doc_a, doc_b, containment
-    (doc_a < doc_b; direction-free since min() picks the smaller set).
+    scorer): one checkpointed shingle materialization, the shared-key
+    core's per-pair counts, sizes joined back. The score is a SINGLE
+    long/long division + 4-dp round — the certified-safe float shape.
+    Output: doc_a, doc_b, containment (doc_a < doc_b; direction-free
+    since min() picks the smaller set).
     """
-    sh = shingled(documents, k).transform(materialize)
-    ex = sh.select("doc_id", F.explode("shingles").alias("sh"))
-    sizes = sh.select("doc_id", F.size("shingles").cast("long").alias("sz"))
-    a, b = ex.alias("a"), ex.alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("a.sh") == F.col("b.sh"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("sz_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("sz_b"))
     return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
+        _shingle_overlap(documents, k)
         .select(
             "doc_a",
             "doc_b",
             F.round(
-                F.col("inter") / F.least(F.col("sz_a"), F.col("sz_b")), 4
+                F.col("n_shared") / F.least(F.col("sz_a"), F.col("sz_b")), 4
             ).alias("containment"),
         )
         .filter(F.col("containment") >= threshold)
@@ -951,19 +952,19 @@ def simhash_pairs_capped(
     missed only if BOTH members fall beyond the cap in EVERY bucket
     they share — dense near-dup clusters still surface through their
     cap lowest members, which is what a keeper-style dedup consumes.
+    It shares ``simhash_pairs``' chunk frame and :func:`hamming` but not
+    :func:`band_join`: once buckets are capped, first-match emission
+    would lose pairs (a pair cut from its first shared bucket would be
+    rejected in a later one), so the capped join enumerates every
+    shared bucket and dedups its output instead.
     Output: doc_a, doc_b, hamming (int).
     """
-    sigs = simhash_signatures(documents).transform(materialize)
-    chunk_structs = ", ".join(
-        f"struct({c} AS chunk, cast(conv(substring(simhash, {4 * c + 1}, 4), 16, 10) as int) AS val)"
-        for c in range(4)
-    )
-    chunks = sigs.selectExpr(
+    chunks = _simhash_chunks(documents).select(
         "doc_id",
-        "cast(conv(substring(simhash, 1, 8), 16, 10) as long) AS hi",
-        "cast(conv(substring(simhash, 9, 8), 16, 10) as long) AS lo",
-        f"explode(array({chunk_structs})) AS cc",
-    ).selectExpr("doc_id", "hi", "lo", "cc.chunk AS chunk", "cc.val AS val")
+        "hi",
+        "lo",
+        F.posexplode(F.array(*_simhash_bands())).alias("chunk", "val"),
+    )
     w = Window.partitionBy("chunk", "val").orderBy("doc_id")
     capped = (
         chunks.withColumn("rk", F.row_number().over(w))
@@ -976,11 +977,7 @@ def simhash_pairs_capped(
             b,
             F.expr("a.chunk = b.chunk AND a.val = b.val AND a.doc_id < b.doc_id"),
         )
-        .selectExpr(
-            "a.doc_id AS doc_a",
-            "b.doc_id AS doc_b",
-            "cast(bit_count(a.hi ^ b.hi) + bit_count(a.lo ^ b.lo) as int) AS hamming",
-        )
+        .selectExpr("a.doc_id AS doc_a", "b.doc_id AS doc_b", f"{hamming()} AS hamming")
         .filter(F.col("hamming") <= max_hamming)
         .dropDuplicates(["doc_a", "doc_b"])
     )

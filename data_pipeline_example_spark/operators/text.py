@@ -37,6 +37,7 @@ from data_pipeline_example_spark.functions.materialize import (
 
 from data_pipeline_example_spark.functions import text as T
 from data_pipeline_example_spark.functions.parallel import widen
+from data_pipeline_example_spark.operators import dedup
 
 
 def _quality_from_counts() -> Column:
@@ -192,8 +193,6 @@ def curated_corpus(
     multiplication), stats/quality as bound columns. Output: doc_id,
     lang, lang_pred, n_tokens, quality.
     """
-    from data_pipeline_example_spark.operators import dedup
-
     keep = dedup.exact_dedup(documents).select(
         F.col("keep_doc_id").alias("doc_id")
     )
@@ -1948,8 +1947,9 @@ def winnowing_overlap_pairs(
     linear in corpus size.
 
     Plan: one fingerprint materialization (checkpointed — both the df
-    census and the index probe read it), a df-capped semi join, one
-    self-join keyed on fp, one pair rollup. The checkpointed index is
+    census and the index probe read it), a df-capped semi join, then
+    ``dedup.shared_key_pairs``: one self-join keyed on fp, one pair
+    rollup. The checkpointed index is
     built from the fp-only selection arrays
     (:func:`_winnowing_sel_arrays` — per-doc ``array_distinct`` of the
     window minima IS the (doc_id, fp) distinct), so the checkpoint job
@@ -1979,16 +1979,8 @@ def winnowing_overlap_pairs(
         .select("fp")
     )
     idx = fps.join(rare, "fp", "left_semi")
-    a, b = idx.alias("a"), idx.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.fp") == F.col("b.fp"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared)
+    return dedup.shared_key_pairs(idx, "fp").filter(
+        F.col("n_shared") >= min_shared
     )
 
 

@@ -2209,19 +2209,23 @@ QUERIES: dict[str, QueryFn] = {
 # revenue_rollup) and the seven latest-registered names of the ANN
 # retrieval-core group (retrieval_quality … ivfpq_recall; all
 # certified in every round since they changed) make room.
+# One candidate-pair core (same derivation): the thirteen queries whose
+# pair build moved onto ``dedup.band_join`` / ``dedup.shared_key_pairs``,
+# or whose optimized plan changed with the shingle filter, and are not
+# yet in the window join as the newest changed group (cluster_coherence,
+# winnowing_overlap_pairs and the four CC names that read
+# jaccard_pairs / minhash_lsh_pairs moved too and stay). The oldest
+# names whose code has not moved since make room: rrf_hybrid_search,
+# the seven graph and BM25 names of the CC-core group
+# (basket_communities … bm25_batch) and the first five of the
+# exact-neighbor group (knn_bruteforce … nearest_neighbor_capped).
 _R15_FRONT = [
     # changed r15 (ascending last-certified round, ties by position)
     "corpus_funnel", "packed_block_audit", "ivfpq_knn_index_batch",
-    # changed by the ANN retrieval-core rewrite
-    "rrf_hybrid_search",
-    # changed by the one CC core / co-purchase edge build / BM25 scorer
+    # changed by the one CC core (and read the candidate-pair core)
     "dedup_clusters", "dedup_clusters_scalable", "dedup_summary",
-    "split_leakage_audit", "cluster_coherence", "basket_communities",
-    "product_pagerank", "basket_graph_stats", "copurchase_link_prediction",
-    "basket_kcore", "bm25_search", "bm25_batch",
+    "split_leakage_audit", "cluster_coherence",
     # changed by the one exact-neighbor core / disk checkpoint / NULL order
-    "knn_bruteforce", "knn_batch", "nearest_neighbor",
-    "nearest_neighbor_blocked", "nearest_neighbor_capped",
     "cosine_dup_pairs", "semantic_prune", "semantic_prune_capped",
     "knn_density_outliers", "srp_dup_pairs", "substring_dedup",
     "gopher_repetition", "event_markov_transitions",
@@ -2238,6 +2242,12 @@ _R15_FRONT = [
     "winnowing_overlap_pairs", "dsir_weights", "bigram_lm_scores",
     "corpus_dup_ngrams", "top_bigrams", "dup_ngram_fraction",
     "repetition_stats",
+    # changed by the one candidate-pair core / shingle filter
+    "jaccard_pairs", "containment_dup_pairs", "minhash_lsh_pairs",
+    "minhash_jaccard_estimates", "minhash_incremental", "simhash_pairs",
+    "simhash_pairs_capped", "phash_dup_pairs", "lsh_recall_summary",
+    "source_overlap_matrix", "dedup_agreement",
+    "dedup_threshold_curve", "dup_distance_profile",
 ]
 assert len(_R15_FRONT) == 50 and all(n in QUERIES for n in _R15_FRONT), (
     "window rotation list must name 50 registered queries"

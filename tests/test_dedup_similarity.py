@@ -349,6 +349,23 @@ def test_srp_near_parallel_vectors_always_collide(vectors):
     assert len(rows) == 1 and rows[0]["cos_sim"] > 0.99
 
 
+def test_srp_dup_pairs_64_bit_signature(spark, vectors):
+    # 64 bits = 4 bands of 16: each band's bucket is built from its own
+    # 16 sign bits, so the full signature width never overflows a
+    # bigint, checked under ANSI casts as a caller-built session has
+    # them; the near-parallel pair is the only one at >= 0.9, once
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        out = similarity.srp_dup_pairs(
+            vectors, threshold=0.9, n_bits=64, dims=3
+        ).collect()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+    assert [(r["vec_a"], r["vec_b"]) for r in out] == [(0, 1)]
+    assert out[0]["cos_sim"] > 0.99
+
+
 def test_semantic_prune_consistent_with_blocked_pairs(spark, sf_dir):
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     pruned = {r["vec_id"]: r for r in similarity.semantic_prune(emb, 0.35).collect()}

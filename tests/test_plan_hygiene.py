@@ -379,3 +379,66 @@ def test_one_word_rule_and_one_word_gram_builder():
         if needle in line
     ]
     assert not found, f"word rule or word-gram build outside functions/text.py: {found}"
+
+
+def _side_column(node) -> str:
+    """The literal start of the column name in an ``F.col("a.x")`` /
+    ``F.col(f"a.{name}")`` call, else ``""``."""
+    if not (
+        isinstance(node, ast.Call)
+        and _call_chain(node) == ["col"]
+        and node.args
+    ):
+        return ""
+    arg = node.args[0]
+    if isinstance(arg, ast.JoinedStr) and arg.values:
+        arg = arg.values[0]
+    if isinstance(arg, ast.Constant) and isinstance(arg.value, str):
+        return arg.value
+    return ""
+
+
+def test_one_candidate_pair_core():
+    """The near-dup family builds its candidate pairs on one core per
+    shape (``operators/dedup.py``): the 64-bit Hamming popcount is
+    spelled only in ``dedup.hamming``, a first-match band predicate (an
+    ordered test of side ``a``'s band index) only in
+    ``dedup.band_join``, and a shared-key self-join counted per id pair
+    (``a.x < b.x`` join, then ``groupBy(...).agg(count)``) only in
+    ``dedup.shared_key_pairs``."""
+    popcount, first_match, shared_key = set(), set(), set()
+    band_index = re.compile(r"\ba\.(band|chunk)\s*(<|<=|\+)")
+    for rel, owner, node in _nodes_with_function(_PKG):
+        site = (rel, owner)
+        if isinstance(node, ast.Constant) and isinstance(node.value, str):
+            if "bit_count(" in node.value and rel != "plans/oracles.py":
+                popcount.add(site)
+            if band_index.search(node.value) and rel != "plans/oracles.py":
+                first_match.add(site)
+        if (
+            isinstance(node, ast.Compare)
+            and isinstance(node.ops[0], (ast.Lt, ast.LtE))
+            and _side_column(node.left) in ("a.band", "a.chunk")
+        ):
+            first_match.add(site)
+        if (
+            isinstance(node, ast.Call)
+            and _call_chain(node)[:3] == ["agg", "groupBy", "join"]
+            and any(
+                isinstance(a, ast.Call) and _call_chain(a) == ["count"]
+                for a in ast.walk(node)
+            )
+        ):
+            join = node.func.value.func.value
+            if any(
+                isinstance(c, ast.Compare)
+                and isinstance(c.ops[0], ast.Lt)
+                and _side_column(c.left).startswith("a.")
+                and _side_column(c.comparators[0]).startswith("b.")
+                for a in join.args
+                for c in ast.walk(a)
+            ):
+                shared_key.add(site)
+    assert popcount == {("operators/dedup.py", "hamming")}, popcount
+    assert first_match == {("operators/dedup.py", "band_join")}, first_match
+    assert shared_key == {("operators/dedup.py", "shared_key_pairs")}, shared_key

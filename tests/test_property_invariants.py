@@ -14,7 +14,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from data_pipeline_example_spark.operators import asof, text, users
+from data_pipeline_example_spark.operators import asof, dedup, text, users
 
 _SETTINGS = dict(
     max_examples=8,
@@ -763,3 +763,87 @@ def test_unicode_hygiene_invariants_on_arbitrary_text(spark, texts):
                 r[f"{cls}_docs_milli"]
                 == 1000 * r[f"{cls}_docs"] // r["n_docs"]
             )
+
+
+def _band_frame(spark, rows):
+    """(id, ks) frame: ks holds one key per band."""
+    return spark.createDataFrame(rows, "id long, ks array<string>")
+
+
+def _collide(ka, kb):
+    return any(x == y for x, y in zip(ka, kb))
+
+
+@st.composite
+def _band_rows(draw):
+    """(bands, key lists): 1–4 bands over a 2- or 3-symbol alphabet."""
+    n = draw(st.integers(min_value=1, max_value=4))
+    symbols = draw(st.sampled_from(["ab", "abc"]))
+    key = st.lists(st.sampled_from(symbols), min_size=n, max_size=n)
+    return n, draw(st.lists(key, max_size=9))
+
+
+@settings(**_SETTINGS)
+@given(data=_band_rows(), right=st.lists(st.integers(0, 5), max_size=9))
+def test_band_join_pairs_equal_any_band_collision(spark, data, right):
+    """``band_join`` emits each pair that shares a key in at least one
+    band exactly once, in both forms: self (``a.id < b.id``) and
+    one-sided (new ⋈ old, no ordering, ids overlapping across sides). A
+    2–3-symbol alphabet makes multi-band collisions the common case.
+    Both forms run in one job over frames built once."""
+    n, keys = data
+    lrows = list(enumerate(keys))
+    # right side: left key lists reversed, so the sides share keys
+    rrows = [(i, keys[j % len(keys)][::-1]) for i, j in enumerate(right) if keys]
+    left = _band_frame(spark, lrows)
+    bands = [F.element_at("ks", i + 1) for i in range(n)]
+
+    def pairs(joined, form):
+        return joined.select(
+            F.lit(form).alias("form"),
+            F.col("a.id").alias("x"),
+            F.col("b.id").alias("y"),
+        )
+
+    self_join = dedup.band_join(left, left, bands)
+    got = (
+        pairs(self_join.filter(F.col("a.id") < F.col("b.id")), "self")
+        .unionByName(
+            pairs(dedup.band_join(left, _band_frame(spark, rrows), bands), "one")
+        )
+        .collect()
+    )
+    for form, other in (("self", lrows), ("one", rrows)):
+        found = [(r["x"], r["y"]) for r in got if r["form"] == form]
+        want = {
+            (a, b)
+            for a, ka in lrows
+            for b, kb in other
+            if (form == "one" or a < b) and _collide(ka, kb)
+        }
+        assert len(found) == len(set(found)), form
+        assert set(found) == want, form
+
+
+@settings(**_SETTINGS)
+@given(
+    key_sets=st.lists(
+        st.sets(st.sampled_from("abcd"), max_size=4), min_size=0, max_size=9
+    )
+)
+def test_shared_key_pairs_equal_python_shared_counts(spark, key_sets):
+    """``shared_key_pairs`` over (doc_id, key) rows = the per-pair count
+    of shared keys, for every doc pair (a < b) sharing at least one."""
+    rows = [(i, k) for i, ks in enumerate(key_sets) for k in sorted(ks)]
+    df = spark.createDataFrame(rows, "doc_id long, key string")
+    got = {
+        (r["doc_a"], r["doc_b"]): r["n_shared"]
+        for r in dedup.shared_key_pairs(df, "key").collect()
+    }
+    want = {
+        (a, b): len(ka & kb)
+        for a, ka in enumerate(key_sets)
+        for b, kb in enumerate(key_sets)
+        if a < b and ka & kb
+    }
+    assert got == want
