@@ -1462,7 +1462,13 @@ def srp_signature_expr(
     angular space) share the signature; ``streaming/curation.py`` keys
     ``dropDuplicatesWithinWatermark`` on it for bounded-state embedding
     near-dup admission.
+
+    Bit j is ``shiftleft(cast(bit as bigint), j)``, OR-ed together, so
+    the expression is a bigint for every ``n_bits`` from 1 to 64 (bit
+    63 is the two's-complement sign bit, the numpy int64 packing).
     """
+    if not 1 <= n_bits <= 64:
+        raise ValueError(f"n_bits must be in [1, 64], got {n_bits}")
     signs = _srp_signs(n_bits, dims)
     terms = []
     for j in range(n_bits):
@@ -1471,8 +1477,8 @@ def srp_signature_expr(
             f"round(aggregate(zip_with(cast({vec_col} as array<double>), "
             f"array({arr}), (x, y) -> x * y), 0.0D, (acc, x) -> acc + x), 6) >= 0"
         )
-        terms.append(f"cast({bit} as bigint) * {1 << j}")
-    return "(" + " + ".join(terms) + ")"
+        terms.append(f"shiftleft(cast({bit} as bigint), {j})")
+    return "(" + " | ".join(terms) + ")"
 
 
 def srp_dup_pairs(

@@ -36,6 +36,13 @@ from data_pipeline_example_spark.functions.materialize import (
 )
 
 from data_pipeline_example_spark.functions import text as T
+from data_pipeline_example_spark.functions.cuts import (
+    join_cuts,
+    ntile_expr,
+    rank_rows,
+    value_at_rank,
+    value_cuts,
+)
 from data_pipeline_example_spark.functions.parallel import widen
 from data_pipeline_example_spark.operators import dedup
 
@@ -245,113 +252,62 @@ def pack_documents(
     )
 
 
-def length_buckets(
-    documents: DataFrame, n_buckets: int = 8, method: str = "cuts"
-) -> DataFrame:
+def length_buckets(documents: DataFrame, n_buckets: int = 8) -> DataFrame:
     """Length-bucketed batching assignment: documents ranked by token
     count (tie-break doc_id) and cut into ``n_buckets`` equal-frequency
     buckets — the dynamic-batching layout that keeps same-batch
     sequences near-equal length so padding waste stays low.
 
-    ``method="cuts"`` (default, the scale path): NO global ordered
-    exchange. The global rank of a row under ORDER BY (n_tokens,
-    doc_id) decomposes as
+    NO global ordered exchange. The global rank of a row under ORDER BY
+    (n_tokens, doc_id) decomposes as
 
         rank = (# rows with a smaller n_tokens)          [cum_before]
              + (row_number among its own n_tokens value) [tie-break]
 
-    cum_before comes from the shared ``functions.cuts`` distributed
-    prefix sum (range-partitioned token-count histogram +
-    per-partition offsets; driver state O(#partitions) — the token
-    domain happens to be bounded, but the helper doesn't rely on
-    that). Each bucket's max token count is the value whose rank
-    interval contains the bucket's upper boundary — one broadcast
-    range-join of the cuts frame against the ≤n_buckets boundary rows.
-    The tie-break is a ``row_number`` over a window PARTITIONED BY
-    n_tokens — a hash exchange, not an ordered one; no single reducer
-    ever sees the corpus. The ntile formula (first N mod n buckets get
-    one extra row) is applied per-row as arithmetic, so the result is
-    bit-identical to ``ntile`` — the ``method="ntile"`` twin IS the
-    registered SQL oracle. Skew note: a single hot n_tokens value
-    (e.g. empty docs) concentrates its tie-break window in one task;
-    AQE skew-split handles the exchange, and the window is two longs
-    per row, never the text. Eager construction: ``value_cuts``
-    localCheckpoints its ranged histogram (see that module's contract
+    (``functions.cuts.rank_rows``: cum_before from the shared
+    distributed prefix sum, the tie-break a ``row_number`` over a
+    window PARTITIONED BY n_tokens — a hash exchange, not an ordered
+    one; no single reducer ever sees the corpus). The ntile formula
+    (first N mod n buckets get one extra row) is applied per row as
+    integer arithmetic (``ntile_expr``), bit-identical to ``ntile`` —
+    the SQL oracle's form. Bucket b's max token count is the value at
+    its last rank, b·q + min(b, r): one aggregate over the cuts rows
+    (``value_at_rank``) yields all ``n_buckets`` maxima as one array,
+    broadcast back. Skew note: a single hot n_tokens value (e.g. empty
+    docs) concentrates its tie-break window in one task; AQE
+    skew-split handles the exchange, and the window is two longs per
+    row, never the text. Eager construction: ``value_cuts``
+    materializes its ranged histogram (see that module's contract
     note).
-
-    ``method="ntile"``: the textbook single-ordered-exchange shape —
-    kept as the oracle twin and for tiny inputs.
 
     Output: doc_id, n_tokens, bucket, plus per-bucket padding
     diagnostics (bucket_max_tokens, pad_waste = bucket_max − n_tokens).
     """
-    from data_pipeline_example_spark.functions.cuts import (
-        join_cuts,
-        ntile_expr,
-        value_cuts,
-    )
-
     toks = documents.select(
         "doc_id", T.token_count(F.col("text")).cast("long").alias("n_tokens")
     )
-    if method == "cuts":
-        spark = documents.sparkSession
-        cuts_df, totals = value_cuts(toks, "n_tokens")
-        n_rows = totals.get((), (0, 0))[0]
-        if n_rows == 0:
-            return spark.createDataFrame(
-                [],
-                "doc_id long, n_tokens long, bucket int, "
-                "bucket_max_tokens long, pad_waste long",
-            )
-        q, r = divmod(n_rows, n_buckets)
-        # bucket b (1-based) covers ranks (ub(b-1), ub(b)]; ntile gives
-        # the first r buckets q+1 rows, the rest q
-        ub = [b * q + min(b, r) for b in range(n_buckets + 1)]
-        # per-bucket max token count = value at sorted position ub(b):
-        # the cuts row whose rank interval (cum_before, cum_before+cnt]
-        # contains ub(b) — a broadcast range-join against the
-        # ≤n_buckets boundary rows (empty buckets excluded)
-        ub_df = spark.createDataFrame(
-            [(b, ub[b]) for b in range(1, n_buckets + 1) if ub[b] > ub[b - 1]],
-            "bucket int, ub long",
-        )
-        bmax_df = F.broadcast(
-            cuts_df.join(
-                F.broadcast(ub_df),
-                (F.col("cum_before") < F.col("ub"))
-                & (F.col("ub") <= F.col("cum_before") + F.col("cnt")),
-            ).select("bucket", F.col("n_tokens").alias("bucket_max_tokens"))
-        )
-        wt = Window.partitionBy("n_tokens").orderBy("doc_id")
-        ranked = (
-            join_cuts(toks, cuts_df, "n_tokens")
-            .withColumn("rank", F.col("cum_before") + F.row_number().over(wt))
-        )
-        # shared inline-ntile formula (functions.cuts.ntile_expr)
-        bucket = ntile_expr("rank", n_rows, n_buckets)
-        return (
-            ranked.withColumn("bucket", bucket.cast("int"))
-            .join(bmax_df, "bucket")
-            .select(
-                "doc_id",
-                "n_tokens",
-                "bucket",
-                "bucket_max_tokens",
-                (F.col("bucket_max_tokens") - F.col("n_tokens")).alias("pad_waste"),
-            )
-        )
-    w = Window.orderBy("n_tokens", "doc_id")
-    bucketed = toks.select(
-        "doc_id", "n_tokens", F.ntile(n_buckets).over(w).alias("bucket")
+    cuts = value_cuts(toks, "n_tokens")
+    last_rank = "{b} * (n_rows div {n}) + least({b}, n_rows % {n})"
+    bucket_max = cuts.groupBy("n_rows").agg(
+        F.array(
+            *[
+                value_at_rank(F.expr(last_rank.format(b=b, n=n_buckets)), "n_tokens")
+                for b in range(1, n_buckets + 1)
+            ]
+        ).alias("_bmax")
     )
-    wb = Window.partitionBy("bucket")
-    return bucketed.select(
-        "doc_id",
-        "n_tokens",
-        "bucket",
-        F.max("n_tokens").over(wb).alias("bucket_max_tokens"),
-        (F.max("n_tokens").over(wb) - F.col("n_tokens")).alias("pad_waste"),
+    bucket = ntile_expr(F.col("rank"), F.col("n_rows"), n_buckets).cast("int")
+    bmax = F.element_at("_bmax", bucket)
+    return (
+        rank_rows(toks, cuts, "n_tokens", "doc_id")
+        .join(F.broadcast(bucket_max), "n_rows")
+        .select(
+            "doc_id",
+            "n_tokens",
+            bucket.alias("bucket"),
+            bmax.alias("bucket_max_tokens"),
+            (bmax - F.col("n_tokens")).alias("pad_waste"),
+        )
     )
 
 
@@ -1766,77 +1722,37 @@ def ccnet_mixture(
     )
 
 
-def token_budget_caps(
-    documents: DataFrame, budget: int = 800, method: str = "cuts"
-) -> DataFrame:
+def token_budget_caps(documents: DataFrame, budget: int = 800) -> DataFrame:
     """Per-source TOKEN-budget curation — the mixture op a pretraining
     run actually uses (``source_caps`` limits document COUNT; corpora
     are budgeted in tokens): within each source, documents rank by
     (token count desc, doc_id) and survive while the source's running
     token total stays within ``budget``.
 
-    ``method="cuts"`` (default, the scale path): the per-GROUP form of
-    the shared ``functions.cuts`` discipline. A running sum windowed
-    over ``partitionBy(source)`` sorts every mega-source in one task;
-    instead, ``value_cuts`` computes the token mass of strictly-longer
-    documents per (source, n_tokens) distributedly (range-partitioned
-    histogram + per-partition offsets; driver state
-    O(#partitions + #sources), never Θ(distinct values)), and a row's
-    running total is ``mass_before + row_number × n_tokens`` where the
-    row_number window is partitioned by (source, n_tokens) — a hash
-    exchange, never a per-source sort. NULL sources are one partition
-    group (null-safe join — matching the window twin and SQL-oracle
-    PARTITION BY semantics; an earlier revision's plain inner join
-    silently dropped them). Bit-identical to the ``method="window"``
-    running sum (pinned by unit test; the window form is the SQL
-    oracle). Eager construction: ``value_cuts`` localCheckpoints its
-    ranged histogram (see that module's contract note).
-    Output: doc_id, source, n_tokens, kept (int).
+    The per-GROUP form of the shared ``functions.cuts`` discipline. A
+    running sum windowed over ``partitionBy(source)`` sorts every
+    mega-source in one task; instead, ``value_cuts`` computes the token
+    mass of strictly-longer documents per (source, n_tokens)
+    distributedly (range-partitioned histogram + per-partition
+    offsets; no driver state, never Θ(distinct values)), and a row's
+    running total is ``mass_before + (rank − cum_before) × n_tokens``
+    — ``rank − cum_before`` is its row_number within (source,
+    n_tokens), a hash-partitioned window, never a per-source sort.
+    NULL sources are one partition group (null-safe join — matching
+    SQL PARTITION BY semantics). Bit-identical to the running-sum
+    window (the SQL oracle's form). Eager construction: ``value_cuts``
+    materializes its ranged histogram (see that module's contract
+    note). Output: doc_id, source, n_tokens, kept (int).
     """
-    from data_pipeline_example_spark.functions.cuts import join_cuts, value_cuts
-
     toks = documents.select(
         "doc_id", "source", T.token_count(F.col("text")).cast("long").alias("n_tokens")
     )
-    if method == "cuts":
-        spark = documents.sparkSession
-        cuts, totals = value_cuts(
-            toks,
-            "n_tokens",
-            group_cols=("source",),
-            weight_col="n_tokens",
-            descending=True,
-        )
-        if not totals:
-            return spark.createDataFrame(
-                [], "doc_id long, source string, n_tokens long, kept int"
-            )
-        wt = Window.partitionBy("source", "n_tokens").orderBy("doc_id")
-        return (
-            join_cuts(toks, cuts, "n_tokens", ("source",))
-            .withColumn("rn", F.row_number().over(wt))
-            .select(
-                "doc_id",
-                "source",
-                "n_tokens",
-                (
-                    (F.col("mass_before") + F.col("rn") * F.col("n_tokens"))
-                    <= budget
-                )
-                .cast("int")
-                .alias("kept"),
-            )
-        )
-    w = (
-        Window.partitionBy("source")
-        .orderBy(F.desc("n_tokens"), F.asc("doc_id"))
-        .rowsBetween(Window.unboundedPreceding, 0)
+    cuts = value_cuts(
+        toks, "n_tokens", group_cols=("source",), weight_col="n_tokens", descending=True
     )
-    return toks.select(
-        "doc_id",
-        "source",
-        "n_tokens",
-        (F.sum("n_tokens").over(w) <= budget).cast("int").alias("kept"),
+    running = F.col("mass_before") + (F.col("rank") - F.col("cum_before")) * F.col("n_tokens")
+    return rank_rows(toks, cuts, "n_tokens", "doc_id", ("source",)).select(
+        "doc_id", "source", "n_tokens", (running <= budget).cast("int").alias("kept")
     )
 
 
@@ -2805,30 +2721,22 @@ def sequence_pack(documents: DataFrame, capacity: int = 2048) -> DataFrame:
     ``functions.cuts`` discipline instead: ``doc_id`` is unique, hence
     ``value_cuts(value=doc_id, weight=n_tokens)``'s per-value
     ``mass_before`` IS the exact per-row prefix sum, computed via
-    range-partitioned per-partition offsets (driver state
-    O(#partitions + #sources), no global sort, no Θ(rows) collect).
-    Block arithmetic is pure nonnegative long ``div``. Eager
-    construction: ``value_cuts`` localCheckpoints its ranged histogram
+    range-partitioned per-partition offsets (no driver state, no
+    global sort). Block arithmetic is pure nonnegative long ``div``. Eager
+    construction: ``value_cuts`` materializes its ranged histogram
     (module contract note). Output per doc: source, doc_id, n_tokens,
     tok_offset, block_id (block the doc STARTS in), blocks_spanned
     (0 for empty docs), splits_boundary (1 when the doc straddles a
     block edge — the attention-mask discontinuity packing audits
     count), ordered by (source, doc_id).
     """
-    from data_pipeline_example_spark.functions.cuts import join_cuts, value_cuts
-
     cap = int(capacity)
     toks = documents.select(
         "doc_id",
         "source",
         T.token_count(F.col("text")).cast("long").alias("n_tokens"),
     )
-    cuts, _ = value_cuts(
-        toks.select("doc_id", "source", "n_tokens"),
-        "doc_id",
-        group_cols=("source",),
-        weight_col="n_tokens",
-    )
+    cuts = value_cuts(toks, "doc_id", group_cols=("source",), weight_col="n_tokens")
     packed = join_cuts(
         toks, cuts.select("source", "doc_id", "mass_before"), "doc_id", ("source",)
     )

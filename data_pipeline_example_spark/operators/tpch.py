@@ -27,6 +27,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from data_pipeline_example_spark.functions.cuts import (
+    join_cuts,
+    ntile_expr,
+    percentile_disc,
+    rank_rows,
+    value_cuts,
+)
 from data_pipeline_example_spark.functions.materialize import (
     materialize,
     materialize_counted,
@@ -827,76 +834,44 @@ def priority_revenue_pivot(orders: DataFrame) -> DataFrame:
     )
 
 
-def customer_spend_distribution(
-    orders: DataFrame, n: int = 50, method: str = "cuts"
-) -> DataFrame:
+def customer_spend_distribution(orders: DataFrame, n: int = 50) -> DataFrame:
     """Distribution functions — each top customer's percent_rank and
     cume_dist over total spend, computed over the per-customer
     aggregate (never raw orders). Ranks are computed on the rounded
     spend so ties agree across engines. Output: c_custkey, total_spend,
     spend_pct_rank, spend_cume_dist.
 
-    ``method="cuts"`` (default, the scale path): NO global ordered
-    window. percent_rank and cume_dist depend only on a row's VALUE —
-    pct_rank = cum_before/(N−1), cume_dist = cum_incl/N — so both come
-    from the distributed spend-value prefix sums of
-    ``functions.cuts.value_cuts`` (range-partitioned histogram +
-    per-partition offsets; driver state O(#partitions), NOT
+    NO global ordered window. percent_rank and cume_dist depend only on
+    a row's VALUE — pct_rank = cum_before/(N−1), cume_dist =
+    cum_incl/N — so both come from the distributed spend-value prefix
+    sums of ``functions.cuts.value_cuts`` (range-partitioned histogram
+    + per-partition offsets, N as a column; no driver state, NOT
     Θ(distinct 2-dp spend values) ≈ |customers|) joined onto the
     aggregate, and the top-n is a TakeOrdered. A
     ``Window.orderBy(total_spend)`` here would move every per-customer
     row through ONE task (|customers| grows with the fact table —
     single-task sort of ~10⁹ rows at 100 TB); the cuts path has no
-    global ordered exchange. Divisions + 6-dp rounds happen in Spark
-    expressions (never in Python) so results are bit-identical to the
-    window twin, which is retained as ``method="window"`` and pinned
-    equal by unit test; the SQL oracle is the window form. Eager
-    construction: ``value_cuts`` localCheckpoints its ranged histogram
-    (see that module's contract note).
+    global ordered exchange. Divisions + 6-dp rounds are Spark double
+    expressions, bit-identical to ``percent_rank``/``cume_dist`` (the
+    SQL oracle is the window form). Eager construction: ``value_cuts``
+    materializes its ranged histogram (see that module's contract
+    note).
     """
-    from pyspark.sql.window import Window
-
-    from data_pipeline_example_spark.functions.cuts import join_cuts, value_cuts
-
-    spend = (
-        orders.groupBy("o_custkey")
-        .agg(F.round(F.sum("o_totalprice"), 2).alias("total_spend"))
+    spend = orders.groupBy("o_custkey").agg(
+        F.round(F.sum("o_totalprice"), 2).alias("total_spend")
     )
-    if method == "cuts":
-        spark = orders.sparkSession
-        cuts, totals = value_cuts(spend, "total_spend")
-        n_rows = totals.get((), (0, 0))[0]
-        if n_rows == 0:
-            return spark.createDataFrame(
-                [],
-                "c_custkey long, total_spend double, "
-                "spend_pct_rank double, spend_cume_dist double",
-            )
-        den = max(n_rows - 1, 1)  # percent_rank of a 1-row frame is 0
-        return (
-            join_cuts(spend, cuts, "total_spend")
-            .select(
-                F.col("o_custkey").alias("c_custkey"),
-                "total_spend",
-                F.round(F.col("cum_before") / F.lit(float(den)), 6).alias(
-                    "spend_pct_rank"
-                ),
-                F.round(
-                    (F.col("cum_before") + F.col("cnt")) / F.lit(float(n_rows)), 6
-                ).alias("spend_cume_dist"),
-            )
-            .orderBy(F.desc("total_spend"), F.asc("c_custkey"))
-            .limit(n)
-        )
-    w = Window.orderBy("total_spend")
     return (
-        spend.withColumn("spend_pct_rank", F.round(F.percent_rank().over(w), 6))
-        .withColumn("spend_cume_dist", F.round(F.cume_dist().over(w), 6))
+        join_cuts(spend, value_cuts(spend, "total_spend"), "total_spend")
         .select(
             F.col("o_custkey").alias("c_custkey"),
             "total_spend",
-            "spend_pct_rank",
-            "spend_cume_dist",
+            # percent_rank of a 1-row frame is 0
+            F.round(
+                F.col("cum_before") / F.greatest(F.col("n_rows") - 1, F.lit(1)), 6
+            ).alias("spend_pct_rank"),
+            F.round((F.col("cum_before") + F.col("cnt")) / F.col("n_rows"), 6).alias(
+                "spend_cume_dist"
+            ),
         )
         .orderBy(F.desc("total_spend"), F.asc("c_custkey"))
         .limit(n)
@@ -924,69 +899,29 @@ def returns_cube(lineitem: DataFrame) -> DataFrame:
     )
 
 
-def customer_value_tiles(
-    orders: DataFrame, tiles: int = 4, method: str = "cuts"
-) -> DataFrame:
+def customer_value_tiles(orders: DataFrame, tiles: int = 4) -> DataFrame:
     """NTILE quartiles over per-customer spend — equal-frequency binning
     for cohort analysis. Tile assignment orders on (rounded spend,
     custkey) so bucket boundaries are engine-independent.
     Output: tile, n_customers, min_spend, max_spend.
 
-    ``method="cuts"`` (default, the scale path): the shared
-    ``functions.cuts`` discipline instead of an unpartitioned NTILE
-    window (which would sort all |customers| per-customer rows in ONE
-    task — the textbook 100× straggler). The global rank under ORDER BY
-    (total_spend, o_custkey) decomposes into the distributed per-value
-    prefix sum of ``value_cuts`` (range-partitioned histogram +
-    per-partition offsets; driver state O(#partitions), not
-    Θ(distinct spend values)) plus a ``row_number`` over a window
-    PARTITIONED BY total_spend (hash exchange, never a global order);
-    the ntile formula is applied per-row as integer arithmetic,
-    bit-identical to ``ntile`` — the ``method="window"`` twin is pinned
-    equal by unit test and serves as the SQL-oracle form. Eager
-    construction: ``value_cuts`` localCheckpoints its ranged histogram
-    (see that module's contract note).
+    The shared ``functions.cuts`` discipline instead of an
+    unpartitioned NTILE window (which would sort all |customers|
+    per-customer rows in ONE task — the textbook 100× straggler): the
+    global rank under ORDER BY (total_spend, o_custkey) is
+    ``rank_rows`` (distributed per-value prefix sum + a row_number over
+    a window PARTITIONED BY total_spend — a hash exchange, never a
+    global order), and ``ntile_expr`` applies the NTILE formula per row
+    in integer arithmetic, bit-identical to ``ntile`` (the SQL oracle's
+    form). Eager construction: ``value_cuts`` materializes its ranged
+    histogram (see that module's contract note).
     """
-    from pyspark.sql.window import Window
-
-    from data_pipeline_example_spark.functions.cuts import (
-        join_cuts,
-        ntile_expr,
-        value_cuts,
-    )
-
     spend = orders.groupBy("o_custkey").agg(
         F.round(F.sum("o_totalprice"), 2).alias("total_spend")
     )
-    if method == "cuts":
-        spark = orders.sparkSession
-        cuts, totals = value_cuts(spend, "total_spend")
-        n_rows = totals.get((), (0, 0))[0]
-        if n_rows == 0:
-            return spark.createDataFrame(
-                [],
-                "tile int, n_customers long, min_spend double, "
-                "max_spend double",
-            )
-        wt = Window.partitionBy("total_spend").orderBy("o_custkey")
-        ranked = join_cuts(spend, cuts, "total_spend").withColumn(
-            "rank", F.col("cum_before") + F.row_number().over(wt)
-        )
-        # shared inline-ntile formula (functions.cuts.ntile_expr)
-        tile = ntile_expr("rank", n_rows, tiles)
-        return (
-            ranked.withColumn("tile", tile.cast("int"))
-            .groupBy("tile")
-            .agg(
-                F.count(F.lit(1)).alias("n_customers"),
-                F.min("total_spend").alias("min_spend"),
-                F.max("total_spend").alias("max_spend"),
-            )
-            .orderBy("tile")
-        )
-    w = Window.orderBy(F.asc("total_spend"), F.asc("o_custkey"))
+    ranked = rank_rows(spend, value_cuts(spend, "total_spend"), "total_spend", "o_custkey")
     return (
-        spend.withColumn("tile", F.ntile(tiles).over(w))
+        ranked.withColumn("tile", ntile_expr(F.col("rank"), F.col("n_rows"), tiles).cast("int"))
         .groupBy("tile")
         .agg(
             F.count(F.lit(1)).alias("n_customers"),
@@ -1448,61 +1383,23 @@ def segment_value_percentiles(
 ) -> DataFrame:
     """EXACT per-segment order-value percentiles (p50/p90/p99) without
     a global sort and without approxQuantile's error bound — the
-    ``functions.cuts`` helper's second production site: the percentile
-    value at rank ceil(p·N) (SQL ``percentile_disc`` semantics,
-    DuckDB-verified) is the cuts row whose rank interval
-    (cum_before, cum_before+cnt] contains the target rank, found by a
-    broadcast join against the O(#segments × #ps) driver-computed
-    target table. A ``percentile_disc`` window/sort would move every
-    order row through one task per segment; the cuts path is the
-    range-offset histogram + one broadcast interval join. Values are
-    raw doubles from the data (no arithmetic), so cross-engine
-    equality is exact. Output: c_mktsegment, n_orders, p50, p90, p99.
+    percentile value at rank ceil(p·N) (SQL ``percentile_disc``
+    semantics, DuckDB-verified) is the cuts row whose rank interval
+    (cum_before, cum_before+cnt] contains the target rank
+    (``functions.cuts.percentile_disc``, one aggregate over the
+    per-(segment, value) cuts rows). A ``percentile_disc``
+    window/sort would move every order row through one task per
+    segment. Values are raw doubles from the data (no arithmetic), so
+    cross-engine equality is exact. Output: c_mktsegment, n_orders,
+    p50, p90, p99.
     """
-    import math
-
-    from data_pipeline_example_spark.functions.cuts import value_cuts
-
-    spark = orders.sparkSession
     j = orders.join(
         customer, orders["o_custkey"] == customer["c_custkey"]
     ).select("c_mktsegment", "o_totalprice")
-    cuts, totals = value_cuts(j, "o_totalprice", group_cols=("c_mktsegment",))
-    rows = []
-    counts = []
-    for (seg,), (n, _) in totals.items():
-        counts.append((seg, n))
-        for p in ps:
-            rows.append((seg, float(p), max(int(math.ceil(p * n)), 1)))
-    if not rows:
-        return spark.createDataFrame(
-            [],
-            "c_mktsegment string, n_orders long, p50 double, "
-            "p90 double, p99 double",
-        )
-    targets = F.broadcast(
-        spark.createDataFrame(rows, "seg string, p double, target long")
-    )
-    hit = cuts.join(
-        targets,
-        cuts["c_mktsegment"].eqNullSafe(targets["seg"])
-        & (cuts["cum_before"] < targets["target"])
-        & (targets["target"] <= cuts["cum_before"] + cuts["cnt"]),
-    )
-    wide = hit.groupBy("c_mktsegment").agg(
-        *[
-            F.max(F.when(F.col("p") == p, F.col("o_totalprice"))).alias(
-                f"p{round(p * 100)}"
-            )
-            for p in ps
-        ]
-    )
-    cdf = F.broadcast(
-        spark.createDataFrame(counts, "c_mktsegment string, n_orders long")
-    )
+    cuts = value_cuts(j, "o_totalprice", group_cols=("c_mktsegment",))
     return (
-        wide.join(cdf, "c_mktsegment")
-        .select("c_mktsegment", "n_orders", *[f"p{round(p * 100)}" for p in ps])
+        cuts.groupBy("c_mktsegment", F.col("n_rows").alias("n_orders"))
+        .agg(*[percentile_disc(p, "o_totalprice").alias(f"p{round(p * 100)}") for p in ps])
         .orderBy("c_mktsegment")
     )
 
@@ -1649,14 +1546,15 @@ def customer_rfm(orders: DataFrame, tiles: int = 4) -> DataFrame:
     customer scored 1..tiles on each dimension by equal-frequency
     NTILE, rolled up to the tiles³ segment grid.
 
-    Each dimension's tile uses the shared ``functions.cuts``
-    discipline (its third production site): global rank under ORDER BY
-    (metric, o_custkey) from the range-offset prefix sums + a
-    value-partitioned row_number, then the shared ``ntile_expr``
-    integer formula — NO unpartitioned NTILE window (the textbook 100×
-    single-task straggler, three times over). The per-customer frame
-    is localCheckpoint-ed once (narrow, |customers| rows) so the three
-    cuts passes and the final rollup read one materialization (module
+    The tiles use the shared ``functions.cuts`` discipline: the three
+    dimensions are stacked into (dim, value) rows and ranked ONCE —
+    ``value_cuts`` grouped by dim, ``rank_rows`` under ORDER BY
+    (metric, o_custkey) within each dim, the shared ``ntile_expr``
+    integer formula — then pivoted back to one row per customer. NO
+    unpartitioned NTILE window (the textbook 100× single-task
+    straggler, three times over). The per-customer frame is
+    materialized once (narrow, |customers| rows) so the ranged
+    histogram and the ranked rows read one materialization (module
     eager-construction contract). Exactness: recency is whole days vs
     the corpus max order date, frequency an exact count, monetary
     exact integer CENTS (per-row 2-dp→×100 cast, the
@@ -1665,17 +1563,9 @@ def customer_rfm(orders: DataFrame, tiles: int = 4) -> DataFrame:
     anywhere. Output: r_tile, f_tile, m_tile, n_customers,
     avg_recency_days, total_orders, total_spend_cents.
     """
-    from data_pipeline_example_spark.functions.cuts import (
-        join_cuts,
-        ntile_expr,
-        value_cuts,
-    )
-    from pyspark.sql.window import Window
-
-    spark = orders.sparkSession
     cents = F.round(F.round(F.col("o_totalprice"), 2) * 100, 0).cast("long")
     maxd = orders.agg(F.max("o_orderdate").alias("max_d"))
-    rfm = (
+    melted = (
         orders.groupBy("o_custkey")
         .agg(
             F.max("o_orderdate").alias("last_d"),
@@ -1683,63 +1573,33 @@ def customer_rfm(orders: DataFrame, tiles: int = 4) -> DataFrame:
             F.sum(cents).cast("long").alias("m_cents"),
         )
         .crossJoin(F.broadcast(maxd))
-        .select(
+        .selectExpr(
             "o_custkey",
-            F.datediff(F.col("max_d"), F.col("last_d"))
-            .cast("long")
-            .alias("r_v"),
-            "f_v",
-            "m_cents",
+            "stack(3, 'r', cast(datediff(max_d, last_d) as long), 'f', f_v,"
+            " 'm', m_cents) as (_dim, _v)",
         )
         .transform(materialize)
     )
-    # ONE grouped cuts pass for all three dimensions (r15): the three
-    # dims are independent columns of the SAME checkpointed rfm frame,
-    # so stacking them into (dim, value) rows and running value_cuts
-    # with group_cols=("_dim",) computes all three per-value prefix
-    # sums in one ranged materialization + one driver collect — 2
-    # construct-time jobs instead of 6. Per-dim arithmetic (cum_before
-    # within the dim group, row_number within (value), the ntile
-    # formula) is unchanged.
-    melted = rfm.selectExpr(
-        "o_custkey", "stack(3, 'r', r_v, 'f', f_v, 'm', m_cents) as (_dim, _v)"
+    cuts = value_cuts(melted, "_v", group_cols=("_dim",))
+    tile = ntile_expr(F.col("rank"), F.col("n_rows"), tiles).cast("int")
+    per_cust = rank_rows(melted, cuts, "_v", "o_custkey", ("_dim",)).groupBy(
+        "o_custkey"
+    ).agg(
+        *[
+            F.max(F.when(F.col("_dim") == d, c)).alias(f"{d}_{name}")
+            for d in "rfm"
+            for c, name in ((tile, "tile"), (F.col("_v"), "v"))
+        ]
     )
-    all_cuts, totals = value_cuts(melted, "_v", group_cols=("_dim",))
-    cur = rfm
-    for dim, key, tile_col in (
-        ("r_v", "r", "r_tile"),
-        ("f_v", "f", "f_tile"),
-        ("m_cents", "m", "m_tile"),
-    ):
-        n_rows = totals.get((key,), (0, 0))[0]
-        if n_rows == 0:
-            return spark.createDataFrame(
-                [],
-                "r_tile int, f_tile int, m_tile int, n_customers long, "
-                "avg_recency_days long, total_orders long, "
-                "total_spend_cents long",
-            )
-        dcuts = (
-            all_cuts.filter(F.col("_dim") == key)
-            .drop("_dim")
-            .withColumnRenamed("_v", dim)
-        )
-        wt = Window.partitionBy(dim).orderBy("o_custkey")
-        ranked = join_cuts(cur, dcuts, dim).withColumn(
-            "rank", F.col("cum_before") + F.row_number().over(wt)
-        )
-        cur = ranked.withColumn(
-            tile_col, ntile_expr("rank", n_rows, tiles).cast("int")
-        ).drop("cnt", "cum_before", "rank")
     return (
-        cur.groupBy("r_tile", "f_tile", "m_tile")
+        per_cust.groupBy("r_tile", "f_tile", "m_tile")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_customers"),
             F.expr(
                 "cast((2 * sum(r_v) + count(1)) div (2 * count(1)) as long)"
             ).alias("avg_recency_days"),
             F.sum("f_v").cast("long").alias("total_orders"),
-            F.sum("m_cents").cast("long").alias("total_spend_cents"),
+            F.sum("m_v").cast("long").alias("total_spend_cents"),
         )
         .orderBy("r_tile", "f_tile", "m_tile")
     )
@@ -1756,21 +1616,19 @@ def order_gap_percentiles(
     frames are order counts per customer — bounded, never a global
     sort), ordered (o_orderdate, o_orderkey) so same-day ties are
     engine-independent. Gap percentiles then use the
-    ``functions.cuts`` percentile pattern (``segment_value_percentiles``
-    precedent) over the small integer day-gap domain: rank
-    ceil(p·N) located in the cuts row whose interval contains it
-    (SQL ``percentile_disc`` semantics) — driver state
-    O(#partitions). Exactness: gaps are whole-day longs; the mean is
-    the integral HALF_UP identity; percentile values are raw longs.
+    ``functions.cuts.percentile_disc`` aggregate over the small
+    integer day-gap domain: rank ceil(p·N) located in the cuts row
+    whose interval contains it (SQL ``percentile_disc`` semantics).
+    The gap weight rides the same cuts pass, so n_gaps and the gap sum
+    are the ``n_rows``/``weight_sum`` columns and the gaps subtree
+    computes once, inside the ranged materialization. The aggregate
+    groups by those totals, so an empty input yields no row.
+    Exactness: gaps are whole-day longs; the mean is the integral
+    HALF_UP identity; percentile values are raw longs.
     Output: one row — n_gaps, avg_gap_days, p50, p90, p99.
     """
-    import math
-
     from pyspark.sql.window import Window
 
-    from data_pipeline_example_spark.functions.cuts import value_cuts
-
-    spark = orders.sparkSession
     wc = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     gaps = (
         orders.select("o_custkey", "o_orderdate", "o_orderkey")
@@ -1782,44 +1640,17 @@ def order_gap_percentiles(
             .alias("gap")
         )
     )
-    # weight_col carries the exact gap sum into the totals collect
-    # (r15): n_gaps and the HALF_UP mean are then pure driver ints and
-    # the old ``stats`` aggregate — which re-ran the orders scan + lag
-    # window a second time at exec — is gone; the gaps subtree computes
-    # once, inside the cuts ranged materialization.
-    cuts, totals = value_cuts(gaps, "gap", weight_col="gap")
-    n, gap_sum = totals.get((), (0, 0))
-    if n == 0:
-        return spark.createDataFrame(
-            [],
-            "n_gaps long, avg_gap_days long, p50 long, p90 long, p99 long",
+    pcols = [f"p{round(p * 100)}" for p in ps]
+    return (
+        value_cuts(gaps, "gap", weight_col="gap")
+        .groupBy("n_rows", "weight_sum")
+        .agg(*[percentile_disc(p, "gap").alias(c) for p, c in zip(ps, pcols)])
+        .select(
+            F.col("n_rows").alias("n_gaps"),
+            # gaps are nonnegative, so the truncating ``div`` is HALF_UP
+            F.expr("(2 * weight_sum + n_rows) div (2 * n_rows)").alias("avg_gap_days"),
+            *pcols,
         )
-    targets = F.broadcast(
-        spark.createDataFrame(
-            [(float(p), max(int(math.ceil(p * n)), 1)) for p in ps],
-            "p double, target long",
-        )
-    )
-    hit = cuts.join(
-        targets,
-        (F.col("cum_before") < F.col("target"))
-        & (F.col("target") <= F.col("cum_before") + F.col("cnt")),
-    )
-    pvals = hit.agg(
-        *[
-            F.max(F.when(F.col("p") == p, F.col("gap"))).alias(
-                f"p{round(p * 100)}"
-            )
-            for p in ps
-        ]
-    )
-    # gaps are nonnegative longs, so Spark's truncating ``div`` equals
-    # Python's floor ``//`` here and the mean is exact driver math
-    avg_gap = (2 * int(gap_sum) + n) // (2 * n)
-    return pvals.select(
-        F.lit(int(n)).cast("long").alias("n_gaps"),
-        F.lit(avg_gap).cast("long").alias("avg_gap_days"),
-        *[f"p{round(p * 100)}" for p in ps],
     )
 
 
@@ -1829,44 +1660,26 @@ def revenue_pareto(orders: DataFrame, tiles: int = 10) -> DataFrame:
     running share of total revenue — "the top 10% of customers carry
     X% of revenue".
 
-    The descending rank uses the shared ``functions.cuts`` discipline
-    (its first descending production site outside token_budget_caps):
-    range-offset prefix counts under ORDER BY (spend DESC, custkey) —
-    no global sort, driver state O(#partitions) — then the shared
-    ``ntile_expr`` integer formula. The cumulative share is a window
-    over the AGGREGATED decile frame (``tiles`` rows — planning-sized,
-    the daily_revenue_ma7 spine precedent), never over customers.
+    The descending rank uses the shared ``functions.cuts`` discipline:
+    ``rank_rows`` over descending cuts, ORDER BY (spend DESC, custkey)
+    — no global sort, no driver state — then the shared ``ntile_expr``
+    integer formula. The cumulative share is a window over the
+    AGGREGATED decile frame (``tiles`` rows — planning-sized, the
+    daily_revenue_ma7 spine precedent), never over customers.
     Exactness: spend is exact integer CENTS; the share is one 4-dp
     division of exact longs. Output: decile, n_customers,
     decile_spend_cents, cum_share.
     """
     from pyspark.sql.window import Window
 
-    from data_pipeline_example_spark.functions.cuts import (
-        join_cuts,
-        ntile_expr,
-        value_cuts,
-    )
-
-    spark = orders.sparkSession
     cents = F.round(F.round(F.col("o_totalprice"), 2) * 100, 0).cast("long")
     spend = orders.groupBy("o_custkey").agg(
         F.sum(cents).cast("long").alias("m_cents")
     )
-    cuts, totals = value_cuts(spend, "m_cents", descending=True)
-    n_rows, _ = totals.get((), (0, 0))
-    if n_rows == 0:
-        return spark.createDataFrame(
-            [],
-            "decile int, n_customers long, decile_spend_cents long, "
-            "cum_share double",
-        )
-    wt = Window.partitionBy("m_cents").orderBy("o_custkey")
-    ranked = join_cuts(spend, cuts, "m_cents").withColumn(
-        "rank", F.col("cum_before") + F.row_number().over(wt)
-    )
+    cuts = value_cuts(spend, "m_cents", descending=True)
     dec = (
-        ranked.withColumn("decile", ntile_expr("rank", n_rows, tiles).cast("int"))
+        rank_rows(spend, cuts, "m_cents", "o_custkey")
+        .withColumn("decile", ntile_expr(F.col("rank"), F.col("n_rows"), tiles).cast("int"))
         .groupBy("decile")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_customers"),
@@ -1875,12 +1688,12 @@ def revenue_pareto(orders: DataFrame, tiles: int = 10) -> DataFrame:
     )
     wcum = Window.orderBy("decile").rowsBetween(Window.unboundedPreceding, 0)
     # total as an unpartitioned window over the tiles-row decile
-    # aggregate (r15): the lazy crossJoin total re-ran the ranked-cuts
+    # aggregate: a lazy crossJoin total would re-run the ranked-cuts
     # subtree a second time
-    wtot2 = Window.partitionBy()
+    wtot = Window.partitionBy()
     return (
         dec.withColumn(
-            "t_cents", F.sum("decile_spend_cents").over(wtot2).cast("long")
+            "t_cents", F.sum("decile_spend_cents").over(wtot).cast("long")
         )
         .withColumn(
             "cum_cents", F.sum("decile_spend_cents").over(wcum).cast("long")
@@ -1935,84 +1748,47 @@ def customer_migration(orders: DataFrame, tiles: int = 4) -> DataFrame:
 
     The date midpoint is lo + (hi−lo) div 2 whole days (integer
     arithmetic, mirrored in the oracle). Each half's quartiles rank
-    only the customers ACTIVE in that half, via the shared
-    ``functions.cuts`` + ``ntile_expr`` discipline (two more
-    production sites — never an unpartitioned NTILE); a customer
-    absent from a half lands in tile 0 of that axis (FULL OUTER join +
-    coalesce), so row/column 0 are the acquisition and churn margins.
-    Output: the bounded (tiles+1)² grid minus the impossible (0,0)
-    cell — tile_h1, tile_h2, n_customers. All counts exact longs.
+    only the customers ACTIVE in that half: per-(half, customer) spend
+    rows go through ONE ``functions.cuts`` pass grouped by half
+    (``rank_rows`` + ``ntile_expr`` over that half's own row count —
+    never an unpartitioned NTILE), then pivot to one row per customer;
+    a customer absent from a half lands in tile 0 of that axis, so
+    row/column 0 are the acquisition and churn margins. The
+    per-(half, customer) frame is materialized once (narrow,
+    |active customers| rows): the ranged histogram and the ranked rows
+    both read it. Output: the bounded (tiles+1)² grid minus the
+    impossible (0,0) cell — tile_h1, tile_h2, n_customers. All counts
+    exact longs.
     """
-    from pyspark.sql.window import Window
-
-    from data_pipeline_example_spark.functions.cuts import (
-        join_cuts,
-        ntile_expr,
-        value_cuts,
-    )
-
-    spark = orders.sparkSession
     cents = F.round(F.round(F.col("o_totalprice"), 2) * 100, 0).cast("long")
     d = F.to_date("o_orderdate")
-    bounds = orders.agg(
-        F.min(d).alias("lo"), F.max(d).alias("hi")
-    )
-    base = (
-        orders.select(
-            "o_custkey", d.alias("d"), cents.alias("cents")
-        )
+    bounds = orders.agg(F.min(d).alias("lo"), F.max(d).alias("hi"))
+    spend = (
+        orders.select("o_custkey", d.alias("d"), cents.alias("cents"))
         .crossJoin(F.broadcast(bounds))
         .withColumn(
-            "mid",
-            F.expr("date_add(lo, cast(datediff(hi, lo) div 2 as int))"),
-        )
-    )
-
-    # ONE grouped cuts pass for both halves (r15): per-half spend rows
-    # carry a half label and value_cuts runs once with
-    # group_cols=("_half",) — one ranged materialization + one driver
-    # collect instead of two of each. Per-half quartile arithmetic
-    # (cum_before within the half, row_number within (value), ntile
-    # over that half's own n_rows) is unchanged.
-    # materialized ONCE (r15): three consumers read this frame — the
-    # cuts histogram and BOTH half filters — and each previously
-    # replayed the full orders scan + midpoint join + groupBy at exec;
-    # per-(half, customer) rows are narrow, so the checkpoint is
-    # |active customers|-sized, and the bounds aggregate folds into
-    # the same blocking job.
-    spend_both = (
-        base.withColumn(
             "_half",
-            F.when(F.col("d") < F.col("mid"), F.lit(1)).otherwise(F.lit(2)),
+            F.when(
+                F.col("d") < F.expr("date_add(lo, cast(datediff(hi, lo) div 2 as int))"),
+                F.lit(1),
+            ).otherwise(F.lit(2)),
         )
         .groupBy("_half", "o_custkey")
         .agg(F.sum("cents").cast("long").alias("m_cents"))
         .transform(materialize)
     )
-    all_cuts, totals = value_cuts(spend_both, "m_cents", group_cols=("_half",))
-
-    def _half_tiles(half: int, out_col: str) -> DataFrame:
-        n_rows = totals.get((half,), (0, 0))[0]
-        if n_rows == 0:
-            return spark.createDataFrame([], f"o_custkey long, {out_col} int")
-        spend = spend_both.filter(F.col("_half") == half).drop("_half")
-        cuts = all_cuts.filter(F.col("_half") == half).drop("_half")
-        wt = Window.partitionBy("m_cents").orderBy("o_custkey")
-        ranked = join_cuts(spend, cuts, "m_cents").withColumn(
-            "rank", F.col("cum_before") + F.row_number().over(wt)
-        )
-        return ranked.select(
-            "o_custkey",
-            ntile_expr("rank", n_rows, tiles).cast("int").alias(out_col),
-        )
-
-    h1 = _half_tiles(1, "tile_h1")
-    h2 = _half_tiles(2, "tile_h2")
+    cuts = value_cuts(spend, "m_cents", group_cols=("_half",))
+    tile = ntile_expr(F.col("rank"), F.col("n_rows"), tiles).cast("int")
     return (
-        h1.join(h2, "o_custkey", "full_outer")
-        .select(
-            F.coalesce("tile_h1", F.lit(0)).alias("tile_h1"),
-            F.coalesce("tile_h2", F.lit(0)).alias("tile_h2"),
+        rank_rows(spend, cuts, "m_cents", "o_custkey", ("_half",))
+        .groupBy("o_custkey")
+        .agg(
+            *[
+                F.coalesce(F.max(F.when(F.col("_half") == h, tile)), F.lit(0)).alias(
+                    f"tile_h{h}"
+                )
+                for h in (1, 2)
+            ]
         )
         .groupBy("tile_h1", "tile_h2")
         .agg(F.count(F.lit(1)).cast("long").alias("n_customers"))

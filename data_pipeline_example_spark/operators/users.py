@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from data_pipeline_example_spark.functions.cuts import percentile_disc, value_cuts
 from data_pipeline_example_spark.functions.materialize import materialize
 
 NULL_USER_PREFIX = "\x00null\x00"
@@ -913,21 +914,16 @@ def funnel_dropoff_time(
     windows (ONE user_id exchange, order-sensitive semantics
     identical to :func:`event_funnel` by construction). The per-user
     frame then stacks to (stage, gap_s) rows and the percentiles use
-    the ``functions.cuts`` pattern (``order_gap_percentiles``
-    precedent): rank ceil(p·N) located in a range-offset prefix
-    histogram — SQL ``percentile_disc`` semantics, no per-stage sort,
-    driver state O(#partitions + #stages). Gaps are whole-second
-    BIGINTs (`unix_timestamp` floors; DuckDB ``date_diff('second')``
-    matches). Output: stage_idx, stage, n_users, p50_gap_s,
-    p90_gap_s.
+    the ``functions.cuts.percentile_disc`` aggregate
+    (``order_gap_percentiles`` precedent): rank ceil(p·N) located in a
+    range-offset prefix histogram — SQL ``percentile_disc`` semantics,
+    no per-stage sort, no driver state; n_users is the stage's
+    ``n_rows`` column. Gaps are whole-second BIGINTs (`unix_timestamp`
+    floors; DuckDB ``date_diff('second')`` matches). Output:
+    stage_idx, stage, n_users, p50_gap_s, p90_gap_s.
     """
-    import math
-
     from pyspark.sql.window import Window
 
-    from data_pipeline_example_spark.functions.cuts import value_cuts
-
-    spark = events.sparkSession
     w = Window.partitionBy("user_id")
     stages = ["signup", "view", "click", "purchase"]
     df = events.select("user_id", "event_type", "ts").withColumn(
@@ -951,52 +947,19 @@ def funnel_dropoff_time(
         f"{i}, '{stages[i]}', unix_timestamp(t{i}) - unix_timestamp(t{i-1})"
         for i in range(1, len(stages))
     )
-    # the checkpoint stays (r15 note): value_cuts' repartitionByRange
-    # SAMPLES its child to draw range boundaries, so feeding it the
-    # raw four-window subtree would compute that subtree twice (sample
-    # pass + shuffle pass); over the checkpointed blocks both passes
-    # are cheap re-scans. What DID go: the per-stage counts re-scan —
-    # n_users equals the group totals the cuts collect already returns.
-    from data_pipeline_example_spark.functions.materialize import materialize
-
+    # value_cuts' repartitionByRange SAMPLES its child to draw range
+    # boundaries, so feeding it the raw four-window subtree would
+    # compute that subtree twice (sample pass + shuffle pass); over the
+    # materialized blocks both passes are cheap re-scans
     gaps = per_user.selectExpr(
         f"stack({len(stages) - 1}, {stack}) as (stage_idx, stage, gap_s)"
     ).filter(F.col("gap_s").isNotNull()).transform(materialize)
-    cuts, totals = value_cuts(gaps, "gap_s", group_cols=("stage_idx", "stage"))
-    rows = []
-    for (idx, st), (n, _) in totals.items():
-        for p in ps:
-            rows.append((int(idx), str(st), float(p), max(int(math.ceil(p * n)), 1)))
-    if not rows:
-        return spark.createDataFrame(
-            [],
-            "stage_idx int, stage string, n_users long, "
-            + ", ".join(f"p{round(p * 100)}_gap_s long" for p in ps),
-        )
-    targets = F.broadcast(
-        spark.createDataFrame(rows, "idx int, st string, p double, target long")
+    return (
+        value_cuts(gaps, "gap_s", group_cols=("stage_idx", "stage"))
+        .groupBy("stage_idx", "stage", F.col("n_rows").alias("n_users"))
+        .agg(*[percentile_disc(p, "gap_s").alias(f"p{round(p * 100)}_gap_s") for p in ps])
+        .orderBy("stage_idx")
     )
-    hit = cuts.join(
-        targets,
-        (cuts["stage_idx"] == targets["idx"])
-        & (F.col("cum_before") < F.col("target"))
-        & (F.col("target") <= F.col("cum_before") + F.col("cnt")),
-    )
-    pvals = hit.groupBy("stage_idx", "stage").agg(
-        *[
-            F.max(F.when(F.col("p") == p, F.col("gap_s"))).alias(
-                f"p{round(p * 100)}_gap_s"
-            )
-            for p in ps
-        ]
-    )
-    counts = F.broadcast(
-        spark.createDataFrame(
-            [(int(i), str(st), int(n)) for (i, st), (n, _) in totals.items()],
-            "stage_idx int, stage string, n_users long",
-        )
-    )
-    return counts.join(pvals, ["stage_idx", "stage"]).orderBy("stage_idx")
 
 
 def event_markov_transitions(events: DataFrame) -> DataFrame:

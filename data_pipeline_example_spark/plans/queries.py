@@ -2220,14 +2220,8 @@ QUERIES: dict[str, QueryFn] = {
 # (basket_communities … bm25_batch) and the first five of the
 # exact-neighbor group (knn_bruteforce … nearest_neighbor_capped).
 _R15_FRONT = [
-    # changed r15 (ascending last-certified round, ties by position)
-    "corpus_funnel", "packed_block_audit", "ivfpq_knn_index_batch",
-    # changed by the one CC core (and read the candidate-pair core)
-    "dedup_clusters", "dedup_clusters_scalable", "dedup_summary",
-    "split_leakage_audit", "cluster_coherence",
+    # (ascending last-certified round, ties by position)
     # changed by the one exact-neighbor core / disk checkpoint / NULL order
-    "cosine_dup_pairs", "semantic_prune", "semantic_prune_capped",
-    "knn_density_outliers", "srp_dup_pairs", "substring_dedup",
     "gopher_repetition", "event_markov_transitions",
     # changed by the option census (extract_features' UDF body)
     "media_features",
@@ -2248,6 +2242,13 @@ _R15_FRONT = [
     "simhash_pairs_capped", "phash_dup_pairs", "lsh_recall_summary",
     "source_overlap_matrix", "dedup_agreement",
     "dedup_threshold_curve", "dup_distance_profile",
+    # changed by the one cuts core (totals as columns) and the 64-bit
+    # SRP signature
+    "customer_spend_distribution", "customer_value_tiles",
+    "segment_value_percentiles", "customer_rfm", "order_gap_percentiles",
+    "revenue_pareto", "customer_migration", "funnel_dropoff_time",
+    "length_buckets", "token_budget_caps", "sequence_pack",
+    "pack_block_stats", "packed_block_audit", "embedding_drift",
 ]
 assert len(_R15_FRONT) == 50 and all(n in QUERIES for n in _R15_FRONT), (
     "window rotation list must name 50 registered queries"

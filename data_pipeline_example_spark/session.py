@@ -17,22 +17,16 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
-# Defaults chosen for correctness parity with the reference plus
-# 100 TB-scale hygiene. All overridable via extra_conf.
-_BASE_CONF: dict[str, str] = {
-    # parity with reference session config (pipeline_batch.py:59-60)
+#: The SQL confs the engine's plans and semantics depend on, all
+#: runtime-settable: ``get_spark`` builds its session with them, and
+#: ``sources.tables.ensure_session_confs`` applies them to a session
+#: built elsewhere (the excluded rule is appended to any rules already
+#: excluded there).
+ENGINE_SQL_CONFS: dict[str, str] = {
+    # parity with reference session config (pipeline_batch.py:60)
     "spark.sql.session.timeZone": "UTC",
-    "spark.sql.sources.partitionOverwriteMode": "dynamic",
     # Spark 3.5 cast semantics (null on bad input) — conform.py relies on it
     "spark.sql.ansi.enabled": "false",
-    # scale: runtime re-planning, partition coalescing, skew-join splitting
-    "spark.sql.adaptive.enabled": "true",
-    "spark.sql.adaptive.coalescePartitions.enabled": "true",
-    "spark.sql.adaptive.skewJoin.enabled": "true",
-    # Arrow batches for any pandas/Python boundary (multimodal UDFs)
-    "spark.sql.execution.arrow.pyspark.enabled": "true",
-    # partitioned-parquet reads should prune on partition columns
-    "spark.sql.parquet.filterPushdown": "true",
     # a parquet TIMESTAMP(NANOS) column (foreign inputs; the test corpora
     # store micros), which Spark cannot read natively, surfaces as a
     # long — load_table converts events.ts (sources/tables.py)
@@ -49,6 +43,22 @@ _BASE_CONF: dict[str, str] = {
     "spark.sql.optimizer.excludedRules": (
         "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
     ),
+}
+
+# Session defaults chosen for correctness parity with the reference plus
+# 100 TB-scale hygiene. All overridable via extra_conf.
+_BASE_CONF: dict[str, str] = {
+    **ENGINE_SQL_CONFS,
+    # parity with reference session config (pipeline_batch.py:59)
+    "spark.sql.sources.partitionOverwriteMode": "dynamic",
+    # scale: runtime re-planning, partition coalescing, skew-join splitting
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    # Arrow batches for any pandas/Python boundary (multimodal UDFs)
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # partitioned-parquet reads should prune on partition columns
+    "spark.sql.parquet.filterPushdown": "true",
 }
 
 

@@ -19,6 +19,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from data_pipeline_example_spark.session import ENGINE_SQL_CONFS
+
 # The table catalog: each table's columns in file order, as the DDL
 # ``spark.read.parquet`` infers from its files (pinned against every
 # corpus by tests/test_table_catalog.py). ``load_table`` reads with
@@ -88,10 +90,10 @@ def read_csv_dir(
 
 
 def ensure_session_confs(spark: SparkSession) -> None:
-    """Apply the engine's semantics-critical confs to an externally-built
-    session (the driver constructs its own SparkSession, so the factory
-    defaults in session.py are not guaranteed). All three are
-    runtime-settable SQLConfs:
+    """Apply the engine's SQL confs (``session.ENGINE_SQL_CONFS``) to an
+    externally-built session (the driver constructs its own
+    SparkSession, so the factory defaults in session.py are not
+    guaranteed):
 
     * nanosAsLong — a parquet TIMESTAMP(NANOS) column (foreign inputs;
       the test corpora store ``events.ts`` as TIMESTAMP(MICROS)) is
@@ -99,11 +101,17 @@ def ensure_session_confs(spark: SparkSession) -> None:
     * UTC session TZ — reference parity (pipeline_batch.py:60) and
       cross-engine timestamp comparability;
     * ANSI off — Spark 3.5 null-on-error cast semantics that the
-      conform operator's drift tolerance depends on.
+      conform operator's drift tolerance depends on;
+    * the ``InferFiltersFromGenerate`` exclusion — appended to the
+      session's excluded rules, never replacing one already there and
+      never listed twice.
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.ansi.enabled", "false")
+    for key, value in ENGINE_SQL_CONFS.items():
+        if key == "spark.sql.optimizer.excludedRules":
+            have = (spark.conf.get(key, "") or "").split(",")
+            rules = [r.strip() for r in have if r.strip()]
+            value = ",".join(rules if value in rules else [*rules, value])
+        spark.conf.set(key, value)
 
 
 def local_path(uri: str) -> str | None:

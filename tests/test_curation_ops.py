@@ -181,9 +181,11 @@ def test_length_buckets_equal_frequency_and_padding(spark, sf_dir):
 
 
 def test_length_buckets_cuts_matches_ntile_exactly(spark):
-    """The broadcast-cut path must be bit-identical to the ntile twin
-    (which is the registered SQL oracle) — including heavy ties across
+    """The cuts path must be bit-identical to the ntile window form
+    (the registered SQL oracle's shape) — including heavy ties across
     bucket boundaries and N not divisible by n_buckets."""
+    import cuts_reference as ref
+
     from data_pipeline_example_spark.operators import text as tx
 
     # 23 docs over 3 distinct lengths → ties straddle every boundary
@@ -193,12 +195,8 @@ def test_length_buckets_cuts_matches_ntile_exactly(spark):
         ["doc_id", "text", "lang", "source", "n_chars"],
     )
     for n in (1, 4, 5, 8, 30):  # 30 > N exercises empty buckets
-        got = sorted(
-            tuple(r) for r in tx.length_buckets(docs, n_buckets=n, method="cuts").collect()
-        )
-        want = sorted(
-            tuple(r) for r in tx.length_buckets(docs, n_buckets=n, method="ntile").collect()
-        )
+        got = ref.sorted_rows(tx.length_buckets(docs, n_buckets=n))
+        want = ref.sorted_rows(ref.length_buckets(docs, n_buckets=n))
         assert got == want, f"n_buckets={n}"
 
 
@@ -211,7 +209,7 @@ def test_length_buckets_cuts_empty_and_plan(spark):
     # exchange (rangepartitioning) — only hash exchanges
     docs = spark.createDataFrame([(i, "a b c", "en", "s", 5) for i in range(10)],
                                  ["doc_id", "text", "lang", "source", "n_chars"])
-    plan = tx.length_buckets(docs, method="cuts")._jdf.queryExecution().executedPlan().toString()
+    plan = tx.length_buckets(docs)._jdf.queryExecution().executedPlan().toString()
     assert "rangepartitioning" not in plan.lower()
 
 
@@ -421,8 +419,10 @@ def test_corpus_diff_statuses(spark, sf_dir):
 
 def test_token_budget_caps_cuts_match_window(spark, sf_dir):
     """Group-wise histogram-cuts budget keep-set must be bit-identical
-    to the running-sum window twin (the SQL-oracle form), including
+    to the running-sum window form (the SQL-oracle form), including
     heavy token-count ties straddling the budget line."""
+    import cuts_reference as ref
+
     from data_pipeline_example_spark.operators import text as tx
 
     texts = ["a b c", "a b c d e", "a"]
@@ -432,14 +432,8 @@ def test_token_budget_caps_cuts_match_window(spark, sf_dir):
     )
     real = spark.read.parquet(f"{sf_dir}/documents.parquet")
     for docs, budget in ((synth, 7), (synth, 0), (real, 800)):
-        got = sorted(
-            tuple(r)
-            for r in tx.token_budget_caps(docs, budget=budget, method="cuts").collect()
-        )
-        want = sorted(
-            tuple(r)
-            for r in tx.token_budget_caps(docs, budget=budget, method="window").collect()
-        )
+        got = ref.sorted_rows(tx.token_budget_caps(docs, budget=budget))
+        want = ref.sorted_rows(ref.token_budget_caps(docs, budget=budget))
         assert got == want, budget
     # the budget actually bisects the real corpus (non-vacuous op)
     kept = tx.token_budget_caps(real, budget=800).groupBy("kept").count().collect()

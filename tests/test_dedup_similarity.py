@@ -1228,3 +1228,42 @@ def test_pynorm_bit_identical_to_engine_norm(spark, sf_dir):
     )
     for r in df.select("v", V.norm(F.col("v")).alias("n")).collect():
         assert _pynorm(r["v"]) == r["n"]
+
+
+def test_srp_signature_expr_is_bigint_through_64_bits(spark, sf_dir):
+    """At 64 bits the SQL signature is a bigint (bit 63 is the sign
+    bit) equal to the numpy sign bits packed as int64, the streaming
+    dedup key it feeds is a bigint too, and bit counts outside 1..64
+    are refused."""
+    import numpy as np
+    import pytest
+    from pyspark.sql.types import LongType
+
+    from data_pipeline_example_spark.operators.similarity import (
+        _srp_signs,
+        srp_signature_expr,
+    )
+    from data_pipeline_example_spark.sources import load_table
+    from data_pipeline_example_spark.streaming import curation as scur
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    sigs = emb.selectExpr("vec_id", "embedding", f"{srp_signature_expr('embedding', 64, 64)} AS sig")
+    assert sigs.schema["sig"].dataType == LongType()
+    H = np.array(_srp_signs(64, 64))
+    weights = np.left_shift(np.uint64(1), np.arange(64, dtype=np.uint64))
+    rows = sigs.collect()
+    assert rows
+    for r in rows:
+        prod = np.asarray(r["embedding"], dtype=np.float64)[None, :] * H
+        bits = np.round(np.cumsum(prod, axis=1)[:, -1], 6) >= 0
+        want = np.bitwise_or.reduce(weights[bits]) if bits.any() else np.uint64(0)
+        assert r["sig"] == int(np.uint64(want).view(np.int64)), r["vec_id"]
+
+    vecs = spark.createDataFrame(
+        [("0", [1.0] * 64, None)], "vec_id string, embedding array<double>, ingest_ts timestamp"
+    )
+    admitted = scur.dedup_embedding_stream(vecs, n_bits=64, dims=64)
+    assert admitted.schema["srp_sig"].dataType == LongType()
+    for bad in (0, 65):
+        with pytest.raises(ValueError, match="n_bits"):
+            srp_signature_expr("embedding", bad, 64)

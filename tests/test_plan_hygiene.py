@@ -442,3 +442,52 @@ def test_one_candidate_pair_core():
     assert popcount == {("operators/dedup.py", "hamming")}, popcount
     assert first_match == {("operators/dedup.py", "band_join")}, first_match
     assert shared_key == {("operators/dedup.py", "shared_key_pairs")}, shared_key
+
+
+#: the equal-frequency family: every operator built on functions/cuts.py
+_CUTS_CALLERS = {
+    "operators/tpch.py": (
+        "customer_spend_distribution", "customer_value_tiles",
+        "segment_value_percentiles", "customer_rfm", "order_gap_percentiles",
+        "revenue_pareto", "customer_migration",
+    ),
+    "operators/users.py": ("funnel_dropoff_time",),
+    "operators/text.py": ("length_buckets", "token_budget_caps", "sequence_pack"),
+}
+
+
+def test_one_cuts_core():
+    """The equal-frequency family ranks on one core,
+    ``functions/cuts.py``: it is the only query code that range-partitions
+    a frame (the two clustered parquet writes in ``sinks.py`` lay out
+    files, they compute no order statistic), it moves nothing through
+    the driver (no ``collect``, ``toPandas`` or ``createDataFrame``),
+    and no caller keeps a window twin behind a ``method`` parameter."""
+    ranged, driver, method = set(), set(), set()
+    for rel, owner, node in _nodes_with_function(_PKG):
+        if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
+            if node.func.attr == "repartitionByRange":
+                ranged.add((rel, owner))
+            if rel == "functions/cuts.py" and node.func.attr in (
+                "collect", "toPandas", "createDataFrame"
+            ):
+                driver.add((owner, node.func.attr))
+        if (
+            isinstance(node, ast.FunctionDef)
+            and node.name in _CUTS_CALLERS.get(rel, ())
+            and any(a.arg == "method" for a in node.args.args + node.args.kwonlyargs)
+        ):
+            method.add((rel, node.name))
+    assert ranged == {
+        ("functions/cuts.py", "value_cuts"),
+        ("sinks.py", "write_sorted_parquet"),
+        ("sinks.py", "write_zordered_parquet"),
+    }, ranged
+    assert not driver, driver
+    assert not method, method
+    defined = {
+        (rel, n.name)
+        for rel, _, n in _nodes_with_function(_PKG)
+        if isinstance(n, ast.FunctionDef)
+    }
+    assert all((rel, f) in defined for rel, fs in _CUTS_CALLERS.items() for f in fs)

@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import datetime
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -154,21 +154,18 @@ def test_frequent_terms_equals_exact_answer(spark, texts, eps_pct):
     n_buckets=st.integers(min_value=1, max_value=9),
 )
 def test_length_buckets_cuts_equals_ntile(spark, word_counts, n_buckets):
-    """The broadcast-cut assignment is bit-identical to the ntile twin
-    (the registered oracle) for ANY corpus shape — heavy ties, empty
-    docs, N above/below/equal to n_buckets all emerge from the random
-    word-count lists."""
+    """The cuts assignment is bit-identical to the ntile window form
+    (the registered oracle's shape) for ANY corpus shape — heavy ties,
+    empty docs, N above/below/equal to n_buckets all emerge from the
+    random word-count lists."""
+    import cuts_reference as ref
+
     docs = spark.createDataFrame(
         [(i, " ".join(f"w{j}" for j in range(c))) for i, c in enumerate(word_counts)],
         ["doc_id", "text"],
     )
-    cuts = sorted(
-        tuple(r) for r in text.length_buckets(docs, n_buckets, method="cuts").collect()
-    )
-    ntile = sorted(
-        tuple(r) for r in text.length_buckets(docs, n_buckets, method="ntile").collect()
-    )
-    assert cuts == ntile
+    cuts = ref.sorted_rows(text.length_buckets(docs, n_buckets))
+    assert cuts == ref.sorted_rows(ref.length_buckets(docs, n_buckets))
 
 
 @settings(**_SETTINGS)
@@ -421,31 +418,33 @@ def test_substring_dedup_matches_python_reference(spark, data):
     ),
     descending=st.booleans(),
 )
+@example(data=[], descending=False)
+@example(data=[(None, 3), (None, 3), (None, 1)], descending=True)
 def test_value_cuts_matches_bruteforce(spark, data, descending):
     """value_cuts' distributed per-value prefix stats equal the literal
     Python brute force on random grouped data with ties and NULL
-    groups, both sort directions, counts AND weighted mass."""
+    groups (an all-NULL-group input and an empty one included), both
+    sort directions, counts AND weighted mass, and each group's
+    ``n_rows`` / ``weight_sum`` columns."""
     from data_pipeline_example_spark.functions.cuts import value_cuts
 
     rows = [(i, g, v) for i, (g, v) in enumerate(data)]
-    df = spark.createDataFrame(
-        rows, "row_id long, grp string, val long"
-    ) if rows else spark.createDataFrame([], "row_id long, grp string, val long")
-    cuts, totals = value_cuts(
+    df = spark.createDataFrame(rows, "row_id long, grp string, val long")
+    cuts = value_cuts(
         df, "val", group_cols=("grp",), weight_col="val", descending=descending
     )
     got = {
-        (r["grp"], r["val"]): (r["cnt"], r["cum_before"], r["mass_before"])
+        (r["grp"], r["val"]): (
+            r["cnt"], r["cum_before"], r["mass_before"], r["n_rows"], r["weight_sum"]
+        )
         for r in cuts.collect()
     }
     # brute force
     want = {}
-    want_totals = {}
     groups = {}
     for _, g, v in rows:
         groups.setdefault(g, []).append(v)
     for g, vals in groups.items():
-        want_totals[(g,)] = (len(vals), sum(vals))
         for v in set(vals):
             before = [
                 x for x in vals if (x > v if descending else x < v)
@@ -454,11 +453,33 @@ def test_value_cuts_matches_bruteforce(spark, data, descending):
                 vals.count(v),
                 len(before),
                 sum(before),
+                len(vals),
+                sum(vals),
             )
     assert got == want
-    assert totals == want_totals
 
 
+@settings(**_SETTINGS)
+@given(
+    n_rows=st.integers(min_value=1, max_value=40),
+    tiles=st.integers(min_value=1, max_value=12),
+)
+def test_ntile_expr_matches_python_ntile(spark, n_rows, tiles):
+    """``ntile_expr`` over a Column row count equals SQL NTILE's rule —
+    the first ``n mod tiles`` buckets get one extra row — for every
+    rank, n_rows below, at and above tiles included."""
+    from pyspark.sql import functions as F
+
+    from data_pipeline_example_spark.functions.cuts import ntile_expr
+
+    q, r = divmod(n_rows, tiles)
+    sizes = [q + 1] * r + [q] * (tiles - r)
+    want = [b + 1 for b, size in enumerate(sizes) for _ in range(size)]
+    df = spark.range(1, n_rows + 1).select(
+        F.col("id").alias("rank"), F.lit(n_rows).cast("long").alias("n_rows")
+    )
+    got = df.select(ntile_expr(F.col("rank"), F.col("n_rows"), tiles).alias("t"))
+    assert [row["t"] for row in got.orderBy("rank").collect()] == want
 @settings(**_SETTINGS)
 @given(
     edges=st.lists(

@@ -182,11 +182,13 @@ def test_ann_index_partition_pruning_and_equivalence(spark, sf_dir, tmp_path):
 
 
 def test_customer_ranking_cuts_match_window_and_plan(spark, sf_dir):
-    """The de-windowed customer ranking ops (broadcast-histogram cuts)
-    must be bit-identical to their unpartitioned-window twins — which
-    are the SQL-oracle forms — including heavy spend ties across tile
+    """The de-windowed customer ranking ops (cuts) must be
+    bit-identical to their unpartitioned-window forms — which are the
+    SQL-oracle forms — including heavy spend ties across tile
     boundaries, and their plans must contain NO global ordered exchange
     (rangepartitioning) and NO single-partition window exchange."""
+    import cuts_reference as ref
+
     from data_pipeline_example_spark.operators import tpch
     from data_pipeline_example_spark.sources import load_table
 
@@ -199,11 +201,9 @@ def test_customer_ranking_cuts_match_window_and_plan(spark, sf_dir):
     real = load_table(spark, sf_dir, "orders")
     for orders in (synth, real):
         for fn in (tpch.customer_spend_distribution, tpch.customer_value_tiles):
-            cut = fn(orders, method="cuts")
-            win = fn(orders, method="window")
-            assert sorted(tuple(r) for r in cut.collect()) == sorted(
-                tuple(r) for r in win.collect()
-            ), fn.__name__
+            cut = fn(orders)
+            win = getattr(ref, fn.__name__)(orders)
+            assert ref.sorted_rows(cut) == ref.sorted_rows(win), fn.__name__
             plan = cut._jdf.queryExecution().executedPlan().toString().lower()
             # the all-rows-to-one-task shape the rewrite removes: an
             # unpartitioned Window compiles to Exchange SinglePartition
@@ -213,7 +213,7 @@ def test_customer_ranking_cuts_match_window_and_plan(spark, sf_dir):
     # one rangepartitioning from the final orderBy over the ≤tiles-row
     # AGGREGATE — constant-size at any corpus scale
     plan = (
-        tpch.customer_spend_distribution(real, method="cuts")
+        tpch.customer_spend_distribution(real)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -222,13 +222,15 @@ def test_customer_ranking_cuts_match_window_and_plan(spark, sf_dir):
     assert "rangepartitioning" not in plan
 
 
-def test_value_cuts_driver_state_bounded_and_equal(spark):
-    """The shared cuts helper collects O(#partitions + #groups) rows to
-    the driver even when the value domain is near-unique (the 2-dp
-    money case the r6 verdict flagged) — never the Θ(distinct-values)
-    histogram — and the operator built on it stays bit-identical to
-    its window twin."""
-    from data_pipeline_example_spark.functions import cuts as C
+def test_value_cuts_fires_no_driver_collect_and_equal(spark):
+    """The shared cuts helper collects nothing to the driver, even when
+    the value domain is near-unique (the 2-dp money case): constructing
+    a global and a grouped + weighted + descending cuts operator fires
+    no ``collect`` job, and the global one stays bit-identical to its
+    window form."""
+    import cuts_reference as ref
+
+    from data_pipeline_example_spark.operators import text as tx
     from data_pipeline_example_spark.operators import tpch
 
     # near-unique value domain: 5000 orders, ~5000 distinct 2-dp spends
@@ -237,15 +239,13 @@ def test_value_cuts_driver_state_bounded_and_equal(spark):
         F.col("id").alias("o_custkey"),
         F.round(F.col("id") * 1.37 + 0.01, 2).alias("o_totalprice"),
     )
-    out = tpch.customer_spend_distribution(orders, n=5000, method="cuts")
-    got = sorted(tuple(r) for r in out.collect())
-    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    # global cuts: one group → ≤ #partitions driver rows, NOT ~5000
-    assert 0 < C.LAST_DRIVER_ROWS <= parts
-    win = tpch.customer_spend_distribution(orders, n=5000, method="window")
-    assert got == sorted(tuple(r) for r in win.collect())
+    out, calls = ref.construct_with_job_calls(
+        spark, lambda: tpch.customer_spend_distribution(orders, n=5000)
+    )
+    assert "collect" not in calls, calls
+    want = ref.customer_spend_distribution(orders, n=5000)
+    assert ref.sorted_rows(out) == ref.sorted_rows(want)
 
-    # grouped + weighted + descending: bound is #partitions + #groups
     docs = spark.range(2000).select(
         F.col("id").alias("doc_id"),
         F.concat_ws(" ", F.array_repeat(F.lit("w"), (F.col("id") % 97 + 1).cast("int"))).alias("text"),
@@ -253,35 +253,30 @@ def test_value_cuts_driver_state_bounded_and_equal(spark):
         F.concat(F.lit("s"), (F.col("id") % 5).cast("string")).alias("source"),
         F.lit(1).alias("n_chars"),
     )
-    from data_pipeline_example_spark.operators import text as tx
+    _, calls = ref.construct_with_job_calls(
+        spark, lambda: tx.token_budget_caps(docs, budget=100)
+    )
+    assert "collect" not in calls, calls
 
-    tx.token_budget_caps(docs, budget=100, method="cuts").count()
-    assert 0 < C.LAST_DRIVER_ROWS <= parts + 5
 
-
-def test_value_cuts_returns_driver_rows_and_tolerates_auto_conf(spark):
-    """The per-call driver-collect size rides the RETURNED totals
-    (``CutsTotals.driver_rows``) — immune to the module-global's
-    overwrite/interleave hazards — and the shuffle-partition conf
-    parse tolerates AQE's non-numeric ``"auto"`` value instead of
-    raising ValueError at operator construction."""
+def test_value_cuts_totals_are_columns(spark):
+    """Each group's row count rides every cuts row as ``n_rows`` (no
+    driver totals), and an empty input yields an empty frame — also
+    through a grouped aggregate over it."""
     from data_pipeline_example_spark.functions import cuts as C
 
     df = spark.range(1000).select(
         (F.col("id") % 7).alias("g"), (F.col("id") % 131).alias("v")
     )
-    cuts, totals = C.value_cuts(df, "v", group_cols=["g"])
-    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    assert 0 < totals.driver_rows <= parts + 7
-    assert totals.driver_rows == C.LAST_DRIVER_ROWS
-    assert sum(n for n, _ in totals.values()) == 1000
-    cuts.count()
+    cuts = C.value_cuts(df, "v", group_cols=["g"])
+    got = {(r["g"], r["n_rows"]) for r in cuts.select("g", "n_rows").collect()}
+    want = {(r["g"], r["count"]) for r in df.groupBy("g").count().collect()}
+    assert got == want
+    assert sum(n for _, n in got) == 1000
 
-    # Databricks AQE auto shuffle partitions: conf value is "auto"
-    assert C._conf_partitions("auto") == 200
-    assert C._conf_partitions("64") == 64
-    assert C._conf_partitions(None) == 200
-    assert C._conf_partitions("-5") == 200  # "-5".isdigit() is False
+    empty = C.value_cuts(df.limit(0), "v")
+    assert empty.count() == 0
+    assert empty.groupBy("n_rows").agg(C.percentile_disc(0.5, "v")).count() == 0
 
 
 def test_ivfpq_index_batch_rejects_truncated_codebook(spark, sf_dir, tmp_path):
@@ -328,10 +323,10 @@ def test_materialize_seam_switches_to_reliable_checkpoint(spark, tmp_path):
         from data_pipeline_example_spark.functions import cuts as C
 
         src = spark.range(500).select((F.col("id") % 37).alias("v"))
-        cuts, totals = C.value_cuts(src, "v")
+        cuts = C.value_cuts(src, "v")
         joined = C.join_cuts(src, cuts, "v")
         assert joined.count() == 500
-        assert totals[()][0] == 500
+        assert [r["n_rows"] for r in cuts.select("n_rows").distinct().collect()] == [500]
     finally:
         if old_dir:
             sc.setCheckpointDir(old_dir)
@@ -404,8 +399,10 @@ def test_parameter_guards_raise_value_error(spark, case):
 
 def test_token_budget_caps_null_source_is_its_own_group(spark):
     """NULL source must survive the cuts join as one partition group —
-    matching the window twin and SQL PARTITION BY semantics (a plain
+    matching the window form and SQL PARTITION BY semantics (a plain
     inner join on the group key silently dropped those rows)."""
+    import cuts_reference as ref
+
     from data_pipeline_example_spark.operators import text as tx
 
     docs = spark.createDataFrame(
@@ -417,13 +414,8 @@ def test_token_budget_caps_null_source_is_its_own_group(spark):
         ],
         "doc_id long, text string, lang string, source string, n_chars int",
     )
-    got = sorted(
-        tuple(r) for r in tx.token_budget_caps(docs, budget=5, method="cuts").collect()
-    )
-    want = sorted(
-        tuple(r) for r in tx.token_budget_caps(docs, budget=5, method="window").collect()
-    )
-    assert got == want
+    got = ref.sorted_rows(tx.token_budget_caps(docs, budget=5))
+    assert got == ref.sorted_rows(ref.token_budget_caps(docs, budget=5))
     assert len(got) == 4 and any(t[1] is None for t in got)
 
 
@@ -555,20 +547,18 @@ def test_basket_affinity_matches_bruteforce(spark, sf_dir):
 def test_customer_rfm_matches_bruteforce(spark, sf_dir):
     """The three cuts-based tile assignments and the segment rollup
     equal a driver-side NTILE brute force (rank under (value,
-    custkey)), and the cuts driver state stays partition-bounded."""
-    from data_pipeline_example_spark.functions import cuts as cuts_mod
+    custkey)), and constructing it collects nothing to the driver."""
+    import cuts_reference as ref
+
     from data_pipeline_example_spark.operators import tpch
     from data_pipeline_example_spark.sources import load_table
 
     orders = load_table(spark, sf_dir, "orders")
-    got = {
-        (r["r_tile"], r["f_tile"], r["m_tile"]): r
-        for r in tpch.customer_rfm(orders, tiles=4).collect()
-    }
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    # one grouped value_cuts call covers all three RFM dimensions (r15
-    # fusion) — the documented bound is #partitions + #groups − 1
-    assert 0 < cuts_mod.LAST_DRIVER_ROWS <= n_parts + 3 - 1
+    out, calls = ref.construct_with_job_calls(
+        spark, lambda: tpch.customer_rfm(orders, tiles=4)
+    )
+    assert "collect" not in calls, calls
+    got = {(r["r_tile"], r["f_tile"], r["m_tile"]): r for r in out.collect()}
 
     rows = orders.collect()
     per = {}
@@ -963,26 +953,28 @@ def test_write_packed_blocks_concat_replay_and_manifest(spark, sf_dir, tmp_path)
 
 def test_sequence_pack_matches_bruteforce_and_bounds_driver(spark, sf_dir):
     """Packing offsets/blocks equal a driver-side concat-and-chunk
-    replay per source, and the cuts collect stays O(#partitions +
-    #sources) even though doc_id is a near-unique value domain."""
+    replay per source, and constructing it collects nothing to the
+    driver even though doc_id is a near-unique value domain."""
     import re
 
-    from data_pipeline_example_spark.functions import cuts as C
+    import cuts_reference as ref
+
     from data_pipeline_example_spark.operators import text as tx
     from data_pipeline_example_spark.sources import load_table
 
     docs = load_table(spark, sf_dir, "documents")
     cap = 64  # small capacity → plenty of blocks/splits at tiny sf
+    packed, calls = ref.construct_with_job_calls(
+        spark, lambda: tx.sequence_pack(docs, capacity=cap)
+    )
+    assert "collect" not in calls, calls
     got = {
         r["doc_id"]: (
             r["source"], r["n_tokens"], r["tok_offset"], r["block_id"],
             r["blocks_spanned"], r["splits_boundary"],
         )
-        for r in tx.sequence_pack(docs, capacity=cap).collect()
+        for r in packed.collect()
     }
-    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    n_sources = docs.select("source").distinct().count()
-    assert 0 < C.LAST_DRIVER_ROWS <= parts + n_sources
 
     rows = docs.select("doc_id", "source", "text").collect()
     per_src: dict = {}

@@ -199,3 +199,34 @@ def test_warm_ann_index_serving_fires_only_its_collects(spark, sf_dir):
         for j in jobs
     )
     assert names == ["collect", "collect"]
+
+
+def test_ensure_session_confs_applies_engine_confs_and_appends_rule(spark):
+    """``ensure_session_confs`` gives a session built elsewhere the
+    engine's SQL confs — the one ``ENGINE_SQL_CONFS`` mapping
+    ``get_spark`` builds with — and appends the
+    ``InferFiltersFromGenerate`` exclusion to rules already excluded
+    there, never twice. ``get_spark``'s own session keeps its conf."""
+    from data_pipeline_example_spark.session import ENGINE_SQL_CONFS
+    from data_pipeline_example_spark.sources.tables import ensure_session_confs
+
+    key = "spark.sql.optimizer.excludedRules"
+    rule = ENGINE_SQL_CONFS[key]
+    before = {k: spark.conf.get(k) for k in ENGINE_SQL_CONFS}
+    assert before == ENGINE_SQL_CONFS
+
+    # newSession() inherits the builder confs: unset them first
+    s = spark.newSession()
+    for k in ENGINE_SQL_CONFS:
+        s.conf.unset(k)
+    assert not s.conf.get(key, "")
+    ensure_session_confs(s)
+    assert {k: s.conf.get(k) for k in ENGINE_SQL_CONFS} == ENGINE_SQL_CONFS
+
+    other = "org.apache.spark.sql.catalyst.optimizer.ConstantFolding"
+    s.conf.set(key, other)
+    ensure_session_confs(s)
+    ensure_session_confs(s)
+    assert s.conf.get(key).split(",") == [other, rule]
+
+    assert {k: spark.conf.get(k) for k in ENGINE_SQL_CONFS} == before
