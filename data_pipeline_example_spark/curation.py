@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from data_pipeline_example_spark.functions.materialize import materialize
 
 from data_pipeline_example_spark.functions import text as T
+from data_pipeline_example_spark.functions.hashing import md5_int
 from data_pipeline_example_spark.operators import dedup, text
 
 
@@ -162,12 +163,7 @@ def run_curation(
     st = curation_stages(documents, **kwargs)
     sharded = st["chunks"].withColumn(
         "shard",
-        (
-            F.conv(
-                F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10
-            ).cast("long")
-            % shards
-        ).cast("int"),
+        (md5_int(F.col("doc_id"), 4) % shards).cast("int"),
     )
     sharded.write.mode("overwrite").partitionBy("shard").parquet(out_dir)
     # read back with the schema just written (the partition column

@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from data_pipeline_example_spark.functions.hashing import md5_int
+
 TOKEN_PATTERN = r"[A-Za-z0-9]+"
 PUNCT_PATTERN = r"[.,!?;:]"
 
@@ -150,12 +152,10 @@ def rolling_fingerprint(col: Column) -> Column:
     < 2^37 so the fold never overflows a 64-bit long in either engine.
     DuckDB twin: ``list_reduce(list_prepend(0, list_transform(...)))``.
     """
-    toks = lower_tokens(col)
-    h32 = lambda t: F.conv(F.substring(F.md5(t), 1, 8), 16, 10).cast("long")  # noqa: E731
     return F.aggregate(
-        toks,
+        lower_tokens(col),
         F.lit(0).cast("long"),
-        lambda acc, t: (acc * 31 + h32(t)) % 2147483647,
+        lambda acc, t: (acc * 31 + md5_int(t, 8)) % 2147483647,
     )
 
 

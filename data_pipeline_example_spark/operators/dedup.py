@@ -40,6 +40,7 @@ from pyspark.sql.window import Window
 from data_pipeline_example_spark.functions.materialize import materialize
 
 from data_pipeline_example_spark.functions import text as T
+from data_pipeline_example_spark.functions.hashing import hash_pct
 from data_pipeline_example_spark.functions.parallel import widen
 
 
@@ -770,14 +771,10 @@ def split_leakage_audit(documents: DataFrame, clusters: DataFrame) -> DataFrame:
     by construction the grouped policy's own spanning count is zero,
     asserted by test rather than carried as a constant column).
     """
-    pct = (
-        lambda c: F.conv(F.substring(F.md5(c.cast("string")), 1, 4), 16, 10).cast(
-            "long"
-        )
-        % 100
-    )
     split_of = lambda c: (
-        F.when(pct(c) < 80, "train").when(pct(c) < 90, "val").otherwise("test")
+        F.when(hash_pct(c) < 80, "train")
+        .when(hash_pct(c) < 90, "val")
+        .otherwise("test")
     )
     assigned = (
         documents.select("doc_id")

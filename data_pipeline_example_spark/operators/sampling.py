@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from data_pipeline_example_spark.functions.hashing import hash_pct
+from data_pipeline_example_spark.functions.hashing import hash_pct, md5_int
 
 # per-stratum inclusion percentages for stratified_sample: the mixing
 # weights a corpus-curation job applies per source/type
@@ -133,11 +133,9 @@ def priority_sample(
     partition move.  Output: doc_id, weight, sample_key.
     """
     w = F.col(weight_col).cast("double")
-    u = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 12), 16, 10)
-        .cast("double")
-        + F.lit(1.0)
-    ) / F.lit(float(1 << 48))
+    u = (md5_int(F.col("doc_id"), 12).cast("double") + F.lit(1.0)) / F.lit(
+        float(1 << 48)
+    )
     key = F.round(F.log(u) / w, 12)
     return (
         documents.filter(w.isNotNull() & (w > 0))

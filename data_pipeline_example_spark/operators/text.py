@@ -43,6 +43,11 @@ from data_pipeline_example_spark.functions.cuts import (
     value_at_rank,
     value_cuts,
 )
+from data_pipeline_example_spark.functions.hashing import (
+    hash_frac,
+    md5_int,
+    seeded_buckets,
+)
 from data_pipeline_example_spark.functions.parallel import widen
 from data_pipeline_example_spark.operators import dedup
 
@@ -711,8 +716,6 @@ def mixture_sample(
     anywhere, which is what lets this run at 100 TB. Output: source,
     n_docs, sampled_tokens, target_tokens.
     """
-    from data_pipeline_example_spark.functions.hashing import hash_frac
-
     plan = mixture_rates(documents, weights, default_weight, token_budget)
     return (
         documents.select(
@@ -1361,10 +1364,7 @@ def dsir_weights(documents: DataFrame, n_buckets: int = 1024) -> DataFrame:
         .select(
             "doc_id",
             "is_t",
-            (
-                F.conv(F.substring(F.md5("bigram"), 1, 8), 16, 10).cast("long")
-                % n_buckets
-            ).alias("bucket"),
+            (md5_int(F.col("bigram"), 8) % n_buckets).alias("bucket"),
         )
     )
     # the bucket model aggregates DIRECTLY to the n_buckets domain —
@@ -1697,8 +1697,6 @@ def ccnet_mixture(
     membership is a scan-local expression; the rollup is a 3-group
     aggregate. Output (per bucket): bucket, n_docs, n_sampled, rate.
     """
-    from data_pipeline_example_spark.functions.hashing import hash_frac
-
     rates = rates or {"head": 1.0, "middle": 0.5, "tail": 0.1}
     rate = None
     for name, r in rates.items():
@@ -1821,12 +1819,14 @@ def _winnowing_sel_arrays(
     grams_df = (
         widen(documents)
         .select("doc_id", T.lower_tokens(F.col("text")).alias("t"))
-        .select("doc_id", T.word_grams("t", k).alias("g"))
+        .select(
+            "doc_id",
+            F.transform(T.word_grams("t", k), lambda x: md5_int(x, 12)).alias("h"),
+        )
     )
-    h_expr = "transform(g, x -> cast(conv(substring(md5(x), 1, 12), 16, 10) as long))"
     if with_pos:
         s_expr = (
-            f"element_at(transform(array({h_expr}), "
+            "element_at(transform(array(h), "
             "H -> transform(H, (x, j) -> struct(x AS fp, -(j + 1) AS negpos))), 1)"
         )
         sel_expr = (
@@ -1837,7 +1837,7 @@ def _winnowing_sel_arrays(
         )
     else:
         sel_expr = (
-            f"element_at(transform(array({h_expr}), "
+            "element_at(transform(array(h), "
             f"H -> CASE WHEN size(H) = 0 THEN array() ELSE array_distinct("
             f"transform(sequence(1, greatest(size(H) - {w} + 1, 1)), "
             f"i -> array_min(slice(H, i, {w})))) END), 1)"
@@ -2644,9 +2644,11 @@ def countmin_term_error(
     sketches): a CM cell is a pure SUM — cell(i, b) = Σ count(term)
     over terms with h_i(term) = b — so the sketch is independent of
     partitioning and merge order (the KMV-rollup property, additive
-    instead of order-statistic). Hashes are the certified md5-hex →
-    integer idiom (``conv``/``'0x'||…::BIGINT``); all arithmetic is
-    exact longs. Plan: one tokenize scan into a checkpointed term
+    instead of order-statistic). Row i's bucket is element i of
+    :func:`functions.hashing.seeded_buckets` (the md5-integer idiom,
+    ``'0x'||…::BIGINT`` in DuckDB, shared with the stream twin
+    ``streaming.curation.countmin_stream``); all arithmetic is exact
+    longs. Plan: one tokenize scan into a checkpointed term
     census (feeds sketch build AND probe — module eager-construction
     contract); cells are a bounded depth×width frame, broadcast to the
     ≤ top·depth probe rows; the top-terms cap is a TakeOrdered.
@@ -2661,39 +2663,17 @@ def countmin_term_error(
         .transform(materialize)
     )
 
-    def _bucket(i: int) -> F.Column:
-        return (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit(f"{i}:"), F.col("term"))), 1, 8
-                ),
-                16,
-                10,
-            ).cast("long")
-            % width
-        )
-
-    rb = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(i).alias("i"), _bucket(i).alias("bucket")
-                )
-                for i in range(depth)
-            ]
-        )
-    ).alias("rb")
+    rb = F.posexplode(seeded_buckets(F.col("term"), depth, width)).alias(
+        "i", "bucket"
+    )
     cells = (
         tf.select("n", rb)
-        .select("n", "rb.i", "rb.bucket")
         .groupBy("i", "bucket")
         .agg(F.sum("n").cast("long").alias("cell"))
     )
     top_terms = tf.orderBy(F.desc("n"), F.asc("term")).limit(int(top))
-    probe = (
-        top_terms.select("term", "n", rb)
-        .select("term", "n", "rb.i", "rb.bucket")
-        .join(F.broadcast(cells), ["i", "bucket"])
+    probe = top_terms.select("term", "n", rb).join(
+        F.broadcast(cells), ["i", "bucket"]
     )
     return (
         probe.groupBy("term", "n")
@@ -3155,12 +3135,7 @@ def stratified_split_audit(
     same tiny frame. Output: source, split, n_docs, n_tokens,
     doc_share_micro.
     """
-    bucket = (
-        F.conv(
-            F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10
-        ).cast("long")
-        % 100
-    )
+    bucket = md5_int(F.col("doc_id"), 8) % 100
     split = (
         F.when(bucket < test_pct, F.lit("test"))
         .when(bucket < test_pct + val_pct, F.lit("val"))
@@ -3732,10 +3707,7 @@ def quality_classifier(documents: DataFrame, n_buckets: int = 4096) -> DataFrame
         )
         .select(
             "doc_id",
-            (
-                F.conv(F.substring(F.md5("feat"), 1, 8), 16, 10).cast("long")
-                % n_buckets
-            ).alias("bucket"),
+            (md5_int(F.col("feat"), 8) % n_buckets).alias("bucket"),
         )
         .distinct()
     )
@@ -4465,22 +4437,22 @@ def cdc_chunks(documents: DataFrame, divisor: int = 8) -> DataFrame:
     higher-order built-ins (filter/transform/slice), zero shuffle,
     bounded output per input token (the chunk_documents discipline).
     Hash family: the repo's md5 discipline — boundary test on
-    ``conv(substr(md5(token),1,8),16,10) % divisor``, chunk_hash =
+    ``md5_int(token, 8) % divisor``, chunk_hash =
     md5 of the space-joined slice. Output: doc_id, chunk_idx,
     n_tokens, chunk_hash.
     """
     toks = T.lower_tokens(F.col("text"))
     base = widen(documents).select("doc_id", toks.alias("t"))
-    is_boundary = (
-        "conv(substring(md5(x), 1, 8), 16, 10) % {d} = 0".format(d=divisor)
-    )
     # boundary positions (1-based), then chunk start positions
     spans = base.select(
         "doc_id",
         "t",
-        F.expr(
-            f"filter(transform(t, (x, i) -> CASE WHEN {is_boundary} "
-            "THEN i + 1 ELSE 0 END), p -> p > 0)"
+        F.filter(
+            F.transform(
+                "t",
+                lambda x, i: F.when(md5_int(x, 8) % divisor == 0, i + 1).otherwise(0),
+            ),
+            lambda p: p > 0,
         ).alias("bpos"),
     ).select(
         "doc_id",

@@ -13,6 +13,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from data_pipeline_example_spark.functions.cuts import percentile_disc, value_cuts
+from data_pipeline_example_spark.functions.hashing import (
+    _hll_params,
+    hash_pct,
+    hll_stage,
+    kmv_estimate,
+    md5_int,
+)
 from data_pipeline_example_spark.functions.materialize import materialize
 
 NULL_USER_PREFIX = "\x00null\x00"
@@ -169,8 +176,6 @@ def hash_split_summary(
     stable across runs, engines, partitionings, and cluster sizes — no
     RNG, no sampleBy. Output: split, n, total_value.
     """
-    from data_pipeline_example_spark.functions.hashing import hash_pct
-
     pct = hash_pct(F.col("event_id"))
     split = (
         F.when(pct < train_pct, "train")
@@ -300,12 +305,8 @@ def user_reach_rollup(events: DataFrame, k: int = 64) -> DataFrame:
         events.filter(F.col("user_id").isNotNull())
         .select(
             F.to_date("ts").alias("d"),
-            "event_type",
-            F.conv(
-                F.substring(F.md5(F.col("user_id").cast("string")), 1, 12), 16, 10
-            )
-            .cast("long")
-            .alias("hv"),
+            F.coalesce(F.col("event_type"), F.lit("unknown")).alias("event_type"),
+            md5_int(F.col("user_id"), 12).alias("hv"),
         )
         .distinct()
     )
@@ -331,13 +332,9 @@ def user_reach_rollup(events: DataFrame, k: int = 64) -> DataFrame:
     days = daily.groupBy("event_type").agg(
         F.count_distinct("d").alias("daily_sketches")
     )
-    full = F.lit(float((k - 1) * (1 << 48)))
-    est = F.when(F.col("n_seen") < k, F.col("n_seen").cast("long")).otherwise(
-        F.round(full / F.col("kth"), 0).cast("long")
-    )
     return (
         days.join(sketch, "event_type")
-        .select("event_type", "daily_sketches", est.alias("reach_estimate"))
+        .select("event_type", "daily_sketches", kmv_estimate(k).alias("reach_estimate"))
         .orderBy("event_type")
     )
 
@@ -473,20 +470,13 @@ def user_cardinality_kmv(events: DataFrame, k: int = 64) -> DataFrame:
         .distinct()
         .transform(materialize)
     )
-    hv = u.select(
-        F.conv(F.substring(F.md5(F.col("user_id").cast("string")), 1, 12), 16, 10)
-        .cast("long")
-        .alias("hv")
-    ).distinct()
+    hv = u.select(md5_int(F.col("user_id"), 12).alias("hv")).distinct()
     top = hv.orderBy("hv").limit(k)
     sketch = top.agg(
         F.count(F.lit(1)).alias("n_seen"), F.max("hv").alias("kth")
     )
     exact = u.agg(F.count(F.lit(1)).alias("n_exact"))
-    full = F.lit(float((k - 1) * (1 << 48)))
-    est = F.when(F.col("n_seen") < k, F.col("n_seen").cast("long")).otherwise(
-        F.round(full / F.col("kth"), 0).cast("long")
-    )
+    est = kmv_estimate(k)
     return (
         sketch.crossJoin(exact)
         .select(
@@ -518,15 +508,13 @@ def user_cardinality_kmv_by_type(events: DataFrame, k: int = 16) -> DataFrame:
 
     pairs = (
         events.filter(F.col("user_id").isNotNull())
-        .select("event_type", "user_id")
+        .select(
+            F.coalesce(F.col("event_type"), F.lit("unknown")).alias("event_type"),
+            "user_id",
+        )
         .distinct()
     )
-    hv = pairs.select(
-        "event_type",
-        F.conv(F.substring(F.md5(F.col("user_id").cast("string")), 1, 12), 16, 10)
-        .cast("long")
-        .alias("hv"),
-    ).distinct()
+    hv = pairs.select("event_type", md5_int(F.col("user_id"), 12).alias("hv")).distinct()
     w = Window.partitionBy("event_type").orderBy("hv")
     sketch = (
         hv.withColumn("rk", F.row_number().over(w))
@@ -535,10 +523,7 @@ def user_cardinality_kmv_by_type(events: DataFrame, k: int = 16) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_seen"), F.max("hv").alias("kth"))
     )
     exact = pairs.groupBy("event_type").agg(F.count(F.lit(1)).alias("n_exact"))
-    full = F.lit(float((k - 1) * (1 << 48)))
-    est = F.when(F.col("n_seen") < k, F.col("n_seen").cast("long")).otherwise(
-        F.round(full / F.col("kth"), 0).cast("long")
-    )
+    est = kmv_estimate(k)
     return (
         sketch.join(exact, "event_type")
         .select(
@@ -624,23 +609,11 @@ def join_size_estimate(
             df.filter(F.col(key).isNotNull())
             .select(F.col(key).cast("string").alias("key_value"))
             .distinct()
-            .select(
-                "key_value",
-                F.conv(F.substring(F.md5("key_value"), 1, 12), 16, 10)
-                .cast("long")
-                .alias("hv"),
-            )
+            .select("key_value", md5_int(F.col("key_value"), 12).alias("hv"))
         )
 
-    full = F.lit(float((k - 1) * (1 << 48)))
-
-    def kmv_est(hv: DataFrame):
-        sk = hv.select("hv").distinct().orderBy("hv").limit(k).agg(
-            F.count(F.lit(1)).alias("n_seen"), F.max("hv").alias("kth")
-        )
-        return F.when(
-            F.col("n_seen") < k, F.col("n_seen").cast("long")
-        ).otherwise(F.round(full / F.col("kth"), 0).cast("long")), sk
+    def sketch(top: DataFrame) -> DataFrame:
+        return top.agg(F.count(F.lit(1)).alias("n_seen"), F.max("hv").alias("kth"))
 
     # each side's distinct-hash frame feeds FOUR consumers (per-side
     # sketch, union sketch, membership semi-joins, exact intersection);
@@ -648,42 +621,38 @@ def join_size_estimate(
     # not once per consumer (PLANS.md scans column: 20 → 2)
     ha = hashes(left, left_key).transform(materialize)
     hb = hashes(right, right_key).transform(materialize)
-    est_a_col, sk_a = kmv_est(ha)
-    est_b_col, sk_b = kmv_est(hb)
+    est_left, est_right = (
+        sketch(h.select("hv").distinct().orderBy("hv").limit(k)).select(
+            kmv_estimate(k).alias(name)
+        )
+        for h, name in ((ha, "est_left"), (hb, "est_right"))
+    )
     hu = ha.select("hv").unionByName(hb.select("hv")).distinct()
     union_sketch = hu.orderBy("hv").limit(k)
-    est_u_col = F.when(
-        F.col("n_seen_u") < k, F.col("n_seen_u").cast("long")
-    ).otherwise(F.round(full / F.col("kth_u"), 0).cast("long"))
     both = (
         union_sketch.join(ha.select("hv"), "hv", "left_semi")
         .join(hb.select("hv"), "hv", "left_semi")
         .agg(F.count(F.lit(1)).alias("n_both"))
     )
-    sk_u = union_sketch.agg(
-        F.count(F.lit(1)).alias("n_seen_u"), F.max("hv").alias("kth_u")
-    )
     exact = ha.select("hv").join(hb.select("hv"), "hv", "left_semi").agg(
         F.count(F.lit(1)).alias("n_exact_intersection")
     )
-    est_u = est_u_col
-    # est_intersection = HALF_UP((n_both * est_union) / n_seen_u) in
+    # est_intersection = HALF_UP((n_both * est_union) / n_seen) in
     # PURE long arithmetic — round(2a+b div 2b) — so the estimate can
     # never hit the double-rounding knife edge the dsir/bigram integer
     # discipline exists for (n_both ≤ k and est_union < 2^48, so the
     # numerator stays far inside long range). rel_err is a SINGLE
     # division + round(...,4) — the certified-safe shape.
     base = (
-        sk_a.select(est_a_col.alias("est_left"))
-        .crossJoin(sk_b.select(est_b_col.alias("est_right")))
-        .crossJoin(F.broadcast(sk_u))
+        est_left.crossJoin(est_right)
+        .crossJoin(F.broadcast(sketch(union_sketch)))
         .crossJoin(F.broadcast(both))
         .crossJoin(F.broadcast(exact))
         .select(
             "est_left",
             "est_right",
-            est_u.alias("est_union"),
-            F.greatest(F.col("n_seen_u"), F.lit(1)).alias("den"),
+            kmv_estimate(k).alias("est_union"),
+            F.greatest(F.col("n_seen"), F.lit(1)).alias("den"),
             "n_both",
             "n_exact_intersection",
         )
@@ -1026,31 +995,6 @@ def event_markov_transitions(events: DataFrame) -> DataFrame:
     )
 
 
-def _hll_params(p_bits: int) -> tuple:
-    """(m, suffix_width, alpha_milli) for a 36-bit-hash HLL at p_bits.
-
-    Shared by :func:`user_cardinality_hll` and its streaming twin
-    ``streaming.job.hll_cardinality_stream`` so the register split and
-    bias constant can never diverge. alpha is the standard per-m bias
-    correction (Flajolet et al. 2007): 0.673 / 0.697 / 0.709 for
-    m = 16/32/64, 0.7213/(1 + 1.079/m) above, truncated to 3 digits.
-    p_bits is bounded to [4, 16]: below 4 the per-m constants don't
-    apply; above 16 the α·m²·2^(W+1) numerator leaves int64 range.
-    """
-    if not 4 <= p_bits <= 16:
-        raise ValueError(f"p_bits must be in [4, 16], got {p_bits}")
-    m = 1 << p_bits
-    if m == 16:
-        alpha_milli = 673
-    elif m == 32:
-        alpha_milli = 697
-    elif m == 64:
-        alpha_milli = 709
-    else:
-        alpha_milli = int(0.7213 / (1 + 1.079 / m) * 1000)
-    return m, 36 - p_bits, alpha_milli
-
-
 def user_cardinality_hll(events: DataFrame, p_bits: int = 6) -> DataFrame:
     """Distinct-user HyperLogLog with ENGINE-DETERMINISTIC registers —
     the mergeable cardinality sketch (Flajolet et al. 2007, public)
@@ -1090,37 +1034,18 @@ def user_cardinality_hll(events: DataFrame, p_bits: int = 6) -> DataFrame:
     hll_estimate_milli, n_buckets_hit, ordered by scope.
     """
     m, w, alpha_milli = _hll_params(p_bits)
-    hv = (
-        events.filter(F.col("user_id").isNotNull())
-        .select(
-            F.coalesce(F.col("event_type"), F.lit("unknown")).alias("event_type"),
-            F.col("user_id"),
-        )
-        .distinct()
-        .select(
-            "event_type",
-            "user_id",
-            F.conv(F.substring(F.md5(F.col("user_id").cast("string")), 1, 9), 16, 10)
-            .cast("long")
-            .alias("hv"),
-        )
-        .select(
-            "event_type",
-            "user_id",
-            F.expr(f"hv div {1 << w}").alias("bucket"),
-            (F.col("hv") % F.lit(1 << w)).alias("suffix"),
-        )
-    )
-    rho = F.when(F.col("suffix") == 0, F.lit(w + 1)).otherwise(
-        F.lit(w + 1) - F.length(F.bin(F.col("suffix")))
+    users_by_type = events.filter(F.col("user_id").isNotNull()).select(
+        F.coalesce(F.col("event_type"), F.lit("unknown")).alias("event_type"),
+        F.col("user_id"),
     )
     # register table: ONE events scan; the (types × m)-row result is
     # materialized so the global merge reads the tiny frame, not the
     # corpus again (r12 plan audit: the naive twin re-derived it — 8
     # scans / 11 exchanges for a sketch whose whole point is one pass)
     per_type = (
-        hv.groupBy("event_type", "bucket")
-        .agg(F.max(rho).cast("long").alias("reg"))
+        hll_stage(users_by_type.distinct(), p_bits)
+        .groupBy("event_type", "bucket")
+        .agg(F.max("rho").cast("long").alias("reg"))
         .transform(materialize)
     )
     merged = per_type.groupBy("bucket").agg(F.max("reg").alias("reg")).select(
@@ -1140,12 +1065,7 @@ def user_cardinality_hll(events: DataFrame, p_bits: int = 6) -> DataFrame:
     # row is UNAMBIGUOUSLY the '__all__' union; count_distinct is
     # rollup-safe — each grouping set recounts its own partition)
     exact = (
-        events.filter(F.col("user_id").isNotNull())
-        .select(
-            F.coalesce(F.col("event_type"), F.lit("unknown")).alias("event_type"),
-            F.col("user_id"),
-        )
-        .rollup("event_type")
+        users_by_type.rollup("event_type")
         .agg(F.count_distinct("user_id").cast("long").alias("n_exact"))
         .select(
             F.coalesce(F.col("event_type"), F.lit("__all__")).alias("scope"),

@@ -2755,7 +2755,8 @@ FROM est
 
 ORACLES["user_reach_rollup"] = """
 WITH hv AS (
-  SELECT DISTINCT CAST(ts AS DATE) AS d, event_type,
+  SELECT DISTINCT CAST(ts AS DATE) AS d,
+         coalesce(event_type, 'unknown') AS event_type,
          ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 12))::BIGINT AS hv
   FROM events WHERE user_id IS NOT NULL
 ),
@@ -2801,7 +2802,8 @@ LIMIT 50
 
 ORACLES["user_cardinality_kmv_by_type"] = """
 WITH pairs AS (
-  SELECT DISTINCT event_type, user_id FROM events WHERE user_id IS NOT NULL
+  SELECT DISTINCT coalesce(event_type, 'unknown') AS event_type, user_id
+  FROM events WHERE user_id IS NOT NULL
 ),
 hv AS (
   SELECT DISTINCT event_type,

@@ -12,6 +12,7 @@ product, value → amount.
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import os
 from collections.abc import Callable
@@ -943,26 +944,44 @@ def _input_fingerprint(sf_dir: str, table: str) -> str:
     return hashlib.md5("|".join(parts).encode()).hexdigest()[:12]
 
 
+@functools.cache
+def _code_digest() -> str:
+    """md5 of the package's source files (relative path and bytes, in
+    sorted walk order): names the code that writes a served layout.
+    Read once per process — the layout-serving queries are timed."""
+    pkg = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    h = hashlib.md5()
+    for root, dirs, files in os.walk(pkg):
+        dirs.sort()
+        for f in sorted(files):
+            if f.endswith(".py"):
+                path = os.path.join(root, f)
+                h.update(os.path.relpath(path, pkg).encode())
+                with open(path, "rb") as fh:
+                    h.update(fh.read())
+    return h.hexdigest()[:12]
+
+
 # (kind, sf_dir, input fingerprint) -> on-disk path of a served layout
 _SERVED_LAYOUTS: dict[tuple[str, str, str], str] = {}
 
 
-def _served_layout(
-    sf_dir: str, table: str, kind: str, version: str, parts: tuple, build
-) -> str:
+def _served_layout(sf_dir: str, table: str, kind: str, parts: tuple, build) -> str:
     """Path of a layout built from ``sf_dir``'s ``table`` and served
     from ``.localdata/<kind>/<tag>`` in the checkout: cached in session
     and on disk, keyed by the input fingerprint (taken on every call,
     so a corpus REGENERATED in place, even mid-session, rebuilds its
     layout instead of serving a stale one) — never the applicationId,
     whose tags minted a fresh copy per session that was never reused.
-    ``tag`` = md5 of ``sf_dir:fingerprint:version`` (``version`` names
-    the layout format). ``build(path)`` runs unless every ``parts``
-    subdirectory holds a ``_SUCCESS`` marker."""
+    ``tag`` = md5 of ``sf_dir:fingerprint:`` :func:`_code_digest`, so a
+    change to the code that writes the layout rebuilds it instead of
+    serving what an older revision wrote. ``build(path)`` runs unless
+    every ``parts`` subdirectory holds a ``_SUCCESS`` marker."""
     fp = _input_fingerprint(sf_dir, table)
     path = _SERVED_LAYOUTS.get((kind, sf_dir, fp))
     if path is None:
-        tag = hashlib.md5(f"{sf_dir}:{fp}:{version}".encode()).hexdigest()[:12]
+        key = f"{sf_dir}:{fp}:{_code_digest()}"
+        tag = hashlib.md5(key.encode()).hexdigest()[:12]
         repo = os.path.dirname(os.path.dirname(os.path.dirname(__file__)))
         path = os.path.join(repo, ".localdata", kind, tag)
         if not all(os.path.isfile(os.path.join(path, p, "_SUCCESS")) for p in parts):
@@ -985,7 +1004,7 @@ def q_packed_block_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     path = _served_layout(
-        sf_dir, "documents", "packed_cache", "pack512:v1", ("blocks", "manifest"),
+        sf_dir, "documents", "packed_cache", ("blocks", "manifest"),
         lambda p: sinks.write_packed_blocks(docs, p, capacity=512),
     )
     # explicit schema — inference fails on the zero-file dataset an
@@ -1332,9 +1351,8 @@ def q_ivfpq_knn_index_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs pay only the serve) and serves the 4 lowest vec_ids from it
     in ONE partition-pruned read."""
     emb = load_table(spark, sf_dir, "embeddings")
-    # v2: valid_embeddings guard added to the index build (r15)
     path = _served_layout(
-        sf_dir, "embeddings", "ann_cache", "v2", ("index", "centroids"),
+        sf_dir, "embeddings", "ann_cache", ("index", "centroids"),
         lambda p: similarity.write_ann_index(emb, p),
     )
     qvs = [
@@ -2219,22 +2237,16 @@ QUERIES: dict[str, QueryFn] = {
 # the seven graph and BM25 names of the CC-core group
 # (basket_communities … bm25_batch) and the first five of the
 # exact-neighbor group (knn_bruteforce … nearest_neighbor_capped).
+# One md5-integer hash and sketch core (same derivation): the sixteen
+# queries whose hash, sketch or served-layout code moved and are not yet
+# in the window join as the newest changed group (quality_classifier,
+# the two winnowing names, dsir_weights and packed_block_audit moved
+# too and stay). The sixteen oldest names whose code has not moved
+# since make room (gopher_repetition … corpus_dup_ngrams).
 _R15_FRONT = [
     # (ascending last-certified round, ties by position)
-    # changed by the one exact-neighbor core / disk checkpoint / NULL order
-    "gopher_repetition", "event_markov_transitions",
-    # changed by the option census (extract_features' UDF body)
-    "media_features",
-    # changed by the one keyed-state core (the shared NULL-user key)
-    "attribution_last_touch", "event_debounce",
-    # changed by the one audio decode-and-window core
-    "audio_windows", "audio_dup_windows", "decoded_audio_stats",
-    "decoded_aiff_stats", "wav_dup_windows",
     # changed by the one word rule / word-gram builder
-    "benchmark_decontamination", "ngram_novelty", "source_gram_containment",
-    "quality_classifier", "quality_calibration", "winnowing_fingerprints",
-    "winnowing_overlap_pairs", "dsir_weights", "bigram_lm_scores",
-    "corpus_dup_ngrams", "top_bigrams", "dup_ngram_fraction",
+    "top_bigrams", "dup_ngram_fraction",
     "repetition_stats",
     # changed by the one candidate-pair core / shingle filter
     "jaccard_pairs", "containment_dup_pairs", "minhash_lsh_pairs",
@@ -2248,7 +2260,17 @@ _R15_FRONT = [
     "segment_value_percentiles", "customer_rfm", "order_gap_percentiles",
     "revenue_pareto", "customer_migration", "funnel_dropoff_time",
     "length_buckets", "token_budget_caps", "sequence_pack",
-    "pack_block_stats", "packed_block_audit", "embedding_drift",
+    "pack_block_stats", "embedding_drift",
+    # changed by the one md5-integer hash and sketch core (and the
+    # served layouts keyed by the code digest)
+    "quality_classifier", "winnowing_fingerprints",
+    "winnowing_overlap_pairs", "dsir_weights", "packed_block_audit",
+    "hash_split_summary", "stratified_sample", "mixture_sample",
+    "ccnet_mixture", "split_leakage_audit", "priority_sample",
+    "stratified_split_audit", "cdc_chunks", "doc_fingerprints",
+    "user_cardinality_kmv", "user_cardinality_kmv_by_type",
+    "user_reach_rollup", "join_size_estimate", "user_cardinality_hll",
+    "countmin_term_error", "ivfpq_knn_index_batch",
 ]
 assert len(_R15_FRONT) == 50 and all(n in QUERIES for n in _R15_FRONT), (
     "window rotation list must name 50 registered queries"

@@ -31,6 +31,7 @@ from pyspark.sql.types import (
 )
 
 from data_pipeline_example_spark.functions import text as T
+from data_pipeline_example_spark.functions.hashing import seeded_buckets
 from data_pipeline_example_spark.operators import text
 from data_pipeline_example_spark.streaming.job import keyed_state, read_json_stream
 
@@ -532,13 +533,12 @@ def bloom_admission_stream(
     duplicates is not. Size m_bits ≈ 10 × expected distinct docs per
     horizon for p < 1%.
 
-    Determinism contract (what makes the FP rate TESTABLE): the hash
-    family is the repo's md5 discipline — bit i of document fp is
-    ``conv(substr(md5(i || ':' || fp), 1, 8), 16, 10) % (m/buckets)``,
-    the exact family :func:`operators.dedup.minhash_signatures` uses —
-    so the FP SET (not just the rate) is reproducible run-to-run and
-    replayable in pure Python by the test against the batch
-    ``exact_dedup`` ground truth. Bit positions and the bucket key are
+    Determinism contract (what makes the FP rate TESTABLE): hash i of
+    document fp is element i of :func:`functions.hashing.seeded_buckets`
+    — ``md5_int(i || ':' || fp, 8) % (m/buckets)``, the seeded family
+    the Count-Min rows use — so the FP SET (not just the rate) is
+    reproducible run-to-run and replayable in pure Python by the test
+    against the batch ``exact_dedup`` ground truth. Bit positions and the bucket key are
     computed relationally (JVM-side md5) BEFORE the stateful op; the
     Arrow-batched update only tests/sets bits.
 
@@ -562,21 +562,6 @@ def bloom_admission_stream(
     m_local = m_bits // n_buckets
 
     fp = T.fingerprint(F.col("text"))
-    pos = F.array(
-        *[
-            (
-                F.conv(
-                    F.substring(
-                        F.md5(F.concat(F.lit(f"{i}:"), F.col("fingerprint"))), 1, 8
-                    ),
-                    16,
-                    10,
-                ).cast("long")
-                % m_local
-            ).cast("int")
-            for i in range(k_hashes)
-        ]
-    )
     typed = (
         docs.select(
             F.col("doc_id").cast("long").alias("doc_id"),
@@ -589,7 +574,7 @@ def bloom_admission_stream(
                 % n_buckets
             ).cast("int"),
         )
-        .withColumn("pos", pos)
+        .withColumn("pos", seeded_buckets(F.col("fingerprint"), k_hashes, m_local))
     )
 
     def step(key, state, rows):
@@ -688,9 +673,9 @@ def countmin_stream(
     cells against a brute-force batch sketch — the
     exactly-mergeable-KMV certification idea applied to streaming
     state). Term→(row, bucket) fan-out happens relationally BEFORE
-    the stateful op (JVM-side md5, the certified conv idiom shared
-    with the batch op); the Arrow-batched update function only adds
-    value_counts into the cell array.
+    the stateful op: :func:`functions.hashing.seeded_buckets`, the
+    bucket array the batch op builds too; the Arrow-batched update
+    function only adds value_counts into the cell array.
 
     Input: a doc stream with a text column. Output stream (update
     mode), one row per sketch row per batch: i, mass (total
@@ -700,33 +685,8 @@ def countmin_stream(
         F.explode(T.lower_tokens(F.col("text"))).alias("term")
     )
     incs = terms.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("i"),
-                        (
-                            F.conv(
-                                F.substring(
-                                    F.md5(
-                                        F.concat(
-                                            F.lit(f"{i}:"), F.col("term")
-                                        )
-                                    ),
-                                    1,
-                                    8,
-                                ),
-                                16,
-                                10,
-                            ).cast("long")
-                            % width
-                        ).alias("bucket"),
-                    )
-                    for i in range(depth)
-                ]
-            )
-        ).alias("rb")
-    ).select(F.col("rb.i").alias("i"), F.col("rb.bucket").alias("bucket"))
+        F.posexplode(seeded_buckets(F.col("term"), depth, width)).alias("i", "bucket")
+    )
 
     def step(key, state, rows):
         cells = list(state[0]) if state else [0] * width

@@ -33,11 +33,8 @@ from data_pipeline_example_spark.conform import STREAMING_SPEC, conform
 from data_pipeline_example_spark.functions.materialize import (
     materialize as _materialize,
 )
-from data_pipeline_example_spark.operators.users import (
-    _hll_params,
-    is_null_user_key,
-    user_key,
-)
+from data_pipeline_example_spark.functions.hashing import _hll_params, hll_stage
+from data_pipeline_example_spark.operators.users import is_null_user_key, user_key
 
 # streaming_sales_aggregator.py:187-200 — every field a nullable string
 EVENT_FIELDS = (
@@ -605,14 +602,14 @@ def hll_cardinality_stream(df: DataFrame, p_bits: int = 6) -> DataFrame:
     longs per event_type, input-independent, forever.
 
     Twin contract: the register arithmetic is BIT-IDENTICAL to the
-    batch anchor :func:`operators.users.user_cardinality_hll` — the
-    shared ``_hll_params`` helper supplies (m, W, α) from ``p_bits``
-    (first 9 md5 hex → 36 bits, top p_bits bucket / low W = 36−p_bits
-    suffix, ρ = (W+1) − length(bin(suffix))), same exact-integer
-    estimate α_milli·m²·2^(W+1) div S — so after the last micro-batch
-    each key's emitted row EQUALS the batch operator's row on the same
-    accumulated data (the restart test pins this across a
-    kill/resume). NULL event_type coalesces to the same 'unknown'
+    batch anchor :func:`operators.users.user_cardinality_hll` — both
+    stage (bucket, ρ) with :func:`functions.hashing.hll_stage` over the
+    shared ``_hll_params`` (first 9 md5 hex → 36 bits, top p_bits
+    bucket / low W = 36−p_bits suffix, ρ = (W+1) − length(bin(suffix))),
+    same exact-integer estimate α_milli·m²·2^(W+1) div S — so after the
+    last micro-batch each key's emitted row EQUALS the batch operator's
+    row on the same accumulated data (the restart test pins this across
+    a kill/resume). NULL event_type coalesces to the same 'unknown'
     sentinel the batch twin uses.
 
     The (bucket, ρ) pair is computed RELATIONALLY before the stateful
@@ -624,26 +621,12 @@ def hll_cardinality_stream(df: DataFrame, p_bits: int = 6) -> DataFrame:
     m, w, alpha_milli = _hll_params(p_bits)
     numer = alpha_milli * m * m * (1 << (w + 1))
 
-    staged = (
-        df.filter(F.col("user_id").isNotNull())
-        .select(
+    staged = hll_stage(
+        df.filter(F.col("user_id").isNotNull()).select(
             F.coalesce(F.col("event_type"), F.lit("unknown")).alias("event_type"),
-            F.conv(
-                F.substring(F.md5(F.col("user_id").cast("string")), 1, 9), 16, 10
-            )
-            .cast("long")
-            .alias("hv"),
-        )
-        .select(
-            "event_type",
-            F.expr(f"hv div {1 << w}").alias("bucket"),
-            F.when(F.col("hv") % F.lit(1 << w) == 0, F.lit(w + 1))
-            .otherwise(
-                F.lit(w + 1) - F.length(F.bin(F.col("hv") % F.lit(1 << w)))
-            )
-            .cast("long")
-            .alias("rho"),
-        )
+            "user_id",
+        ),
+        p_bits,
     )
 
     def step(key, state, rows):

@@ -55,3 +55,20 @@ def test_counts_per_function_with_nesting_and_decorators():
         "outer.inner": 2,
         "K.m": 5,
     }
+
+
+def test_functions_accept_the_printed_path_form(tmp_path, capsys):
+    """``--functions`` takes the ``path:qualname`` names the listing
+    prints, so a name defined in two modules can be picked in one; a
+    bare qualified name still matches it in every module."""
+    (tmp_path / "a.py").write_text("def main():\n    return 1\n")
+    (tmp_path / "b.py").write_text("def main():\n    x = 1\n    return x\n")
+
+    def selected(*names):
+        code_lines.main([str(tmp_path), "--functions", *names])
+        return capsys.readouterr().out.splitlines()[1]
+
+    assert selected("main") == "selected 5"
+    assert selected("a.py:main") == "selected 2"
+    assert selected("b.py:main") == "selected 3"
+    assert selected("a.py:main", "b.py:main") == "selected 5"

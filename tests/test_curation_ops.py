@@ -381,6 +381,34 @@ def test_kmv_by_type_plan_uses_window_group_limit(spark, sf_dir):
     assert rows[one_type]["kmv_estimate"] == single["kmv_estimate"]
 
 
+def test_kmv_sketches_keep_null_type_users_as_unknown(spark):
+    """A NULL event_type is the 'unknown' group in both grouped KMV
+    sketches — the policy of ``user_cardinality_hll`` and its stream
+    twin — instead of vanishing in the equi-join on event_type."""
+    import datetime
+
+    from data_pipeline_example_spark.operators.users import (
+        user_cardinality_kmv_by_type,
+        user_reach_rollup,
+    )
+
+    ts = datetime.datetime(2024, 1, 1, 12)
+    ev = spark.createDataFrame(
+        [(1, ts, 7, "view"), (2, ts, 8, None), (3, ts, 9, None), (4, ts, 9, None)],
+        "event_id bigint, ts timestamp_ntz, user_id bigint, event_type string",
+    )
+    by_type = {
+        r["event_type"]: (r["n_exact"], r["kmv_estimate"])
+        for r in user_cardinality_kmv_by_type(ev).collect()
+    }
+    assert by_type == {"unknown": (2, 2), "view": (1, 1)}
+    reach = {
+        r["event_type"]: (r["daily_sketches"], r["reach_estimate"])
+        for r in user_reach_rollup(ev).collect()
+    }
+    assert reach == {"unknown": (1, 2), "view": (1, 1)}
+
+
 def test_corpus_diff_statuses(spark, sf_dir):
     """Every status class present and counts consistent: the synthetic
     old/new views drop 10% each way and change 10%; summary counts must

@@ -20,6 +20,9 @@ every optimized plan, not just in docstrings.
   overwrite mode (static scans)
 * the audio family has one container dispatch and one window digest,
   and no tool puts a fixed checkout path on ``sys.path`` (static scans)
+* every md5-prefix integer is ``functions.hashing.md5_int`` and the
+  KMV, HyperLogLog and seeded-bucket sketches have one core beside it
+  (static scan)
 """
 
 from __future__ import annotations
@@ -442,6 +445,112 @@ def test_one_candidate_pair_core():
     assert popcount == {("operators/dedup.py", "hamming")}, popcount
     assert first_match == {("operators/dedup.py", "band_join")}, first_match
     assert shared_key == {("operators/dedup.py", "shared_key_pairs")}, shared_key
+
+
+def _callee(node: ast.Call) -> str:
+    """The called name: ``F.md5(x)`` and ``md5(x)`` are both ``md5``."""
+    f = node.func
+    return f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", "")
+
+
+def _is_kmv_constant(node) -> bool:
+    """``(k - 1) * (1 << 48)``, the KMV estimate's numerator, either way
+    round."""
+
+    def shift48(n):
+        return (
+            isinstance(n, ast.BinOp)
+            and isinstance(n.op, ast.LShift)
+            and isinstance(n.right, ast.Constant)
+            and n.right.value == 48
+        )
+
+    def minus_one(n):
+        return (
+            isinstance(n, ast.BinOp)
+            and isinstance(n.op, ast.Sub)
+            and isinstance(n.right, ast.Constant)
+            and n.right.value == 1
+        )
+
+    return (
+        isinstance(node, ast.BinOp)
+        and isinstance(node.op, ast.Mult)
+        and (
+            (shift48(node.left) and minus_one(node.right))
+            or (minus_one(node.left) and shift48(node.right))
+        )
+    )
+
+
+def test_one_md5_integer_hash():
+    """Every md5-prefix integer is ``functions.hashing.md5_int`` and the
+    sketches build on the one core beside it: a ``conv(substring(…
+    md5(…)…))`` (Column call or SQL text) appears only in ``md5_int``,
+    the KMV numerator ``(k - 1) * (1 << 48)`` only in ``kmv_estimate``,
+    an HLL ρ from ``bin(`` only in ``hll_stage`` (the DuckDB twins
+    aside), and a seeded ``f"{i}:"`` concat only in ``seeded_buckets``
+    and ``dedup._with_minhash_sigs``, whose seeds feed md5 strings, not
+    integers."""
+    sql_md5_int = re.compile(r"conv\s*\(\s*substr(?:ing)?\s*\(\s*md5\s*\(", re.I)
+    md5_ints, kmv, rho, seeded = set(), set(), set(), set()
+    for path in sorted(_PKG.rglob("*.py")):
+        rel = path.relative_to(_PKG).as_posix()
+        tree = ast.parse(path.read_text(), str(path))
+        docstrings = {
+            id(n.body[0].value)
+            for n in ast.walk(tree)
+            if isinstance(n, (ast.Module, ast.ClassDef, ast.FunctionDef))
+            and n.body
+            and isinstance(n.body[0], ast.Expr)
+        }
+        for top in tree.body:
+            owner = top.name if isinstance(top, ast.FunctionDef) else "<module>"
+            site = (rel, owner)
+            for node in ast.walk(top):
+                if (
+                    isinstance(node, ast.Constant)
+                    and isinstance(node.value, str)
+                    and id(node) not in docstrings
+                ):
+                    if sql_md5_int.search(node.value):
+                        md5_ints.add(site)
+                    if "bin(" in node.value and rel != "plans/oracles.py":
+                        rho.add(site)
+                if isinstance(node, ast.Call):
+                    name = _callee(node)
+                    if (
+                        name == "conv"
+                        and node.args
+                        and isinstance(node.args[0], ast.Call)
+                        and _callee(node.args[0]) in ("substring", "substr")
+                        and any(
+                            isinstance(n, ast.Call) and _callee(n) == "md5"
+                            for n in ast.walk(node.args[0])
+                        )
+                    ):
+                        md5_ints.add(site)
+                    if name == "bin":
+                        rho.add(site)
+                if _is_kmv_constant(node):
+                    kmv.add(site)
+                if (
+                    isinstance(node, ast.JoinedStr)
+                    and len(node.values) == 2
+                    and isinstance(node.values[0], ast.FormattedValue)
+                    and isinstance(node.values[1], ast.Constant)
+                    and node.values[1].value == ":"
+                ):
+                    seeded.add(site)
+    hashing = "functions/hashing.py"
+    assert md5_ints == {(hashing, "md5_int")}, md5_ints
+    assert kmv == {(hashing, "kmv_estimate")}, kmv
+    assert rho == {(hashing, "hll_stage")}, rho
+    assert (hashing, "seeded_buckets") in seeded, seeded
+    assert seeded <= {
+        (hashing, "seeded_buckets"),
+        ("operators/dedup.py", "_with_minhash_sigs"),
+    }, seeded
 
 
 #: the equal-frequency family: every operator built on functions/cuts.py

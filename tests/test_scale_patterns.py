@@ -1337,6 +1337,42 @@ def test_ann_index_cache_follows_corpus_rewritten_mid_session(spark, sf_dir, tmp
                 shutil.rmtree(path, ignore_errors=True)
 
 
+def test_served_layout_is_keyed_by_the_code_digest(tmp_path, monkeypatch):
+    """A served layout is rebuilt when the package source changes: the
+    same input and code digest serve the same path without a build; a
+    changed digest (a new revision of the code that writes the layout)
+    builds a new one."""
+    import os
+    import shutil
+
+    from data_pipeline_example_spark.plans import queries
+
+    (tmp_path / "t.parquet").write_bytes(b"stat() only")
+    builds = []
+
+    def build(path):
+        os.makedirs(os.path.join(path, "p"))
+        open(os.path.join(path, "p", "_SUCCESS"), "w").close()
+        builds.append(path)
+
+    def serve():
+        # a fresh process: nothing cached in session, only on disk
+        monkeypatch.setattr(queries, "_SERVED_LAYOUTS", {})
+        return queries._served_layout(str(tmp_path), "t", "test_layout", ("p",), build)
+
+    try:
+        first = serve()
+        assert serve() == first and builds == [first]
+        monkeypatch.setattr(queries, "_code_digest", lambda: "another-revision")
+        changed = serve()
+        assert changed != first and builds == [first, changed]
+    finally:
+        for path in builds:
+            shutil.rmtree(path, ignore_errors=True)
+        if builds and not os.listdir(os.path.dirname(builds[0])):
+            os.rmdir(os.path.dirname(builds[0]))
+
+
 def test_input_fingerprint_rejects_non_local_tables(sf_dir, tmp_path):
     """A table that is not on the local filesystem cannot be fingerprinted
     by stat(): ValueError instead of hashing an empty listing (which

@@ -8,8 +8,10 @@ nested functions also count inside their parents), largest first.
 
 Usage: python tools/code_lines.py [package_dir] [--functions NAME ...]
 
-``--functions`` restricts the per-function listing to the functions of
-those qualified names and prints their sum.
+``--functions`` restricts the per-function listing to the named
+functions and prints their sum. A name is either a qualified name
+(``outer.inner``; it matches that function in every module) or the
+``path:qualname`` form the listing prints (it matches one module's).
 """
 
 from __future__ import annotations
@@ -103,7 +105,11 @@ def main(argv: list[str]) -> None:
             per_fn += [(n, f"{rel}:{q}") for q, n in function_lines(source).items()]
     print(f"total {total}")
     if wanted:
-        per_fn = [(n, name) for n, name in per_fn if name.split(":", 1)[1] in wanted]
+        per_fn = [
+            (n, name)
+            for n, name in per_fn
+            if name in wanted or name.split(":", 1)[1] in wanted
+        ]
         print(f"selected {sum(n for n, _ in per_fn)}")
     for n, name in sorted(per_fn, key=lambda t: (-t[0], t[1])):
         print(f"{n:6d} {name}")
