@@ -334,7 +334,9 @@ def user_reach_rollup(events: DataFrame, k: int = 64) -> DataFrame:
     )
     return (
         days.join(sketch, "event_type")
-        .select("event_type", "daily_sketches", kmv_estimate(k).alias("reach_estimate"))
+        .select(
+            "event_type", "daily_sketches", kmv_estimate(k).alias("reach_estimate")
+        )
         .orderBy("event_type")
     )
 
@@ -514,7 +516,9 @@ def user_cardinality_kmv_by_type(events: DataFrame, k: int = 16) -> DataFrame:
         )
         .distinct()
     )
-    hv = pairs.select("event_type", md5_int(F.col("user_id"), 12).alias("hv")).distinct()
+    hv = pairs.select(
+        "event_type", md5_int(F.col("user_id"), 12).alias("hv")
+    ).distinct()
     w = Window.partitionBy("event_type").orderBy("hv")
     sketch = (
         hv.withColumn("rk", F.row_number().over(w))
